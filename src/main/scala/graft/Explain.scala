@@ -1,10 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.mkSpark("4")
     spark.sparkContext.setLogLevel("ERROR")
     val turns = graft.extract.Synthetic.transcripts(spark, 100)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit for the corpus-curation operators: prints exchange/sort
  * counts and the interesting physical nodes for each headline op, so
  * shuffle regressions are visible without running the data. */
 object ExplainOps {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.mkSpark("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.bridge
 import scala.collection.concurrent.TrieMap
 
 /** Dev tool: per-query profile — rep wall times (cold vs warm), Spark job
@@ -19,10 +19,7 @@ object QProf {
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
     val cpus = args.lift(4).getOrElse("32")
     val sink = args.lift(5).getOrElse("count")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.mkSpark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -58,7 +55,7 @@ object QProf {
           df.write.format("noop").mode("overwrite").save(); -1L
         } else df.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // let listener events drain
+      bridge.drainListeners(spark.sparkContext)
       println(f"[qprof] $name rep$i: $sec%.2f s ($n rows, $jobs jobs, $stages stages, $tasks tasks)")
       if (i == reps) jobLines.forEach(l => println(l))
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print one named SparkEntry query's result rows.
  * Usage: runMain graft.QShow <query> [sfDir] [nRows] [cpus] */
 object QShow {
@@ -10,10 +8,7 @@ object QShow {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val nRows = args.lift(2).map(_.toInt).getOrElse(20)
     val cpus = args.lift(3).getOrElse("32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.mkSpark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries(name)(spark, sfDir).show(nRows, truncate = false)
     spark.stop()

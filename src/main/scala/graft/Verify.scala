@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local iteration
-    // only; the driver always passes two args → full dump)
+    // optional 3rd arg: comma-separated query-name filter for the dumps and
+    // oracle_sql.json (local iteration only; the driver always passes two
+    // args → full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -40,7 +41,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val oracles = only.fold(SparkEntry.oracleSql)(names =>
+      SparkEntry.oracleSql.filter { case (name, _) => names(name) })
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

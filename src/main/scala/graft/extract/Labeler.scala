@@ -537,8 +537,8 @@ object Labeler {
     }
 
   /** The body FSM's line-classification state machine, shared by the
-   * label-emitting and span-emitting (fused) passes — and by the custom
-   * physical operator ([[graft.plans.BodySpansExec]]) — so they cannot
+   * label-emitting pass ([[bodyLabels]]) and the span-emitting custom
+   * physical operator ([[graft.plans.BodySpansExec]]) so they cannot
    * drift. */
   private[graft] final class LineClassifier {
     private var curConv: String = null
@@ -871,158 +871,10 @@ object Labeler {
   }
 
   /** Scala mirror of [[graft.text.TextCols.htmlEncode]] (same replacement
-   * order) for the fused span emitter. */
+   * order) for the [[graft.plans.BodySpans]] span emitter. */
   private[graft] def htmlEncode(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;").replace("'", "&apos;")
-
-  /**
-   * Fused label+assemble pass: the FSM emits finished SPANS instead of
-   * labeled tokens — exactly what the reference does (TEI is written during
-   * the label walk, `DatacatSegmenterParser.java:1009-1088`). Output rows and
-   * bytes are identical to `Assemble.bodySpans(bodyLabels(tokens))` (the
-   * declarative path, kept for the driver's oracle queries and pinned by a
-   * differential test), but the whole job needs ONE exchange: no second
-   * shuffle for the span groupBy, no window sorts, no collect_list
-   * materialization. State is O(current span text) — conversations stream.
-   *
-   * Separator rule (fixture-pinned, same as [[Assemble.bodySpans]]): each
-   * token carries its following whitespace (= next token's sep_before; the
-   * conv-last token carries its line's trailing whitespace); at a span
-   * boundary only the part before the first newline is kept.
-   *
-   * Output: (conv_id, segment_id, label, turn_idx, text).
-   */
-  def bodySpansFused(tokens: DataFrame, repartitionByConv: Boolean = true,
-      failures: Option[Lineage.PartitionStats] = None): DataFrame = {
-    val inSchema = tokens.schema
-    val iConv = inSchema.fieldIndex("conv_id")
-    val iTurn = inSchema.fieldIndex("turn_idx")
-    val iLine = inSchema.fieldIndex("line_in_turn")
-    val iTok = inSchema.fieldIndex("tok")
-    val iSep = inSchema.fieldIndex("sep_before")
-    val iTrail = inSchema.fieldIndex("line_trailing")
-    val iCap = inSchema.fieldIndex("f_capitalisation")
-    val outSchema = StructType(Seq(
-      StructField("conv_id", StringType, nullable = true),
-      StructField("segment_id", LongType, nullable = false),
-      StructField("label", StringType, nullable = false),
-      StructField("turn_idx", IntegerType, nullable = true),
-      StructField("text", StringType, nullable = false)))
-
-    val sorted = (if (repartitionByConv) tokens.repartition(col("conv_id")) else tokens)
-      .sortWithinPartitions("conv_id", "turn_idx", "line_in_turn", "tok_idx")
-
-    val spans = sorted.mapPartitions { it =>
-      new Iterator[Row] {
-        private val cls = new LineClassifier
-        private val outQ = scala.collection.mutable.Queue.empty[Row]
-        private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-
-        // open span accumulator
-        private var spanConv: String = null
-        private var spanSeg: Long = 0L
-        private var spanLabel: String = null
-        private var spanTurn: Int = 0
-        private val spanText = new java.lang.StringBuilder
-        // last token of the previous line, waiting for its sep_after
-        private var pendTok: String = null
-        private var pendTrail: String = null
-
-        private def closeSpan(): Unit = if (spanLabel != null) {
-          outQ += Row(spanConv, spanSeg, spanLabel, spanTurn, spanText.toString)
-          spanLabel = null
-          spanText.setLength(0)
-        }
-
-        /** Flush the held-back line-last token given its sep_after. */
-        private def resolvePend(sepAfter: String, spanLast: Boolean): Unit =
-          if (pendTok != null) {
-            val sep = if (spanLast) sepAfter.takeWhile(_ != '\n') else sepAfter
-            spanText.append(htmlEncode(pendTok)).append(sep)
-            pendTok = null
-          }
-
-        // one-line lookahead (same mechanism as [[bodyLabels]])
-        private var pendLine: Vector[Row] = null
-        private var pendLineToks: Vector[String] = null
-
-        private def emitLine(rows: Seq[Row], rowToks: Vector[String],
-            nextIsEntry: Boolean): Unit = try {
-          val conv = rows.head.getString(iConv)
-          if (conv != spanConv && spanConv != null) {
-            // conversation ended: conv-last token's sep_after = line_trailing
-            resolvePend(if (pendTrail == null) "" else pendTrail, spanLast = true)
-            closeSpan()
-            spanSeg = 0L
-          }
-          val (base, isStart) = cls.classify(conv,
-            rowToks, rows.map(_.getString(iCap)), nextIsEntry)
-          // the held-back token's sep_after = this line's first sep_before
-          resolvePend(rows.head.getString(iSep), spanLast = isStart)
-          if (isStart) {
-            closeSpan()
-            spanSeg += 1
-            spanConv = conv
-            spanLabel = base
-            spanTurn = rows.head.getInt(iTurn)
-          }
-          spanConv = conv
-          var i = 0
-          while (i < rows.size - 1) {
-            spanText.append(htmlEncode(rows(i).getString(iTok)))
-              .append(rows(i + 1).getString(iSep))
-            i += 1
-          }
-          val last = rows.last
-          pendTok = last.getString(iTok)
-          pendTrail = if (last.isNullAt(iTrail)) "" else last.getString(iTrail)
-        } catch { case scala.util.control.NonFatal(_) =>
-          // per-line error isolation (S3): drop the line, count per partition
-          failures.foreach(_.add(
-            (org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
-        }
-
-        private def feed(rows: Vector[Row]): Unit = {
-          val rowToks = rows.map(_.getString(iTok))
-          if (pendLine != null) {
-            val sameConv =
-              pendLine.head.getString(iConv) == rows.head.getString(iConv)
-            emitLine(pendLine, pendLineToks, sameConv && isEntryLine(rowToks))
-          }
-          pendLine = rows; pendLineToks = rowToks
-        }
-
-        private def lineKey(r: Row) = (r.getString(iConv), r.getInt(iTurn), r.getInt(iLine))
-
-        private def advance(): Unit = {
-          while (outQ.isEmpty && it.hasNext) {
-            val r = it.next()
-            if (buf.nonEmpty && lineKey(buf.head) != lineKey(r)) {
-              val rows = buf.toVector; buf.clear(); buf += r
-              feed(rows)
-            } else buf += r
-          }
-          if (outQ.isEmpty && !it.hasNext) {
-            if (buf.nonEmpty) { val rows = buf.toVector; buf.clear(); feed(rows) }
-            if (pendLine != null) {
-              val p = pendLine; val pt = pendLineToks; pendLine = null
-              emitLine(p, pt, nextIsEntry = false)
-            }
-            if (pendTok != null || spanLabel != null) {
-              resolvePend(if (pendTrail == null) "" else pendTrail, spanLast = true)
-              closeSpan()
-            }
-          }
-        }
-
-        def hasNext: Boolean = { advance(); outQ.nonEmpty }
-        def next(): Row = { advance(); outQ.dequeue() }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    spans
-  }
 
   /** Reachable [[LineClassifier]] state count (see `stateId`). */
   private[graft] val NStates = 7

@@ -43,9 +43,10 @@ object Pipeline {
    * hashpartitioning(conv_id). The FSM runs as the custom Catalyst operator
    * ([[graft.plans.BodySpans]]): its DECLARED ClusteredDistribution +
    * sort-order requirements let EnsureRequirements reuse the exchange; it
-   * consumes InternalRow directly (no Row-encoder round trip). The
-   * mapPartitions twin ([[Labeler.bodySpansFused]]) is kept for the
-   * failure-counted resumable path and is differential-tested identical.
+   * consumes InternalRow directly (no Row-encoder round trip). It is
+   * differential-tested byte-identical to [[extractDeclarative]]
+   * (`bodyLabels` then [[Assemble.bodySpans]]), the path [[runResumable]]
+   * runs.
    */
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.spans(bodyTokenFeats(turns))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  * SparkSessionExtensions hook exposing the engine's native expressions to
  * SQL. Activate either via config
  * `spark.sql.extensions=graft.functions.GraftExtensions` or
- * programmatically: `SparkSession.builder().withExtensions(new GraftExtensions)`.
+ * programmatically: `.withExtensions(new GraftExtensions)` on the session
+ * builder.
  *
  * ```sql
  * SELECT t.tok, t.sep FROM src

@@ -13,11 +13,11 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.Labeler
 
 /**
- * The fused FSM span emitter as a first-class Catalyst operator — the
- * builder-prompt's preference (c): a custom `LogicalPlan` + `Strategy` +
- * `SparkPlan` for whole-operator semantics that built-ins cannot express.
- * Two things the `mapPartitions` path (kept as [[Labeler.bodySpansFused]])
- * cannot do:
+ * The fused FSM span emitter as a first-class Catalyst operator: the FSM
+ * emits finished spans during its label walk, as the reference writes TEI
+ * during its label walk (`DatacatSegmenterParser.java:1009-1088`). A
+ * custom `LogicalPlan` + `Strategy` + `SparkPlan` because a `mapPartitions`
+ * body cannot:
  *
  *  - **declare** its requirements instead of hand-placing them: the
  *    physical operator states `requiredChildDistribution =
@@ -27,8 +27,9 @@ import graft.extract.Labeler
  *  - run on `InternalRow`/`UTF8String` directly, skipping the
  *    Row-encoder round trip at the object boundary.
  *
- * Differential-tested byte-identical to the mapPartitions path
- * (PlanOperatorSpec).
+ * Differential-tested byte-identical to the declarative assembly,
+ * `Assemble.bodySpans(Labeler.bodyLabels(..))` (PlanOperatorSpec,
+ * PipelineSpec).
  */
 object BodySpans {
 

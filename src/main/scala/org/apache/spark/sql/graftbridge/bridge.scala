@@ -1,15 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionColumnNode
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 
 /** Minimal bridge into `private[sql]` surface: wrap a Catalyst Expression
-  * as a user-facing Column (the classic-session column node), and clone a
+  * as a user-facing Column (the classic-session column node), clone a
   * session so a conf override can be scoped to ONE query instead of
-  * mutated session-wide. Lives in an `org.apache.spark.sql` subpackage
-  * solely for access; no Spark internals are modified. */
+  * mutated session-wide, and drain the listener bus. Lives in an
+  * `org.apache.spark.sql` subpackage solely for access; no Spark internals
+  * are modified. */
 object bridge {
   def column(e: Expression): Column = new Column(ExpressionColumnNode(e))
 
@@ -34,4 +36,8 @@ object bridge {
   def rebind(df: DataFrame, to: SparkSession): DataFrame =
     CDataset.ofRows(to.asInstanceOf[CSparkSession],
       df.queryExecution.logical)
+
+  /** Block until every event already posted to the listener bus has been
+    * delivered, so a listener's counters are complete when read. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

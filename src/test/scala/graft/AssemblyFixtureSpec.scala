@@ -14,9 +14,7 @@ import graft.extract.{Assemble, Structure}
  * typos (a tag splitting a token, e.g. `pièce</entry>s.`) are verbatim
  * fixture span bytes.
  */
-class AssemblyFixtureSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class AssemblyFixtureSpec extends SparkSpec with FixtureSpec {
 
   test("assembled spans byte-equal gold TEI spans (all 14 body fixtures)") {
     val sparkS = spark

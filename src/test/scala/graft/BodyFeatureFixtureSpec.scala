@@ -14,9 +14,7 @@ import graft.text.Tok
  * (Remaining 8 columns encode PDF geometry/fonts the transcripts graft
  * redefines: alignment, font, bold/italic, positions, bitmap.)
  */
-class BodyFeatureFixtureSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class BodyFeatureFixtureSpec extends SparkSpec with FixtureSpec {
 
   // column index in the 24-col fixture row -> index in our serialized vector
   // (identical layout, FeaturesVectorDatacatEntries.printVector order)

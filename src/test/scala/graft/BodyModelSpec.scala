@@ -11,9 +11,7 @@ import graft.extract.{Features, Labeler, Structure, ZoneModel}
  * hint — the analog of retraining `datacat-body-segmentation`
  * (`DatacatBodySegmentationTrainer.java`, reference best micro-F1 85.84).
  */
-class BodyModelSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class BodyModelSpec extends SparkSpec with FixtureSpec {
 
   test("held-out body line-label accuracy of the trained model") {
     val sparkS = spark

@@ -10,9 +10,7 @@ import graft.extract.Pipeline
  * the spans the body-only pipeline produces — i.e. the front/annex padding
  * changes nothing but the line offsets.
  */
-class DocumentPipelineSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class DocumentPipelineSpec extends SparkSpec with FixtureSpec {
 
   private val front = Seq(
     "COLLECTION H. HOFFMANN",

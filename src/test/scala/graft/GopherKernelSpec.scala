@@ -98,6 +98,7 @@ class GopherKernelSpec extends SparkSpec {
     val plan = Gopher.withRepetitionKeep(docs)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"))
-    assert(plan.contains("graft_gopher_rep"))
+    val kernels = "graft_gopher_rep".r.findAllMatchIn(plan).size
+    assert(kernels == 1, s"expected 1 graft_gopher_rep, got $kernels:\n$plan")
   }
 }

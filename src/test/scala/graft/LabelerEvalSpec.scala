@@ -11,9 +11,7 @@ import graft.extract.{Features, Labeler, Structure}
  * is measured on the same 14 gold documents; the floor asserted here is the
  * measured round-1 level so regressions fail loudly.
  */
-class LabelerEvalSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class LabelerEvalSpec extends SparkSpec with FixtureSpec {
 
   test("FSM token-label agreement vs gold on all body fixtures") {
     val sparkS = spark

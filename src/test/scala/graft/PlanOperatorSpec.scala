@@ -1,16 +1,24 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.extract.{Features, Labeler, Structure, Synthetic}
+import graft.extract.{Assemble, Features, Labeler, Pipeline, Structure, Synthetic}
 import graft.plans.BodySpans
 
 /**
  * The custom Catalyst operator (BodySpansPlan/Strategy/Exec) must be
- * byte-identical to the mapPartitions path, and Catalyst must plan its
- * exchange from the DECLARED requirements (one hashpartitioning, sort
+ * byte-identical to the declarative assembly
+ * (`Assemble.bodySpans(Labeler.bodyLabels(..))`), and Catalyst must plan
+ * its exchange from the DECLARED requirements (one hashpartitioning, sort
  * inserted by EnsureRequirements — no manual repartition in the plan).
  */
 class PlanOperatorSpec extends SparkSpec {
+
+  /** The operator's five output columns, in its order, via the declarative
+   * label-then-assemble path over the same input. */
+  private def declarative(f: DataFrame): DataFrame =
+    Assemble.bodySpans(Labeler.bodyLabels(f))
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
 
   private def feats(n: Long) = {
     val turns = Synthetic.transcripts(spark, n)
@@ -22,14 +30,14 @@ class PlanOperatorSpec extends SparkSpec {
         "tok", "sep_before", "line_trailing", "f_capitalisation")
   }
 
-  test("custom operator output is identical to the mapPartitions path") {
+  test("custom operator output is identical to the declarative assembly") {
     val f = feats(300)
     val viaOperator = BodySpans.spans(f)
       .orderBy("conv_id", "segment_id").collect().toSeq
-    val viaMapPartitions = Labeler.bodySpansFused(f)
+    val viaAssembly = declarative(f)
       .orderBy("conv_id", "segment_id").collect().toSeq
     assert(viaOperator.nonEmpty)
-    assert(viaOperator == viaMapPartitions)
+    assert(viaOperator == viaAssembly)
   }
 
   test("EnsureRequirements plans exactly one exchange for the operator") {
@@ -59,7 +67,15 @@ class PlanOperatorSpec extends SparkSpec {
       .select("conv_id", "turn_idx", "line_in_turn", "tok_idx",
         "tok", "sep_before", "line_trailing", "f_capitalisation")
     val a = BodySpans.spans(f).orderBy("segment_id").collect().toSeq
-    val b = Labeler.bodySpansFused(f).orderBy("segment_id").collect().toSeq
+    val b = declarative(f).orderBy("segment_id").collect().toSeq
     assert(a == b && a.nonEmpty)
+  }
+
+  test("the flagship plan has exactly one conv_id exchange") {
+    val plan = Pipeline.extract(Synthetic.transcripts(spark, 50))
+      .queryExecution.executedPlan.toString
+    val exchanges = plan.linesIterator
+      .count(_.contains("Exchange hashpartitioning(conv_id"))
+    assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
   }
 }

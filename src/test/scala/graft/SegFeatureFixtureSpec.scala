@@ -12,9 +12,7 @@ import graft.extract.Features
  * + count (20 of 33 columns; the rest encode PDF geometry/fonts/pages the
  * transcripts graft redefines).
  */
-class SegFeatureFixtureSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class SegFeatureFixtureSpec extends SparkSpec with FixtureSpec {
 
   private val checkedCols =
     Seq(0, 1, 2, 3, 4, 5, 6, 7, 13, 14, 15, 16, 17, 18, 19, 20, 21, 22, 25, 26)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import graft.text.TextCols
 
 /**
@@ -10,16 +11,22 @@ import graft.text.TextCols
  * category zoo (Nd vs No digits, Ll vs Other_Lowercase, Lu vs
  * titlecase Lt, astral Lu/Ll, fullwidth digits) and random fuzz.
  */
-class TokCapsKernelSpec extends SparkSpec {
+class TokCapsKernelSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
+
+  // one scratch directory per suite, removed when the suite ends
+  private lazy val tmpRoot = java.nio.file.Files.createTempDirectory("tokcaps")
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+    finally super.afterAll()
 
   private def assertSame(toks: Seq[String]): Unit = {
     // route through a parquet round-trip so the comparison exercises the
     // codegen path (doGenCode + the generated null wiring) — a projection
     // straight over a local Seq is folded by ConvertToLocalRelation and
     // would only run the interpreted eval()
-    val tmp = java.nio.file.Files
-      .createTempDirectory("tokcaps").resolve("toks").toString
+    val tmp = tmpRoot.resolve("toks").toString
     toks.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "tok").write.mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp)

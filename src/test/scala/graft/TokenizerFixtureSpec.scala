@@ -6,9 +6,7 @@ import graft.text.Tok
 /** The tokenizer backbone: tokenizing the decoded gold TEI text must
  * reproduce the token column of every body raw fixture file byte-for-byte
  * (per-turn text equality starts here). Pure Scala — no Spark needed. */
-class TokenizerFixtureSpec extends AnyFunSuite {
-
-  assume(Fixtures.available)
+class TokenizerFixtureSpec extends AnyFunSuite with FixtureSpec {
 
   test("tokenize(TEI source) == raw fixture token column, all 14 body files") {
     val names = Fixtures.bodyFixtureNames

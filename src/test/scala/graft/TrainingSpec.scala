@@ -5,9 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.{TeiGold, Training}
 
 /** S4/S5/J1/K4: gold-TEI source, trainer alignment, train/eval sink. */
-class TrainingSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class TrainingSpec extends SparkSpec with FixtureSpec {
 
   test("TeiGold body labels equal the fixture-derived gold labels") {
     Fixtures.bodyFixtureNames.foreach { name =>

@@ -10,9 +10,7 @@ import graft.extract.Labeler
  * bienaime_bourgey_1/eval.txt`). Asserts the measured round-1 floor so
  * regressions fail loudly.
  */
-class ZoneEvalSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class ZoneEvalSpec extends SparkSpec with FixtureSpec {
 
   test("zonesContent line-label agreement vs gold on all segmenter fixtures") {
     val sparkS = spark

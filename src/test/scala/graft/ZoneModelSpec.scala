@@ -12,9 +12,7 @@ import graft.extract.ZoneModel
  * 69.51 micro-F1 on its split after 6,781 s of native L-BFGS; this model
  * trains in seconds as two DataFrame aggregations.
  */
-class ZoneModelSpec extends SparkSpec {
-
-  assume(Fixtures.available)
+class ZoneModelSpec extends SparkSpec with FixtureSpec {
 
   test("held-out zone accuracy of the distributed-trained model") {
     val sparkS = spark
