@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
  */
 object Eval {
 
+  /** Root of the reference gold corpus (read-only), the one place its
+   * location is spelled; the test fixtures resolve from it too. */
+  val referenceRoot = "/root/reference/resources/dataset"
+
   /** The reference segmenter gold corpus (read-only). */
-  val segGoldTeiDir =
-    "/root/reference/resources/dataset/datacat-segmenter/corpus/tei"
+  val segGoldTeiDir = s"$referenceRoot/datacat-segmenter/corpus/tei"
 
   /**
    * Gold line/zone pairs for the segmenter corpus as a DataFrame:

@@ -45,8 +45,9 @@ object Pipeline {
    * sort-order requirements let EnsureRequirements reuse the exchange; it
    * consumes InternalRow directly (no Row-encoder round trip). It is
    * differential-tested byte-identical to [[extractDeclarative]]
-   * (`bodyLabels` then [[Assemble.bodySpans]]), the path [[runResumable]]
-   * runs.
+   * (`bodyLabels` then [[Assemble.bodySpans]]). [[runResumable]] labels
+   * with `bodyLabels`, commits, then walks the committed labels with the
+   * same operator's label mode.
    */
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.spans(bodyTokenFeats(turns))
@@ -295,13 +296,18 @@ object Pipeline {
    * manifest through [[TableIO]]; a re-run skips committed stages, so a
    * killed job resumes from its last checkpoint with identical output.
    * Per-partition lineage rows (rows/bytes/parse failures) are committed
-   * alongside each stage.
+   * alongside each stage. The spans stage follows the committed `label`
+   * column, never re-classifies: [[graft.plans.BodySpans.fromLabels]]
+   * walks it in one sorted pass (one conv_id exchange over the parquet
+   * read), output-identical to [[Assemble.bodySpans]].
    *
    * `chunkTurns = Some(c)` runs both stages on the chunk-parallel path
    * (same rows, ChunkedPipelineSpec) for giant-conversation corpora; the
    * committed `labeled` table doubles as the materialization the in-memory
    * path gets from localCheckpoint, so span assembly's phantom-edge scan
-   * re-reads column-pruned parquet instead of re-running the FSM.
+   * re-reads column-pruned parquet instead of re-running the FSM. That
+   * path keeps [[Assemble.bodySpansChunked]]: a label walk needs a whole
+   * conversation in one task, which is what chunking avoids.
    */
   def runResumable(turns: DataFrame, io: TableIO, runId: String = "r1",
       chunkTurns: Option[Int] = None): DataFrame = {
@@ -330,7 +336,7 @@ object Pipeline {
         val acc = Lineage.newTotals(spark, "spans")
         val spansDf = chunkTurns match {
           case Some(c) => Assemble.bodySpansChunked(labeled, c)
-          case None => Assemble.bodySpans(labeled)
+          case None => graft.plans.BodySpans.fromLabels(labeled)
         }
         val spans = Lineage.withPartitionLineage(spansDf, acc, Seq("text"))
         io.commit(spans, "spans", runId)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /**
  * Bigram language-model cross-entropy scoring — the perplexity-filter
@@ -63,7 +64,17 @@ object LangModel {
    * the single global `(__UNSEEN__, __UNSEEN__)` row.
    */
   def train(corpus: DataFrame, minCount: Long = 1,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame =
+    trainCapped(corpus, minCount, textCol, localModelCap)
+
+  /** Largest weights table [[train]] hands back as a driver-local
+   * relation; a larger one stays distributed. */
+  private val localModelCap = 1 << 20
+
+  /** [[train]] with the local-relation cap as a parameter, so specs can
+   * force the distributed branch on a small corpus. */
+  private[graft] def trainCapped(corpus: DataFrame, minCount: Long,
+      textCol: String, localCap: Int): DataFrame = {
     val ws = TextStats.words(col(textCol))
     // Materialized once: three consumers (context counts, kept bigrams,
     // and nothing re-scans the corpus for them).
@@ -91,18 +102,19 @@ object LangModel {
       .select(lit(unseenTok).as("prev"), lit(unseenTok).as("w"),
         fp(log(lit(1.0) / lit(v).cast("double"))).as("w_fp"))
     val model = big.unionByName(backoff).unionByName(global)
-    // ONE bounded collect, then a LOCAL relation: the model must fit in
-    // every executor anyway (xent broadcasts it three ways — seen-bigram,
-    // backoff, global), so collecting it to the driver first is the same
-    // memory class as the broadcast it feeds, and the three scoring
-    // broadcasts then build from a LocalTableScan with no Spark job each
-    // instead of re-running a small job over the checkpoint per branch.
-    // Values are identical: the collect happens AFTER the exact w_fp
+    // ONE bounded collect, then a LOCAL relation: xent broadcasts the
+    // model three ways (seen-bigram, backoff, global), so a model that
+    // fits a broadcast fits the driver, and the three scoring broadcasts
+    // then build from a LocalTableScan with no Spark job each instead of
+    // re-running a small job over the checkpoint per branch. The probe
+    // (`limit(cap + 1)`, as in Dedup.components) bounds driver memory:
+    // over the cap the distributed model is returned unchanged. Values
+    // are identical either way: the collect happens AFTER the exact w_fp
     // expressions (the Dsir.denseModel discipline).
-    val spark = corpus.sparkSession
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    model.collect().foreach(rows.add)
-    spark.createDataFrame(rows, model.schema)
+    val probe = model.limit(localCap + 1).collect()
+    if (probe.length > localCap) model
+    else corpus.sparkSession.createDataFrame(
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(probe).asJava, model.schema)
   }
 
   /**

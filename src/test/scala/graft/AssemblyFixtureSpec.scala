@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.extract.{Assemble, Structure}
+import graft.plans.BodySpans
 
 /**
  * THE north-rule test: per-turn extracted text/spans equal to the reference
@@ -49,19 +50,24 @@ class AssemblyFixtureSpec extends SparkSpec with FixtureSpec {
     assert(labeled.count() == fxs.map(_.goldLabels.size).sum,
       "every token must receive a gold label")
 
-    val spans = Assemble.bodySpans(labeled)
-      .orderBy($"conv_id", $"segment_id")
-      .select($"conv_id", $"label", $"text")
-      .collect()
-      .groupBy(_.getString(0))
+    // both span emitters over the gold labels: the declarative assembly
+    // and the operator's label walk (the resumable spans stage)
+    Seq("Assemble.bodySpans" -> Assemble.bodySpans(labeled),
+        "BodySpans.fromLabels" -> BodySpans.fromLabels(labeled)).foreach { case (path, df) =>
+      val spans = df
+        .orderBy($"conv_id", $"segment_id")
+        .select($"conv_id", $"label", $"text")
+        .collect()
+        .groupBy(_.getString(0))
 
-    fxs.foreach { fx =>
-      val got = spans(fx.name)
-      assert(got.length == fx.expectedSpans.size, s"${fx.name}: span count")
-      got.zip(fx.expectedSpans).zipWithIndex.foreach { case ((g, w), i) =>
-        assert(g.getString(1) == w.label, s"${fx.name} span $i label")
-        assert(g.getString(2) == w.encoded,
-          s"${fx.name} span $i text:\n  got  '${g.getString(2)}'\n  want '${w.encoded}'")
+      fxs.foreach { fx =>
+        val got = spans(fx.name)
+        assert(got.length == fx.expectedSpans.size, s"$path ${fx.name}: span count")
+        got.zip(fx.expectedSpans).zipWithIndex.foreach { case ((g, w), i) =>
+          assert(g.getString(1) == w.label, s"$path ${fx.name} span $i label")
+          assert(g.getString(2) == w.encoded,
+            s"$path ${fx.name} span $i text:\n  got  '${g.getString(2)}'\n  want '${w.encoded}'")
+        }
       }
     }
   }

@@ -11,7 +11,7 @@ import graft.text.Tok
  * label, the first token of a span gets the `I-` prefix.
  */
 object Fixtures {
-  val refRoot = "/root/reference/resources/dataset"
+  val refRoot = graft.extract.Eval.referenceRoot
   val bodyRaw = s"$refRoot/datacat-body-segmentation/corpus/raw"
   val bodyTei = s"$refRoot/datacat-body-segmentation/corpus/tei"
   val segRaw = s"$refRoot/datacat-segmenter/corpus/raw"

@@ -35,6 +35,19 @@ class LangModelSpec extends SparkSpec {
       fp(math.log(1.0 / 3)))
   }
 
+  test("a model over the local-relation cap stays distributed with the same weights") {
+    def isLocal(m: org.apache.spark.sql.DataFrame) = m.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val local = model()
+    assert(isLocal(local))
+    // the model has 6 rows: a cap of 6 still localizes, a cap of 5 does not
+    assert(isLocal(LangModel.trainCapped(trusted(), 1, "text", localCap = 6)))
+    val distributed = LangModel.trainCapped(trusted(), 1, "text", localCap = 5)
+    assert(!isLocal(distributed))
+    assert(distributed.collect().toSet == local.collect().toSet)
+    assert(distributed.schema == local.schema)
+  }
+
   test("xent sums exact weights through seen/backoff/global tiers") {
     val sparkS = spark
     import sparkS.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.extract.{LocalSnapshotIO, Pipeline, Synthetic}
+import graft.extract.{Assemble, LocalSnapshotIO, Pipeline, Synthetic}
 
 /** Ordering/salting invariance + checkpoint/resume (north-rule items). */
 class PipelineSpec extends SparkSpec {
@@ -66,6 +66,34 @@ class PipelineSpec extends SparkSpec {
     assert(resumed == full, "resume did not reuse the committed stage")
     assert(io2.committedSnapshot("labeled").contains("run1"))
     assert(io2.committedSnapshot("spans").contains("run2"))
+  }
+
+  test("resumed spans follow the committed labels, not a re-run of the FSM") {
+    val root = Files.createTempDirectory("graft-resume-labels").toString
+    val turns = Synthetic.transcripts(spark, 12)
+    val io1 = new LocalSnapshotIO(root)
+    Pipeline.runResumable(turns, io1, "run1")
+
+    // rewrite the committed labels: every line's first token opens an
+    // <entry>, a labeling the FSM never produces for this corpus
+    val rewritten = io1.read(spark, "labeled")
+      .withColumn("label", when(col("tok_idx") === 0, lit("I-<entry>"))
+        .otherwise(col("label")))
+    io1.commit(rewritten, "labeled", "edit")
+    val expected = Assemble.bodySpans(io1.read(spark, "labeled"))
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .collect().map(_.mkString("|")).sorted.toSeq
+    assert(expected.toSet != Pipeline.extract(turns)
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .collect().map(_.mkString("|")).toSet, "the rewrite must change the spans")
+
+    Files.delete(Paths.get(root, "spans", "_manifest.json"))
+    val io2 = new LocalSnapshotIO(root)
+    val resumed = Pipeline.runResumable(turns.limit(0), io2, "run2")
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .collect().map(_.mkString("|")).sorted.toSeq
+    assert(resumed == expected, "resumed spans do not follow the committed labels")
+    assert(io2.committedSnapshot("labeled").contains("edit"))
   }
 
   test("resumable run on the chunk-parallel path: identical output, resumable mid-run") {

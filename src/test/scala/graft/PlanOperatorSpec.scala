@@ -7,8 +7,9 @@ import graft.plans.BodySpans
 
 /**
  * The custom Catalyst operator (BodySpansPlan/Strategy/Exec) must be
- * byte-identical to the declarative assembly
- * (`Assemble.bodySpans(Labeler.bodyLabels(..))`), and Catalyst must plan
+ * byte-identical to the declarative assembly in both modes — the FSM mode
+ * to `Assemble.bodySpans(Labeler.bodyLabels(..))`, the label mode to
+ * `Assemble.bodySpans` over the same labeled frame — and Catalyst must plan
  * its exchange from the DECLARED requirements (one hashpartitioning, sort
  * inserted by EnsureRequirements — no manual repartition in the plan).
  */
@@ -19,6 +20,15 @@ class PlanOperatorSpec extends SparkSpec {
   private def declarative(f: DataFrame): DataFrame =
     Assemble.bodySpans(Labeler.bodyLabels(f))
       .select("conv_id", "segment_id", "label", "turn_idx", "text")
+
+  /** The declarative assembly of a labeled frame, in the operator's
+   * column order. */
+  private def assembled(labeled: DataFrame): DataFrame =
+    Assemble.bodySpans(labeled)
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
+
+  private def sortedRows(df: DataFrame) =
+    df.orderBy("conv_id", "segment_id").collect().toSeq
 
   private def feats(n: Long) = {
     val turns = Synthetic.transcripts(spark, n)
@@ -77,5 +87,90 @@ class PlanOperatorSpec extends SparkSpec {
     val exchanges = plan.linesIterator
       .count(_.contains("Exchange hashpartitioning(conv_id"))
     assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
+  }
+
+  test("label mode is identical to the declarative assembly on FSM labels") {
+    val labeled = Labeler.bodyLabels(feats(50))
+    val viaOperator = sortedRows(BodySpans.fromLabels(labeled))
+    assert(viaOperator.nonEmpty)
+    assert(viaOperator == sortedRows(assembled(labeled)))
+  }
+
+  test("label mode is identical to the declarative assembly on hand-built BIO frames") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val rows = Seq[(String, Int, Int, Int, String, String, String, String)](
+      // `I-` on a non-first token of a line; XML specials; a `\n` in the
+      // separator that ends a span (cut there) and in one inside a span (kept)
+      ("a", 0, 0, 0, "1", "", "\n", "I-<entry>"),
+      ("a", 0, 0, 1, "-", " ", "\n", "<entry>"),
+      ("a", 0, 0, 2, "x<y", " ", "\n", "I-<entry>"),
+      ("a", 0, 0, 3, "&'\"", " \n ", "\n", "<entry>"),
+      ("a", 0, 1, 0, "Tail>", " \n\n", null, "<entry>"),
+      // a base change with no `I-`, then back-to-back `I-` tokens
+      ("a", 0, 2, 0, "TITLE", "  \n", "", "<title>"),
+      ("a", 0, 2, 1, "U", " ", "", "I-<title>"),
+      ("a", 0, 2, 2, "V", " ", "", "I-<title>"),
+      // a null sep_before (the token before it falls back to its own
+      // line_trailing) and a null tok (Assemble drops its piece)
+      ("a", 0, 2, 3, "W", " ", " end\n", "<title>"),
+      ("a", 0, 2, 4, "X", null, " end\n", "<title>"),
+      ("a", 0, 2, 5, null, " ", " end\n", "<title>"),
+      // a span crossing a turn gap; the next span opens in a later turn
+      ("a", 2, 0, 0, "more", "\n", "\n", "<title>"),
+      ("a", 3, 0, 0, "desc", " ", " trail \n x", "<titledesc>"),
+      // one-token conversations: non-null, null and newline trailing
+      ("b", 0, 0, 0, "solo", "", "  \nz", "I-<other>"),
+      ("c", 5, 1, 2, "only", "\t", null, "<entry>"),
+      ("d", 0, 0, 0, "one", "", "\n", "<other>"),
+      // a null label (not BIO; Assemble makes it a one-token span)
+      ("e", 0, 0, 0, "p", "", " ", "<entry>"),
+      ("e", 0, 0, 1, "q", " ", " ", null),
+      ("e", 0, 0, 2, "r", " ", " ", "<entry>"),
+      ("f", 1, 0, 0, "Z", " ", "", "<entry>"),
+      ("f", 1, 0, 1, "z", " ", "", "<entry>"))
+    val labeled = rows.toDF("conv_id", "turn_idx", "line_in_turn", "tok_idx",
+      "tok", "sep_before", "line_trailing", "label")
+    // rows shuffled over several partitions; six conversations over the
+    // exchange's four partitions put a conversation boundary inside one
+    val shuffled = labeled.orderBy(rand(3)).repartition(3)
+    val viaOperator = sortedRows(BodySpans.fromLabels(shuffled))
+    assert(viaOperator.map(_.getString(0)).distinct == Seq("a", "b", "c", "d", "e", "f"))
+    assert(viaOperator == sortedRows(assembled(shuffled)))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      assert(sortedRows(BodySpans.fromLabels(shuffled)) == viaOperator)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+  }
+
+  test("label mode over a parquet read plans one conv_id exchange, no window or aggregate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-labeled").resolve("t").toString
+    Labeler.bodyLabels(feats(20)).write.parquet(dir)
+    val plan = BodySpans.fromLabels(spark.read.parquet(dir))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BodySpans"), s"custom exec missing:\n$plan")
+    val exchanges = plan.linesIterator
+      .count(_.contains("Exchange hashpartitioning(conv_id"))
+    assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Aggregate"),
+      s"label walk must not plan a window or an aggregate:\n$plan")
+    // the label walk reads `label`, not the FSM's capitalisation feature
+    assert(!plan.contains("f_capitalisation"), s"f_capitalisation not pruned:\n$plan")
+  }
+
+  test("label mode over labeledBodyTokens adds one conv_id exchange, no window or aggregate") {
+    val plan = BodySpans.fromLabels(
+      Pipeline.labeledBodyTokens(Synthetic.transcripts(spark, 50)))
+      .queryExecution.executedPlan.toString
+    // two, not one: bodyLabels is a Row-encoder mapPartitions, whose
+    // serializer outputs fresh conv_id attributes, so the pipeline's
+    // hashpartitioning(conv_id) upstream cannot satisfy the operator's
+    // declared distribution
+    val exchanges = plan.linesIterator
+      .count(_.contains("Exchange hashpartitioning(conv_id"))
+    assert(exchanges == 2, s"expected 2 conv_id exchanges, got $exchanges:\n$plan")
+    val above = plan.linesIterator.takeWhile(!_.contains("SerializeFromObject")).mkString("\n")
+    assert(!above.contains("Window") && !above.contains("Aggregate"), above)
   }
 }

@@ -90,6 +90,15 @@ class RobustnessSpec extends SparkSpec {
     val lin = graft.extract.Lineage.lineageRows(spark, "labeled", acc,
       fails.value.map { case (p, (r, _)) => p -> r })
     assert(lin.agg(sum("parse_failures")).head().getLong(0) == 1L)
+    // the label walk over the surviving lines agrees with the declarative
+    // assembly (the resumable spans stage reads exactly this frame); each
+    // action re-runs the labeler, so this comes after the failure counts
+    val walked = graft.plans.BodySpans.fromLabels(labeled)
+      .orderBy("segment_id").collect().toSeq
+    assert(walked.nonEmpty)
+    assert(walked == Assemble.bodySpans(labeled)
+      .select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .orderBy("segment_id").collect().toSeq)
   }
 
   test("a single giant line streams through (no per-conv materialization blowup)") {
