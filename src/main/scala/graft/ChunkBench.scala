@@ -32,10 +32,8 @@ object ChunkBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val nTurns = sys.env.getOrElse("SPARK_GRAFT_CHUNK_TURNS", "1000000").toLong
     val chunk = sys.env.getOrElse("SPARK_GRAFT_CHUNK_SIZE", "16384").toInt
-    // e2eOnly skips the isolated-FSM stage measurements (fast A/B loops);
-    // mat toggles the pipeline's localCheckpoint materialization
+    // e2eOnly skips the isolated-FSM stage measurements (fast A/B loops)
     val e2eOnly = sys.env.get("SPARK_GRAFT_CHUNK_E2E_ONLY").contains("1")
-    val mat = sys.env.getOrElse("SPARK_GRAFT_CHUNK_MAT", "false").toBoolean
     val spark = Bench.mkSpark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -71,12 +69,12 @@ object ChunkBench {
     val turns = spark.read.parquet(turnsDir)
     val warmT = turns.where(org.apache.spark.sql.functions.col("turn_idx") < 20000)
     noop(Pipeline.extract(warmT))
-    noop(Pipeline.extractChunked(warmT, chunk, materialize = mat))
+    noop(Pipeline.extractChunked(warmT, chunk))
     val e2eSeqSec = (1 to reps).map { _ =>
       Bench.time(noop(Pipeline.extract(turns)))._2
     }.min
     val e2eChkSec = (1 to reps).map { _ =>
-      Bench.time(noop(Pipeline.extractChunked(turns, chunk, materialize = mat)))._2
+      Bench.time(noop(Pipeline.extractChunked(turns, chunk)))._2
     }.min
 
     // e2e-only runs skip the stage measurements: emit JSON null for them
@@ -87,7 +85,7 @@ object ChunkBench {
         f""""speedup":${seqSec / chkSec}%.2f,"""
     val json =
       f"""{"metric":"single_conv_fsm","turns":$nTurns,"chunk_turns":$chunk,""" +
-        f""""cpus":"$cpus","materialize":$mat,""" + stageJson +
+        f""""cpus":"$cpus",""" + stageJson +
         f""""e2e_sequential_sec":$e2eSeqSec%.2f,"e2e_chunked_sec":$e2eChkSec%.2f,""" +
         f""""e2e_speedup":${e2eSeqSec / e2eChkSec}%.2f}"""
     println(json)

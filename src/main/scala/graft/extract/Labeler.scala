@@ -516,9 +516,6 @@ object Labeler {
           concat(lit("I-"), col("zone"))).otherwise(col("zone")))
       .drop("_line_no", "_is_mark", "_is_trigger", "_mark_frac", "_numeric", "_strong", "_sparse", "_mark_num", "_prev_nums", "_seq_mark", "_seqr", "_repetitive", "_region_id", "_nletters", "_r_start", "_r_end", "_r_letters", "_r_marks", "_r_content", "_r_is_body", "_r_index", "_first_body", "_last_body")
 
-  // one buffered line of the body FSM
-  private case class LineBuf(rows: Vector[Row], tokIdxOf: Int, labelAt: Int)
-
   private[extract] val entryStartRe = "^(\\p{Nd}+|[iIjJ!,]\\p{Nd}*|[iIjJ]{1,3})$".r
   private[extract] val dashSet = Set("-", "_", "–", "−", ".")
 
@@ -536,10 +533,11 @@ object Labeler {
         ((toks.size > 1 && dashSet(toks(1))) || head.forall(_.isDigit))
     }
 
-  /** The body FSM's line-classification state machine, shared by the
-   * label-emitting pass ([[bodyLabels]]) and the span-emitting custom
-   * physical operator ([[graft.plans.BodySpansExec]]) so they cannot
-   * drift. */
+  /** The body FSM's line-classification state machine, shared by every
+   * walk that runs it so they cannot drift: [[bodyLabels]] and both passes of
+   * [[bodyLabelsChunked]] (through [[walkLines]]), and the span-emitting
+   * custom physical operator's FSM walk (`graft.plans.ClassifierWalk`
+   * inside [[graft.plans.BodySpansExec]]). */
   private[graft] final class LineClassifier {
     private var curConv: String = null
     private var openLabel: String = null
@@ -783,92 +781,132 @@ object Labeler {
    */
   def bodyLabels(tokens: DataFrame, repartitionByConv: Boolean = true,
       failures: Option[Lineage.PartitionStats] = None): DataFrame = {
-    val spark = tokens.sparkSession
-    val inSchema = tokens.schema
-    val outSchema = StructType(inSchema.fields :+ StructField("label", StringType, false))
-    val iConv = inSchema.fieldIndex("conv_id")
-    val iTurn = inSchema.fieldIndex("turn_idx")
-    val iLine = inSchema.fieldIndex("line_in_turn")
-    val iTok = inSchema.fieldIndex("tok")
-    val iCap = inSchema.fieldIndex("f_capitalisation")
-
     // when the caller's plan is already hash-partitioned by conv_id (the
     // single-exchange pipeline), skip the redundant shuffle
     val sorted = (if (repartitionByConv) tokens.repartition(col("conv_id")) else tokens)
       .sortWithinPartitions("conv_id", "turn_idx", "line_in_turn", "tok_idx")
-
-    val labeled = sorted.mapPartitions { it =>
-      new Iterator[Row] {
-        private var out: Iterator[Row] = Iterator.empty
-        private val cls = new LineClassifier
-        private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        // one-line lookahead: the last COMPLETED line waits here until the
-        // following line is known (or input/conversation ends); its token
-        // vector is cached so each line's tokens are extracted exactly once
-        private var pend: Vector[Row] = null
-        private var pendToks: Vector[String] = null
-
-        private def emitLine(rows: Vector[Row], rowToks: Vector[String],
-            nextIsEntry: Boolean): Iterator[Row] =
-          // S3-style per-line error isolation: a malformed line is dropped
-          // and counted per partition instead of failing the task (the
-          // reference isolates per FILE, EngineDatacat.java:114-150)
-          try {
-            val (base, isStart) = cls.classify(rows.head.getString(iConv),
-              rowToks, rows.map(_.getString(iCap)), nextIsEntry)
-            rows.iterator.zipWithIndex.map { case (r, i) =>
-              val lab = if (i == 0 && isStart) "I-" + base else base
-              Row.fromSeq(r.toSeq :+ lab)
-            }
-          } catch { case scala.util.control.NonFatal(_) =>
-            failures.foreach(_.add(
-              (org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
-            Iterator.empty
-          }
-
-        /** A line just completed: classify the PREVIOUS one with lookahead. */
-        private def feed(rows: Vector[Row]): Iterator[Row] = {
-          val rowToks = rows.map(_.getString(iTok))
-          val res =
-            if (pend == null) Iterator.empty
-            else {
-              val sameConv =
-                pend.head.getString(iConv) == rows.head.getString(iConv)
-              emitLine(pend, pendToks, sameConv && isEntryLine(rowToks))
-            }
-          pend = rows; pendToks = rowToks
-          res
-        }
-
-        private def lineKey(r: Row) = (r.getString(iConv), r.getInt(iTurn), r.getInt(iLine))
-
-        private def advance(): Unit = {
-          while (!out.hasNext && it.hasNext) {
-            val r = it.next()
-            if (buf.nonEmpty && lineKey(buf.head) != lineKey(r)) {
-              val rows = buf.toVector; buf.clear(); buf += r
-              out = feed(rows)
-            } else buf += r
-          }
-          if (!out.hasNext && !it.hasNext) {
-            if (buf.nonEmpty) {
-              val rows = buf.toVector; buf.clear()
-              out = feed(rows)
-            }
-            if (!out.hasNext && pend != null) {
-              val p = pend; val pt = pendToks; pend = null
-              out = emitLine(p, pt, nextIsEntry = false)
-            }
-          }
-        }
-
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Row = { advance(); out.next() }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    labeled
+    labelWalk(sorted, tokens.schema, chunked = false, failures)
   }
+
+  /**
+   * The labeling walk of [[bodyLabels]] and of pass 2 of
+   * [[bodyLabelsChunked]]: `sorted` holds the columns of `in`, then, when
+   * `chunked`, `_chunk`, `_peek` and `_entry`. A group starts from state
+   * `_entry` (0 if unchunked or null); the output is each non-peek row's
+   * `in` columns plus the BIO `label`. S3-style per-line
+   * error isolation: a malformed line is dropped and counted per partition
+   * instead of failing the task (the reference isolates per FILE,
+   * EngineDatacat.java:114-150).
+   */
+  private def labelWalk(sorted: DataFrame, in: StructType, chunked: Boolean,
+      failures: Option[Lineage.PartitionStats]): DataFrame = {
+    val Seq(iConv, iTurn, iLine, iTok, iCap) =
+      Seq("conv_id", "turn_idx", "line_in_turn", "tok", "f_capitalisation").map(in.fieldIndex)
+    val nIn = in.size
+    val (iChunk, iPeek, iEntry) = if (chunked) (nIn, nIn + 1, nIn + 2) else (-1, -1, -1)
+    sorted.mapPartitions { it =>
+      val cls = new LineClassifier
+      def labelLine(rows: Vector[Row], toks: Vector[String], nextIsEntry: Boolean) =
+        try {
+          val (base, isStart) = cls.classify(rows.head.getString(iConv), toks,
+            rows.map(_.getString(iCap)), nextIsEntry)
+          Iterator.tabulate(rows.size) { i =>
+            val r = rows(i)
+            val vals = new Array[Any](nIn + 1)
+            var k = 0
+            while (k < nIn) { vals(k) = r.get(k); k += 1 }
+            vals(nIn) = if (i == 0 && isStart) "I-" + base else base
+            new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
+          }
+        } catch { case scala.util.control.NonFatal(_) =>
+          failures.foreach(_.add((org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
+          Iterator.empty
+        }
+      walkLines(it, iConv, iChunk, iTurn, iLine, iTok, iPeek)(
+        first => cls.setState(if (iEntry < 0 || first.isNullAt(iEntry)) 0
+          else first.getInt(iEntry), first.getString(iConv)),
+        labelLine)
+    }(org.apache.spark.sql.Encoders.row(StructType(in.fields :+
+      StructField("label", StringType, false))))
+  }
+
+  /**
+   * The Row line walker behind [[bodyLabels]] and both passes of
+   * [[bodyLabelsChunked]]. Input is sorted by (group, turn_idx,
+   * line_in_turn, tok_idx); the group is `conv_id`, or (`conv_id`,
+   * `_chunk`) when `iChunk >= 0`. A line is a maximal run of equal
+   * (group, turn_idx, line_in_turn).
+   *
+   *  - `onStart` sees each group's first row (it sets the classifier state);
+   *  - each non-peek line goes to `onLine` once its successor in the same
+   *    group is known, with `nextIsEntry` = [[isEntryLine]] of the
+   *    successor's tokens, `false` for the group's last line; peek rows
+   *    (`iPeek >= 0`) only ever serve as a successor;
+   *  - `onEnd` runs after the group's last line.
+   *
+   * The callbacks run eagerly in input order, so a line is classified while
+   * the classifier still holds its group's state; only the iterators they
+   * return are drained lazily. Streams: at most the current and the
+   * pending line are buffered.
+   */
+  private def walkLines[A](it: Iterator[Row], iConv: Int, iChunk: Int, iTurn: Int,
+      iLine: Int, iTok: Int, iPeek: Int)(
+      onStart: Row => Unit,
+      onLine: (Vector[Row], Vector[String], Boolean) => Iterator[A],
+      onEnd: () => Iterator[A] = () => Iterator.empty): Iterator[A] =
+    new Iterator[A] {
+      private var out: Iterator[A] = Iterator.empty
+      private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+      // the last completed line waits here until its successor is known;
+      // its token vector is cached so each line's tokens are read once
+      private var pend: Vector[Row] = null
+      private var pendToks: Vector[String] = null
+
+      private def sameGroup(a: Row, b: Row): Boolean =
+        a.getString(iConv) == b.getString(iConv) &&
+          (iChunk < 0 || a.getInt(iChunk) == b.getInt(iChunk))
+
+      private def sameLine(a: Row, b: Row): Boolean =
+        a.getInt(iTurn) == b.getInt(iTurn) && a.getInt(iLine) == b.getInt(iLine)
+
+      /** The buffered line is complete: it is the pending line's lookahead,
+       * and then the pending line itself, unless it is a peek. */
+      private def completeLine(): Iterator[A] = {
+        val rows = buf.toVector; buf.clear()
+        val toks = rows.map(_.getString(iTok))
+        val res =
+          if (pend == null) Iterator.empty
+          else onLine(pend, pendToks, isEntryLine(toks))
+        if (iPeek >= 0 && rows.head.getBoolean(iPeek)) { pend = null; pendToks = null }
+        else { pend = rows; pendToks = toks }
+        res
+      }
+
+      private def endGroup(): Iterator[A] = {
+        val res = completeLine()
+        val last = if (pend == null) Iterator.empty else onLine(pend, pendToks, false)
+        pend = null; pendToks = null
+        // vals, not by-name `++` operands: every callback of this group
+        // runs now, before the next group's onStart resets the classifier
+        val end = onEnd()
+        res ++ last ++ end
+      }
+
+      private def advance(): Unit =
+        while (!out.hasNext && (it.hasNext || buf.nonEmpty)) {
+          if (!it.hasNext) out = endGroup()
+          else {
+            val r = it.next()
+            if (buf.isEmpty) onStart(r)
+            else if (!sameGroup(buf.head, r)) { out = endGroup(); onStart(r) }
+            else if (!sameLine(buf.head, r)) out = completeLine()
+            buf += r
+          }
+        }
+
+      def hasNext: Boolean = { advance(); out.hasNext }
+      def next(): A = { advance(); out.next() }
+    }
 
   /** Scala mirror of [[graft.text.TextCols.htmlEncode]] (same replacement
    * order) for the [[graft.plans.BodySpans]] span emitter. */
@@ -918,8 +956,8 @@ object Labeler {
    * extra narrow shuffle and FSM walk, against which the
    * conversation-serial sort AND FSM both become parallel. Use when
    * single conversations are large enough that one-task-per-conversation
-   * is the bottleneck; [[bodyLabels]] stays the default. Span assembly
-   * over the result is [[Assemble.bodySpans]] (declarative, unchanged).
+   * is the bottleneck; [[bodyLabels]] stays the default. Spans over the
+   * result come from [[Assemble.bodySpansChunked]].
    */
   def bodyLabelsChunked(tokens: DataFrame, chunkTurns: Int = 4096,
       failures: Option[Lineage.PartitionStats] = None,
@@ -928,17 +966,7 @@ object Labeler {
     val spark = tokens.sparkSession
     import spark.implicits._
     val inSchema = tokens.schema
-    val nIn = inSchema.size
     val inCols = inSchema.fieldNames.toSeq
-    val outSchema = StructType(inSchema.fields :+ StructField("label", StringType, false))
-    val iConv = inSchema.fieldIndex("conv_id")
-    val iTurn = inSchema.fieldIndex("turn_idx")
-    val iLine = inSchema.fieldIndex("line_in_turn")
-    val iTok = inSchema.fieldIndex("tok")
-    val iCap = inSchema.fieldIndex("f_capitalisation")
-    val iChunk = nIn       // appended below, in this order
-    val iPeek = nIn + 1
-    val iEntry = nIn + 2
 
     // ---- chunk ids + peek rows -------------------------------------------
     // `materialize` = localCheckpoint the chunk-marked frame before the
@@ -1027,60 +1055,31 @@ object Labeler {
         .join(broadcast(multiChunkConvs), Seq("conv_id"), "left_semi")
         .select(p1Cols.map(col): _*))
       .mapPartitions { it =>
-        val res = scala.collection.mutable.ArrayBuffer.empty[Row]
         val cls = new LineClassifier
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var group: (String, Int) = null
-        var cur: Array[Int] = null
-        var pendToks: Vector[String] = null
-        var pendCaps: Vector[String] = null
-
-        def transit(nextIsEntry: Boolean): Unit = if (pendToks != null) {
-          val distinct = cur.distinct
-          val m = new java.util.HashMap[Int, Int](NStates)
-          var k = 0
-          while (k < distinct.length) {
-            val s = distinct(k)
-            val ns = try {
-              cls.setState(s, group._1)
-              cls.classify(group._1, pendToks, pendCaps, nextIsEntry)
-              cls.stateId
-            } catch { // dropped line = identity (mirrors pass 2's drop)
-              case scala.util.control.NonFatal(_) => s
+        var conv: String = null
+        var chunk = 0
+        var cur: Array[Int] = null // exit state per entry state, so far
+        walkLines(it, jConv, jChunk, jTurn, jLine, jTok, jPeek)(
+          { first =>
+            conv = first.getString(jConv); chunk = first.getInt(jChunk)
+            cur = Array.tabulate(NStates)(identity)
+          },
+          { (rows, toks, nextIsEntry) =>
+            // advance each distinct tracked state over this line; a dropped
+            // line is the identity (mirrors pass 2's drop)
+            val caps = rows.map(_.getString(jCap))
+            val step = new Array[Int](NStates)
+            cur.distinct.foreach { s =>
+              step(s) = try {
+                cls.setState(s, conv)
+                cls.classify(conv, toks, caps, nextIsEntry)
+                cls.stateId
+              } catch { case scala.util.control.NonFatal(_) => s }
             }
-            m.put(s, ns); k += 1
-          }
-          var i = 0
-          while (i < NStates) { cur(i) = m.get(cur(i)); i += 1 }
-        }
-        def completeLine(rows: Seq[Row]): Unit = {
-          val toks = rows.map(_.getString(jTok)).toVector
-          transit(isEntryLine(toks))
-          if (rows.head.getBoolean(jPeek)) pendToks = null
-          else { pendToks = toks; pendCaps = rows.map(_.getString(jCap)).toVector }
-        }
-        def finishGroup(): Unit = if (group != null) {
-          if (buf.nonEmpty) { completeLine(buf.toSeq); buf.clear() }
-          transit(nextIsEntry = false) // conv-last chunk only (else consumed by peek)
-          res += Row(group._1, group._2, cur.toSeq)
-        }
-        def startGroup(r: Row): Unit = {
-          group = (r.getString(jConv), r.getInt(jChunk))
-          cur = Array.tabulate(NStates)(identity)
-          pendToks = null; pendCaps = null
-        }
-        def lineKey(r: Row) = (r.getInt(jTurn), r.getInt(jLine))
-        it.foreach { r =>
-          if (group == null) startGroup(r)
-          else if ((r.getString(jConv), r.getInt(jChunk)) != group) {
-            finishGroup(); startGroup(r)
-          } else if (buf.nonEmpty && lineKey(buf.head) != lineKey(r)) {
-            completeLine(buf.toSeq); buf.clear()
-          }
-          buf += r
-        }
-        finishGroup()
-        res.iterator
+            cur = cur.map(step)
+            Iterator.empty
+          },
+          () => Iterator.single(Row(conv, chunk, cur.toSeq)))
       }(org.apache.spark.sql.Encoders.row(fnSchema))
 
     // ---- compose per conversation (chunk-level fold, tiny frame) ----------
@@ -1096,86 +1095,6 @@ object Labeler {
     val withEntry = parted(aug
       .join(broadcast(entries), Seq("conv_id", "_chunk"), "left")
       .select((inCols :+ "_chunk" :+ "_peek" :+ "_entry").map(col): _*))
-
-    withEntry.mapPartitions { it =>
-      new Iterator[Row] {
-        private var out: Iterator[Row] = Iterator.empty
-        private val cls = new LineClassifier
-        private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        private var group: (String, Int) = null
-        private var pend: Vector[Row] = null
-        private var pendToks: Vector[String] = null
-
-        private def emitLine(rows: Vector[Row], rowToks: Vector[String],
-            nextIsEntry: Boolean): Iterator[Row] =
-          try {
-            val (lbl, isStart) = cls.classify(rows.head.getString(iConv),
-              rowToks, rows.map(_.getString(iCap)), nextIsEntry)
-            rows.iterator.zipWithIndex.map { case (r, i) =>
-              val lab = if (i == 0 && isStart) "I-" + lbl else lbl
-              Row.fromSeq(r.toSeq.take(nIn) :+ lab)
-            }
-          } catch { case scala.util.control.NonFatal(_) =>
-            failures.foreach(_.add(
-              (org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
-            Iterator.empty
-          }
-
-        private def feed(rows: Vector[Row]): Iterator[Row] = {
-          val rowToks = rows.map(_.getString(iTok))
-          val res =
-            if (pend == null) Iterator.empty
-            else emitLine(pend, pendToks, isEntryLine(rowToks))
-          if (rows.head.getBoolean(iPeek)) { pend = null; pendToks = null }
-          else { pend = rows; pendToks = rowToks }
-          res
-        }
-
-        private def finishGroup(): Iterator[Row] = {
-          var res: Iterator[Row] = Iterator.empty
-          if (buf.nonEmpty) { val rows = buf.toVector; buf.clear(); res = feed(rows) }
-          if (pend != null) {
-            val p = pend; val pt = pendToks; pend = null; pendToks = null
-            // Iterator#++ takes its operand BY NAME: emitLine must run NOW,
-            // while the classifier still holds THIS group's state — deferred,
-            // it would classify under the next group's entry state
-            val tail = emitLine(p, pt, nextIsEntry = false)
-            res = res ++ tail
-          }
-          res
-        }
-
-        private def startGroup(r: Row): Unit = {
-          group = (r.getString(iConv), r.getInt(iChunk))
-          val entry = if (r.isNullAt(iEntry)) 0 else r.getInt(iEntry)
-          cls.setState(entry, r.getString(iConv))
-          pend = null; pendToks = null
-        }
-
-        private def lineKey(r: Row) = (r.getInt(iTurn), r.getInt(iLine))
-
-        private def advance(): Unit = {
-          while (!out.hasNext && it.hasNext) {
-            val r = it.next()
-            if (group == null) { startGroup(r); buf += r }
-            else if ((r.getString(iConv), r.getInt(iChunk)) != group) {
-              val fin = finishGroup()
-              startGroup(r); buf += r
-              out = fin
-            } else if (buf.nonEmpty && lineKey(buf.head) != lineKey(r)) {
-              val rows = buf.toVector; buf.clear(); buf += r
-              out = feed(rows)
-            } else buf += r
-          }
-          if (!out.hasNext && !it.hasNext && group != null) {
-            out = finishGroup()
-            group = null
-          }
-        }
-
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Row = { advance(); out.next() }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    labelWalk(withEntry, inSchema, chunked = true, failures)
   }
 }

@@ -10,10 +10,10 @@ import scala.collection.concurrent.TrieMap
  * the reference's CntManager, `EngineDatacat.java:28,338-344`).
  *
  * Two complementary mechanisms:
- *  - [[observe]]: Dataset.observe() named metrics (rows/bytes) — zero-cost,
+ *  - [[observedTurns]]: Dataset.observe() named metrics (rows/characters) — zero-cost,
  *    collected with the job, suitable for always-on counters;
  *  - [[withPartitionLineage]]: a pass-through mapPartitions that records
- *    (partition_id, rows, bytes) into an accumulator, dumped as a DataFrame
+ *    (partition_id, rows, characters) into an accumulator, dumped as a DataFrame
  *    by [[lineageRows]] after an action. Use on checkpoint boundaries.
  */
 object Lineage {
@@ -62,8 +62,9 @@ object Lineage {
     acc
   }
 
-  /** Pass-through that counts rows and serialized text bytes per partition.
-   * `textCols` contribute to the byte counter. Totals are accumulated
+  /** Pass-through that counts rows and text characters per partition:
+   * the `String.length` (UTF-16 units) of each non-null `textCols` value
+   * feeds the counter reported as `bytes`. Totals are accumulated
    * task-locally and reported once at partition exhaustion, so `acc` MUST
    * be a dedupe accumulator ([[newTotals]]) — retries then re-report the
    * same totals instead of inflating them. */

@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
  */
 object Pipeline {
 
-  /** Zone-label the lines of a transcript table. */
-  def zonedLines(turns: DataFrame): DataFrame =
-    Labeler.zones(Features.segmenter(Structure.keptLines(turns)))
-
   /** Synthesize null role/tool columns for document-shaped input. */
   private def withNullRoleCols(docs: DataFrame): DataFrame = {
     val withRole =
@@ -212,26 +208,17 @@ object Pipeline {
    * second FSM pass — keep [[extract]] (one exchange) for corpora whose
    * conversations are ordinarily sized; conv_id alone balances there.
    */
-  def extractChunked(turns: DataFrame, chunkTurns: Int = 4096,
-      materialize: Boolean = false): DataFrame = {
-    // `materialize` caches the FSM output (and the FSM input, inside the
-    // labeler) so downstream multi-scans never recompute. MEASURED
-    // (ChunkBench, 2M-turn single conversation, 16 cores / 16g):
-    // materialize=false runs at sequential parity (174s vs 168s) because
-    // AQE stage reuse serves every repeated subtree from its shuffle
-    // files, while materialize=true THRASHES the storage pool (379s) —
-    // two full-frame localCheckpoints exceed a single JVM's storage
-    // fraction and evict each other to disk. Default OFF: recompute is
-    // near-free under shuffle reuse, caching risks the memory cliff; turn
-    // it on only when executor storage comfortably fits ~2 copies of the
-    // token frame. The resumable path ([[runResumable]] with chunkTurns)
-    // sidesteps the tradeoff: its committed parquet stages make every
-    // re-scan a column-pruned file read.
-    val labeled0 = labeledBodyTokensChunked(turns, chunkTurns,
-      materialize = materialize)
-    val labeled = if (materialize) labeled0.localCheckpoint() else labeled0
-    Assemble.bodySpansChunked(labeled, chunkTurns)
-  }
+  def extractChunked(turns: DataFrame, chunkTurns: Int = 4096): DataFrame =
+    // nothing is localCheckpointed: AQE stage reuse serves every repeated
+    // subtree from its shuffle files. MEASURED (ChunkBench, 2M-turn single
+    // conversation, 16 cores / 16g): 174s against 168s sequential, while
+    // checkpointing the labeler's input and output THRASHED the storage
+    // pool (379s) — two full-frame copies exceed a single JVM's storage
+    // fraction and evict each other to disk. The resumable path
+    // ([[runResumable]] with chunkTurns) re-scans committed parquet stages
+    // instead, column-pruned.
+    Assemble.bodySpansChunked(
+      labeledBodyTokensChunked(turns, chunkTurns, materialize = false), chunkTurns)
 
   /** structure → zone → scalar features → parallel FSM, all chunk-keyed —
    * the giant-conversation twin of [[labeledBodyTokens]]. */

@@ -26,9 +26,6 @@ import graft.text.{Tok, TextCols}
  */
 object Structure {
 
-  /** Turn columns expected on the input. */
-  val turnCols = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
   /** Delimiter tokenizer as a native codegen'd Catalyst expression
    * ([[graft.functions.Tokenize]]; semantics pinned byte-exactly against
    * the 14 body fixtures, property-tested in TokPropertySpec). */
@@ -204,12 +201,6 @@ object Structure {
         col("line_trailing")): _*)
       .withColumn("nl_before", col("tok_idx") === 0 && col("line_in_turn") > 0)
       .withColumn("sp_before", col("sep_before") =!= "")
-
-  /** Global per-conversation unit index (stable turn ordering invariant). */
-  def withUnitIdx(df: DataFrame, orderCols: Seq[String]): DataFrame =
-    df.withColumn("unit_idx",
-      row_number().over(Window.partitionBy("conv_id")
-        .orderBy(orderCols.map(col): _*)).cast("long") - 1)
 
   /**
    * The transcripts view over the driver's `documents` test table:

@@ -21,51 +21,4 @@ object model {
       text: String,
       tool: String,
       ts: Timestamp)
-
-  /** One line of one turn (the segmenter labeling unit). */
-  final case class LineUnit(
-      conv_id: String,
-      turn_idx: Int,
-      block_idx: Int,
-      line_idx: Int, // within block
-      line_in_turn: Int, // within turn, over the raw newline split
-      text: String)
-
-  /** One token (the body labeling unit), with exact re-assembly metadata. */
-  final case class TokenUnit(
-      conv_id: String,
-      turn_idx: Int,
-      block_idx: Int,
-      line_in_turn: Int,
-      tok_idx: Int, // within line
-      tok: String,
-      sep_before: String)
-
-  /** CRF-style labeled unit. */
-  final case class LabeledUnit(
-      conv_id: String,
-      unit_idx: Long,
-      token: String,
-      label: String)
-
-  /** Assembled output span (the per-turn extraction result). */
-  final case class Span(
-      conv_id: String,
-      segment_id: Long,
-      label: String,
-      text: String)
-
-  /** Per-partition lineage row (north-rule requirement). */
-  final case class LineageRow(
-      stage: String,
-      partition_id: Int,
-      rows_in: Long,
-      rows_out: Long,
-      bytes: Long,
-      parse_failures: Long)
-
-  val SegmenterLabels: Seq[String] =
-    Seq("<front>", "<body>", "<back>", "<annex>", "<other>")
-  val BodyLabels: Seq[String] =
-    Seq("<entry>", "<title>", "<titledesc>", "<other>")
 }

@@ -115,17 +115,10 @@ object Dedup {
     sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band buckets: rows (id, band, bucket) — join on (band, bucket) for
-   * candidate pairs. bands = k/rowsPerBand. */
-  def lshBuckets(sigs: DataFrame, rowsPerBand: Int = 4, idCol: String = "doc_id"): DataFrame =
-    sigs.withColumn("band", (col("seed") / rowsPerBand).cast("int"))
-      .groupBy(col(idCol), col("band"))
-      .agg(md5(array_join(array_sort(collect_list(
-        concat_ws("@", col("seed"), col("minhash")))), "|")).as("bucket"))
-
-  /** Band buckets from the wide signature frame — bucket bytes identical to
-   * [[lshBuckets]] (same sorted `seed@minhash` string), but computed by a
-   * shuffle-free explode instead of a second groupBy. */
+  /** LSH band buckets from the wide signature frame: rows (id, band,
+   * bucket), bands = k/rowsPerBand — join on (band, bucket) for candidate
+   * pairs. A band's bucket is the md5 of its sorted `seed@minhash` strings,
+   * built per row by a shuffle-free explode (no groupBy). */
   def lshBucketsFromWide(wide: DataFrame, k: Int, rowsPerBand: Int = 4,
       idCol: String = "doc_id"): DataFrame = {
     val bands = (0 until k by rowsPerBand).zipWithIndex.map { case (s0, b) =>

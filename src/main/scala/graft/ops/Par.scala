@@ -5,22 +5,6 @@ import org.apache.spark.sql.DataFrame
 /** Input-parallelism guard shared by the compute-heavy operators. */
 object Par {
 
-  /** Ensure at least `defaultParallelism` partitions before heavy per-row
-   * compute: a single-split input (tiny local file, coalesced upstream)
-   * would otherwise serialize the work onto one task. No-op when the scan
-   * already provides enough splits — at 100 TB the file splits give full
-   * parallelism and no shuffle is added.
-   *
-   * Split count is estimated from the optimizer's size statistics
-   * (`optimizedPlan.stats.sizeInBytes / files.maxPartitionBytes`) instead of
-   * `df.rdd.getNumPartitions`, which would force full physical planning of
-   * the frame once per call site. The estimate only has to be directionally
-   * right: any multi-split input clears the threshold and is left alone.
-   * When the stats are the UNKNOWN sentinel (`defaultSizeInBytes`, e.g. an
-   * RDD-backed frame from `localCheckpoint`/`createDataFrame`), the
-   * estimate would silently report "huge" and never spread a
-   * single-partition input — only there fall back to the physical
-   * partition count (cheap for those plans: the RDD already exists). */
   /** Optimizer-estimated input split count vs the session's default
    * parallelism — the shared "is this input too small to parallelize by
    * itself" probe behind [[spread]], [[clusterBy]] and [[clusterSmall]].
@@ -37,6 +21,22 @@ object Par {
     (est, target)
   }
 
+  /** Ensure at least `defaultParallelism` partitions before heavy per-row
+   * compute: a single-split input (tiny local file, coalesced upstream)
+   * would otherwise serialize the work onto one task. No-op when the scan
+   * already provides enough splits — at 100 TB the file splits give full
+   * parallelism and no shuffle is added.
+   *
+   * Split count is estimated from the optimizer's size statistics
+   * (`optimizedPlan.stats.sizeInBytes / files.maxPartitionBytes`) instead of
+   * `df.rdd.getNumPartitions`, which would force full physical planning of
+   * the frame once per call site. The estimate only has to be directionally
+   * right: any multi-split input clears the threshold and is left alone.
+   * When the stats are the UNKNOWN sentinel (`defaultSizeInBytes`, e.g. an
+   * RDD-backed frame from `localCheckpoint`/`createDataFrame`), the
+   * estimate would silently report "huge" and never spread a
+   * single-partition input — only there fall back to the physical
+   * partition count (cheap for those plans: the RDD already exists). */
   def spread(df: DataFrame): DataFrame = {
     val (splits, target) = estSplits(df)
     // The small branch pins a plan barrier ABOVE the repartition: the
@@ -70,18 +70,6 @@ object Par {
     if (splits < target) df.repartition(target, col(key)) else df
   }
 
-  /**
-   * Write `df` as a bucketed (+ per-bucket sorted) catalog table — the
-   * co-located-join / shuffle-free-window layout for the 100 TB design:
-   * a transcripts table bucketed AND sorted by the conversation key gives
-   * every conv_id window and conv-grain join `HashPartitioning(bucketCol)`
-   * straight from the scan, so the flagship extraction runs with ZERO
-   * exchanges end-to-end (ParSpec pins both plans). Equivalent to an
-   * Iceberg bucket-partition transform in the snapshot-table world;
-   * bucket counts must match across tables that join.
-   *
-   * `path` makes it an external table (data outlives the catalog entry).
-   */
   /**
    * Repartition by `key` only when the frame is not ALREADY hash-clustered
    * on exactly that key — a bucketed-table scan ([[writeBucketed]]) or an
@@ -120,6 +108,18 @@ object Par {
     }
   }
 
+  /**
+   * Write `df` as a bucketed (+ per-bucket sorted) catalog table — the
+   * co-located-join / shuffle-free-window layout for the 100 TB design:
+   * a transcripts table bucketed AND sorted by the conversation key gives
+   * every conv_id window and conv-grain join `HashPartitioning(bucketCol)`
+   * straight from the scan, so the flagship extraction runs with ZERO
+   * exchanges end-to-end (ParSpec pins both plans). Equivalent to an
+   * Iceberg bucket-partition transform in the snapshot-table world;
+   * bucket counts must match across tables that join.
+   *
+   * `path` makes it an external table (data outlives the catalog entry).
+   */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
       nBuckets: Int, sortCols: Seq[String] = Nil,
       path: Option[String] = None): Unit = {

@@ -48,10 +48,6 @@ object TextStats {
       .otherwise("und")
   }
 
-  /** Token count, BPE-ish: word pieces + standalone non-word chars. */
-  def tokenCount(text: Column): Column =
-    size(filter(split(text, "\\s+|(?=[^\\w\\s])|(?<=[^\\w\\s])"), t => t =!= ""))
-
   /** Quality features + a composite score in [0,1]. All ratio columns are
     * exact-integer 4dp ([[Cols.ratio4dp]]) — `round(p/q, 4)` over doubles
     * is engine-dependent at ten-thousandth-half rationals. */

@@ -272,7 +272,9 @@ private[plans] final class LabelWalk(it: Iterator[InternalRow], outSchema: Struc
 }
 
 /** The body FSM: buffers one line and classifies it with one line of
- * lookahead ([[Labeler.isEntryLine]] on the next line). */
+ * lookahead ([[Labeler.isEntryLine]] on the next line). Separators follow
+ * [[LabelWalk]]: a null `sep_before` falls back to the previous token's
+ * `line_trailing`. */
 private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols) extends SpanWalk(it, outSchema) {
   import BodySpans.str
@@ -304,12 +306,13 @@ private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: 
       nextIsEntry: Boolean): Unit = {
     if (conv != lastConv && lastConv != null) acc.endConv()
     val (base, isStart) = cls.classify(conv, lToks, lCaps, nextIsEntry)
-    acc.resolvePend(lSeps.head, spanLast = isStart)
+    acc.resolvePend(if (lSeps.head != null) lSeps.head else acc.pendTrail, spanLast = isStart)
     if (isStart) acc.openSpan(conv, base, turn)
     lastConv = conv
     var i = 0
     while (i < lToks.length - 1) {
-      acc.piece(lToks(i), lSeps(i + 1))
+      val sep = lSeps(i + 1)
+      acc.piece(lToks(i), if (sep != null) sep else trail)
       i += 1
     }
     acc.hold(lToks(lToks.length - 1), trail)

@@ -1,13 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Training-data sources/sinks (SURVEY.md §2.1 S4/S5/K1/K4 and §2.5 J1):
- * featured-row files, gold-TEI label extraction, the trainer's ordered
- * token↔label alignment merge, and the train/eval split sink.
+ * Training-data sink (SURVEY.md §2.1 K4 and §2.5 J1): the trainer's
+ * ordered token↔label alignment merge and the train/eval split sink.
  *
  * J1 alignment reproduces `DatacatSegmenterTrainer.java:150-215` exactly:
  * scan the labeled sequence forward from the last match; ≤5 lookahead;
@@ -18,24 +16,6 @@ import org.apache.spark.sql.functions._
  * reproducible (SURVEY.md K4 note).
  */
 object Training {
-
-  /** S5: raw featured files → (doc_id, row_idx, line, token) rows.
-   * Files are read whole (`wholetext`) so per-file line order is derived
-   * from an explicit position index — `monotonically_increasing_id()` over
-   * split files would scramble row_idx whenever one file spans input
-   * splits (split packing order is size-based, not offset-based). Trainer
-   * files are small (test harness); one row per file is bounded. */
-  def rawFeatureRows(spark: SparkSession, pathGlob: String): DataFrame =
-    spark.read.option("wholetext", "true").text(pathGlob)
-      .select(input_file_name().as("doc_id"),
-        // \r?\n so CRLF trainer files do not leave a trailing \r on every
-        // line (and so on every first-field token)
-        posexplode(split(col("value"), "\r?\n")).as(Seq("pos", "line")))
-      .where(trim(col("line")) =!= "")
-      .withColumn("row_idx",
-        row_number().over(Window.partitionBy("doc_id").orderBy("pos")) - 1)
-      .select(col("doc_id"), col("row_idx"), col("line"),
-        split(col("line"), " ").getItem(0).as("token"))
 
   /** Unicode normalization used by the trainer before token comparison
    * (`UnicodeUtil.normaliseTextAndRemoveSpaces`, called at
@@ -126,8 +106,4 @@ object Training {
     perDoc.where(!col("is_train")).select(concat(col("block"), lit("\n")).as("value"))
       .write.mode("overwrite").text(evalPath)
   }
-
-  /** K1: raw featured-row sink (one unit per line, UTF-8 text). */
-  def writeRawFeatures(featured: DataFrame, vectorCol: String, path: String): Unit =
-    featured.select(col(vectorCol).as("value")).write.mode("overwrite").text(path)
 }

@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
 object TextCols {
 
   val NbBinsPosition = 12
-  val NbBinsSpace = 5
-  val NbBinsDensity = 5
   val LineScale = 10
 
   /** prefix(s,n): first n chars, or s itself when shorter. */

@@ -32,8 +32,6 @@ object Tok {
   final val punctDelims: Set[Char] =
     "([•*,:;?.!/)-–−‐«»„”“‘’'`$]\"".toSet
 
-  @inline def isDelim(c: Char): Boolean = whitespace(c) || punctDelims(c)
-
   // class lookup table for the hot tokenizer loop (codepoints ≤ maxClassed):
   // 0 = regular, 1 = whitespace, 2 = punct delimiter. All delimiter chars
   // are < 0x2220; anything above is a regular token char.

@@ -128,6 +128,41 @@ class ChunkedLabelerSpec extends SparkSpec {
     }
   }
 
+  test("per-line isolation: chunked drops and counts the same lines as sequential") {
+    // null toks (impossible from the tokenizer, possible from a foreign
+    // upstream) make classify throw: the line is dropped and counted. Turn 2
+    // (right after a grade line) loses every token; turn 5 loses only its
+    // dash, so it still reads as an entry line in its predecessor's lookahead
+    val rows = Seq(
+      ("c5", 0, "3 - Vase grec en terre cuite ."),
+      ("c5", 1, "AR ."),
+      ("c5", 2, "Syracuse ."),
+      ("c5", 3, "MONNAIES GRECQUES"),
+      ("c5", 4, "Croton ."),
+      ("c5", 5, "14 - Tetradrachme d'argent ."),
+      ("c5", 6, "suite de la description du lot ."),
+      ("c5", 7, "15 - Statere incus ."))
+    val f = featsOf(turnsDf(rows)).withColumn("tok",
+      when(col("turn_idx") === 2 || (col("turn_idx") === 5 && col("tok_idx") === 1),
+        lit(null).cast("string")).otherwise(col("tok")))
+    // one action per accumulator: the failure count is at-least-once, and
+    // an orderBy would run the labeler a second time for its range sample
+    def run(label: Option[graft.extract.Lineage.PartitionStats] => DataFrame) = {
+      val fails = graft.extract.Lineage.newStats(spark, "chunked_isolation")
+      val out = label(Some(fails)).collect().toSeq.sortBy(r =>
+        (r.getAs[Int]("turn_idx"), r.getAs[Int]("line_in_turn"), r.getAs[Int]("tok_idx")))
+      (out, fails.value.values.map(_._1).sum)
+    }
+    val (seqRows, seqFails) = run(fs => Labeler.bodyLabels(f, failures = fs))
+    assert(seqFails == 2L)
+    assert(seqRows.map(_.getAs[Int]("turn_idx")).distinct == Seq(0, 1, 3, 4, 6, 7))
+    Seq(1, 2, 3).foreach { c =>
+      val (chkRows, chkFails) = run(fs => Labeler.bodyLabelsChunked(f, c, fs))
+      assert(chkRows == seqRows, s"chunked != sequential at chunkTurns=$c")
+      assert(chkFails == seqFails, s"failure count at chunkTurns=$c")
+    }
+  }
+
   test("empty input yields empty output without crashing") {
     val f = featsOf(turnsDf(Seq(("x", 0, "1 - Lot .")))).where(col("conv_id") === "none")
     assert(Labeler.bodyLabelsChunked(f, 4).isEmpty)

@@ -50,6 +50,32 @@ class PlanOperatorSpec extends SparkSpec {
     assert(viaOperator == viaAssembly)
   }
 
+  test("FSM mode is identical to the declarative assembly on null sep_before") {
+    val sparkS = spark
+    import sparkS.implicits._
+    // a null sep_before on a line-first token (the held token before it
+    // takes its own line_trailing) and inside a line (the token before it
+    // takes the line's trailing separator); a null line_trailing reads ""
+    val f = Seq[(String, Int, Int, Int, String, String, String, String)](
+      ("a", 0, 0, 0, "Hello", "", " ", "INITCAP"),
+      ("a", 0, 0, 1, "world", " ", " ", "NOCAPS"),
+      ("a", 0, 1, 0, "more", null, "t", "NOCAPS"),
+      ("a", 0, 1, 1, "text", null, "t", "NOCAPS"),
+      ("a", 0, 1, 2, "t", " ", "t", "NOCAPS"),
+      ("b", 0, 0, 0, "12", "", "\n", "NOCAPS"),
+      ("b", 0, 0, 1, "-", null, "\n", "NOCAPS"),
+      ("b", 0, 0, 2, "Vase", " ", "\n", "INITCAP"),
+      ("b", 1, 0, 0, "AR", null, null, "ALLCAPS"),
+      ("b", 1, 0, 1, ".", null, null, "NOCAPS"))
+      .toDF("conv_id", "turn_idx", "line_in_turn", "tok_idx",
+        "tok", "sep_before", "line_trailing", "f_capitalisation")
+    val viaOperator = sortedRows(BodySpans.spans(f)
+      .select("conv_id", "segment_id", "label", "turn_idx", "text"))
+    assert(viaOperator.map(_.getString(0)).distinct == Seq("a", "b"))
+    assert(!viaOperator.exists(_.getString(4).contains("null")))
+    assert(viaOperator == sortedRows(declarative(f)))
+  }
+
   test("EnsureRequirements plans exactly one exchange for the operator") {
     val plan = BodySpans.spans(feats(50)).queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix in plan strings
