@@ -273,13 +273,8 @@ object Features {
     val wBlock = Window.partitionBy("conv_id", "turn_idx", "block_idx")
     val wTurn = Window.partitionBy("conv_id", "turn_idx")
 
-    val toks = split(trim(regexp_replace(col("line"), "[ \t\f ]+", " ")), " ")
-    val base = lines
-      .withColumn("f_string",
-        regexp_replace(coalesce(try_element_at(toks, lit(1)), lit("")), "[ \n\r]", ""))
-      .withColumn("f_second",
-        coalesce(try_element_at(toks, lit(2)), try_element_at(toks, lit(1))))
-      .where(col("f_string") =!= "")
+    val base = patternCandidates(lines.withColumn("f_second",
+        coalesce(try_element_at(lineToks, lit(2)), try_element_at(lineToks, lit(1)))))
       .withColumn("n_lines_block", count(lit(1)).over(wBlock))
       .withColumn("pos_in_block",
         row_number().over(wBlock.orderBy(col("line_in_turn"))))
@@ -295,36 +290,14 @@ object Features {
           .when(coalesce(lag(col("turn_idx"), 1).over(wConv) =!= col("turn_idx"), lit(true)), "PAGESTART")
           .otherwise("PAGEIN"))
 
-    val fonted = withFont(base, wConv)
-
-    // repetitive header/footer patterns (reference A2,
-    // `DatacatSegmenterParser.java:268-299,418-430`): candidate lines are the
-    // first line of the first-2/last blocks of each turn; patterns longer
-    // than 8 chars counted conversation-wide.
-    val wTurnBlocks = Window.partitionBy("conv_id", "turn_idx")
-    val withPat = fonted
-      .withColumn("n_blocks_turn", max(col("block_idx")).over(wTurnBlocks) + 1)
-      .withColumn("head_tail_block",
-        col("block_idx") < 2 || col("block_idx") === col("n_blocks_turn") - 1)
-      .withColumn("pat", pattern(col("line")))
-      .withColumn("pat_candidate",
-        col("head_tail_block") && col("line_idx") === 0 && length(col("pat")) > 8)
-    val wPat = Window.partitionBy("conv_id", "pat")
-    val withRep = withPat
-      .withColumn("pat_count",
-        sum(when(col("pat_candidate"), 1).otherwise(0)).over(wPat))
-      .withColumn("f_repetitive",
-        col("head_tail_block") && length(col("pat")) > 8 && col("pat_count") > 1)
+    repetitiveFlag(withFont(base, wConv))
       .withColumn("rep_rank",
         row_number().over(Window.partitionBy("conv_id", "pat")
           .orderBy(col("turn_idx"), col("line_in_turn"))))
       .withColumn("f_firstRepetitive", col("f_repetitive") && col("rep_rank") === 1)
-
-    withRep
       .withColumn("_tc", graft.functions.TokCaps.of(col("f_string")))
       .withColumn("f_digit", col("_tc.digit_class"))
       .withColumn("f_capitalisation", col("_tc.cap_class"))
-      .drop("_tc")
       .withColumn("f_singleChar", length(col("f_string")) === 1)
       .withColumn("f_profile", punctuationProfile(col("line")))
       .withColumn("f_year", yearFlag(col("f_string")))
@@ -341,10 +314,47 @@ object Features {
       .withColumn("n_lines_turn", max(col("line_in_turn")).over(wTurn) + 1)
       .withColumn("f_relPagePos",
         linearScaling(col("line_in_turn"), col("n_lines_turn"), NbBinsPosition))
-      .drop("pos_in_block", "n_lines_block", "n_blocks_turn", "head_tail_block",
-        "pat_candidate", "pat_count", "rep_rank", "max_line_len", "nn", "block_nn",
-        "doc_len", "n_lines_turn")
+      .select((lines.columns.toSeq ++ Seq("f_string", "f_second", "f_blockStatus", // dumped order
+        "f_pageStatus", "f_fontStatus", "f_fontSize", "pat", "f_repetitive", "f_firstRepetitive",
+        "f_digit", "f_capitalisation", "f_singleChar", "f_profile", "f_year", "f_month",
+        "f_email", "f_http", "f_lineLength", "f_relDocPos", "f_relPagePos")).map(col): _*)
   }
+
+  /** The segmenter's repetitive header/footer flag (reference A2,
+   * `DatacatSegmenterParser.java:268-299,418-430`), the one segmenter column
+   * the zone rules read: drops lines whose first token is empty and adds
+   * `f_string`, `pat` and `f_repetitive`. */
+  def repetitive(lines: DataFrame): DataFrame = repetitiveFlag(patternCandidates(lines))
+
+  /** Conversation-grain half of [[repetitive]]; [[segmenter]] applies it
+   * after its conv_id windows, whose clustering then serves it too. */
+  private def repetitiveFlag(candidates: DataFrame): DataFrame =
+    candidates
+      .withColumn("pat_count", sum(when(col("pat_candidate"), 1).otherwise(0))
+        .over(Window.partitionBy("conv_id", "pat")))
+      .withColumn("f_repetitive", patNeedy && col("pat_count") > 1)
+      .drop("head_tail_block", "pat_candidate", "pat_count")
+
+  /** Per-line half of [[repetitive]], shared with [[Labeler.bodyLinesChunked]]:
+   * `head_tail_block` marks the first-2/last blocks of a turn, `pat_candidate`
+   * a block-first line that is [[patNeedy]]. */
+  private[extract] def patternCandidates(lines: DataFrame): DataFrame =
+    lines
+      .withColumn("f_string",
+        regexp_replace(coalesce(try_element_at(lineToks, lit(1)), lit("")), "[ \n\r]", ""))
+      .where(col("f_string") =!= "")
+      .withColumn("head_tail_block", col("block_idx") < 2 ||
+        col("block_idx") === max(col("block_idx")).over(Window.partitionBy("conv_id", "turn_idx")))
+      .withColumn("pat", pattern(col("line")))
+      .withColumn("pat_candidate", patNeedy && col("line_idx") === 0)
+
+  /** A head/tail-block line whose pattern is long enough to count. */
+  private[extract] def patNeedy: Column = col("head_tail_block") && length(col("pat")) > 8
+
+  /** The line's tokens, split on ASCII space, tab and form feed only (an
+   * NBSP stays inside a token). */
+  private def lineToks: Column =
+    split(trim(regexp_replace(col("line"), "[\\x20\\t\\f]+", " ")), " ")
 
   /** Lexicon dictionary flags (cols 16-18 of the 33-col row): broadcast
    * left join against the in-jar wordlists — BroadcastHashJoin, no added

@@ -51,35 +51,25 @@ object Labeler {
 
   /**
    * Chunk-parallel transcript-mode body-line selection — row-identical to
-   * `zones(Features.segmenter(lines)).where($"zone" === "<body>")` on the
-   * structural columns (ChunkedPipelineSpec differential), for the
-   * giant-conversation path ([[Pipeline.extractChunked]]). The body
-   * membership of a line reads only per-line / turn-grain state (role,
-   * tool, block position) plus ONE conversation-grain quantity: the
-   * repetitive-pattern count over (conv_id, pattern) — the `<back>` branch
-   * of [[zones]] applies to system turns only, which are never `<body>`,
-   * so `max(turn_idx)` is not needed here. The pattern count's
-   * conversation-grain window becomes a two-level aggregate: per-(conv,
-   * chunk, pattern) candidate partials (map-side combinable), conv-grain
-   * totals over that tiny frame, and a join back keyed by (conv, chunk,
-   * pattern) — balanced by the chunk key even when one boilerplate header
-   * repeats on every turn of a 10^9-turn conversation.
+   * `zones(Features.repetitive(lines)).where($"zone" === "<body>")`, and so
+   * over [[Features.segmenter]], on the structural columns
+   * (ChunkedPipelineSpec differential), for the giant-conversation path
+   * ([[Pipeline.extractChunked]]). The body membership of a line reads only
+   * per-line / turn-grain state (role, tool, [[Features.patternCandidates]])
+   * plus ONE conversation-grain quantity: the repetitive-pattern count over
+   * (conv_id, pattern) — the `<back>` branch of [[zones]] applies to system
+   * turns only, which are never `<body>`, so `max(turn_idx)` is not needed
+   * here. The pattern count's conversation-grain window becomes a two-level
+   * aggregate: per-(conv, chunk, pattern) candidate partials (map-side
+   * combinable), conv-grain totals over that tiny frame, and a join back
+   * keyed by (conv, chunk, pattern) — balanced by the chunk key even when
+   * one boilerplate header repeats on every turn of a 10^9-turn
+   * conversation.
    */
   def bodyLinesChunked(lines: DataFrame, chunkTurns: Int = 4096): DataFrame = {
     require(chunkTurns > 0, "chunkTurns must be positive")
-    val toksN = split(trim(regexp_replace(col("line"), "[ \t\f ]+", " ")), " ")
-    val wTurnBlocks = Window.partitionBy("conv_id", "turn_idx")
-    val base = lines
-      .withColumn("_chunk", Chunked.chunkCol(chunkTurns))
-      .withColumn("f_string",
-        regexp_replace(coalesce(try_element_at(toksN, lit(1)), lit("")), "[ \n\r]", ""))
-      .where(col("f_string") =!= "")
-      .withColumn("n_blocks_turn", max(col("block_idx")).over(wTurnBlocks) + 1)
-      .withColumn("head_tail_block",
-        col("block_idx") < 2 || col("block_idx") === col("n_blocks_turn") - 1)
-      .withColumn("pat", graft.text.TextCols.pattern(col("line")))
-      .withColumn("_needy", col("head_tail_block") && length(col("pat")) > 8)
-      .withColumn("pat_candidate", col("_needy") && col("line_idx") === 0)
+    val base = Features.patternCandidates(
+      lines.withColumn("_chunk", Chunked.chunkCol(chunkTurns)))
     // candidate counts roll up per (conv, chunk, pattern) then per (conv,
     // pattern) — both frames are tiny (≤ head/tail lines per chunk); the
     // needy-pattern frame re-keys the totals by chunk so the join back to
@@ -87,12 +77,12 @@ object Labeler {
     val partials = base.where(col("pat_candidate"))
       .groupBy("conv_id", "_chunk", "pat").agg(count(lit(1)).as("_c"))
     val totals = partials.groupBy("conv_id", "pat").agg(sum("_c").as("pat_count"))
-    val needyPats = base.where(col("_needy"))
+    val needyPats = base.where(Features.patNeedy)
       .select("conv_id", "_chunk", "pat").distinct()
       .join(totals, Seq("conv_id", "pat"), "left")
     base.join(needyPats, Seq("conv_id", "_chunk", "pat"), "left")
       .withColumn("f_repetitive",
-        col("_needy") && coalesce(col("pat_count"), lit(0L)) > 1)
+        Features.patNeedy && coalesce(col("pat_count"), lit(0L)) > 1)
       // same when-chain shape as [[zones]] (null role/tool falls through to
       // <body> there; a naive !(...) conjunction would drop those rows)
       .withColumn("_zone_body",
@@ -101,8 +91,8 @@ object Labeler {
           .when(col("role") === "system", false)
           .otherwise(true))
       .where(col("_zone_body"))
-      .drop("pat", "f_string", "n_blocks_turn", "head_tail_block", "_needy",
-        "pat_candidate", "pat_count", "f_repetitive", "_zone_body", "_chunk")
+      .drop("pat", "f_string", "head_tail_block", "pat_candidate", "pat_count",
+        "f_repetitive", "_zone_body", "_chunk")
   }
 
   /**

@@ -82,7 +82,8 @@ object Pipeline {
    * keyed on conv_id.
    */
   def extractDocumentsHeuristic(docs: DataFrame): DataFrame =
-    graft.plans.BodySpans.spans(docBodyFeats(documentBodyLinesHeuristic(docs)))
+    graft.plans.BodySpans.spans(
+      fsmInput(Structure.tokensFromLines(documentBodyLinesHeuristic(docs))))
 
   /** Heuristic twin of [[documentBodyLinesModeled]]. */
   def documentBodyLinesHeuristic(docs: DataFrame): DataFrame = {
@@ -102,8 +103,8 @@ object Pipeline {
    * still has a single conv_id exchange.
    */
   def extractDocumentsModeled(docs: DataFrame, model: ZoneModel.Model): DataFrame =
-    graft.plans.BodySpans.spans(docBodyFeats(
-      documentBodyLinesModeled(docs, model)))
+    graft.plans.BodySpans.spans(
+      fsmInput(Structure.tokensFromLines(documentBodyLinesModeled(docs, model))))
 
   /** Document-mode stage-1 output: the body lines the trained zoner keeps.
    * Public so invariant oracles can pin the stage-2 tail against the text
@@ -123,10 +124,10 @@ object Pipeline {
         "line_in_turn", "line_idx", "line")
   }
 
-  /** Stage-2 head shared by the document-mode paths: tokens → narrowed
-   * FSM feature projection. */
-  private def docBodyFeats(bodyLines: DataFrame): DataFrame =
-    Features.body(Structure.tokensFromLines(bodyLines))
+  /** The span walk's eight input columns over a token frame; its one
+   * feature, `f_capitalisation`, is a per-token scalar. */
+  private def fsmInput(toks: DataFrame): DataFrame =
+    Features.scalars(toks)
       .select("conv_id", "turn_idx", "line_in_turn", "tok_idx",
         "tok", "sep_before", "line_trailing", "f_capitalisation")
 
@@ -176,10 +177,7 @@ object Pipeline {
   /** Shared stage-2 of the chunked document modes — identical to
    * [[labeledBodyTokensChunked]] minus the transcript-mode zone filter. */
   private def documentChunkedTail(bodyLines: DataFrame, chunkTurns: Int): DataFrame = {
-    val toks = Structure.tokensFromLinesChunked(bodyLines, chunkTurns)
-    val feats = Features.scalars(toks)
-      .select("conv_id", "turn_idx", "line_in_turn", "tok_idx",
-        "tok", "sep_before", "line_trailing", "f_capitalisation")
+    val feats = fsmInput(Structure.tokensFromLinesChunked(bodyLines, chunkTurns))
     Assemble.bodySpansChunked(
       Labeler.bodyLabelsChunked(feats, chunkTurns), chunkTurns)
   }
@@ -196,8 +194,8 @@ object Pipeline {
    *     two-level aggregate ([[Labeler.bodyLinesChunked]]);
    *   - the tokenizer's separator lags stitch across (conv_id, turn-chunk)
    *     boundaries ([[Structure.tokensFromLinesChunked]]);
-   *   - the FSM's feature input is pure per-token scalars (the narrow
-   *     projection [[extract]] relies on Catalyst to prune to);
+   *   - the FSM's feature input is pure per-token scalars, as in
+   *     [[extract]];
    *   - the FSM itself runs as the prefix-composed parallel automaton
    *     ([[Labeler.bodyLabelsChunked]]);
    *   - span assembly's running segment count becomes a two-level scan
@@ -228,10 +226,7 @@ object Pipeline {
     val bodyLines = Labeler.bodyLinesChunked(Structure.keptLines(turns), chunkTurns)
       .select("conv_id", "turn_idx", "role", "tool", "block_idx",
         "line_in_turn", "line_idx", "line")
-    val toks = Structure.tokensFromLinesChunked(bodyLines, chunkTurns)
-    val feats = Features.scalars(toks)
-      .select("conv_id", "turn_idx", "line_in_turn", "tok_idx",
-        "tok", "sep_before", "line_trailing", "f_capitalisation")
+    val feats = fsmInput(Structure.tokensFromLinesChunked(bodyLines, chunkTurns))
     Labeler.bodyLabelsChunked(feats, chunkTurns, failures, materialize)
   }
 
@@ -241,22 +236,19 @@ object Pipeline {
   def extractDeclarative(turns: DataFrame): DataFrame =
     Assemble.bodySpans(labeledBodyTokens(turns))
 
-  /** structure → zone → body features, narrowed to the FSM's inputs, over
-   * one exchange. */
+  /** structure → zone → the FSM's input columns, over one exchange. The zone
+   * rules read one segmenter column and the FSM one per-token feature, so
+   * neither the [[Features.segmenter]] nor the [[Features.body]] windows are
+   * built: analysing them only for the optimizer to prune was most of a
+   * pass's driver cost. */
   private def bodyTokenFeats(turns: DataFrame): DataFrame = {
     val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
-    val zoned = Labeler.zones(Features.segmenter(lines))
+    val zoned = Labeler.zones(Features.repetitive(lines))
     // F4: zone selection is a plain filter because labels are columns
     val bodyLines = zoned.where(col("zone") === "<body>")
       .select("conv_id", "turn_idx", "role", "tool", "block_idx",
         "line_in_turn", "line_idx", "line")
-    val toks = Structure.tokensFromLines(bodyLines)
-    Features.body(toks)
-      // the FSM consumes a narrow projection; Catalyst prunes the unused
-      // feature windows behind it (mapPartitions would otherwise pin all
-      // 24 feature columns through the object boundary)
-      .select("conv_id", "turn_idx", "line_in_turn", "tok_idx",
-        "tok", "sep_before", "line_trailing", "f_capitalisation")
+    fsmInput(Structure.tokensFromLines(bodyLines))
   }
 
   /** structure → zone → body features → FSM labels, over one exchange. */

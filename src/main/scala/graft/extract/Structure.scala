@@ -173,9 +173,10 @@ object Structure {
     keptLines.columns.toSeq
       .diff(Seq("line", "kept", "line_trailing", "prev_trailing", "line_gap", "toks"))
 
-  /** Trailing whitespace of the line (space/tab/FF/NBSP). */
+  /** Trailing whitespace of the line: ASCII space, tab and form feed (a
+   * trailing NBSP is not whitespace here). */
   private def lineTrailingCol: Column =
-    regexp_extract(col("line"), "[ \t\f ]*$", 0)
+    regexp_extract(col("line"), "[\\x20\\t\\f]*$", 0)
 
   /** Source-line gap to the previous kept line, given that line's
    * (turn_idx, line_in_turn); null prev = first line of the conversation. */

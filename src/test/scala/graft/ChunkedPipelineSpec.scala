@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.extract.{Pipeline, Synthetic}
+import graft.extract.{Features, Labeler, Pipeline, Structure, Synthetic}
 
 /**
  * The giant-conversation extraction path ([[Pipeline.extractChunked]]) must
@@ -11,7 +11,9 @@ import graft.extract.{Pipeline, Synthetic}
  * (StructureChunkedSpec, ChunkedFeaturesSpec, ChunkedLabelerSpec) pin each
  * twin; this spec pins the COMPOSITION — zone selection with cross-chunk
  * repetitive counting, tokenizer stitch, parallel FSM, and span assembly
- * whose spans straddle chunk boundaries — end to end.
+ * whose spans straddle chunk boundaries — end to end — and that the
+ * flagship's zone selection over [[Features.repetitive]] keeps the body
+ * lines the zone rules keep over the full [[Features.segmenter]].
  */
 class ChunkedPipelineSpec extends SparkSpec {
 
@@ -23,6 +25,12 @@ class ChunkedPipelineSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
     }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
   }
+
+  /** The adversarial documents (NULL, empty, whitespace-only and
+   * NBSP-padded text, CJK, emoji, `\r`/`\t` noise, 20k-char lines) as
+   * transcripts. */
+  private def adversarial: DataFrame = Structure.transcriptsFromDocuments(
+    spark.read.option("multiLine", "true").json("tools/adversarial_docs.json"))
 
   private def assertIdentical(turns: DataFrame, chunkTurns: Int): Unit = {
     val ord = Seq(col("conv_id"), col("segment_id"))
@@ -37,6 +45,23 @@ class ChunkedPipelineSpec extends SparkSpec {
   test("synthetic corpus: chunked == sequential at tiny chunk sizes") {
     Seq(1, 3, 16).foreach(c =>
       assertIdentical(Synthetic.transcripts(spark, 30), chunkTurns = c))
+  }
+
+  test("adversarial documents: chunked == sequential") {
+    Seq(1, 4).foreach(c => assertIdentical(adversarial, chunkTurns = c))
+  }
+
+  test("zones over repetitive keep the body rows of zones over the segmenter") {
+    Seq(Synthetic.transcripts(spark, 40), adversarial).foreach { turns =>
+      val lines = Structure.keptLines(turns)
+      val narrow = Labeler.zones(Features.repetitive(lines))
+      def body(zoned: DataFrame) = zoned.where(col("zone") === "<body>")
+        .select(narrow.columns.map(col): _*)
+        .orderBy("conv_id", "turn_idx", "line_in_turn").collect().toSeq
+      val got = body(narrow)
+      assert(got.nonEmpty)
+      assert(got == body(Labeler.zones(Features.segmenter(lines))))
+    }
   }
 
   test("chunk larger than every conversation degenerates to the sequential result") {
@@ -129,6 +154,15 @@ class ChunkedPipelineSpec extends SparkSpec {
       val chunk = 1 + sample(Gen.choose(0, 8), 7000L + i)
       assertIdentical(turnsDf(rows), chunk)
     }
+  }
+
+  test("an NBSP-only line is a body line in both paths") {
+    // the segmenter splits on ASCII whitespace only: the line's first token
+    // is the NBSP, so the line is kept (it yields no body token); dropping
+    // it would turn the line gap into a blank line in the span text
+    val rows = Seq(
+      ("c", 0, "user", "1. Vase ancien en porcelaine\n\u00a0\nde Chine, XVIIIe siecle", null))
+    assertIdentical(turnsDf(rows), 1)
   }
 
   test("null-role document-shaped rows fall through to <body> in both paths") {

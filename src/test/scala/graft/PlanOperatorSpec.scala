@@ -115,6 +115,17 @@ class PlanOperatorSpec extends SparkSpec {
     assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
   }
 
+  test("the flagship plan keeps its window, sort, generate and exchange counts") {
+    val plan = Pipeline.extract(Synthetic.transcripts(spark, 50)).queryExecution.executedPlan
+    val nodes = (plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case n => n.nodeName }
+    val counts = Seq("Window", "Sort", "Generate", "Exchange").map(n => n -> nodes.count(_ == n))
+    assert(counts == Seq("Window" -> 7, "Sort" -> 5, "Generate" -> 2, "Exchange" -> 1),
+      s"operator counts changed:\n$plan")
+  }
+
   test("label mode is identical to the declarative assembly on FSM labels") {
     val labeled = Labeler.bodyLabels(feats(50))
     val viaOperator = sortedRows(BodySpans.fromLabels(labeled))
