@@ -6,10 +6,10 @@ import graft.extract.Pipeline
 
 /**
  * Giant-DOCUMENT skew benchmark for the chunk-parallel document-mode
- * cascade (round 3): sequential [[Pipeline.extractDocumentsHeuristic]]
- * runs stage-1 content zoning as conversation-grain windows — ONE task
- * owns the whole document — while [[Pipeline.extractDocumentsHeuristicChunked]]
- * spreads every stage over nTurns/chunkTurns tasks (row-identical,
+ * cascade (round 3), heuristic stage-1: sequential
+ * [[Pipeline.extractDocuments]] runs stage-1 content zoning as
+ * conversation-grain windows — ONE task owns the whole document — while
+ * [[Pipeline.extractDocumentsChunked]] spreads every stage over nTurns/chunkTurns tasks (row-identical,
  * DocumentChunkedSpec + doc_chunked_diff oracle). One catalogue-shaped
  * document: front matter, numbered 2-line lot entries with sequential
  * markers, a repeating page stamp, and a numbered letter-poor price-list
@@ -55,18 +55,18 @@ object DocChunkBench {
 
     // JIT/codegen warmup on a small document, both paths
     Seq(2000L, 5000L).foreach { w =>
-      timeNoop(Pipeline.extractDocumentsHeuristic(turnsDf(spark, w)))
-      timeNoop(Pipeline.extractDocumentsHeuristicChunked(turnsDf(spark, w), chunk))
+      timeNoop(Pipeline.extractDocuments(turnsDf(spark, w), None))
+      timeNoop(Pipeline.extractDocumentsChunked(turnsDf(spark, w), None, chunk))
     }
 
     def best2(f: => Double): Double = math.min(f, f)
     val seqSec =
       if (mode == "chunked") -1.0
-      else best2(timeNoop(Pipeline.extractDocumentsHeuristic(turnsDf(spark, nTurns))))
+      else best2(timeNoop(Pipeline.extractDocuments(turnsDf(spark, nTurns), None)))
     val chunkedSec =
       if (mode == "seq") -1.0
       else best2(timeNoop(
-        Pipeline.extractDocumentsHeuristicChunked(turnsDf(spark, nTurns), chunk)))
+        Pipeline.extractDocumentsChunked(turnsDf(spark, nTurns), None, chunk)))
     println(f"""{"metric":"doc_chunk_bench","cpus":$cpus,"turns":$nTurns,"chunkTurns":$chunk,"seq_sec":$seqSec%.2f,"chunked_sec":$chunkedSec%.2f}""")
     spark.stop()
   }

@@ -807,12 +807,6 @@ object Queries {
   private def r4(p: String, q: String): String =
     s"((($p) * 20000 + ($q)) // (2 * ($q))) / 10000.0"
 
-  /** [[r4]] at `dp` places. */
-  private def rDp(p: String, q: String, dp: Int): String = {
-    val s = math.pow(10, dp).toLong
-    s"((($p) * ${2 * s} + ($q)) // (2 * ($q))) / $s.0"
-  }
-
   /** DuckDB mirror of [[graft.ops.TextNorm.canonicalize]] applied to the
    * SQL expression `e` — the exact same replace/translate/regex chain. */
   private def duckCanonicalize(e: String): String = {

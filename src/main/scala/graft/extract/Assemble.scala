@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.text.TextCols
 
@@ -28,14 +28,18 @@ object Assemble {
   private def base(label: Column): Column =
     when(label.startsWith("I-"), substring(label, 3, 1 << 24)).otherwise(label)
 
+  /** A7's span-start rule along `w`: an `I-` label or a change of base label
+   * opens a span, and so does the window's first row. Reads `label_base`. */
+  private def spanStart(w: WindowSpec): Column =
+    col("label").startsWith("I-") ||
+      coalesce(base(lag(col("label"), 1).over(w)) =!= col("label_base"), lit(true))
+
   /** A7: BIO sessionization — `I-` prefix or base-label change opens a span. */
   def withSegmentIds(labeled: DataFrame, orderCols: Seq[String]): DataFrame = {
     val wConv = Window.partitionBy("conv_id").orderBy(orderCols.map(col): _*)
     labeled
       .withColumn("label_base", base(col("label")))
-      .withColumn("span_start",
-        col("label").startsWith("I-") ||
-          coalesce(base(lag(col("label"), 1).over(wConv)) =!= col("label_base"), lit(true)))
+      .withColumn("span_start", spanStart(wConv))
       .withColumn("segment_id",
         sum(when(col("span_start"), 1L).otherwise(0L)).over(
           wConv.rowsBetween(Window.unboundedPreceding, 0)))
@@ -75,9 +79,7 @@ object Assemble {
     val wUpToHere = w.rowsBetween(Window.unboundedPreceding, 0)
     val local = Chunked.augmentBoundaries(labeled, chunkTurns)
       .withColumn("label_base", base(col("label")))
-      .withColumn("span_start",
-        col("label").startsWith("I-") ||
-          coalesce(base(lag(col("label"), 1).over(w)) =!= col("label_base"), lit(true)))
+      .withColumn("span_start", spanStart(w))
       .withColumn("_seg_local",
         sum(when(col("span_start") && !col("_ph"), 1L).otherwise(0L)).over(wUpToHere))
       .withColumn("sep_after", coalesce(lead(col("sep_before"), 1).over(w),
@@ -138,11 +140,31 @@ object Assemble {
             x => x.getField("piece")), "\n\n").as("text"))
   }
 
-  /** Tag emitted for a span (body model; reference `writeField` targets
+  /** One span as its TEI element: the label's own tag, `<note
+   * type="other">` for `<other>` (reference `writeField` targets,
    * `DatacatBodySegmentationParser.java:861-875`). */
-  private def bodyTag(labelBase: Column): Column =
-    when(labelBase === "<other>", lit("note type=\"other\"")).otherwise(
-      regexp_replace(labelBase, "[<>]", ""))
+  private def spanXml: Column = {
+    val open = when(col("label") === "<other>", "<note type=\"other\">")
+      .otherwise(col("label"))
+    val close = when(col("label") === "<other>", "</note>")
+      .otherwise(concat(lit("</"), regexp_replace(col("label"), "[<>]", ""), lit(">")))
+    concat(open, col("text"), close)
+  }
+
+  /** A conversation's TEI wrapper up to and including `<text xml:lang=…>`:
+   * `xml:lang` is the language-ID of `lang_sample`, `defaultLang` when
+   * undetermined. */
+  private def teiHeader(defaultLang: String): Column = {
+    val lang = graft.ops.TextStats.langId(col("lang_sample"))
+    concat(
+      lit("<?xml version=\"1.0\" ?>\n<tei xml:space=\"preserve\">\n\t<teiHeader>\n\t\t<fileDesc xml:id=\""),
+      col("conv_id"),
+      lit("\"/>\n\t</teiHeader>\n\t<text xml:lang=\""),
+      when(lang === "und", lit(defaultLang)).otherwise(lang),
+      lit("\">\n"))
+  }
+
+  private val teiFooter = "\n\n\t</text>\n</tei>\n"
 
   /**
    * A10: full TEI document per conversation, matching the reference wrapper
@@ -155,17 +177,8 @@ object Assemble {
    * groupBy as the span concat: no extra shuffle.
    */
   def teiDocuments(spans: DataFrame, defaultLang: String = "fr"): DataFrame = {
-    val open = when(col("label") === "<other>", "<note type=\"other\">")
-      .otherwise(col("label"))
-    val close = when(col("label") === "<other>", "</note>")
-      .otherwise(concat(lit("</"), regexp_replace(col("label"), "[<>]", ""), lit(">")))
-    val spanXml = concat(open, col("text"), close)
     val ordered = array_sort(collect_list(struct(col("segment_id"),
       spanXml.as("x"), substring(col("text"), 1, 500).as("t"))))
-    val langOf = {
-      val l = graft.ops.TextStats.langId(col("lang_sample"))
-      when(l === "und", lit(defaultLang)).otherwise(l)
-    }
     spans
       .groupBy("conv_id")
       .agg(ordered.as("arr"))
@@ -173,13 +186,8 @@ object Assemble {
         array_join(transform(col("arr"), s => s.getField("x")), "\n\n").as("spans_xml"),
         substring(array_join(transform(col("arr"), s => s.getField("t")), " "), 1, 500)
           .as("lang_sample"))
-      .select(col("conv_id"), concat(
-        lit("<?xml version=\"1.0\" ?>\n<tei xml:space=\"preserve\">\n\t<teiHeader>\n\t\t<fileDesc xml:id=\""),
-        col("conv_id"),
-        lit("\"/>\n\t</teiHeader>\n\t<text xml:lang=\""), langOf,
-        lit("\">\n"),
-        col("spans_xml"),
-        lit("\n\n\t</text>\n</tei>\n")).as("tei"))
+      .select(col("conv_id"),
+        concat(teiHeader(defaultLang), col("spans_xml"), lit(teiFooter)).as("tei"))
   }
 
   /**
@@ -252,11 +260,6 @@ object Assemble {
   def teiDocumentsSharded(spans: DataFrame, shardTurns: Int = 65536,
       defaultLang: String = "fr"): DataFrame = {
     require(shardTurns > 0, "shardTurns must be positive")
-    val open = when(col("label") === "<other>", "<note type=\"other\">")
-      .otherwise(col("label"))
-    val close = when(col("label") === "<other>", "</note>")
-      .otherwise(concat(lit("</"), regexp_replace(col("label"), "[<>]", ""), lit(">")))
-    val spanXml = concat(open, col("text"), close)
     // every span "\n\n"-prefixed (≡ the join separator of [[teiDocuments]]);
     // the conversation's FIRST shard drops its leading 2 chars below
     val shardFrame = spans
@@ -276,18 +279,10 @@ object Assemble {
         substring(array_join(transform(
           array_sort(collect_list(struct(col("_shard"), col("sample")))),
           s => s.getField("sample")), " "), 1, 500).as("lang_sample"))
-    val langOf = {
-      val l = graft.ops.TextStats.langId(col("lang_sample"))
-      when(l === "und", lit(defaultLang)).otherwise(l)
-    }
-    val header = meta.select(col("conv_id"), lit(-1L).as("shard_idx"), concat(
-      lit("<?xml version=\"1.0\" ?>\n<tei xml:space=\"preserve\">\n\t<teiHeader>\n\t\t<fileDesc xml:id=\""),
-      col("conv_id"),
-      lit("\"/>\n\t</teiHeader>\n\t<text xml:lang=\""), langOf,
-      lit("\">\n")).as("tei"))
+    val header = meta.select(col("conv_id"), lit(-1L).as("shard_idx"),
+      teiHeader(defaultLang).as("tei"))
     val footer = meta.select(col("conv_id"),
-      (col("_max_shard") + 1).as("shard_idx"),
-      lit("\n\n\t</text>\n</tei>\n").as("tei"))
+      (col("_max_shard") + 1).as("shard_idx"), lit(teiFooter).as("tei"))
     // first-shard detection as a conv-grain window over the ONE-ROW-PER-
     // SHARD frame (tiny even for a 10^9-turn conversation) — no join back,
     // no self-join ambiguity

@@ -33,21 +33,28 @@ object Labeler {
   def zones(segFeatures: DataFrame): DataFrame = {
     val wConv = Window.partitionBy("conv_id")
       .orderBy(col("turn_idx"), col("line_in_turn"))
-    val wTurnMax = Window.partitionBy("conv_id")
-    val zone =
-      when(col("f_repetitive"), "<other>")
-        .when(col("role") === "tool" || col("tool").isNotNull, "<other>")
-        .when(col("role") === "system" && col("turn_idx") === 0, "<front>")
-        .when(col("role") === "system" &&
-          col("turn_idx") === max(col("turn_idx")).over(wTurnMax), "<back>")
-        .when(col("role") === "system", "<other>")
-        .otherwise("<body>")
     segFeatures
-      .withColumn("zone", zone)
-      .withColumn("zone_label",
-        when(coalesce(lag(col("zone"), 1).over(wConv) =!= col("zone"), lit(true)),
-          concat(lit("I-"), col("zone"))).otherwise(col("zone")))
+      .withColumn("zone", transcriptZone(
+        col("turn_idx") === max(col("turn_idx")).over(Window.partitionBy("conv_id"))))
+      .withColumn("zone_label", zoneLabel(wConv))
   }
+
+  /** The transcript zone rule of [[zones]] over `f_repetitive`, role and
+   * tool; `isLastTurn` marks the conversation's last turn, where a system
+   * turn is `<back>`. Null role and tool fall through to `<body>`. */
+  private def transcriptZone(isLastTurn: Column): Column =
+    when(col("f_repetitive"), "<other>")
+      .when(col("role") === "tool" || col("tool").isNotNull, "<other>")
+      .when(col("role") === "system" && col("turn_idx") === 0, "<front>")
+      .when(col("role") === "system" && isLastTurn, "<back>")
+      .when(col("role") === "system", "<other>")
+      .otherwise("<body>")
+
+  /** BIO encoding of `zone` along `wOrd`: a conversation's first line and
+   * every zone change are `I-<zone>`. */
+  private def zoneLabel(wOrd: org.apache.spark.sql.expressions.WindowSpec): Column =
+    when(coalesce(lag(col("zone"), 1).over(wOrd) =!= col("zone"), lit(true)),
+      concat(lit("I-"), col("zone"))).otherwise(col("zone"))
 
   /**
    * Chunk-parallel transcript-mode body-line selection — row-identical to
@@ -83,16 +90,10 @@ object Labeler {
     base.join(needyPats, Seq("conv_id", "_chunk", "pat"), "left")
       .withColumn("f_repetitive",
         Features.patNeedy && coalesce(col("pat_count"), lit(0L)) > 1)
-      // same when-chain shape as [[zones]] (null role/tool falls through to
-      // <body> there; a naive !(...) conjunction would drop those rows)
-      .withColumn("_zone_body",
-        when(col("f_repetitive"), false)
-          .when(col("role") === "tool" || col("tool").isNotNull, false)
-          .when(col("role") === "system", false)
-          .otherwise(true))
-      .where(col("_zone_body"))
+      // system turns are never <body>, so the <back> test is not needed
+      .where(transcriptZone(lit(false)) === "<body>")
       .drop("pat", "f_string", "head_tail_block", "pat_candidate", "pat_count",
-        "f_repetitive", "_zone_body", "_chunk")
+        "f_repetitive", "_chunk")
   }
 
   /**
@@ -117,13 +118,99 @@ object Labeler {
    * Input needs (conv_id, turn_idx, line_in_turn, line). Adds `zone` and
    * BIO-encoded `zone_label`.
    */
-  def zonesContent(lines: DataFrame, lineCol: String = "line"): DataFrame =
-    zonesContentFinish(zonesContentRaw(lines, lineCol),
-      Window.partitionBy("conv_id").orderBy(col("turn_idx"), col("line_in_turn")))
+  def zonesContent(lines: DataFrame, lineCol: String = "line"): DataFrame = {
+    val wConv = Window.partitionBy("conv_id")
+    val wOrd = wConv.orderBy(col("turn_idx"), col("line_in_turn"))
+    val text = trim(col(lineCol))
+    // repetitive page headers/stamps (A2, `DatacatSegmenterParser.java:
+    // 268-299`): the same short letter pattern recurring through a document
+    // is a page marker, not content — applied outside the body span only
+    val pattern = ZC.pattern(text)
+    val withPreds = zcDensityCols(
+      zcPredCols(lines, lineCol)
+        .withColumn("_line_no", row_number().over(wOrd)), wOrd)
+      .withColumn("_repetitive",
+        length(pattern) > 2 && length(text) <= 30 &&
+          count(lit(1)).over(Window.partitionBy(col("conv_id"), pattern)) >= 3)
+      // contiguous numbered regions: a catalogue body that drifts letter-poor
+      // mid-way ("0200 Écu. ... / AR5 F.D.C.") is ONE region and must be
+      // classified as a whole, not line-by-line — region identity via
+      // change detection, region class via region-level letter richness
+      .withColumn("_region_id",
+        when(col("_numeric"),
+          sum(when(col("_numeric") &&
+            !coalesce(lag(col("_numeric"), 1).over(wOrd), lit(false)), 1)
+            .otherwise(0)).over(wOrd.rowsBetween(Window.unboundedPreceding, 0))))
+    // region statistics as WINDOW aggregates over (conv_id, region_id) — a
+    // groupBy+join would re-shuffle the full line set on the two-column key;
+    // hash(conv_id) already clusters (conv_id, region_id), so these windows
+    // reuse the pipeline's one exchange (non-numeric lines share the null
+    // region per conv; their stats are guarded off)
+    val wRegion = Window.partitionBy("conv_id", "_region_id")
+    val tTrim = trim(col(lineCol))
+    // a CONTENTFUL marker line is a real lot entry: number + dash/dot (the
+    // _strong shape), or number followed by words on the same line (letter
+    // count >= 2; all letters sit after the numeric prefix by the mark
+    // shape). Index tables ("Abbeville," / "117") and session schedules
+    // ("Bronzes antiques" / "743 à 820") form numbered regions whose
+    // markers are BARE numbers or ranges — gold labels those <front>
+    // wherever they sit, even trailing the body
+    // a SEQUENTIAL bare marker is contentful too: an index's page refs are
+    // bare numbers but not incrementing, a lot list's bare markers are —
+    // without this, a bare-marker catalogue region would look like an index
+    val withRegion = withPreds
+      .withColumn("_r_start", when(col("_numeric"), min("_line_no").over(wRegion)))
+      .withColumn("_r_end", when(col("_numeric"), max("_line_no").over(wRegion)))
+      // letter richness of the region as a whole: pure price lists sit
+      // well below the threshold
+      .withColumn("_r_letters",
+        sum(col("_nletters").cast("double")).over(wRegion) /
+          greatest(sum(length(tTrim).cast("double")).over(wRegion), lit(1.0)))
+      // fraction of the region's marker lines that are contentful entries
+      .withColumn("_r_marks",
+        sum(when(col("_is_mark"), 1.0).otherwise(0.0)).over(wRegion))
+      .withColumn("_r_content",
+        sum(when(col("_is_mark") && ZC.markContentful, 1.0).otherwise(0.0)).over(wRegion) /
+          greatest(col("_r_marks"), lit(1.0)))
+      // a region is a BODY of entries if it is letter-rich as a whole;
+      // pure price lists sit well below the threshold
+      .withColumn("_r_is_body", when(col("_numeric"), col("_r_letters") >= 0.26))
+      // the index/schedule shape is the strict sub-case: letter-rich but
+      // with essentially NO real entry markers (page-number and lot-range
+      // lines only) — bare prices inside genuine catalogue bodies keep
+      // those regions far above the floor
+      .withColumn("_r_index", when(col("_numeric"),
+        col("_r_letters") >= 0.26 && col("_r_content") < 0.15).otherwise(false))
+    val wConv2 = Window.partitionBy("conv_id")
+    val withBodySpan = withRegion
+      // index/schedule regions must not anchor the body span — a session
+      // schedule in the front matter would otherwise start the body early
+      .withColumn("_first_body",
+        min(when(col("_r_is_body") && !col("_r_index"), col("_r_start"))).over(wConv2))
+      .withColumn("_last_body",
+        max(when(col("_r_is_body") && !col("_r_index"), col("_r_end"))).over(wConv2))
+    val firstEntry = col("_first_body")
+    val lastEntry = col("_last_body")
+    // first annex header after the body has started caps the body range:
+    // everything from it to the end of the document is the annex
+    val annexStart = min(when(col("_is_trigger") && col("_line_no") > firstEntry,
+      col("_line_no"))).over(wConv2)
+    // the expert-letterhead block right above a leading price list ("Émile
+    // BOURGEY / Expert National / 7, rue Drouot") is part of the annex —
+    // index/schedule regions do not count as price lists
+    val nearPrice = min(when(col("_numeric") && !col("_r_is_body") && !col("_r_index"),
+      col("_line_no")))
+      .over(Window.partitionBy("conv_id")
+        .orderBy(col("turn_idx"), col("line_in_turn")).rowsBetween(0, 15)).isNotNull
+    withBodySpan
+      .withColumn("zone", ZC.zone(text, firstEntry, lastEntry, annexStart, nearPrice))
+      .withColumn("zone_label", zoneLabel(wOrd))
+      .select((lines.columns.toSeq :+ "zone" :+ "zone_label").map(col): _*)
+  }
 
   /** Shared per-line expressions of the content zoner — ONE definition used
    * by both [[zonesContent]] and [[zonesContentChunked]] so the two can
-   * never drift. See [[zonesContentRaw]] for the rule rationale. */
+   * never drift. See [[zonesContent]] for the rule rationale. */
   private[extract] object ZC {
     // lot-entry marker: numeric-ish line start in any of the corpus shapes
     // ("151 - ", "246.", "3 Zeugitane", "*483 Jean-Louis", OCR confusables).
@@ -167,12 +254,12 @@ object Labeler {
           .cast("int"))
     // a CONTENTFUL marker line is a real lot entry: number + dash/dot (the
     // _strong shape), or number followed by words on the same line, or a
-    // SEQUENTIAL bare marker (see [[zonesContentRaw]])
+    // SEQUENTIAL bare marker (see [[zonesContent]])
     def markContentful: Column = col("_is_mark") &&
       (col("_strong") || col("_nletters") >= 2 || col("_seq_mark"))
     /** The zone decision over the line text plus the statistics columns
      * (windowed in the sequential path, two-level-joined in the chunked
-     * one); rule ordering is load-bearing — see [[zonesContentRaw]]. */
+     * one); rule ordering is load-bearing — see [[zonesContent]]. */
     def zone(t: Column, firstEntry: Column, lastEntry: Column,
         annexStart: Column, nearPrice: Column): Column =
       when(firstEntry.isNull && col("_r_index"), "<front>")
@@ -261,96 +348,6 @@ object Labeler {
       // +0.3 but overall accuracy −0.03 and annex recall −0.4 — reverted
       .withColumn("_numeric",
         col("_mark_frac") >= 0.3 || col("_sparse") || col("_seqr"))
-  }
-
-  /** [[zonesContent]] before BIO encoding and internal-column drop — the
-   * region statistics stay readable for diagnostics. */
-  private[graft] def zonesContentRaw(lines: DataFrame, lineCol: String = "line"): DataFrame = {
-    val wConv = Window.partitionBy("conv_id")
-    val wOrd = wConv.orderBy(col("turn_idx"), col("line_in_turn"))
-    val text = trim(col(lineCol))
-    // repetitive page headers/stamps (A2, `DatacatSegmenterParser.java:
-    // 268-299`): the same short letter pattern recurring through a document
-    // is a page marker, not content — applied outside the body span only
-    val pattern = ZC.pattern(text)
-    val withPreds = zcDensityCols(
-      zcPredCols(lines, lineCol)
-        .withColumn("_line_no", row_number().over(wOrd)), wOrd)
-      .withColumn("_repetitive",
-        length(pattern) > 2 && length(text) <= 30 &&
-          count(lit(1)).over(Window.partitionBy(col("conv_id"), pattern)) >= 3)
-      // contiguous numbered regions: a catalogue body that drifts letter-poor
-      // mid-way ("0200 Écu. ... / AR5 F.D.C.") is ONE region and must be
-      // classified as a whole, not line-by-line — region identity via
-      // change detection, region class via region-level letter richness
-      .withColumn("_region_id",
-        when(col("_numeric"),
-          sum(when(col("_numeric") &&
-            !coalesce(lag(col("_numeric"), 1).over(wOrd), lit(false)), 1)
-            .otherwise(0)).over(wOrd.rowsBetween(Window.unboundedPreceding, 0))))
-    // region statistics as WINDOW aggregates over (conv_id, region_id) — a
-    // groupBy+join would re-shuffle the full line set on the two-column key;
-    // hash(conv_id) already clusters (conv_id, region_id), so these windows
-    // reuse the pipeline's one exchange (non-numeric lines share the null
-    // region per conv; their stats are guarded off)
-    val wRegion = Window.partitionBy("conv_id", "_region_id")
-    val tTrim = trim(col(lineCol))
-    // a CONTENTFUL marker line is a real lot entry: number + dash/dot (the
-    // _strong shape), or number followed by words on the same line (letter
-    // count >= 2; all letters sit after the numeric prefix by the mark
-    // shape). Index tables ("Abbeville," / "117") and session schedules
-    // ("Bronzes antiques" / "743 à 820") form numbered regions whose
-    // markers are BARE numbers or ranges — gold labels those <front>
-    // wherever they sit, even trailing the body
-    // a SEQUENTIAL bare marker is contentful too: an index's page refs are
-    // bare numbers but not incrementing, a lot list's bare markers are —
-    // without this, a bare-marker catalogue region would look like an index
-    val withRegion = withPreds
-      .withColumn("_r_start", when(col("_numeric"), min("_line_no").over(wRegion)))
-      .withColumn("_r_end", when(col("_numeric"), max("_line_no").over(wRegion)))
-      // letter richness of the region as a whole: pure price lists sit
-      // well below the threshold
-      .withColumn("_r_letters",
-        sum(col("_nletters").cast("double")).over(wRegion) /
-          greatest(sum(length(tTrim).cast("double")).over(wRegion), lit(1.0)))
-      // fraction of the region's marker lines that are contentful entries
-      .withColumn("_r_marks",
-        sum(when(col("_is_mark"), 1.0).otherwise(0.0)).over(wRegion))
-      .withColumn("_r_content",
-        sum(when(col("_is_mark") && ZC.markContentful, 1.0).otherwise(0.0)).over(wRegion) /
-          greatest(col("_r_marks"), lit(1.0)))
-      // a region is a BODY of entries if it is letter-rich as a whole;
-      // pure price lists sit well below the threshold
-      .withColumn("_r_is_body", when(col("_numeric"), col("_r_letters") >= 0.26))
-      // the index/schedule shape is the strict sub-case: letter-rich but
-      // with essentially NO real entry markers (page-number and lot-range
-      // lines only) — bare prices inside genuine catalogue bodies keep
-      // those regions far above the floor
-      .withColumn("_r_index", when(col("_numeric"),
-        col("_r_letters") >= 0.26 && col("_r_content") < 0.15).otherwise(false))
-    val wConv2 = Window.partitionBy("conv_id")
-    val withBodySpan = withRegion
-      // index/schedule regions must not anchor the body span — a session
-      // schedule in the front matter would otherwise start the body early
-      .withColumn("_first_body",
-        min(when(col("_r_is_body") && !col("_r_index"), col("_r_start"))).over(wConv2))
-      .withColumn("_last_body",
-        max(when(col("_r_is_body") && !col("_r_index"), col("_r_end"))).over(wConv2))
-    val firstEntry = col("_first_body")
-    val lastEntry = col("_last_body")
-    // first annex header after the body has started caps the body range:
-    // everything from it to the end of the document is the annex
-    val annexStart = min(when(col("_is_trigger") && col("_line_no") > firstEntry,
-      col("_line_no"))).over(wConv2)
-    // the expert-letterhead block right above a leading price list ("Émile
-    // BOURGEY / Expert National / 7, rue Drouot") is part of the annex —
-    // index/schedule regions do not count as price lists
-    val nearPrice = min(when(col("_numeric") && !col("_r_is_body") && !col("_r_index"),
-      col("_line_no")))
-      .over(Window.partitionBy("conv_id")
-        .orderBy(col("turn_idx"), col("line_in_turn")).rowsBetween(0, 15)).isNotNull
-    withBodySpan.withColumn("zone",
-      ZC.zone(text, firstEntry, lastEntry, annexStart, nearPrice))
   }
 
   /**
@@ -489,22 +486,10 @@ object Labeler {
     Chunked.barrier(aug2
       .withColumn("zone", ZC.zone(t, col("_first_body"), col("_last_body"),
         col("_annex_start"), nearPrice))
-      .withColumn("zone_label",
-        when(coalesce(lag(col("zone"), 1).over(wCh) =!= col("zone"), lit(true)),
-          concat(lit("I-"), col("zone"))).otherwise(col("zone")))
+      .withColumn("zone_label", zoneLabel(wCh))
       .where(!col("_ph"))
       .select((inCols :+ "zone" :+ "zone_label").map(col): _*))
   }
-
-  /** Shared tail of [[zonesContent]]: BIO labels + internal-column drop
-   * (kept separate so diagnostics can read the region statistics). */
-  private[graft] def zonesContentFinish(withZone: DataFrame,
-      wOrd: org.apache.spark.sql.expressions.WindowSpec): DataFrame =
-    withZone
-      .withColumn("zone_label",
-        when(coalesce(lag(col("zone"), 1).over(wOrd) =!= col("zone"), lit(true)),
-          concat(lit("I-"), col("zone"))).otherwise(col("zone")))
-      .drop("_line_no", "_is_mark", "_is_trigger", "_mark_frac", "_numeric", "_strong", "_sparse", "_mark_num", "_prev_nums", "_seq_mark", "_seqr", "_repetitive", "_region_id", "_nletters", "_r_start", "_r_end", "_r_letters", "_r_marks", "_r_content", "_r_is_body", "_r_index", "_first_body", "_last_body")
 
   private[extract] val entryStartRe = "^(\\p{Nd}+|[iIjJ!,]\\p{Nd}*|[iIjJ]{1,3})$".r
   private[extract] val dashSet = Set("-", "_", "–", "−", ".")
@@ -525,9 +510,11 @@ object Labeler {
 
   /** The body FSM's line-classification state machine, shared by every
    * walk that runs it so they cannot drift: [[bodyLabels]] and both passes of
-   * [[bodyLabelsChunked]] (through [[walkLines]]), and the span-emitting
-   * custom physical operator's FSM walk (`graft.plans.ClassifierWalk`
-   * inside [[graft.plans.BodySpansExec]]). */
+   * [[bodyLabelsChunked]] (through [[walkLines]]), and the span operator's
+   * FSM walk (`graft.plans.ClassifierWalk` inside
+   * [[graft.plans.BodySpansExec]]), which hands each classified line to the
+   * operator's one span rule. A line's entry test is [[isEntryLine]], the
+   * same test the walks' lookahead runs on the next line. */
   private[graft] final class LineClassifier {
     private var curConv: String = null
     private var openLabel: String = null
@@ -632,8 +619,7 @@ object Labeler {
       }
       val allCaps = nAlpha > 0 && allCapsAcc
       val head = if (n > 0) toks.head else ""
-      val isEntry = n > 0 && entryStartRe.findFirstIn(head).isDefined &&
-        ((n > 1 && dashSet(toks(1))) || head.forall(_.isDigit))
+      val isEntry = isEntryLine(toks)
       // heading shapes (tuned against the 14 gold body docs, LabelerEvalSpec):
       // all-caps headings need a real word (>=4 letters), no year/long-roman-
       // numeral token and an alphabetic first token, so coin-grade codes

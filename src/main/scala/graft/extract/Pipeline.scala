@@ -48,81 +48,63 @@ object Pipeline {
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.spans(bodyTokenFeats(turns))
 
+  /** The columns of a body line: what every stage-1 hands the tokenizer. */
+  private val bodyLineCols = Seq("conv_id", "turn_idx", "role", "tool", "block_idx",
+    "line_in_turn", "line_idx", "line").map(col)
+
+  /** The document mode's default stage-1: the trained [[ZoneModel]] shipped
+   * as [[ZoneModelArtifact]] (loaded in the active session), or `None`, the
+   * heuristic, when the resource is absent. */
+  private def shipped: Option[ZoneModel.Model] = ZoneModelArtifact.load(SparkSession.active)
+
   /**
    * Document-mode extraction — the reference's E1 cascade
    * (`DatacatBodySegmentationParser.createTraining`: stage-1 segmenter →
    * select BODY → stage-2 entry labeling) for corpora with NO role/tool
-   * signal. Stage 1 defaults to the TRAINED [[ZoneModel]] when the shipped
-   * artifact ([[ZoneModelArtifact]]) is on the classpath — the reference's
-   * whole point is a trained segmenter (E3), and the trained stage-1
-   * measures 96.9 held-out line accuracy / front F1 ~77 vs the heuristic's
-   * 94.1 / 64.6 (ZoneModelSpec / ZoneEvalSpec) — falling back to the
-   * heuristic [[extractDocumentsHeuristic]] when the resource is absent.
+   * signal. Input needs (conv_id, turn_idx, text); role and tool are
+   * synthesized as nulls when absent. Stage 2 is the same fused FSM as
+   * [[extract]]; stage 1 is [[documentBodyLines]] under `stage1`:
+   *
+   *  - `None`: the heuristic content zoner [[Labeler.zonesContent]] (front
+   *    matter, price-list annexes and OCR junk are dropped);
+   *  - `Some(model)`: a TRAINED [[ZoneModel]] stacked on that heuristic's
+   *    zones as hints; its weights are a broadcast join.
+   *
+   * The default is the shipped artifact when it is on the classpath — the
+   * reference's whole point is a trained segmenter (E3), and the trained
+   * stage-1 measures 96.9 held-out line accuracy / front F1 ~77 vs the
+   * heuristic's 94.1 / 64.6 (ZoneModelSpec / ZoneEvalSpec). Either way the
+   * plan has one conv_id exchange (PlanOperatorSpec): every stage-1 window
+   * is keyed on conv_id.
    */
-  def extractDocuments(docs: DataFrame): DataFrame =
-    ZoneModelArtifact.load(docs.sparkSession) match {
-      case Some(model) => extractDocumentsModeled(docs, model)
-      case None => extractDocumentsHeuristic(docs)
-    }
-
-  /** Stage-1 body lines with the same artifact dispatch as
-   * [[extractDocuments]] — the frame its stage-2 tail consumes. */
-  def documentBodyLines(docs: DataFrame): DataFrame =
-    ZoneModelArtifact.load(docs.sparkSession) match {
-      case Some(model) => documentBodyLinesModeled(docs, model)
-      case None => documentBodyLinesHeuristic(docs)
-    }
-
-  /**
-   * Document-mode extraction with the heuristic stage-1: content-based
-   * [[Labeler.zonesContent]] (front matter, price-list annexes and OCR junk
-   * are dropped), stage 2 the same fused FSM as [[extract]]. Input needs
-   * (conv_id, turn_idx, text); role and tool are synthesized as nulls when
-   * absent. Same single-exchange shape: zonesContent's windows are all
-   * keyed on conv_id.
-   */
-  def extractDocumentsHeuristic(docs: DataFrame): DataFrame =
+  def extractDocuments(docs: DataFrame,
+      stage1: Option[ZoneModel.Model] = shipped): DataFrame =
     graft.plans.BodySpans.spans(
-      fsmInput(Structure.tokensFromLines(documentBodyLinesHeuristic(docs))))
+      fsmInput(Structure.tokensFromLines(documentBodyLines(docs, stage1))))
 
-  /** Heuristic twin of [[documentBodyLinesModeled]]. */
-  def documentBodyLinesHeuristic(docs: DataFrame): DataFrame = {
-    val turns = withNullRoleCols(docs)
-    val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
-    Labeler.zonesContent(lines)
-      .where(col("zone") === "<body>")
-      .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-        "line_in_turn", "line_idx", "line")
+  /** Document-mode stage-1 output: the body lines `stage1` keeps (see
+   * [[extractDocuments]]). Public so invariant oracles can pin the stage-2
+   * tail against the text entering it (doc_rebuild_diff). */
+  def documentBodyLines(docs: DataFrame,
+      stage1: Option[ZoneModel.Model] = shipped): DataFrame = {
+    val lines = Structure.keptLines(
+      graft.ops.Par.clusterBy(withNullRoleCols(docs), "conv_id"))
+    val body = stage1 match {
+      case None => Labeler.zonesContent(lines).where(col("zone") === "<body>")
+      // NO score smoothing here: smoothing raises bulk line accuracy (+1.2%,
+      // ZoneModelSpec) but blurs single-line zone BOUNDARIES — a smoothed
+      // annex header gets outvoted by its body neighbors and leaks into the
+      // extracted spans (DocumentPipelineSpec pins this)
+      case Some(model) =>
+        ZoneModel.apply(asHints(Labeler.zonesContent(lines)), model)
+          .where(col("zone_pred") === "<body>")
+    }
+    body.select(bodyLineCols: _*)
   }
 
-  /**
-   * Document-mode extraction with a TRAINED stage-1: like
-   * [[extractDocuments]], but zone selection comes from a [[ZoneModel]]
-   * (naive-Bayes, heuristic-stacked — 94.8% held-out vs the heuristic's
-   * 86.4%, ZoneModelSpec). The model side is a broadcast join; the plan
-   * still has a single conv_id exchange.
-   */
-  def extractDocumentsModeled(docs: DataFrame, model: ZoneModel.Model): DataFrame =
-    graft.plans.BodySpans.spans(
-      fsmInput(Structure.tokensFromLines(documentBodyLinesModeled(docs, model))))
-
-  /** Document-mode stage-1 output: the body lines the trained zoner keeps.
-   * Public so invariant oracles can pin the stage-2 tail against the text
-   * entering it (doc_rebuild_diff). */
-  def documentBodyLinesModeled(docs: DataFrame, model: ZoneModel.Model): DataFrame = {
-    val turns = withNullRoleCols(docs)
-    val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
-    val hinted = Labeler.zonesContent(lines)
-      .withColumnRenamed("zone", "hint").drop("zone_label")
-    // NO score smoothing here: smoothing raises bulk line accuracy (+1.2%,
-    // ZoneModelSpec) but blurs single-line zone BOUNDARIES — a smoothed
-    // annex header gets outvoted by its body neighbors and leaks into the
-    // extracted spans (DocumentPipelineSpec pins this)
-    ZoneModel.apply(hinted, model)
-      .where(col("zone_pred") === "<body>")
-      .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-        "line_in_turn", "line_idx", "line")
-  }
+  /** The heuristic zones as the trained zoner's `hint` input. */
+  private def asHints(zoned: DataFrame): DataFrame =
+    zoned.withColumnRenamed("zone", "hint").drop("zone_label")
 
   /** The span walk's eight input columns over a token frame; its one
    * feature, `f_capitalisation`, is a per-token scalar. */
@@ -133,50 +115,28 @@ object Pipeline {
 
   /**
    * Chunk-parallel twin of [[extractDocuments]] — row-identical output
-   * (DocumentChunkedSpec differential + the doc_chunked_diff oracle), for
-   * document-mode corpora with GIANT single documents: stage-1 zoning runs
-   * through [[Labeler.zonesContentChunked]] (and, on the modeled default,
-   * [[ZoneModel.withFeaturesChunked]]), stage 2 through the established
-   * chunk-parallel tail ([[Structure.tokensFromLinesChunked]] →
-   * [[Labeler.bodyLabelsChunked]] → [[Assemble.bodySpansChunked]]). Same
-   * artifact dispatch as [[extractDocuments]].
+   * under either stage-1 (DocumentChunkedSpec differential + the
+   * doc_chunked_diff oracle), for document-mode corpora with GIANT single
+   * documents: stage-1 zoning runs through [[Labeler.zonesContentChunked]]
+   * (and, for a trained stage-1, [[ZoneModel.withFeaturesChunked]]), stage 2
+   * through the established chunk-parallel tail
+   * ([[Structure.tokensFromLinesChunked]] → [[Labeler.bodyLabelsChunked]] →
+   * [[Assemble.bodySpansChunked]]). Same `stage1` and default as
+   * [[extractDocuments]].
    */
-  def extractDocumentsChunked(docs: DataFrame, chunkTurns: Int = 4096): DataFrame =
-    ZoneModelArtifact.load(docs.sparkSession) match {
-      case Some(model) => extractDocumentsModeledChunked(docs, model, chunkTurns)
-      case None => extractDocumentsHeuristicChunked(docs, chunkTurns)
+  def extractDocumentsChunked(docs: DataFrame,
+      stage1: Option[ZoneModel.Model] = shipped, chunkTurns: Int = 4096): DataFrame = {
+    val zoned = Labeler.zonesContentChunked(
+      Structure.keptLines(withNullRoleCols(docs)), chunkTurns)
+    val bodyLines = stage1 match {
+      case None => zoned.where(col("zone") === "<body>").select(bodyLineCols: _*)
+      // barrier after the model stage: its explode→join→window chain sits on
+      // the stage-1 barrier and is consumed 2-3× per tail stage
+      case Some(model) => Chunked.barrier(
+        ZoneModel.apply(asHints(zoned), model, chunkTurns = Some(chunkTurns))
+          .where(col("zone_pred") === "<body>")
+          .select(bodyLineCols: _*))
     }
-
-  /** Chunk-parallel twin of [[extractDocumentsHeuristic]]. */
-  def extractDocumentsHeuristicChunked(docs: DataFrame, chunkTurns: Int = 4096): DataFrame = {
-    val turns = withNullRoleCols(docs)
-    val bodyLines = Labeler.zonesContentChunked(
-      Structure.keptLines(turns), chunkTurns)
-      .where(col("zone") === "<body>")
-      .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-        "line_in_turn", "line_idx", "line")
-    documentChunkedTail(bodyLines, chunkTurns)
-  }
-
-  /** Chunk-parallel twin of [[extractDocumentsModeled]]. */
-  def extractDocumentsModeledChunked(docs: DataFrame, model: ZoneModel.Model,
-      chunkTurns: Int = 4096): DataFrame = {
-    val turns = withNullRoleCols(docs)
-    val hinted = Labeler.zonesContentChunked(Structure.keptLines(turns), chunkTurns)
-      .withColumnRenamed("zone", "hint").drop("zone_label")
-    // barrier after the model stage: its explode→join→window chain sits on
-    // the stage-1 barrier and is consumed 2-3× per tail stage
-    val bodyLines = Chunked.barrier(
-      ZoneModel.apply(hinted, model, chunkTurns = Some(chunkTurns))
-        .where(col("zone_pred") === "<body>")
-        .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-          "line_in_turn", "line_idx", "line"))
-    documentChunkedTail(bodyLines, chunkTurns)
-  }
-
-  /** Shared stage-2 of the chunked document modes — identical to
-   * [[labeledBodyTokensChunked]] minus the transcript-mode zone filter. */
-  private def documentChunkedTail(bodyLines: DataFrame, chunkTurns: Int): DataFrame = {
     val feats = fsmInput(Structure.tokensFromLinesChunked(bodyLines, chunkTurns))
     Assemble.bodySpansChunked(
       Labeler.bodyLabelsChunked(feats, chunkTurns), chunkTurns)
@@ -224,8 +184,7 @@ object Pipeline {
       failures: Option[Lineage.PartitionStats] = None,
       materialize: Boolean = true): DataFrame = {
     val bodyLines = Labeler.bodyLinesChunked(Structure.keptLines(turns), chunkTurns)
-      .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-        "line_in_turn", "line_idx", "line")
+      .select(bodyLineCols: _*)
     val feats = fsmInput(Structure.tokensFromLinesChunked(bodyLines, chunkTurns))
     Labeler.bodyLabelsChunked(feats, chunkTurns, failures, materialize)
   }
@@ -245,9 +204,7 @@ object Pipeline {
     val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
     val zoned = Labeler.zones(Features.repetitive(lines))
     // F4: zone selection is a plain filter because labels are columns
-    val bodyLines = zoned.where(col("zone") === "<body>")
-      .select("conv_id", "turn_idx", "role", "tool", "block_idx",
-        "line_in_turn", "line_idx", "line")
+    val bodyLines = zoned.where(col("zone") === "<body>").select(bodyLineCols: _*)
     fsmInput(Structure.tokensFromLines(bodyLines))
   }
 

@@ -26,9 +26,11 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
  * Doubles round-trip through `java.lang.Double.toString`/`parseDouble`
  * exactly. The artifact is produced at build/test time by
  * `sbt "Test/runMain graft.TrainZoneModel"` (test scope — training reads
- * the reference gold corpus via the test fixtures loader) and committed;
- * [[Pipeline.extractDocuments]] uses it as the document-mode default,
- * falling back to the heuristic stage-1 when the resource is absent.
+ * the reference gold corpus via the test fixtures loader) and committed.
+ * It is the default `stage1` of the document-mode functions
+ * ([[Pipeline.extractDocuments]], [[Pipeline.documentBodyLines]],
+ * [[Pipeline.extractDocumentsChunked]]); when the resource is absent,
+ * [[load]] gives `None` and they run the heuristic stage-1.
  */
 object ZoneModelArtifact {
 

@@ -16,13 +16,18 @@ import graft.extract.Labeler
  * The streaming span emitter as a first-class Catalyst operator: spans are
  * written during one walk over the sorted body tokens, as the reference
  * writes TEI during its label walk (`DatacatSegmenterParser.java:1009-1088`).
- * Two modes share one logical node, strategy, exec and span accumulator:
+ * Two modes share one logical node, strategy and exec, and differ only in
+ * where a token's `(base label, starts a span)` pair comes from:
  *
  *  - [[spans]] runs the body FSM ([[Labeler.LineClassifier]]) over body
  *    features — the flagship [[graft.extract.Pipeline.extract]];
  *  - [[fromLabels]] walks an already-labeled BIO token frame — the spans
  *    stage of [[graft.extract.Pipeline.runResumable]], which must follow
  *    the committed `label` column, not re-classify.
+ *
+ * Both hand every token to one span rule (`SpanAcc.token`): conversation
+ * ends, separator fallback, the newline cut at a span's end and span
+ * opening are stated there once.
  *
  * A custom `LogicalPlan` + `Strategy` + `SparkPlan` because a
  * `mapPartitions` body cannot:
@@ -120,14 +125,16 @@ object BodySpansStrategy extends SparkStrategy {
 }
 
 /**
- * The open-span accumulator both walks write through. A span's last token
- * is only known once the next token is seen, so each token waits here
- * ([[hold]]) until the separator after it is known; it then lands as one
- * piece, its separator cut at the first `\n` when it ends the span
- * (Assemble's `span_last` rule). One output row per finished span.
+ * The span rule both walks write through, one token at a time in input
+ * order ([[token]]). A span's last token is only known once the next token
+ * is seen, so each token waits here until the separator after it is known:
+ * the next token's `sep_before`, else its own `line_trailing`, else "". It
+ * then lands as one piece, its separator cut at the first `\n` when it ends
+ * the span (Assemble's `span_last` rule). One output row per finished span.
  */
 private[plans] final class SpanAcc {
   val out = scala.collection.mutable.Queue.empty[GenericInternalRow]
+  private var started = false
   private var conv: String = null
   private var seg = 0L
   private var label: String = null
@@ -136,40 +143,22 @@ private[plans] final class SpanAcc {
   private val text = new java.lang.StringBuilder
   private var hasPend = false
   private var pendTok: String = null
-  /** `line_trailing` of the held token's line ("" when null). */
-  var pendTrail: String = ""
+  private var pendTrail: String = ""
 
-  def closeSpan(): Unit = if (open) {
-    out += new GenericInternalRow(Array[Any](
-      UTF8String.fromString(conv), seg,
-      UTF8String.fromString(label), turn,
-      UTF8String.fromString(text.toString)))
-    open = false
-    text.setLength(0)
-  }
-
-  /** Close the open span and open the next one of `conv`. */
-  def openSpan(c: String, base: String, t: Int): Unit = {
-    closeSpan()
-    seg += 1
-    conv = c; label = base; turn = t
-    open = true
-  }
-
-  /** One token's piece: escaped text, then the separator after it. A null
-   * token adds nothing (Assemble's `array_join` skips its null piece). */
-  def piece(tok: String, sep: String): Unit =
-    if (tok != null) text.append(Labeler.htmlEncode(tok)).append(sep)
-
-  def hold(tok: String, trail: String): Unit = {
-    pendTok = tok; pendTrail = trail; hasPend = true
-  }
-
-  /** Land the held token now that the separator after it is known. */
-  def resolvePend(sepAfter: String, spanLast: Boolean): Unit = if (hasPend) {
-    val nl = if (spanLast) sepAfter.indexOf('\n') else -1
-    piece(pendTok, if (nl < 0) sepAfter else sepAfter.substring(0, nl))
-    hasPend = false
+  /** One token of the walk. `isStart`: the token opens a span labeled
+   * `base`; a conversation's first token always does, after the previous
+   * conversation ends. */
+  def token(c: String, base: String, isStart: Boolean, t: Int,
+      tok: String, sepBefore: String, trail: String): Unit = {
+    val newConv = !started || c != conv
+    if (newConv) {
+      if (started) endConv()
+      started = true
+    }
+    val start = isStart || newConv
+    resolvePend(if (sepBefore != null) sepBefore else pendTrail, spanLast = start)
+    if (start) openSpan(c, base, t)
+    pendTok = tok; pendTrail = if (trail == null) "" else trail; hasPend = true
   }
 
   /** End of a conversation (or of the input): the held token takes its
@@ -178,6 +167,32 @@ private[plans] final class SpanAcc {
     resolvePend(pendTrail, spanLast = true)
     closeSpan()
     seg = 0L
+  }
+
+  private def closeSpan(): Unit = if (open) {
+    out += new GenericInternalRow(Array[Any](
+      UTF8String.fromString(conv), seg,
+      UTF8String.fromString(label), turn,
+      UTF8String.fromString(text.toString)))
+    open = false
+    text.setLength(0)
+  }
+
+  private def openSpan(c: String, base: String, t: Int): Unit = {
+    closeSpan()
+    seg += 1
+    conv = c; label = base; turn = t
+    open = true
+  }
+
+  /** Land the held token: escaped text, then the separator after it. A null
+   * token adds nothing (Assemble's `array_join` skips its null piece). */
+  private def resolvePend(sepAfter: String, spanLast: Boolean): Unit = if (hasPend) {
+    val nl = if (spanLast) sepAfter.indexOf('\n') else -1
+    if (pendTok != null)
+      text.append(Labeler.htmlEncode(pendTok))
+        .append(if (nl < 0) sepAfter else sepAfter.substring(0, nl))
+    hasPend = false
   }
 }
 
@@ -239,42 +254,29 @@ private[plans] abstract class SpanWalk(it: Iterator[InternalRow], outSchema: Str
 }
 
 /** [[graft.extract.Assemble.bodySpans]] as one walk: a span opens on an
- * `I-` label, a change of base label, or a new conversation; the separator
- * after a token is the next token's `sep_before`, else its own
- * `line_trailing`, else "". */
+ * `I-` label or a change of base label. */
 private[plans] final class LabelWalk(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols) extends SpanWalk(it, outSchema) {
   import BodySpans.str
-  private var started = false
-  private var curConv: String = null
   private var prevBase: String = null
 
   protected def step(r: InternalRow): Unit = {
-    val conv = str(r, c.conv)
     val label = str(r, c.labelOrCap)
     val isI = label != null && label.startsWith("I-")
     val base = if (isI) label.substring(2) else label
-    if (!started || conv != curConv) {
-      if (started) acc.endConv()
-      started = true; curConv = conv; prevBase = null
-    }
     // a null base never compares equal (SQL `=!=` under `coalesce(.., true)`)
-    val isStart = isI || prevBase == null || base == null || base != prevBase
-    val sep = str(r, c.sep)
-    acc.resolvePend(if (sep != null) sep else acc.pendTrail, spanLast = isStart)
-    if (isStart) acc.openSpan(conv, base, r.getInt(c.turn))
-    val tr = str(r, c.trail)
-    acc.hold(str(r, c.tok), if (tr == null) "" else tr)
+    acc.token(str(r, c.conv), base, isI || base == null || base != prevBase,
+      r.getInt(c.turn), str(r, c.tok), str(r, c.sep), str(r, c.trail))
     prevBase = base
   }
 
   protected def finish(): Unit = acc.endConv()
 }
 
-/** The body FSM: buffers one line and classifies it with one line of
- * lookahead ([[Labeler.isEntryLine]] on the next line). Separators follow
- * [[LabelWalk]]: a null `sep_before` falls back to the previous token's
- * `line_trailing`. */
+/** The body FSM: buffers one line, classifies it with one line of
+ * lookahead ([[Labeler.isEntryLine]] on the next line), then hands its
+ * tokens to the span rule, the first one opening a span when the line
+ * starts one. */
 private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols) extends SpanWalk(it, outSchema) {
   import BodySpans.str
@@ -288,7 +290,7 @@ private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: 
   private var bufConv: String = null
   private var bufTurn: Int = 0
   private var bufLine: Int = 0
-  private var bufTrail: String = ""
+  private var bufTrail: String = null
   private var hasBuf = false
   // one-line lookahead: the last completed line waits here until the
   // next line is known; buffers recycle via swap with toks/caps/seps
@@ -297,25 +299,18 @@ private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: 
   private var pSeps = scala.collection.mutable.ArrayBuffer.empty[String]
   private var pConv: String = null
   private var pTurn: Int = 0
-  private var pTrail: String = ""
+  private var pTrail: String = null
   private var pHas = false
-  private var lastConv: String = null
 
   private def emitLine(lToks: collection.Seq[String], lCaps: collection.Seq[String],
       lSeps: collection.Seq[String], conv: String, turn: Int, trail: String,
       nextIsEntry: Boolean): Unit = {
-    if (conv != lastConv && lastConv != null) acc.endConv()
     val (base, isStart) = cls.classify(conv, lToks, lCaps, nextIsEntry)
-    acc.resolvePend(if (lSeps.head != null) lSeps.head else acc.pendTrail, spanLast = isStart)
-    if (isStart) acc.openSpan(conv, base, turn)
-    lastConv = conv
     var i = 0
-    while (i < lToks.length - 1) {
-      val sep = lSeps(i + 1)
-      acc.piece(lToks(i), if (sep != null) sep else trail)
+    while (i < lToks.length) {
+      acc.token(conv, base, isStart && i == 0, turn, lToks(i), lSeps(i), trail)
       i += 1
     }
-    acc.hold(lToks(lToks.length - 1), trail)
   }
 
   /** Current buffered line completed: classify the pending one, then
@@ -342,8 +337,7 @@ private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: 
     toks += str(r, c.tok)
     caps += str(r, c.labelOrCap)
     seps += str(r, c.sep)
-    val tr = str(r, c.trail)
-    bufTrail = if (tr == null) "" else tr
+    bufTrail = str(r, c.trail)
     hasBuf = true
   }
 

@@ -29,6 +29,12 @@ class DocumentChunkedSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
         r.getString(4))).toSet
 
+  private def spansOf(df: DataFrame): Set[(String, Long, String, Int, String)] =
+    df.select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3),
+        r.getString(4))).toSet
+
   test("zonesContentChunked ≡ zonesContent on gold catalogue docs") {
     assume(Fixtures.available)
     // a handful of real docs (incl. the largest) — each chunked run carries
@@ -75,6 +81,17 @@ class DocumentChunkedSpec extends SparkSpec {
       val b = zonesOf(Labeler.zonesContentChunked(lines, ct))
       assert(a == b, s"chunkTurns=$ct: ${(a diff b).take(3)} vs ${(b diff a).take(3)}")
     }
+    // the same catalogue as a document (one text per turn) through the whole
+    // cascade: sequential ≡ chunk-parallel spans under either stage-1
+    val turns = rows.groupBy(r => (r._1, r._2)).toSeq.sortBy(_._1)
+      .map { case ((c, t), ls) => (c, t, ls.sortBy(_._3).map(_._4).mkString("\n")) }
+      .toDF("conv_id", "turn_idx", "text")
+    val heuristic = spansOf(Pipeline.extractDocuments(turns, None))
+    assert(heuristic.nonEmpty, "heuristic stage-1 produced no spans")
+    assert(heuristic == spansOf(Pipeline.extractDocumentsChunked(turns, None, 8)))
+    val artifact = spansOf(Pipeline.extractDocuments(turns))
+    assert(artifact.nonEmpty, "artifact stage-1 produced no spans")
+    assert(artifact == spansOf(Pipeline.extractDocumentsChunked(turns, chunkTurns = 8)))
   }
 
   test("withFeaturesChunked ≡ withFeatures including hint stacking") {
@@ -109,16 +126,11 @@ class DocumentChunkedSpec extends SparkSpec {
     val turns = allLines.grouped(4).zipWithIndex
       .map { case (g, i) => ("doc0", i, g.mkString("\n")) }.toSeq
       .toDF("conv_id", "turn_idx", "text")
-    def spansOf(df: DataFrame) = df
-      .select("conv_id", "segment_id", "label", "turn_idx", "text")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3),
-        r.getString(4))).toSet
-    val ha = spansOf(Pipeline.extractDocumentsHeuristic(turns))
-    val hb = spansOf(Pipeline.extractDocumentsHeuristicChunked(turns, 5))
+    val ha = spansOf(Pipeline.extractDocuments(turns, None))
+    val hb = spansOf(Pipeline.extractDocumentsChunked(turns, None, 5))
     assert(ha == hb, s"heuristic: ${(ha diff hb).take(2)} vs ${(hb diff ha).take(2)}")
     val da = spansOf(Pipeline.extractDocuments(turns))
-    val db = spansOf(Pipeline.extractDocumentsChunked(turns, 5))
+    val db = spansOf(Pipeline.extractDocumentsChunked(turns, chunkTurns = 5))
     assert(da == db, s"default: ${(da diff db).take(2)} vs ${(db diff da).take(2)}")
     assert(da.nonEmpty && ha.nonEmpty)
   }

@@ -80,8 +80,8 @@ class DocumentPipelineSpec extends SparkSpec with FixtureSpec {
 
     val fx = Fixtures.bodyFixtureNames.map(Fixtures.loadBody).maxBy(_.spans.size)
     val docText = (front :+ fx.sourceText :+ annex.mkString("\n")).mkString("\n")
-    val spans = Pipeline.extractDocumentsModeled(
-      Seq(("doc0", 0, docText)).toDF("conv_id", "turn_idx", "text"), model)
+    val spans = Pipeline.extractDocuments(
+      Seq(("doc0", 0, docText)).toDF("conv_id", "turn_idx", "text"), Some(model))
       .select("label", "text").as[(String, String)].collect()
     assert(spans.nonEmpty)
     assert(!spans.exists(_._2.contains("PRIX DES ADJUDICATIONS")))

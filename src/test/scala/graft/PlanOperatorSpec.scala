@@ -126,6 +126,25 @@ class PlanOperatorSpec extends SparkSpec {
       s"operator counts changed:\n$plan")
   }
 
+  private def hashExchanges(df: DataFrame): Int =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .count(_.contains("Exchange hashpartitioning"))
+
+  test("document mode plans exactly one exchange under either stage-1") {
+    val docs = Synthetic.transcripts(spark, 100).select("conv_id", "turn_idx", "text")
+    assert(graft.extract.ZoneModelArtifact.load(spark).isDefined)
+    assert(hashExchanges(Pipeline.extractDocuments(docs, None)) == 1)
+    assert(hashExchanges(Pipeline.extractDocuments(docs)) == 1)
+  }
+
+  test("mainContent plans no exchange") {
+    val docs = spark.range(100).select(col("id").as("doc_id"),
+      concat(lit("<html><body><nav><a href=\"/\">Home</a></nav><p>entry "),
+        col("id").cast("string"),
+        lit(" with plenty of text</p></body></html>")).as("html"))
+    assert(hashExchanges(graft.ops.MainContent.mainContent(docs)) == 0)
+  }
+
   test("label mode is identical to the declarative assembly on FSM labels") {
     val labeled = Labeler.bodyLabels(feats(50))
     val viaOperator = sortedRows(BodySpans.fromLabels(labeled))
