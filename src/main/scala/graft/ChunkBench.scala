@@ -7,7 +7,9 @@ import graft.extract.{Features, Labeler, Pipeline, Structure, Synthetic}
  * Single-conversation skew benchmark: the sequential FSM
  * ([[Labeler.bodyLabels]]) labels one giant conversation on ONE task; the
  * chunk-parallel FSM ([[Labeler.bodyLabelsChunked]]) spreads it over
- * nTurns/chunkTurns tasks (exact, ChunkedLabelerSpec). This main measures
+ * nTurns/chunkTurns tasks (exact, ChunkedLabelerSpec). Both are the label
+ * sink of [[graft.plans.BodySpans]]; the chunked path first runs its
+ * transition sink. This main measures
  * both on the same one-conversation corpus — the isolated FSM stage from a
  * materialized feature table, and (ChunkedPipelineSpec differential) the
  * FULL pipeline [[Pipeline.extract]] vs [[Pipeline.extractChunked]] from

@@ -2488,10 +2488,10 @@ object Queries {
     "w10_label_spans_diff" -> ((s, dir) => {
       // label-stream ↔ span-output invariant, the oracle-checkable cover
       // for the rows-only w10_body_labels: per (conv, label), the number of
-      // spans the custom physical operator emits must equal the number of
-      // BIO span starts in the mapPartitions FSM's label stream — two
-      // INDEPENDENT implementations of the same walk. Constant-empty
-      // oracle, pipeline_chunked_diff-style.
+      // spans the body-walk operator's span sink emits must equal the
+      // number of BIO span starts that the declarative withSegmentIds finds
+      // in its label sink's stream — two span-boundary rules that must
+      // agree. Constant-empty oracle, pipeline_chunked_diff-style.
       val trns = transcripts(s, dir)
       val fromLabels = Assemble.withSegmentIds(
         Pipeline.labeledBodyTokens(trns),

@@ -19,13 +19,15 @@ private[graft] object Chunked {
   val ordCols = Seq("turn_idx", "line_in_turn", "tok_idx")
 
   /** Lazy plan barrier between macro-stages of DEEP chunk-parallel
-   * cascades — see [[org.apache.spark.sql.GraftPlanBridge.planBarrier]].
-   * Without it, the document-mode chunked pipeline's logical tree expands
-   * combinatorially (measured: Catalyst spent 28 MINUTES in
+   * cascades — see [[org.apache.spark.sql.graftbridge.bridge.planBarrier]].
+   * Catalyst clones and analyses a plan DAG as a TREE per Dataset
+   * operation, so chained two-level chunk aggregations that each reference
+   * their input 2-3× grow exponentially: the document-mode chunked
+   * pipeline's logical tree expanded combinatorially (Catalyst spent 28 MINUTES in
    * `LogicalPlan.clone` on a 150-line input before the barriers went in;
    * with them the same differential runs in seconds). */
   def barrier(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.planBarrier(df)
+    org.apache.spark.sql.graftbridge.bridge.planBarrier(df)
 
   /** Chunk id of a turn (a turn never straddles chunks). */
   def chunkCol(chunkTurns: Int) = expr(s"int(turn_idx div $chunkTurns)")

@@ -1,9 +1,8 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Deterministic sequence labelers replacing the reference's Wapiti CRF calls
@@ -17,13 +16,14 @@ import org.apache.spark.sql.types._
  * Two implementation styles on purpose:
  *  - the zone labeler is pure Catalyst (when-chains + lag for BIO): the rules
  *    are per-line, so the optimizer should own them;
- *  - the body labeler is a streaming FSM inside `mapPartitions` after
- *    `repartition(conv_id) + sortWithinPartitions`: entry/title detection is
- *    genuinely sequential (state carried across tokens/lines). The FSM is
- *    O(1) state per conversation and never materializes a conversation in
- *    memory (buffering only one line at a time), so a 10^9-turn conversation
- *    streams through — this is the "batched passes inside mapPartitions"
- *    north-star pattern, and the reason we do NOT use groupByKey here.
+ *  - the body labeler is a streaming FSM ([[LineClassifier]]) run by the
+ *    body-walk operator [[graft.plans.BodySpans]], which declares its
+ *    conv_id distribution and sort order and walks InternalRows: entry/title
+ *    detection is genuinely sequential (state carried across tokens/lines).
+ *    The FSM is O(1) state per conversation and never materializes a
+ *    conversation in memory (buffering only one line at a time), so a
+ *    10^9-turn conversation streams through — the reason we do NOT use
+ *    groupByKey here.
  */
 object Labeler {
 
@@ -508,15 +508,12 @@ object Labeler {
         ((toks.size > 1 && dashSet(toks(1))) || head.forall(_.isDigit))
     }
 
-  /** The body FSM's line-classification state machine, shared by every
-   * walk that runs it so they cannot drift: [[bodyLabels]] and both passes of
-   * [[bodyLabelsChunked]] (through [[walkLines]]), and the span operator's
-   * FSM walk (`graft.plans.ClassifierWalk` inside
-   * [[graft.plans.BodySpansExec]]), which hands each classified line to the
-   * operator's one span rule. A line's entry test is [[isEntryLine]], the
-   * same test the walks' lookahead runs on the next line. */
+  /** The body FSM's line-classification state machine, run by the one line
+   * walker over sorted body tokens (`graft.plans.LineWalk` inside
+   * [[graft.plans.BodySpansExec]]), which hands each classified line to a
+   * span, label or transition sink. A line's entry test is [[isEntryLine]],
+   * the same test the walker's lookahead runs on the next line. */
   private[graft] final class LineClassifier {
-    private var curConv: String = null
     private var openLabel: String = null
     private var lastWasTitle = false
     private var lastWasGrade = false
@@ -540,10 +537,10 @@ object Labeler {
       case _ /* entry */ => if (!lastWasGrade) 4 else if (lastGradeAlpha) 5 else 6
     }
 
-    /** Restore a canonical state (inverse of [[stateId]]) for conversation
-     * `conv` — entry point of a chunk in the chunk-parallel labeler. */
-    private[graft] def setState(id: Int, conv: String): Unit = {
-      curConv = conv
+    /** Restore a canonical state (inverse of [[stateId]]): 0 at the start
+     * of a conversation, a chunk's entry state in the chunk-parallel
+     * labeler. */
+    private[graft] def setState(id: Int): Unit = {
       openLabel = id match {
         case 0 => null
         case 1 => "<other>"
@@ -561,17 +558,13 @@ object Labeler {
      * lot entry ([[isEntryLine]]) — supplied by the drivers' one-line
      * lookahead; false at conversation/input end.
      *
-     * Hot path of the whole pipeline (runs once per line inside the FSM
-     * mapPartitions): every line-shape statistic is gathered in ONE manual
+     * Hot path of the whole pipeline (runs once per line inside the body
+     * walk): every line-shape statistic is gathered in ONE manual
      * scan over the tokens, no intermediate collections. Heading-rule
      * semantics are pinned by LabelerEvalSpec (99.5 vs gold) and the
      * fused≡declarative differential. */
-    def classify(conv: String, toks: collection.Seq[String], caps: collection.Seq[String],
+    def classify(toks: collection.Seq[String], caps: collection.Seq[String],
         nextIsEntry: Boolean): (String, Boolean) = {
-      if (conv != curConv) {
-        openLabel = null; lastWasTitle = false; lastWasGrade = false
-        lastGradeAlpha = false; curConv = conv
-      }
       val n = toks.size
       // one pass: alpha-token stats, digit/roman/paren/dash shape flags
       var nAlpha = 0; var maxAlphaLen = 0; var allCapsAcc = true
@@ -753,136 +746,19 @@ object Labeler {
    *  - continuation lines extend the open span (the sequential part).
    *
    * Input must contain columns (conv_id, turn_idx, line_in_turn, tok_idx,
-   * tok, f_capitalisation). Output adds `label` (BIO-encoded).
+   * tok, f_capitalisation). Output is the input's columns plus a non-null
+   * BIO `label`, from the label sink of [[graft.plans.BodySpans]], which
+   * keeps the input's partitioning and ordering. `repartitionByConv` places
+   * the conv_id shuffle by hand; otherwise the operator's declared
+   * distribution does. S3-style per-line error isolation: a line whose
+   * classification throws is dropped and counted in `failures` per
+   * partition (the reference isolates per FILE, EngineDatacat.java:114-150).
    */
   def bodyLabels(tokens: DataFrame, repartitionByConv: Boolean = true,
-      failures: Option[Lineage.PartitionStats] = None): DataFrame = {
-    // when the caller's plan is already hash-partitioned by conv_id (the
-    // single-exchange pipeline), skip the redundant shuffle
-    val sorted = (if (repartitionByConv) tokens.repartition(col("conv_id")) else tokens)
-      .sortWithinPartitions("conv_id", "turn_idx", "line_in_turn", "tok_idx")
-    labelWalk(sorted, tokens.schema, chunked = false, failures)
-  }
-
-  /**
-   * The labeling walk of [[bodyLabels]] and of pass 2 of
-   * [[bodyLabelsChunked]]: `sorted` holds the columns of `in`, then, when
-   * `chunked`, `_chunk`, `_peek` and `_entry`. A group starts from state
-   * `_entry` (0 if unchunked or null); the output is each non-peek row's
-   * `in` columns plus the BIO `label`. S3-style per-line
-   * error isolation: a malformed line is dropped and counted per partition
-   * instead of failing the task (the reference isolates per FILE,
-   * EngineDatacat.java:114-150).
-   */
-  private def labelWalk(sorted: DataFrame, in: StructType, chunked: Boolean,
-      failures: Option[Lineage.PartitionStats]): DataFrame = {
-    val Seq(iConv, iTurn, iLine, iTok, iCap) =
-      Seq("conv_id", "turn_idx", "line_in_turn", "tok", "f_capitalisation").map(in.fieldIndex)
-    val nIn = in.size
-    val (iChunk, iPeek, iEntry) = if (chunked) (nIn, nIn + 1, nIn + 2) else (-1, -1, -1)
-    sorted.mapPartitions { it =>
-      val cls = new LineClassifier
-      def labelLine(rows: Vector[Row], toks: Vector[String], nextIsEntry: Boolean) =
-        try {
-          val (base, isStart) = cls.classify(rows.head.getString(iConv), toks,
-            rows.map(_.getString(iCap)), nextIsEntry)
-          Iterator.tabulate(rows.size) { i =>
-            val r = rows(i)
-            val vals = new Array[Any](nIn + 1)
-            var k = 0
-            while (k < nIn) { vals(k) = r.get(k); k += 1 }
-            vals(nIn) = if (i == 0 && isStart) "I-" + base else base
-            new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
-          }
-        } catch { case scala.util.control.NonFatal(_) =>
-          failures.foreach(_.add((org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
-          Iterator.empty
-        }
-      walkLines(it, iConv, iChunk, iTurn, iLine, iTok, iPeek)(
-        first => cls.setState(if (iEntry < 0 || first.isNullAt(iEntry)) 0
-          else first.getInt(iEntry), first.getString(iConv)),
-        labelLine)
-    }(org.apache.spark.sql.Encoders.row(StructType(in.fields :+
-      StructField("label", StringType, false))))
-  }
-
-  /**
-   * The Row line walker behind [[bodyLabels]] and both passes of
-   * [[bodyLabelsChunked]]. Input is sorted by (group, turn_idx,
-   * line_in_turn, tok_idx); the group is `conv_id`, or (`conv_id`,
-   * `_chunk`) when `iChunk >= 0`. A line is a maximal run of equal
-   * (group, turn_idx, line_in_turn).
-   *
-   *  - `onStart` sees each group's first row (it sets the classifier state);
-   *  - each non-peek line goes to `onLine` once its successor in the same
-   *    group is known, with `nextIsEntry` = [[isEntryLine]] of the
-   *    successor's tokens, `false` for the group's last line; peek rows
-   *    (`iPeek >= 0`) only ever serve as a successor;
-   *  - `onEnd` runs after the group's last line.
-   *
-   * The callbacks run eagerly in input order, so a line is classified while
-   * the classifier still holds its group's state; only the iterators they
-   * return are drained lazily. Streams: at most the current and the
-   * pending line are buffered.
-   */
-  private def walkLines[A](it: Iterator[Row], iConv: Int, iChunk: Int, iTurn: Int,
-      iLine: Int, iTok: Int, iPeek: Int)(
-      onStart: Row => Unit,
-      onLine: (Vector[Row], Vector[String], Boolean) => Iterator[A],
-      onEnd: () => Iterator[A] = () => Iterator.empty): Iterator[A] =
-    new Iterator[A] {
-      private var out: Iterator[A] = Iterator.empty
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      // the last completed line waits here until its successor is known;
-      // its token vector is cached so each line's tokens are read once
-      private var pend: Vector[Row] = null
-      private var pendToks: Vector[String] = null
-
-      private def sameGroup(a: Row, b: Row): Boolean =
-        a.getString(iConv) == b.getString(iConv) &&
-          (iChunk < 0 || a.getInt(iChunk) == b.getInt(iChunk))
-
-      private def sameLine(a: Row, b: Row): Boolean =
-        a.getInt(iTurn) == b.getInt(iTurn) && a.getInt(iLine) == b.getInt(iLine)
-
-      /** The buffered line is complete: it is the pending line's lookahead,
-       * and then the pending line itself, unless it is a peek. */
-      private def completeLine(): Iterator[A] = {
-        val rows = buf.toVector; buf.clear()
-        val toks = rows.map(_.getString(iTok))
-        val res =
-          if (pend == null) Iterator.empty
-          else onLine(pend, pendToks, isEntryLine(toks))
-        if (iPeek >= 0 && rows.head.getBoolean(iPeek)) { pend = null; pendToks = null }
-        else { pend = rows; pendToks = toks }
-        res
-      }
-
-      private def endGroup(): Iterator[A] = {
-        val res = completeLine()
-        val last = if (pend == null) Iterator.empty else onLine(pend, pendToks, false)
-        pend = null; pendToks = null
-        // vals, not by-name `++` operands: every callback of this group
-        // runs now, before the next group's onStart resets the classifier
-        val end = onEnd()
-        res ++ last ++ end
-      }
-
-      private def advance(): Unit =
-        while (!out.hasNext && (it.hasNext || buf.nonEmpty)) {
-          if (!it.hasNext) out = endGroup()
-          else {
-            val r = it.next()
-            if (buf.isEmpty) onStart(r)
-            else if (!sameGroup(buf.head, r)) { out = endGroup(); onStart(r) }
-            else if (!sameLine(buf.head, r)) out = completeLine()
-            buf += r
-          }
-        }
-
-      def hasNext: Boolean = { advance(); out.hasNext }
-      def next(): A = { advance(); out.next() }
-    }
+      failures: Option[Lineage.PartitionStats] = None): DataFrame =
+    graft.plans.BodySpans.labels(
+      if (repartitionByConv) tokens.repartition(col("conv_id")) else tokens,
+      chunked = false, failures)
 
   /** Scala mirror of [[graft.text.TextCols.htmlEncode]] (same replacement
    * order) for the [[graft.plans.BodySpans]] span emitter. */
@@ -925,10 +801,14 @@ object Labeler {
    * are entirely absent are skipped, matching the sequential walk across
    * the gap) as lookahead-only input, never emitted.
    *
-   * Plan shape: two (conv_id, chunk) shuffles — a NARROW one for pass 1
-   * (6 columns, so column pruning reaches the scan) and a full-width one
-   * for pass 2; every join in the operator (peek selection, multi-chunk
-   * pruning, entry states) is a broadcast. Cost vs [[bodyLabels]]: the
+   * Both passes are modes of the body-walk operator
+   * ([[graft.plans.BodySpans]]) with the group (conv_id, `_chunk`): pass 1
+   * its transition sink, pass 2 its label sink. Plan shape: two
+   * (conv_id, chunk) shuffles, placed by the operator's declared
+   * distribution — a NARROW one for pass 1 (8 columns, so column pruning
+   * reaches the scan) and a full-width one for pass 2; every join in the
+   * labeler (peek selection, multi-chunk pruning, entry states) is a
+   * broadcast. Cost vs [[bodyLabels]]: the
    * extra narrow shuffle and FSM walk, against which the
    * conversation-serial sort AND FSM both become parallel. Use when
    * single conversations are large enough that one-task-per-conversation
@@ -1006,57 +886,18 @@ object Labeler {
     val aug = base.withColumn("_peek", lit(false)).unionByName(peeks)
       .select((inCols :+ "_chunk" :+ "_peek").map(col): _*)
 
-    def parted(df: DataFrame) =
-      df.repartition(col("conv_id"), col("_chunk"))
-        .sortWithinPartitions("conv_id", "_chunk", "turn_idx", "line_in_turn", "tok_idx")
-
     // ---- pass 1: per-chunk transition functions (multi-chunk convs only) --
-    // Independent narrow shuffle: mapPartitions pins every column it is fed,
-    // so hand this pass ONLY what the transition needs — column pruning then
-    // reaches the scan and the shuffle moves a fraction of the bytes. (A
-    // shared sorted localCheckpoint for both passes was measured SLOWER: the
-    // block write + row churn of the full-width frame cost more than this
-    // second narrow shuffle.) Single-chunk conversations are pruned by a
-    // broadcast left-semi join, not a driver-collected list.
+    // Independent narrow shuffle: the transition walk reads only its eight
+    // columns, so column pruning reaches the scan and the shuffle moves a
+    // fraction of the bytes. (A shared sorted localCheckpoint for both
+    // passes was measured SLOWER: the block write + row churn of the
+    // full-width frame cost more than this second narrow shuffle.)
+    // Single-chunk conversations are pruned by a broadcast left-semi join,
+    // not a collected list.
     val multiChunkConvs = firstLines.where(col("_chunk") >= 1)
       .select("conv_id").distinct()
-    val p1Cols = Seq("conv_id", "turn_idx", "line_in_turn", "tok_idx",
-      "tok", "f_capitalisation", "_chunk", "_peek")
-    val (jConv, jTurn, jLine, jTok, jCap, jChunk, jPeek) = (0, 1, 2, 4, 5, 6, 7)
-    val fnSchema = StructType(Seq(
-      StructField("conv_id", StringType, nullable = true),
-      StructField("_chunk", IntegerType, nullable = false),
-      StructField("_exit", ArrayType(IntegerType, containsNull = false), nullable = false)))
-    val fns = parted(aug
-        .join(broadcast(multiChunkConvs), Seq("conv_id"), "left_semi")
-        .select(p1Cols.map(col): _*))
-      .mapPartitions { it =>
-        val cls = new LineClassifier
-        var conv: String = null
-        var chunk = 0
-        var cur: Array[Int] = null // exit state per entry state, so far
-        walkLines(it, jConv, jChunk, jTurn, jLine, jTok, jPeek)(
-          { first =>
-            conv = first.getString(jConv); chunk = first.getInt(jChunk)
-            cur = Array.tabulate(NStates)(identity)
-          },
-          { (rows, toks, nextIsEntry) =>
-            // advance each distinct tracked state over this line; a dropped
-            // line is the identity (mirrors pass 2's drop)
-            val caps = rows.map(_.getString(jCap))
-            val step = new Array[Int](NStates)
-            cur.distinct.foreach { s =>
-              step(s) = try {
-                cls.setState(s, conv)
-                cls.classify(conv, toks, caps, nextIsEntry)
-                cls.stateId
-              } catch { case scala.util.control.NonFatal(_) => s }
-            }
-            cur = cur.map(step)
-            Iterator.empty
-          },
-          () => Iterator.single(Row(conv, chunk, cur.toSeq)))
-      }(org.apache.spark.sql.Encoders.row(fnSchema))
+    val fns = graft.plans.BodySpans.transitions(
+      aug.join(broadcast(multiChunkConvs), Seq("conv_id"), "left_semi"))
 
     // ---- compose per conversation (chunk-level fold, tiny frame) ----------
     val entries = fns.groupByKey(_.getString(0)).flatMapGroups { (conv, rows) =>
@@ -1068,9 +909,9 @@ object Labeler {
     }.toDF("conv_id", "_chunk", "_entry")
 
     // ---- pass 2: label each chunk from its true entry state ---------------
-    val withEntry = parted(aug
-      .join(broadcast(entries), Seq("conv_id", "_chunk"), "left")
-      .select((inCols :+ "_chunk" :+ "_peek" :+ "_entry").map(col): _*))
-    labelWalk(withEntry, inSchema, chunked = true, failures)
+    graft.plans.BodySpans.labels(
+      aug.join(broadcast(entries), Seq("conv_id", "_chunk"), "left"),
+      chunked = true, failures)
+      .select((inCols :+ "label").map(col): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 import scala.collection.concurrent.TrieMap
@@ -12,7 +13,7 @@ import scala.collection.concurrent.TrieMap
  * Two complementary mechanisms:
  *  - [[observedTurns]]: Dataset.observe() named metrics (rows/characters) — zero-cost,
  *    collected with the job, suitable for always-on counters;
- *  - [[withPartitionLineage]]: a pass-through mapPartitions that records
+ *  - [[withPartitionLineage]]: a pass over the execution rows that records
  *    (partition_id, rows, characters) into an accumulator, dumped as a DataFrame
  *    by [[lineageRows]] after an action. Use on checkpoint boundaries.
  */
@@ -64,14 +65,15 @@ object Lineage {
 
   /** Pass-through that counts rows and text characters per partition:
    * the `String.length` (UTF-16 units) of each non-null `textCols` value
-   * feeds the counter reported as `bytes`. Totals are accumulated
+   * feeds the counter reported as `bytes`. It walks the InternalRows of
+   * `df`'s execution behind a plan barrier, so a stage commit pays no
+   * Row-encoder round trip. Totals are accumulated
    * task-locally and reported once at partition exhaustion, so `acc` MUST
    * be a dedupe accumulator ([[newTotals]]) — retries then re-report the
    * same totals instead of inflating them. */
   def withPartitionLineage(df: DataFrame, acc: PartitionStats, textCols: Seq[String]): DataFrame = {
-    val schema = df.schema
-    val idxs = textCols.map(schema.fieldIndex)
-    df.mapPartitions { it =>
+    val idxs = textCols.map(df.schema.fieldIndex)
+    org.apache.spark.sql.graftbridge.bridge.planBarrier(df, { it =>
       val ctx = org.apache.spark.TaskContext.get()
       val pid = ctx.partitionId()
       var rows = 0L
@@ -80,20 +82,21 @@ object Lineage {
       // iterator, so also report at task completion — max-merge keeps the
       // larger of this and the exhaustion-time report (counts only grow)
       ctx.addTaskCompletionListener[Unit](_ => acc.add((pid, rows, bytes)))
-      new Iterator[Row] {
+      new Iterator[InternalRow] {
         def hasNext: Boolean = {
           val h = it.hasNext
           if (!h) acc.add((pid, rows, bytes)) // idempotent under max-merge
           h
         }
-        def next(): Row = {
+        def next(): InternalRow = {
           val r = it.next()
           rows += 1
-          idxs.foreach { i => if (!r.isNullAt(i)) bytes += r.getString(i).length.toLong }
+          idxs.foreach { i =>
+            if (!r.isNullAt(i)) bytes += r.getUTF8String(i).toString.length.toLong }
           r
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    })
   }
 
   /** Materialize collected per-partition stats as a lineage DataFrame.

@@ -39,11 +39,12 @@ object Pipeline {
    * hashpartitioning(conv_id). The FSM runs as the custom Catalyst operator
    * ([[graft.plans.BodySpans]]): its DECLARED ClusteredDistribution +
    * sort-order requirements let EnsureRequirements reuse the exchange; it
-   * consumes InternalRow directly (no Row-encoder round trip). It is
-   * differential-tested byte-identical to [[extractDeclarative]]
-   * (`bodyLabels` then [[Assemble.bodySpans]]). [[runResumable]] labels
-   * with `bodyLabels`, commits, then walks the committed labels with the
-   * same operator's label mode.
+   * consumes InternalRow directly and hands each classified line straight
+   * to the span rule (no label rows). It is differential-tested
+   * byte-identical to [[extractDeclarative]] (`bodyLabels`, the same
+   * operator's label sink, then [[Assemble.bodySpans]]). [[runResumable]]
+   * labels with `bodyLabels`, commits, then walks the committed labels with
+   * the operator's label-span mode.
    */
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.spans(bodyTokenFeats(turns))

@@ -1,72 +1,50 @@
 package graft.plans
 
+import scala.collection.mutable
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.extract.Labeler
+import graft.extract.{Labeler, Lineage}
 
 /**
- * The streaming span emitter as a first-class Catalyst operator: spans are
- * written during one walk over the sorted body tokens, as the reference
- * writes TEI during its label walk (`DatacatSegmenterParser.java:1009-1088`).
- * Two modes share one logical node, strategy and exec, and differ only in
- * where a token's `(base label, starts a span)` pair comes from:
- *
- *  - [[spans]] runs the body FSM ([[Labeler.LineClassifier]]) over body
- *    features — the flagship [[graft.extract.Pipeline.extract]];
- *  - [[fromLabels]] walks an already-labeled BIO token frame — the spans
- *    stage of [[graft.extract.Pipeline.runResumable]], which must follow
- *    the committed `label` column, not re-classify.
- *
- * Both hand every token to one span rule (`SpanAcc.token`): conversation
- * ends, separator fallback, the newline cut at a span's end and span
- * opening are stated there once.
+ * The body walk as a first-class Catalyst operator: one sorted walk over
+ * the body tokens classifies each line and writes its output during the
+ * walk, as the reference writes TEI during its label walk
+ * (`DatacatSegmenterParser.java:1009-1088`). One logical node, strategy and
+ * exec run one line walker ([[LineWalk]]) into one of three sinks: spans
+ * ([[spans]], the flagship; [[fromLabels]] follows a committed `label`
+ * column instead of classifying), BIO label rows ([[labels]]) or chunk
+ * transition functions ([[transitions]]). Both span modes hand every token
+ * to one span rule (`SpanAcc.token`).
  *
  * A custom `LogicalPlan` + `Strategy` + `SparkPlan` because a
  * `mapPartitions` body cannot:
  *
  *  - **declare** its requirements instead of hand-placing them: the
- *    physical operator states `requiredChildDistribution =
- *    ClusteredDistribution(conv_id)` and the four-column sort order, so
- *    `EnsureRequirements` plans (and can REUSE) the exchange instead of a
- *    manual `repartition` + `sortWithinPartitions`;
+ *    physical operator states a `ClusteredDistribution` on its group
+ *    columns and the walk's sort order, so `EnsureRequirements` plans (and
+ *    can REUSE) the exchange instead of a manual `repartition` +
+ *    `sortWithinPartitions`;
+ *  - keep its child's attributes: the label sink emits each input row once,
+ *    in place, so its output keeps the child's partitioning and ordering;
  *  - run on `InternalRow`/`UTF8String` directly, skipping the
  *    Row-encoder round trip at the object boundary.
  *
- * Both modes are differential-tested byte-identical to the declarative
+ * The span modes are differential-tested byte-identical to the declarative
  * assembly [[graft.extract.Assemble.bodySpans]] (PlanOperatorSpec,
- * PipelineSpec).
+ * PipelineSpec), the label sink against a plain-Scala reference walk
+ * (ChunkedLabelerSpec).
  */
 object BodySpans {
-
-  /** Child columns a walk reads: the FSM classifies from
-   * `f_capitalisation`, the label walk reads `label`. */
-  private[plans] def inputCols(fromLabels: Boolean): Seq[String] =
-    Seq("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok", "sep_before",
-      "line_trailing", if (fromLabels) "label" else "f_capitalisation")
-
-  // a null input label (not BIO, but Assemble tolerates it) passes through
-  // as a one-token span with a null label
-  private[plans] def outputAttrs(fromLabels: Boolean): Seq[Attribute] = Seq(
-    AttributeReference("conv_id", StringType, nullable = true)(),
-    AttributeReference("segment_id", LongType, nullable = false)(),
-    AttributeReference("label", StringType, nullable = fromLabels)(),
-    AttributeReference("turn_idx", IntegerType, nullable = true)(),
-    AttributeReference("text", StringType, nullable = false)())
-
-  /** Ensure the strategy is installed in this session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(BodySpansStrategy)) {
-      spark.experimental.extraStrategies =
-        BodySpansStrategy +: spark.experimental.extraStrategies
-    }
 
   /**
    * Plan the fused FSM span extraction over a body-feature frame with
@@ -74,7 +52,7 @@ object BodySpans {
    * line_trailing, f_capitalisation). Exchange/sort placement is left to
    * Catalyst via the operator's declared requirements.
    */
-  def spans(feats: DataFrame): DataFrame = plan(feats, fromLabels = false)
+  def spans(feats: DataFrame): DataFrame = plan(feats, BodyWalk.FsmSpans)
 
   /**
    * Plan span extraction over a BIO-labeled token frame with columns
@@ -83,18 +61,34 @@ object BodySpans {
    * [[graft.extract.Assemble.bodySpans]] with its five columns in
    * operator order, but one sorted walk instead of a window + groupBy.
    */
-  def fromLabels(labeled: DataFrame): DataFrame = plan(labeled, fromLabels = true)
+  def fromLabels(labeled: DataFrame): DataFrame = plan(labeled, BodyWalk.LabelSpans)
 
-  // the child is narrowed to the walk's columns here: ColumnPruning does
-  // not prune below a node it does not know, so a wider child (a labeled
-  // parquet table still carrying f_capitalisation) would be read whole
-  private def plan(df: DataFrame, fromLabels: Boolean): DataFrame = {
+  /** The FSM's BIO labels: every column of `tokens` plus a non-null
+   * `label`, one row per classified token. `chunked`: the group is
+   * (conv_id, `_chunk`), `_peek` rows are lookahead only, `_entry` is a
+   * group's entry state. */
+  private[graft] def labels(tokens: DataFrame, chunked: Boolean,
+      failures: Option[Lineage.PartitionStats]): DataFrame =
+    plan(tokens, if (chunked) BodyWalk.ChunkLabels else BodyWalk.Labels, failures)
+
+  /** The FSM's transition function per (conv_id, `_chunk`):
+   * `_exit(s)` is the chunk's exit state from entry state `s`. */
+  private[graft] def transitions(tokens: DataFrame): DataFrame =
+    plan(tokens, BodyWalk.Transitions)
+
+  // the child of a mode with its own output is narrowed to the walk's
+  // columns here: ColumnPruning does not prune below a node it does not
+  // know, so a wider child (a labeled parquet table still carrying
+  // f_capitalisation) would be read whole. The label mode passes its
+  // child's columns through, so ColumnPruning prunes that child itself.
+  private def plan(df: DataFrame, mode: BodyWalk,
+      failures: Option[Lineage.PartitionStats] = None): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
-    val child = df.select(inputCols(fromLabels).map(df.col): _*)
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
-      BodySpansPlan(org.apache.spark.sql.GraftPlanBridge.logical(child),
-        outputAttrs(fromLabels), fromLabels))
+    if (!spark.experimental.extraStrategies.contains(BodySpansStrategy))
+      spark.experimental.extraStrategies = BodySpansStrategy +: spark.experimental.extraStrategies
+    val child = if (mode.passThrough) df else df.select(mode.inputCols.map(df.col): _*)
+    bridge.ofRows(spark,
+      BodySpansPlan(bridge.logical(child), mode, BodyWalk.produced(mode), failures))
   }
 
   private[plans] def str(r: InternalRow, i: Int): String = {
@@ -102,38 +96,77 @@ object BodySpans {
   }
 }
 
-/** Logical node: body-span extraction over the token-feature child
- * (`fromLabels = false`) or the labeled-token child (`true`). */
-case class BodySpansPlan(child: LogicalPlan, output: Seq[Attribute], fromLabels: Boolean)
-    extends UnaryNode {
-  // the span columns are produced by the operator, not drawn from the child
-  override def producedAttributes: AttributeSet = AttributeSet(output)
+/** What the body walk reads: the token columns plus `extra`. The group is
+ * (conv_id, `_chunk`) when the walk reads `_chunk`, else conv_id. */
+sealed abstract class BodyWalk(extra: String*) extends Serializable {
+  val inputCols: Seq[String] =
+    Seq("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok") ++ extra
+  def chunked: Boolean = inputCols.contains("_chunk")
+  /** The walk emits its child's columns, then what it makes. */
+  def passThrough: Boolean = this == BodyWalk.Labels || this == BodyWalk.ChunkLabels
+}
+
+object BodyWalk {
+  /** The body FSM, emitting spans. */
+  case object FsmSpans extends BodyWalk("sep_before", "line_trailing", "f_capitalisation")
+  /** The committed `label` column, emitting spans. */
+  case object LabelSpans extends BodyWalk("sep_before", "line_trailing", "label")
+  /** The body FSM, emitting each token row with its BIO `label`. */
+  case object Labels extends BodyWalk("f_capitalisation")
+  case object ChunkLabels extends BodyWalk("f_capitalisation", "_chunk", "_peek", "_entry")
+  /** The body FSM from every entry state, emitting each chunk's exit vector. */
+  case object Transitions extends BodyWalk("f_capitalisation", "_chunk", "_peek")
+
+  /** The attributes a walk makes. A null input label (not BIO, but Assemble
+   * tolerates it) passes through as a one-token span with a null label. */
+  private[plans] def produced(mode: BodyWalk): Seq[Attribute] = mode match {
+    case FsmSpans | LabelSpans => Seq(
+      AttributeReference("conv_id", StringType, nullable = true)(),
+      AttributeReference("segment_id", LongType, nullable = false)(),
+      AttributeReference("label", StringType, nullable = mode == LabelSpans)(),
+      AttributeReference("turn_idx", IntegerType, nullable = true)(),
+      AttributeReference("text", StringType, nullable = false)())
+    case Labels | ChunkLabels => Seq(AttributeReference("label", StringType, nullable = false)())
+    case Transitions => Seq(
+      AttributeReference("conv_id", StringType, nullable = true)(),
+      AttributeReference("_chunk", IntegerType, nullable = false)(),
+      AttributeReference("_exit", ArrayType(IntegerType, containsNull = false), nullable = false)())
+  }
+}
+
+/** Logical node: the body walk in `mode` over `child`; `produced` holds the
+ * attributes the walk makes. */
+case class BodySpansPlan(child: LogicalPlan, mode: BodyWalk, produced: Seq[Attribute],
+    failures: Option[Lineage.PartitionStats]) extends UnaryNode {
+  override def output: Seq[Attribute] =
+    if (mode.passThrough) child.output ++ produced else produced
+  override def producedAttributes: AttributeSet = AttributeSet(produced)
   // the operator READS these child columns — without declaring them,
   // ColumnPruning strips the child to zero columns
   override def references: AttributeSet = AttributeSet(
-    child.output.filter(a => BodySpans.inputCols(fromLabels).contains(a.name)))
+    child.output.filter(a => mode.inputCols.contains(a.name)))
   override protected def withNewChildInternal(newChild: LogicalPlan): BodySpansPlan =
     copy(child = newChild)
 }
 
 object BodySpansStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case BodySpansPlan(child, out, fromLabels) =>
-      BodySpansExec(planLater(child), out, fromLabels) :: Nil
+    case BodySpansPlan(child, mode, produced, failures) =>
+      BodySpansExec(planLater(child), mode, produced, failures) :: Nil
     case _ => Nil
   }
 }
 
 /**
- * The span rule both walks write through, one token at a time in input
- * order ([[token]]). A span's last token is only known once the next token
- * is seen, so each token waits here until the separator after it is known:
- * the next token's `sep_before`, else its own `line_trailing`, else "". It
- * then lands as one piece, its separator cut at the first `\n` when it ends
- * the span (Assemble's `span_last` rule). One output row per finished span.
+ * The span rule both span walks write through, one token at a time in
+ * input order ([[token]]). A span's last token is only known once the next
+ * token is seen, so each token waits here until the separator after it is
+ * known: the next token's `sep_before`, else its own `line_trailing`, else
+ * "". It then lands as one piece, its separator cut at the first `\n` when
+ * it ends the span (Assemble's `span_last` rule). One row per finished
+ * span goes to `out`.
  */
-private[plans] final class SpanAcc {
-  val out = scala.collection.mutable.Queue.empty[GenericInternalRow]
+private[plans] final class SpanAcc(out: mutable.Queue[InternalRow]) {
   private var started = false
   private var conv: String = null
   private var seg = 0L
@@ -197,31 +230,54 @@ private[plans] final class SpanAcc {
 }
 
 /**
- * Physical span emitter: streams sorted body tokens, emits finished spans.
- * O(current-span) state; one output row per span. `fromLabels` picks the
- * walk: the FSM over `f_capitalisation`, or the committed `label` column.
+ * Physical body walk: streams the sorted body tokens of each group —
+ * `conv_id`, or (`conv_id`, `_chunk`) in the chunked modes — and emits
+ * what the mode's sink makes. O(current line + current span) state.
  */
-case class BodySpansExec(child: SparkPlan, output: Seq[Attribute], fromLabels: Boolean)
-    extends UnaryExecNode {
+case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribute],
+    failures: Option[Lineage.PartitionStats]) extends UnaryExecNode {
+
+  override def output: Seq[Attribute] =
+    if (mode.passThrough) child.output ++ produced else produced
 
   private def idx(name: String): Int = child.output.indexWhere(_.name == name)
 
+  private def groupCols: Seq[String] =
+    if (mode.chunked) Seq("conv_id", "_chunk") else Seq("conv_id")
+
+  // requireAllClusterKeys in the chunked modes: a conv_id-only partitioning
+  // upstream must not put a whole conversation back on one task
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(child.output(idx("conv_id")))) :: Nil
+    ClusteredDistribution(groupCols.map(n => child.output(idx(n))),
+      requireAllClusterKeys = mode.chunked) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq("conv_id", "turn_idx", "line_in_turn", "tok_idx")
+    (groupCols ++ Seq("turn_idx", "line_in_turn", "tok_idx"))
       .map(n => SortOrder(child.output(idx(n)), Ascending)))
 
+  // a pass-through walk emits a subset of its input rows, in input order
+  override def outputPartitioning: Partitioning =
+    if (mode.passThrough) child.outputPartitioning else super.outputPartitioning
+
+  override def outputOrdering: Seq[SortOrder] =
+    if (mode.passThrough) child.outputOrdering else Nil
+
   override protected def doExecute(): RDD[InternalRow] = {
+    def read(name: String) = if (mode.inputCols.contains(name)) idx(name) else -1
     val cols = WalkCols(idx("conv_id"), idx("turn_idx"), idx("line_in_turn"),
-      idx("tok"), idx("sep_before"), idx("line_trailing"),
-      idx(if (fromLabels) "label" else "f_capitalisation"))
+      idx("tok"), read("sep_before"), read("line_trailing"),
+      idx(if (mode == BodyWalk.LabelSpans) "label" else "f_capitalisation"),
+      read("_chunk"), read("_peek"), read("_entry"))
     val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
-    val labels = fromLabels
+    val m = mode
+    val fails = failures
     child.execute().mapPartitions { it =>
-      if (labels) new LabelWalk(it, outSchema, cols)
-      else new ClassifierWalk(it, outSchema, cols)
+      m match {
+        case BodyWalk.FsmSpans | BodyWalk.LabelSpans =>
+          new SpanSink(it, outSchema, cols, fromLabels = m == BodyWalk.LabelSpans)
+        case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols, fails)
+        case BodyWalk.Transitions => new TransitionSink(it, outSchema, cols)
+      }
     }
   }
 
@@ -229,121 +285,220 @@ case class BodySpansExec(child: SparkPlan, output: Seq[Attribute], fromLabels: B
     copy(child = newChild)
 }
 
-/** Child ordinals a walk reads; `labelOrCap` is `label` in label mode,
- * `f_capitalisation` in FSM mode. */
+/** Child ordinals a walk reads, -1 where the mode has no such column;
+ * `labelOrCap` is `label` in the label-span walk, `f_capitalisation` in the
+ * FSM walks. */
 private[plans] case class WalkCols(conv: Int, turn: Int, line: Int, tok: Int,
-    sep: Int, trail: Int, labelOrCap: Int)
+    sep: Int, trail: Int, labelOrCap: Int, chunk: Int, peek: Int, entry: Int)
 
-/** Drives a walk's `step` over one partition and projects the spans it
- * finishes; `finish` flushes what the walk still holds at input end. */
-private[plans] abstract class SpanWalk(it: Iterator[InternalRow], outSchema: StructType)
+/** One buffered body line: its tokens' text and capitalisation (or label),
+ * plus what a sink keeps besides (separators for the span rule, row copies
+ * for the label sink — the child reuses its row instance). */
+private[plans] final class Line {
+  val toks = mutable.ArrayBuffer.empty[String]
+  val caps = mutable.ArrayBuffer.empty[String]
+  val seps = mutable.ArrayBuffer.empty[String]
+  val trails = mutable.ArrayBuffer.empty[String]
+  val rows = mutable.ArrayBuffer.empty[InternalRow]
+  var conv: String = null
+  var chunk = 0
+  var turn = 0
+  var line = 0
+  var peek = false
+
+  def clear(): Unit = { toks.clear(); caps.clear(); seps.clear(); trails.clear(); rows.clear() }
+}
+
+/**
+ * The line walker over sorted body tokens, the only one: a sink's
+ * [[line]] sees each line, [[project]] turns what it queues on `out` into
+ * output rows. The input is sorted by (group, turn_idx, line_in_turn,
+ * tok_idx); the group is `conv_id`, or (`conv_id`, `_chunk`) in the chunked
+ * modes, and a line is a maximal run of equal (group, turn_idx,
+ * line_in_turn).
+ *
+ *  - a group starts in state `_entry`, or 0 when it is absent or null;
+ *  - each non-peek line goes to [[line]] once its successor in the same
+ *    group is known, with `nextIsEntry` = [[Labeler.isEntryLine]] of the
+ *    successor's tokens, `false` for the group's last line; `_peek` rows
+ *    only ever serve as a successor;
+ *  - [[endGroup]] runs after the group's last line.
+ *
+ * Streams: only the current and the pending line are buffered, and the two
+ * buffers swap roles, so a line costs no allocation.
+ */
+private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: StructType,
+    protected val c: WalkCols, failures: Option[Lineage.PartitionStats])
     extends Iterator[InternalRow] {
-  protected val acc = new SpanAcc
+  import BodySpans.str
+  protected val out = mutable.Queue.empty[InternalRow]
+  protected val cls = new Labeler.LineClassifier
   private val proj = UnsafeProjection.create(outSchema)
-  private var done = false
-  protected def step(r: InternalRow): Unit
-  protected def finish(): Unit
+  private var cur = new Line // the line being read, empty between lines
+  private var pend = new Line // the last completed line, awaiting its successor
+  private var hasPend = false
+
+  /** A line of the group, with the entry test of its successor. */
+  protected def line(l: Line, nextIsEntry: Boolean): Unit
+  /** After the group's `last` line (a peek or not). */
+  protected def endGroup(last: Line): Unit = ()
+  /** What the sink keeps of a token row besides its text and capitalisation. */
+  protected def keep(r: InternalRow, l: Line): Unit = ()
+  protected def project(r: InternalRow): InternalRow = proj(r)
+
+  protected def startGroup(first: InternalRow): Unit =
+    cls.setState(if (c.entry < 0 || first.isNullAt(c.entry)) 0 else first.getInt(c.entry))
+
+  /** (base label, starts a span) of `l`, or None when classifying throws:
+   * the line is dropped and counted, as the reference isolates a failure
+   * per file (`EngineDatacat.java:114-150`). */
+  protected def classified(l: Line, nextIsEntry: Boolean): Option[(String, Boolean)] =
+    try Some(cls.classify(l.toks, l.caps, nextIsEntry))
+    catch { case scala.util.control.NonFatal(_) =>
+      failures.foreach(_.add((org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
+      None
+    }
+
+  private def step(r: InternalRow): Unit = {
+    val conv = str(r, c.conv)
+    val chunk = if (c.chunk < 0) 0 else r.getInt(c.chunk)
+    val turn = r.getInt(c.turn)
+    val ln = r.getInt(c.line)
+    val newGroup = cur.toks.isEmpty || conv != cur.conv || chunk != cur.chunk
+    if (cur.toks.nonEmpty) {
+      if (newGroup) endOfGroup()
+      else if (turn != cur.turn || ln != cur.line) completeLine()
+    }
+    if (cur.toks.isEmpty) {
+      cur.conv = conv; cur.chunk = chunk; cur.turn = turn; cur.line = ln
+      cur.peek = c.peek >= 0 && r.getBoolean(c.peek)
+      if (newGroup) startGroup(r)
+    }
+    cur.toks += str(r, c.tok)
+    cur.caps += str(r, c.labelOrCap)
+    keep(r, cur)
+  }
+
+  /** The current line is complete: it is the pending line's lookahead, then
+   * the pending line itself unless it is a peek. */
+  private def completeLine(): Unit = {
+    if (hasPend) line(pend, Labeler.isEntryLine(cur.toks))
+    val t = pend; pend = cur; cur = t
+    cur.clear()
+    hasPend = !pend.peek
+  }
+
+  private def endOfGroup(): Unit = {
+    completeLine()
+    if (hasPend) line(pend, nextIsEntry = false)
+    hasPend = false
+    endGroup(pend)
+  }
 
   private def advance(): Unit = {
-    while (acc.out.isEmpty && it.hasNext) step(it.next())
-    if (acc.out.isEmpty && !done && !it.hasNext) { finish(); done = true }
+    while (out.isEmpty && it.hasNext) step(it.next())
+    if (out.isEmpty && !it.hasNext && cur.toks.nonEmpty) endOfGroup()
   }
 
-  override def hasNext: Boolean = { advance(); acc.out.nonEmpty }
-  override def next(): InternalRow = { advance(); proj(acc.out.dequeue()) }
+  override def hasNext: Boolean = { advance(); out.nonEmpty }
+  override def next(): InternalRow = { advance(); project(out.dequeue()) }
 }
 
-/** [[graft.extract.Assemble.bodySpans]] as one walk: a span opens on an
- * `I-` label or a change of base label. */
-private[plans] final class LabelWalk(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols) extends SpanWalk(it, outSchema) {
+/** The span sink: hands each token of a line to the span rule with its
+ * (base label, starts a span). `fromLabels` reads them from the committed
+ * BIO label ([[graft.extract.Assemble.bodySpans]]'s rule: a span opens on
+ * an `I-` label or a change of base label); otherwise the line is
+ * classified and its first token opens a span when the line starts one.
+ * Fused — no label rows, no per-token allocation beyond the strings. */
+private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: StructType,
+    c: WalkCols, fromLabels: Boolean) extends LineWalk(it, outSchema, c, None) {
   import BodySpans.str
+  private val acc = new SpanAcc(out)
   private var prevBase: String = null
 
-  protected def step(r: InternalRow): Unit = {
-    val label = str(r, c.labelOrCap)
-    val isI = label != null && label.startsWith("I-")
-    val base = if (isI) label.substring(2) else label
-    // a null base never compares equal (SQL `=!=` under `coalesce(.., true)`)
-    acc.token(str(r, c.conv), base, isI || base == null || base != prevBase,
-      r.getInt(c.turn), str(r, c.tok), str(r, c.sep), str(r, c.trail))
-    prevBase = base
+  override protected def keep(r: InternalRow, l: Line): Unit = {
+    l.seps += str(r, c.sep)
+    l.trails += str(r, c.trail)
   }
 
-  protected def finish(): Unit = acc.endConv()
+  protected def line(l: Line, nextIsEntry: Boolean): Unit =
+    if (fromLabels) {
+      var i = 0
+      while (i < l.toks.length) {
+        val label = l.caps(i)
+        val isI = label != null && label.startsWith("I-")
+        val base = if (isI) label.substring(2) else label
+        // a null base never compares equal (SQL `=!=` under `coalesce(.., true)`)
+        acc.token(l.conv, base, isI || base == null || base != prevBase,
+          l.turn, l.toks(i), l.seps(i), l.trails(i))
+        prevBase = base
+        i += 1
+      }
+    } else classified(l, nextIsEntry).foreach { case (base, isStart) =>
+      var i = 0
+      while (i < l.toks.length) {
+        acc.token(l.conv, base, isStart && i == 0, l.turn, l.toks(i), l.seps(i), l.trails(i))
+        i += 1
+      }
+    }
+
+  override protected def endGroup(last: Line): Unit = acc.endConv()
 }
 
-/** The body FSM: buffers one line, classifies it with one line of
- * lookahead ([[Labeler.isEntryLine]] on the next line), then hands its
- * tokens to the span rule, the first one opening a span when the line
- * starts one. */
-private[plans] final class ClassifierWalk(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols) extends SpanWalk(it, outSchema) {
-  import BodySpans.str
-  private val cls = new Labeler.LineClassifier
-  // buffered current line (copies: the child reuses its row instance);
-  // vars, not vals — feed() SWAPS them with the pending-line buffers
-  // so the one-line lookahead costs zero per-line allocation
-  private var toks = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var caps = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var seps = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var bufConv: String = null
-  private var bufTurn: Int = 0
-  private var bufLine: Int = 0
-  private var bufTrail: String = null
-  private var hasBuf = false
-  // one-line lookahead: the last completed line waits here until the
-  // next line is known; buffers recycle via swap with toks/caps/seps
-  private var pToks = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var pCaps = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var pSeps = scala.collection.mutable.ArrayBuffer.empty[String]
-  private var pConv: String = null
-  private var pTurn: Int = 0
-  private var pTrail: String = null
-  private var pHas = false
+/** Emits each token row of a classified line with its BIO label: `I-` on
+ * the first token of a line that starts a span. */
+private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: StructType,
+    c: WalkCols, failures: Option[Lineage.PartitionStats])
+    extends LineWalk(it, outSchema, c, failures) {
+  private val labels = mutable.Queue.empty[UTF8String] // one per queued row
+  private val labelRow = new GenericInternalRow(1)
+  private val joined = new JoinedRow
 
-  private def emitLine(lToks: collection.Seq[String], lCaps: collection.Seq[String],
-      lSeps: collection.Seq[String], conv: String, turn: Int, trail: String,
-      nextIsEntry: Boolean): Unit = {
-    val (base, isStart) = cls.classify(conv, lToks, lCaps, nextIsEntry)
-    var i = 0
-    while (i < lToks.length) {
-      acc.token(conv, base, isStart && i == 0, turn, lToks(i), lSeps(i), trail)
-      i += 1
+  override protected def keep(r: InternalRow, l: Line): Unit = l.rows += r.copy()
+
+  protected def line(l: Line, nextIsEntry: Boolean): Unit =
+    classified(l, nextIsEntry).foreach { case (base, isStart) =>
+      val b = UTF8String.fromString(base)
+      var i = 0
+      while (i < l.rows.length) {
+        out += l.rows(i)
+        labels += (if (i == 0 && isStart) UTF8String.fromString("I-" + base) else b)
+        i += 1
+      }
     }
+
+  override protected def project(r: InternalRow): InternalRow = {
+    labelRow.update(0, labels.dequeue())
+    super.project(joined(r, labelRow))
+  }
+}
+
+/** Pass 1 of the chunk-parallel labeler: the group's transition function,
+ * the exit state for each of the [[Labeler.NStates]] entry states. Tracked
+ * states are advanced once per distinct state and merge at the first
+ * state-independent line; a line whose classification throws is the
+ * identity, as the label sink drops it. */
+private[plans] final class TransitionSink(it: Iterator[InternalRow], outSchema: StructType,
+    c: WalkCols) extends LineWalk(it, outSchema, c, None) {
+  private val exit = new Array[Int](Labeler.NStates) // exit state per entry state, so far
+  private val moved = new Array[Int](Labeler.NStates)
+
+  override protected def startGroup(first: InternalRow): Unit =
+    java.util.Arrays.setAll(exit, (s: Int) => s)
+
+  protected def line(l: Line, nextIsEntry: Boolean): Unit = {
+    exit.distinct.foreach { s =>
+      moved(s) = try {
+        cls.setState(s)
+        cls.classify(l.toks, l.caps, nextIsEntry)
+        cls.stateId
+      } catch { case scala.util.control.NonFatal(_) => s }
+    }
+    var i = 0
+    while (i < exit.length) { exit(i) = moved(exit(i)); i += 1 }
   }
 
-  /** Current buffered line completed: classify the pending one, then
-   * swap the line buffers (no per-line copies). */
-  private def feed(): Unit = {
-    if (pHas)
-      emitLine(pToks, pCaps, pSeps, pConv, pTurn, pTrail,
-        pConv == bufConv && Labeler.isEntryLine(toks))
-    val t = pToks; pToks = toks; toks = t
-    val cp = pCaps; pCaps = caps; caps = cp
-    val s = pSeps; pSeps = seps; seps = s
-    toks.clear(); caps.clear(); seps.clear()
-    pConv = bufConv; pTurn = bufTurn; pTrail = bufTrail
-    pHas = true
-  }
-
-  protected def step(r: InternalRow): Unit = {
-    val conv = str(r, c.conv)
-    val turn = r.getInt(c.turn)
-    val line = r.getInt(c.line)
-    if (hasBuf && (bufConv != conv || bufTurn != turn || bufLine != line))
-      feed() // buf* still holds the just-completed line; buffers swap
-    bufConv = conv; bufTurn = turn; bufLine = line
-    toks += str(r, c.tok)
-    caps += str(r, c.labelOrCap)
-    seps += str(r, c.sep)
-    bufTrail = str(r, c.trail)
-    hasBuf = true
-  }
-
-  protected def finish(): Unit = {
-    if (hasBuf && toks.nonEmpty) feed()
-    if (pHas) emitLine(pToks, pCaps, pSeps, pConv, pTurn, pTrail, nextIsEntry = false)
-    acc.endConv()
-  }
+  override protected def endGroup(last: Line): Unit =
+    out += new GenericInternalRow(Array[Any](UTF8String.fromString(last.conv), last.chunk,
+      UnsafeArrayData.fromPrimitiveArray(exit)))
 }

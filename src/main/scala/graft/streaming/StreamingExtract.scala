@@ -80,19 +80,9 @@ object StreamingExtract {
    */
   def extractionQuery(turns: Dataset[Turn], outDir: String, checkpointDir: String,
       gapSeconds: Long = 1800): org.apache.spark.sql.streaming.StreamingQuery =
-    convCloseTurns(turns, gapSeconds)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        if (!batch.isEmpty)
-          idempotentBatchWrite(
-            graft.extract.Pipeline.extract(batch.toDF()), batchId, outDir)
-        ()
-      }
-      .start()
+    closedConvQuery(turns, outDir, checkpointDir, gapSeconds)(
+      graft.extract.Pipeline.extract)
 
-  /** A document arriving on a stream (for [[dedupDocs]] tests/demos). */
   /**
    * STREAMING agent-transcript QA: conversations close on event-time
    * silence ([[convCloseTurns]]), then each micro-batch of closed
@@ -110,14 +100,21 @@ object StreamingExtract {
   def agentAuditQuery(turns: Dataset[Turn], outDir: String,
       checkpointDir: String, gapSeconds: Long = 1800)
       : org.apache.spark.sql.streaming.StreamingQuery =
+    closedConvQuery(turns, outDir, checkpointDir, gapSeconds)(
+      graft.ops.Agent.toolAudit(_))
+
+  /** The closed conversations of `turns` ([[convCloseTurns]]), each
+   * non-empty micro-batch run through `batch` and written by
+   * [[idempotentBatchWrite]]. */
+  private def closedConvQuery(turns: Dataset[Turn], outDir: String,
+      checkpointDir: String, gapSeconds: Long)(batch: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     convCloseTurns(turns, gapSeconds)
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        if (!batch.isEmpty)
-          idempotentBatchWrite(graft.ops.Agent.toolAudit(batch.toDF()),
-            batchId, outDir)
+      .foreachBatch { (closed: Dataset[Turn], batchId: Long) =>
+        if (!closed.isEmpty) idempotentBatchWrite(batch(closed.toDF()), batchId, outDir)
         ()
       }
       .start()
@@ -146,6 +143,7 @@ object StreamingExtract {
       .partitionBy("batch_id")
       .parquet(outDir)
 
+  /** A document arriving on a stream (for [[dedupDocs]] tests/demos). */
   final case class DocEvent(doc_id: String, text: String, ts: Timestamp)
 
   /**

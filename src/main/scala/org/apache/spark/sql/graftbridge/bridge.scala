@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionColumnNode
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 
-/** Minimal bridge into `private[sql]` surface: wrap a Catalyst Expression
-  * as a user-facing Column (the classic-session column node), clone a
-  * session so a conf override can be scoped to ONE query instead of
-  * mutated session-wide, and drain the listener bus. Lives in an
+/** Minimal bridge into `private[sql]` surface, the one module that touches
+  * Spark internals: wrap a Catalyst Expression as a user-facing Column (the
+  * classic-session column node), plan a custom logical node as a DataFrame
+  * (graft.plans.BodySpans), cut a lazy plan barrier, clone a session so a
+  * conf override can be scoped to ONE query instead of mutated
+  * session-wide, and drain the listener bus. Lives in an
   * `org.apache.spark.sql` subpackage solely for access; no Spark internals
   * are modified. */
 object bridge {
@@ -19,6 +23,29 @@ object bridge {
     * higher-order-function bodies) back to its Catalyst Expression. */
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over `plan`, analysed in `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
+
+  /** The analysed logical plan of `df`. */
+  def logical(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[CDataset[Row]].queryExecution.analyzed
+
+  /** Lazy PLAN barrier (why: `graft.extract.Chunked.barrier`): re-roots
+    * `df` on its (lazily planned) execution RDD via `LogicalRDD`, so
+    * downstream logical plans see a LEAF instead of the whole upstream tree.
+    * No data is materialized (unlike localCheckpoint): repeated actions over
+    * the same barrier reuse its shuffle stages. `pass` sees each partition's
+    * rows and must hand them on unchanged. Cost: no optimizer pushdown
+    * across the barrier (pre-prune columns first) and plan-time stats
+    * degrade to the defaultSizeInBytes sentinel (see `graft.ops.Par.spread`). */
+  def planBarrier(df: DataFrame, pass: Iterator[InternalRow] => Iterator[InternalRow] =
+      identity): DataFrame = {
+    val ds = df.asInstanceOf[CDataset[Row]]
+    ofRows(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+      ds.queryExecution.toRdd.mapPartitions(pass), ds, isStreaming = false))
+  }
 
   /** Clone `spark` (same SparkContext and shared state; conf, temp views
     * and registered functions copied at clone time) and apply `overrides`

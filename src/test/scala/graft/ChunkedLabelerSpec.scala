@@ -64,40 +64,100 @@ class ChunkedLabelerSpec extends SparkSpec {
     assertIdentical(turns, chunkTurns = 5)
   }
 
+  // title at the end of one chunk, short-name heading run + lot entry at
+  // the start of the next: the peek row must carry the one-line lookahead
+  private val headingRun = Seq(
+    ("c2", 0, "3 - Vase grec en terre cuite ."),
+    ("c2", 1, "AR ."), // grade line closes the entry
+    ("c2", 2, "MONNAIES GRECQUES"), // caps heading, chunk boundary after
+    ("c2", 3, "Syracuse ."), // heading run continues across the boundary
+    ("c2", 4, "14 - Tetradrachme d'argent ."),
+    ("c2", 5, "suite de la description du lot ."),
+    ("c2", 6, "Croton ."), // pre-entry heading: needs lookahead at boundary
+    ("c2", 7, "15 - Statere incus ."))
+
+  // turns 0-5 then 40-45 with chunkTurns=8: chunk ids 0 and 5 exist, 1-4
+  // are empty; the peek for the line before the gap must route to the
+  // previous EXISTING chunk, matching the sequential cross-gap walk
+  private val turnGap =
+    (0 to 4).map(i => ("c3", i, s"${i + 1} - Lot avant la lacune numero $i .")) ++
+      Seq(("c3", 5, "Syracuse .")) ++ // pre-entry heading right before the gap
+      (40 to 45).map(i => ("c3", i, s"${i} - Lot apres la lacune numero $i ."))
+
+  private val interleaved =
+    (0 to 20).map(i => ("a", i, s"${i + 1} - Lot de la vente a numero $i .")) ++
+      (0 to 20).map(i => ("b", i,
+        if (i % 7 == 0) "GRAVURES ANCIENNES" else s"${i + 1} - Lot b numero $i .")) ++
+      Seq(("c", 0, "une seule ligne sans ancre ."))
+
   test("heading run and lookahead crossing a chunk boundary") {
-    // title at the end of one chunk, short-name heading run + lot entry at
-    // the start of the next: the peek row must carry the one-line lookahead
-    val rows = Seq(
-      ("c2", 0, "3 - Vase grec en terre cuite ."),
-      ("c2", 1, "AR ."), // grade line closes the entry
-      ("c2", 2, "MONNAIES GRECQUES"), // caps heading, chunk boundary after
-      ("c2", 3, "Syracuse ."), // heading run continues across the boundary
-      ("c2", 4, "14 - Tetradrachme d'argent ."),
-      ("c2", 5, "suite de la description du lot ."),
-      ("c2", 6, "Croton ."), // pre-entry heading: needs lookahead at boundary
-      ("c2", 7, "15 - Statere incus ."))
     // boundary after every 1, 2 and 3 turns so each adjacency is exercised
-    Seq(1, 2, 3).foreach(c => assertIdentical(turnsDf(rows), chunkTurns = c))
+    Seq(1, 2, 3).foreach(c => assertIdentical(turnsDf(headingRun), chunkTurns = c))
   }
 
   test("turn gap leaving whole chunk ranges empty") {
-    // turns 0-5 then 40-45 with chunkTurns=8: chunk ids 0 and 5 exist,
-    // 1-4 are empty; the peek for the line before the gap must route to
-    // the previous EXISTING chunk, matching the sequential cross-gap walk
-    val rows =
-      (0 to 4).map(i => ("c3", i, s"${i + 1} - Lot avant la lacune numero $i .")) ++
-        Seq(("c3", 5, "Syracuse .")) ++ // pre-entry heading right before the gap
-        (40 to 45).map(i => ("c3", i, s"${i} - Lot apres la lacune numero $i ."))
-    assertIdentical(turnsDf(rows), chunkTurns = 8)
+    assertIdentical(turnsDf(turnGap), chunkTurns = 8)
   }
 
   test("multi-conversation frame with interleaved chunk ids") {
-    val rows =
-      (0 to 20).map(i => ("a", i, s"${i + 1} - Lot de la vente a numero $i .")) ++
-        (0 to 20).map(i => ("b", i,
-          if (i % 7 == 0) "GRAVURES ANCIENNES" else s"${i + 1} - Lot b numero $i .")) ++
-        Seq(("c", 0, "une seule ligne sans ancre ."))
-    Seq(2, 6).foreach(c => assertIdentical(turnsDf(rows), chunkTurns = c))
+    Seq(2, 6).foreach(c => assertIdentical(turnsDf(interleaved), chunkTurns = c))
+  }
+
+  /** The body labels by a plain-Scala walk over the collected frame, written
+   * apart from the operator's line walker: sort the tokens, group them into
+   * lines, classify each line of a conversation with a fresh classifier and
+   * the entry test of the conversation's next line, BIO-encode (`I-` on the
+   * first token of a line that starts a span). A line whose classification
+   * throws is dropped. */
+  private def referenceLabels(f: DataFrame): Seq[(String, Int, Int, Int, String, String)] = {
+    val toks = f.select("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok",
+        "f_capitalisation").collect().toSeq
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4),
+        r.getString(5)))
+      .sortBy(t => (Option(t._1), t._2, t._3, t._4))
+    val lines = toks.foldLeft(Vector.empty[Vector[(String, Int, Int, Int, String, String)]]) {
+      case (acc, t) if acc.nonEmpty && acc.last.head._1 == t._1 &&
+          acc.last.head._2 == t._2 && acc.last.head._3 == t._3 =>
+        acc.init :+ (acc.last :+ t)
+      case (acc, t) => acc :+ Vector(t)
+    }
+    lines.groupBy(_.head._1).values.toSeq.flatMap { conv =>
+      val cls = new Labeler.LineClassifier
+      conv.indices.flatMap { i =>
+        val line = conv(i)
+        val nextIsEntry = i + 1 < conv.size && Labeler.isEntryLine(conv(i + 1).map(_._5))
+        scala.util.Try(cls.classify(line.map(_._5), line.map(_._6), nextIsEntry))
+          .toOption.toSeq.flatMap { case (base, isStart) =>
+            line.zipWithIndex.map { case (t, k) =>
+              (t._1, t._2, t._3, t._4, t._5, if (k == 0 && isStart) "I-" + base else base)
+            }
+          }
+      }
+    }.sortBy(t => (Option(t._1), t._2, t._3, t._4))
+  }
+
+  private def labelRows(df: DataFrame): Seq[(String, Int, Int, Int, String, String)] =
+    df.select("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok", "label")
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4),
+        r.getString(5)))
+      .sortBy(t => (Option(t._1), t._2, t._3, t._4))
+
+  test("bodyLabels and bodyLabelsChunked equal a plain-Scala reference line walk") {
+    val adversarial = Structure.transcriptsFromDocuments(
+      spark.read.option("multiLine", "true").json("tools/adversarial_docs.json"))
+    Seq("synthetic" -> Synthetic.transcripts(spark, 30), "adversarial" -> adversarial,
+        "heading run" -> turnsDf(headingRun), "turn gap" -> turnsDf(turnGap),
+        "interleaved" -> turnsDf(interleaved)).foreach { case (name, turns) =>
+      val f = featsOf(turns)
+      val expected = referenceLabels(f)
+      assert(expected.nonEmpty, name)
+      assert(labelRows(Labeler.bodyLabels(f)) == expected, s"bodyLabels on $name")
+      Seq(1, 3).foreach { c =>
+        assert(labelRows(Labeler.bodyLabelsChunked(f, c)) == expected,
+          s"bodyLabelsChunked($c) on $name")
+      }
+    }
   }
 
   test("property: random corpora agree at random chunk sizes") {

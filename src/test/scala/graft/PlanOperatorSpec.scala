@@ -7,7 +7,7 @@ import graft.plans.BodySpans
 
 /**
  * The custom Catalyst operator (BodySpansPlan/Strategy/Exec) must be
- * byte-identical to the declarative assembly in both modes — the FSM mode
+ * byte-identical to the declarative assembly in both span modes — the FSM mode
  * to `Assemble.bodySpans(Labeler.bodyLabels(..))`, the label mode to
  * `Assemble.bodySpans` over the same labeled frame — and Catalyst must plan
  * its exchange from the DECLARED requirements (one hashpartitioning, sort
@@ -76,6 +76,25 @@ class PlanOperatorSpec extends SparkSpec {
     assert(viaOperator == sortedRows(declarative(f)))
   }
 
+  test("FSM mode drops a line whose classification throws, like bodyLabels") {
+    val sparkS = spark
+    import sparkS.implicits._
+    // RobustnessSpec's null-token frame (a foreign upstream; the tokenizer
+    // never emits a null tok), its malformed line given a second token so
+    // that dropping the whole line is visible in the span text
+    val f = Seq[(String, Int, Int, Int, String, String, String, String)](
+      ("c8", 0, 0, 0, "good", "", "", "NOCAPS"),
+      ("c8", 0, 1, 0, null, "", "", "NOCAPS"),
+      ("c8", 0, 1, 1, "lost", " ", "", "NOCAPS"),
+      ("c8", 0, 2, 0, "fine", "", "", "NOCAPS"))
+      .toDF("conv_id", "turn_idx", "line_in_turn", "tok_idx",
+        "tok", "sep_before", "line_trailing", "f_capitalisation")
+    val viaOperator = sortedRows(BodySpans.spans(f))
+    assert(viaOperator.nonEmpty)
+    assert(viaOperator == sortedRows(declarative(f)))
+    assert(!viaOperator.exists(_.getString(4).contains("lost")), viaOperator)
+  }
+
   test("EnsureRequirements plans exactly one exchange for the operator") {
     val plan = BodySpans.spans(feats(50)).queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix in plan strings
@@ -124,6 +143,22 @@ class PlanOperatorSpec extends SparkSpec {
     val counts = Seq("Window", "Sort", "Generate", "Exchange").map(n => n -> nodes.count(_ == n))
     assert(counts == Seq("Window" -> 7, "Sort" -> 5, "Generate" -> 2, "Exchange" -> 1),
       s"operator counts changed:\n$plan")
+  }
+
+  test("bodyLabelsChunked keeps its (conv_id, _chunk) exchanges and broadcast joins") {
+    val plan = Labeler.bodyLabelsChunked(feats(30), chunkTurns = 2, materialize = false)
+      .queryExecution.executedPlan.toString
+    // one narrow (conv_id, _chunk) shuffle for pass 1, one full-width one
+    // for pass 2; the peek selection, multi-chunk pruning (once per union
+    // branch) and entry-state joins are broadcasts
+    val lines = plan.linesIterator.toSeq
+    val chunkKey = "Exchange hashpartitioning\\(conv_id#\\d+, _chunk#\\d+,".r
+    val chunkExchanges = lines.count(l => chunkKey.findFirstIn(l).isDefined)
+    assert(chunkExchanges == 2, s"(conv_id, _chunk) exchanges:\n$plan")
+    val broadcastJoins = lines.count(_.contains("BroadcastHashJoin"))
+    assert(broadcastJoins == 5, s"broadcast joins:\n$plan")
+    assert(!lines.exists(l => l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin")),
+      s"every join is a broadcast:\n$plan")
   }
 
   private def hashExchanges(df: DataFrame): Int =
@@ -219,14 +254,19 @@ class PlanOperatorSpec extends SparkSpec {
     val plan = BodySpans.fromLabels(
       Pipeline.labeledBodyTokens(Synthetic.transcripts(spark, 50)))
       .queryExecution.executedPlan.toString
-    // two, not one: bodyLabels is a Row-encoder mapPartitions, whose
-    // serializer outputs fresh conv_id attributes, so the pipeline's
-    // hashpartitioning(conv_id) upstream cannot satisfy the operator's
-    // declared distribution
+    // the pipeline's one exchange: bodyLabels' label walk keeps its child's
+    // attributes, partitioning and ordering, so the span walk over it adds
+    // neither an exchange nor a sort
     val exchanges = plan.linesIterator
       .count(_.contains("Exchange hashpartitioning(conv_id"))
-    assert(exchanges == 2, s"expected 2 conv_id exchanges, got $exchanges:\n$plan")
-    val above = plan.linesIterator.takeWhile(!_.contains("SerializeFromObject")).mkString("\n")
-    assert(!above.contains("Window") && !above.contains("Aggregate"), above)
+    assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
+    // everything above the label sink (the second BodySpans node)
+    val lines = plan.linesIterator.toSeq
+    val labelSink = lines.indexWhere(_.contains("BodySpans"),
+      lines.indexWhere(_.contains("BodySpans")) + 1)
+    assert(labelSink > 0, s"label sink missing:\n$plan")
+    val above = lines.take(labelSink).mkString("\n")
+    assert(!above.contains("Window") && !above.contains("Aggregate") &&
+      !above.contains("Sort"), above)
   }
 }
