@@ -336,12 +336,15 @@ object Features {
       .drop("head_tail_block", "pat_candidate", "pat_count")
 
   /** Per-line half of [[repetitive]], shared with [[Labeler.bodyLinesChunked]]:
-   * `head_tail_block` marks the first-2/last blocks of a turn, `pat_candidate`
-   * a block-first line that is [[patNeedy]]. */
+   * `f_string` is the line's first word — the first run outside
+   * `[\x20\t\f]`, with `\r` and `\n` removed — from the byte-scan leg
+   * [[graft.functions.LineKernels.firstWord]] (equal to the first element of
+   * the segmenter's `lineToks` stripped of `[ \n\r]`); `head_tail_block`
+   * marks the first-2/last blocks of a turn, `pat_candidate` a block-first
+   * line that is [[patNeedy]]. */
   private[extract] def patternCandidates(lines: DataFrame): DataFrame =
     lines
-      .withColumn("f_string",
-        regexp_replace(coalesce(try_element_at(lineToks, lit(1)), lit("")), "[ \n\r]", ""))
+      .withColumn("f_string", graft.functions.LineKernels.firstWordOf(col("line")))
       .where(col("f_string") =!= "")
       .withColumn("head_tail_block", col("block_idx") < 2 ||
         col("block_idx") === max(col("block_idx")).over(Window.partitionBy("conv_id", "turn_idx")))

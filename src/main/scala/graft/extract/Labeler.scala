@@ -3,6 +3,7 @@ package graft.extract
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.text.TextCols
 
 /**
  * Deterministic sequence labelers replacing the reference's Wapiti CRF calls
@@ -125,7 +126,7 @@ object Labeler {
     // repetitive page headers/stamps (A2, `DatacatSegmenterParser.java:
     // 268-299`): the same short letter pattern recurring through a document
     // is a page marker, not content — applied outside the body span only
-    val pattern = ZC.pattern(text)
+    val pattern = TextCols.pattern(text)
     val withPreds = zcDensityCols(
       zcPredCols(lines, lineCol)
         .withColumn("_line_no", row_number().over(wOrd)), wOrd)
@@ -237,11 +238,10 @@ object Labeler {
     def isPageNum(t: Column): Column = t.rlike("^\\p{Nd}{1,4}$") ||
       (length(regexp_replace(t, "[\\p{L}\\p{Nd}]", "")) === length(t) &&
         length(t) <= 8)
-    def nLetters(t: Column): Column = length(regexp_replace(t, "[^\\p{L}]", ""))
+    def nLetters(t: Column): Column = length(graft.functions.LineKernels.lettersOf(t))
     // OCR garbage: less than 40% letters on a long-enough line
     def isGarbage(t: Column): Column =
       length(t) >= 10 && nLetters(t) * 5 < length(t) * 2
-    def pattern(t: Column): Column = lower(regexp_replace(t, "[^\\p{L}]", ""))
     def strong(t: Column): Column = t.rlike("^[\\*\"«'~]?\\p{Nd}+\\s*[-_–−.]")
     // ASCII digits only: OCR-confusable marks ("i151") and non-ASCII
     // Unicode digits (fullwidth/Arabic-Indic, which the \p{Nd} mark
@@ -379,7 +379,7 @@ object Labeler {
 
     // chunk ids + global line numbers + per-line predicates
     val base = zcPredCols(Chunked.withGlobalLineNo(lines, chunkTurns), lineCol)
-      .withColumn("_pat", ZC.pattern(t))
+      .withColumn("_pat", TextCols.pattern(t))
 
     // (conv, pattern) repetitive counts, two-level; totals re-keyed by
     // chunk so the join back never clusters a conversation on one task

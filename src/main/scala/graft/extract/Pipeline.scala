@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
  * hash(conv_id) shuffle feeds every per-conversation window, the zone
  * filter, the token explode, and the FSM, which emits finished spans
  * during its label walk (no second shuffle for span assembly; `.explain`
- * shows exactly one hashpartitioning). AQE handles residual skew; giant
- * single conversations are bounded upstream by the turn-grain windows
- * (keyed (conv_id, turn_idx)) doing most of the work and by the F5 size
- * guards.
+ * shows exactly one hashpartitioning). AQE handles residual skew; line
+ * structure is turn-local (one kernel scan per turn, no window), and giant
+ * single conversations are bounded by the F5 size guards or taken by the
+ * chunk-parallel twins.
  */
 object Pipeline {
 
@@ -150,7 +150,8 @@ object Pipeline {
    * bottleneck (the north rule's 10^12-turn regime with 10^9-turn
    * conversations). NO stage in this path partitions by conv_id alone:
    *
-   *   - structuring windows are turn-grain already ([[Structure.lines]]);
+   *   - line structure is turn-local already ([[Structure.lines]] is one
+   *     kernel scan per turn, no window);
    *   - zone selection's conversation-grain repetitive count becomes a
    *     two-level aggregate ([[Labeler.bodyLinesChunked]]);
    *   - the tokenizer's separator lags stitch across (conv_id, turn-chunk)

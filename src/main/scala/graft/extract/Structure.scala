@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.text.{Tok, TextCols}
+import graft.functions.LineKernels
+import graft.text.TextCols
 
 /**
  * Structuring pass: transcripts → lines → tokens (reference S2,
@@ -13,16 +14,19 @@ import graft.text.{Tok, TextCols}
  *
  * Document-tree mapping: conversation=document, turn=page,
  * paragraph-within-turn=block (runs of non-blank lines), line=line.
- * All structure is declarative (split/posexplode/window) so Catalyst prunes
- * and pushes down; the only non-builtin piece is the delimiter tokenizer UDF
- * (exactly [[graft.text.Tok.tokenize]], fixture-pinned).
+ * Structure is declarative Catalyst around three codegen'd byte-scan
+ * kernels: the turn → lines explode ([[graft.functions.TurnLines]], the
+ * reference's one block/line loop per document), the line-trailing
+ * whitespace leg ([[graft.functions.LineScan]]) and the delimiter tokenizer
+ * ([[graft.functions.Tokenize]], exactly [[graft.text.Tok.tokenize]],
+ * fixture-pinned). Each kernel equals the expression it replaced
+ * (LineKernelSpec, TokenizeKernelSpec).
  *
- * Scale note: every window here is partitioned by (conv_id) or finer
- * (conv_id, turn_idx[, block]); conv_id is high-cardinality at the design
- * scale (10^12 turns over ~10^8+ convs) so shuffles hash-balance. Skew from
- * giant conversations is handled upstream by salted repartitioning in the
- * pipeline (see Pipeline.scala); windows keyed on (conv_id, turn_idx) never
- * see more than one turn's text.
+ * Scale note: line structure is turn-local (the kernel sees one turn's
+ * text), so it needs no shuffle; the token windows are partitioned by
+ * (conv_id), high-cardinality at the design scale (10^12 turns over ~10^8+
+ * convs), so shuffles hash-balance. Skew from giant conversations is
+ * handled by the chunk-parallel twins (see Pipeline.scala).
  */
 object Structure {
 
@@ -33,29 +37,19 @@ object Structure {
 
   /**
    * Explode turns into lines with paragraph (block) structure.
-   * Output grain: one row per raw line of each turn, with
-   * (block_idx, line_idx, line_in_turn) and `kept` = survives the
-   * reference's line filter (F1).
+   * Output grain: one row per non-blank line of each turn (blank = empty or
+   * only U+0020), with `line_in_turn` (the line's index among ALL the turn's
+   * `\n`-separated lines), `block_idx` (run of non-blank lines, from 0 per
+   * turn), `line_idx` (from 0 per block) and `kept` = survives the
+   * reference's line filter (F1). One [[graft.functions.TurnLines]] scan per
+   * turn, exploded with `inline`: no window, sort or exchange (the DuckDB
+   * `klines` CTE in `Queries` is its oracle).
    */
-  def lines(turns: DataFrame): DataFrame = {
-    val wTurn = Window.partitionBy("conv_id", "turn_idx").orderBy("line_in_turn")
+  def lines(turns: DataFrame): DataFrame =
     turns
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-        posexplode_outer(split(coalesce(col("text"), lit("")), "\n"))
-          .as(Seq("line_in_turn", "line")))
-      .withColumn("blank", trim(col("line")) === "")
-      // block_idx: running count of blank→non-blank transitions (paragraphs)
-      .withColumn("new_block",
-        (!col("blank")) && coalesce(lag(col("blank"), 1).over(wTurn), lit(true)))
-      .withColumn("block_idx",
-        sum(when(col("new_block"), 1).otherwise(0)).over(wTurn) - 1)
-      .where(!col("blank"))
-      .withColumn("line_idx",
-        row_number().over(Window.partitionBy("conv_id", "turn_idx", "block_idx")
-          .orderBy("line_in_turn")) - 1)
+        inline(LineKernels.turnLinesOf(col("text"))))
       .withColumn("kept", !TextCols.filterLine(col("line")))
-      .drop("blank", "new_block")
-  }
 
   /** Lines that survive the noise filter (reference F1/F2). */
   def keptLines(turns: DataFrame): DataFrame = lines(turns).where(col("kept"))
@@ -171,12 +165,14 @@ object Structure {
    * temp columns are added, so both tokenizer paths emit the same order). */
   private def carriedCols(keptLines: DataFrame): Seq[String] =
     keptLines.columns.toSeq
-      .diff(Seq("line", "kept", "line_trailing", "prev_trailing", "line_gap", "toks"))
+      .diff(Seq("line", "kept", "line_trailing", "prev_trailing", "line_gap"))
 
   /** Trailing whitespace of the line: ASCII space, tab and form feed (a
-   * trailing NBSP is not whitespace here). */
-  private def lineTrailingCol: Column =
-    regexp_extract(col("line"), "[\\x20\\t\\f]*$", 0)
+   * trailing NBSP is not whitespace here), as `regexp_extract(line,
+   * "[\\x20\\t\\f]*$", 0)` read it — Java's `$` also matches before one
+   * final line terminator, so the run before a final `\r` counts. The
+   * byte-scan leg [[graft.functions.LineKernels.trailingSpace]]. */
+  private def lineTrailingCol: Column = LineKernels.trailingSpaceOf(col("line"))
 
   /** Source-line gap to the previous kept line, given that line's
    * (turn_idx, line_in_turn); null prev = first line of the conversation. */
@@ -189,10 +185,9 @@ object Structure {
    * tokens and assemble `sep_before` from the per-line lag columns. */
   private def explodeLineTokens(perLine: DataFrame, carried: Seq[String]): DataFrame =
     perLine
-      .withColumn("toks", tokenizeCol)
       .select(carried.map(col) ++ Seq(
         col("line_trailing"), col("prev_trailing"), col("line_gap"),
-        posexplode(col("toks")).as(Seq("tok_idx", "t"))): _*)
+        posexplode(tokenizeCol).as(Seq("tok_idx", "t"))): _*)
       .select(carried.map(col) ++ Seq(
         col("tok_idx"),
         col("t.tok").as("tok"),

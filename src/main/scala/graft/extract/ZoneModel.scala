@@ -107,7 +107,7 @@ object ZoneModel {
       .withColumn("_mark_frac",
         avg(isMark.cast("double")).over(wNear))
       .withColumn("_letter_frac",
-        sum(length(regexp_replace(t, "[^\\p{L}]", "")).cast("double")).over(wNear) /
+        sum(length(graft.functions.LineKernels.lettersOf(t)).cast("double")).over(wNear) /
           greatest(sum(length(t).cast("double")).over(wNear), lit(1.0)))
       .withColumn("_feats",
         concat(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -71,6 +71,11 @@ object Tokenize {
     t
   }
 
+  /** One `(tok, sep)` element (not the varargs `InternalRow(..)`, whose
+   * `toArray` is reflective). */
+  private def row(tok: UTF8String, sep: UTF8String): InternalRow =
+    new GenericInternalRow(Array[Any](tok, sep))
+
   /** Runtime kernel, called from generated code and from `eval`.
    *
    * Fast path: scan the UTF-8 BYTES directly and emit tokens/separators
@@ -96,7 +101,7 @@ object Tokenize {
     def slice(from: Int, until: Int): UTF8String =
       UTF8String.fromBytes(b, from, until - from)
     def flushCur(end: Int): Unit = if (tokStart >= 0) {
-      out.add(InternalRow(slice(tokStart, end), slice(sepStart, sepEnd)))
+      out.add(row(slice(tokStart, end), slice(sepStart, sepEnd)))
       sepStart = end; sepEnd = end; tokStart = -1
     }
     while (i < n) {
@@ -118,7 +123,7 @@ object Tokenize {
         sepEnd = i + cpLen
       } else if (cls == 2) { // stand-alone delimiter token
         flushCur(i)
-        out.add(InternalRow(slice(i, i + cpLen), slice(sepStart, sepEnd)))
+        out.add(row(slice(i, i + cpLen), slice(sepStart, sepEnd)))
         sepStart = i + cpLen; sepEnd = i + cpLen
       } else if (tokStart < 0) tokStart = i
       i += cpLen
@@ -135,7 +140,7 @@ object Tokenize {
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
-      arr(i) = InternalRow(UTF8String.fromString(t.text), UTF8String.fromString(t.sepBefore))
+      arr(i) = row(UTF8String.fromString(t.text), UTF8String.fromString(t.sepBefore))
       i += 1
     }
     new GenericArrayData(arr)

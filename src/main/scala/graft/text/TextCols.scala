@@ -86,9 +86,12 @@ object TextCols {
   /** Repetition-detection key: letters only, lowercased (applied to lines
    * longer than 8 pattern chars by the caller). Consistent with the
    * fixture behavior where "GRECQUES et"/"GRECQUES ET" and
-   * "Bronze, 74"/"Bronze, 114" lines share a pattern. */
-  def pattern(line: Column): Column =
-    lower(regexp_replace(line, "[^\\p{L}]", ""))
+   * "Bronze, 74"/"Bronze, 114" lines share a pattern. The letters —
+   * `regexp_replace(line, "[^\\p{L}]", "")`, where Java `\p{L}` is
+   * `Character.isLetter` of each code point — come from the byte-scan leg
+   * [[graft.functions.LineKernels.letters]]; Spark's own `lower()` stays
+   * around it, so the case mapping is unchanged. */
+  def pattern(line: Column): Column = lower(graft.functions.LineKernels.lettersOf(line))
 
   /** XML entity escaping, matching fixture bytes (`&apos;` etc.). */
   def htmlEncode(c: Column): Column = {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.extract.Pipeline
 
 /**
@@ -8,7 +9,8 @@ import graft.extract.Pipeline
  * (`tools/adversarial_docs.json`: NULL, empty, whitespace-only and
  * NBSP-padded text, CJK, emoji, `\r`/`\t` noise, 20k-char lines) instead
  * of only inside `graft.Verify`. Each query's `n_mismatch` must be 0; the
- * corpus must yield spans, or the checks would hold vacuously.
+ * corpus must yield spans, or the checks would hold vacuously. The spans
+ * must not depend on the order in which the transcript rows arrive.
  */
 class AdversarialInvariantSpec extends SparkSpec {
 
@@ -22,6 +24,26 @@ class AdversarialInvariantSpec extends SparkSpec {
 
   test("the adversarial corpus yields body spans") {
     assert(!Pipeline.extract(Queries.transcripts(spark, dir)).isEmpty)
+  }
+
+  private def sorted(spans: DataFrame): Seq[String] =
+    spans.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+
+  test("extract and extractChunked spans do not depend on the input row order") {
+    val asRead = Queries.transcripts(spark, dir)
+    val reversed = spark.createDataFrame(
+      spark.sparkContext.parallelize(asRead.collect().toSeq.reverse, 3), asRead.schema)
+    val shuffled = asRead.repartition(7)
+    Seq[(String, DataFrame => DataFrame)](
+      "extract" -> (t => Pipeline.extract(t)),
+      "extractChunked" -> (t => Pipeline.extractChunked(t, chunkTurns = 3))
+    ).foreach { case (path, run) =>
+      val want = sorted(run(asRead))
+      assert(want.nonEmpty, path)
+      Seq("reversed" -> reversed, "repartition(7)" -> shuffled).foreach { case (order, t) =>
+        assert(sorted(run(t)) == want, s"$path over the $order transcripts")
+      }
+    }
   }
 
   Seq("pipeline_rebuild_diff", "w10_label_spans_diff", "pipeline_declarative_diff",

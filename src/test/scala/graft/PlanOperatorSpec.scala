@@ -134,15 +134,32 @@ class PlanOperatorSpec extends SparkSpec {
     assert(exchanges == 1, s"expected 1 conv_id exchange, got $exchanges:\n$plan")
   }
 
-  test("the flagship plan keeps its window, sort, generate and exchange counts") {
+  private def flagshipPlan = {
     val plan = Pipeline.extract(Synthetic.transcripts(spark, 50)).queryExecution.executedPlan
-    val nodes = (plan match {
+    plan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
-    }).collect { case n => n.nodeName }
+    }
+  }
+
+  test("the flagship plan keeps its window, sort, generate and exchange counts") {
+    // the turn → lines kernel replaced the line layer's three windows and
+    // their two sorts; patternCandidates' max(block_idx) window places its
+    // own (conv_id, turn_idx) sort
+    val plan = flagshipPlan
+    val nodes = plan.collect { case n => n.nodeName }
     val counts = Seq("Window", "Sort", "Generate", "Exchange").map(n => n -> nodes.count(_ == n))
-    assert(counts == Seq("Window" -> 7, "Sort" -> 5, "Generate" -> 2, "Exchange" -> 1),
+    assert(counts == Seq("Window" -> 4, "Sort" -> 4, "Generate" -> 2, "Exchange" -> 1),
       s"operator counts changed:\n$plan")
+  }
+
+  test("the flagship plan tokenizes each line once") {
+    // a generator over a `toks` attribute made InferFiltersFromGenerate add
+    // size(toks) > 0, which pushdown inlined as a second tokenizer call
+    val plan = flagshipPlan
+    val calls = plan.collect { case n => n.expressions }.flatten
+      .map(_.collect { case t: graft.functions.Tokenize => t }.size).sum
+    assert(calls == 1, s"graft_tokenize calls: $calls\n$plan")
   }
 
   test("bodyLabelsChunked keeps its (conv_id, _chunk) exchanges and broadcast joins") {
