@@ -40,6 +40,14 @@ object Labeler {
       .withColumn("zone_label", zoneLabel(wConv))
   }
 
+  /** The `<body>` lines of [[zones]], without its windows: a line's body
+   * membership never depends on the `<back>` test (`isLastTurn` only tells
+   * `<back>` from `<other>` for system turns), so neither the conversation's
+   * last turn nor `zone_label` is computed. Reads `f_repetitive`, role, tool
+   * and turn_idx. */
+  def bodyLines(segFeatures: DataFrame): DataFrame =
+    segFeatures.where(transcriptZone(lit(false)) === "<body>")
+
   /** The transcript zone rule of [[zones]] over `f_repetitive`, role and
    * tool; `isLastTurn` marks the conversation's last turn, where a system
    * turn is `<back>`. Null role and tool fall through to `<body>`. */
@@ -59,20 +67,18 @@ object Labeler {
 
   /**
    * Chunk-parallel transcript-mode body-line selection — row-identical to
-   * `zones(Features.repetitive(lines)).where($"zone" === "<body>")`, and so
-   * over [[Features.segmenter]], on the structural columns
+   * `bodyLines(Features.repetitive(lines))`, and so to the `<body>` zone of
+   * [[zones]] over [[Features.segmenter]], on the structural columns
    * (ChunkedPipelineSpec differential), for the giant-conversation path
    * ([[Pipeline.extractChunked]]). The body membership of a line reads only
    * per-line / turn-grain state (role, tool, [[Features.patternCandidates]])
    * plus ONE conversation-grain quantity: the repetitive-pattern count over
-   * (conv_id, pattern) — the `<back>` branch of [[zones]] applies to system
-   * turns only, which are never `<body>`, so `max(turn_idx)` is not needed
-   * here. The pattern count's conversation-grain window becomes a two-level
-   * aggregate: per-(conv, chunk, pattern) candidate partials (map-side
-   * combinable), conv-grain totals over that tiny frame, and a join back
-   * keyed by (conv, chunk, pattern) — balanced by the chunk key even when
-   * one boilerplate header repeats on every turn of a 10^9-turn
-   * conversation.
+   * (conv_id, pattern); the selection itself is [[bodyLines]]. The pattern
+   * count's conversation-grain window becomes a two-level aggregate:
+   * per-(conv, chunk, pattern) candidate partials (map-side combinable),
+   * conv-grain totals over that tiny frame, and a join back keyed by (conv,
+   * chunk, pattern) — balanced by the chunk key even when one boilerplate
+   * header repeats on every turn of a 10^9-turn conversation.
    */
   def bodyLinesChunked(lines: DataFrame, chunkTurns: Int = 4096): DataFrame = {
     require(chunkTurns > 0, "chunkTurns must be positive")
@@ -88,11 +94,9 @@ object Labeler {
     val needyPats = base.where(Features.patNeedy)
       .select("conv_id", "_chunk", "pat").distinct()
       .join(totals, Seq("conv_id", "pat"), "left")
-    base.join(needyPats, Seq("conv_id", "_chunk", "pat"), "left")
+    bodyLines(base.join(needyPats, Seq("conv_id", "_chunk", "pat"), "left")
       .withColumn("f_repetitive",
-        Features.patNeedy && coalesce(col("pat_count"), lit(0L)) > 1)
-      // system turns are never <body>, so the <back> test is not needed
-      .where(transcriptZone(lit(false)) === "<body>")
+        Features.patNeedy && coalesce(col("pat_count"), lit(0L)) > 1))
       .drop("pat", "f_string", "head_tail_block", "pat_candidate", "pat_count",
         "f_repetitive", "_chunk")
   }

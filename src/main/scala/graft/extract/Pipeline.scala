@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape (the plan to protect at 100 TB): ONE exchange — a single
  * hash(conv_id) shuffle feeds every per-conversation window, the zone
- * filter, the token explode, and the FSM, which emits finished spans
- * during its label walk (no second shuffle for span assembly; `.explain`
- * shows exactly one hashpartitioning). AQE handles residual skew; line
- * structure is turn-local (one kernel scan per turn, no window), and giant
- * single conversations are bounded by the F5 size guards or taken by the
- * chunk-parallel twins.
+ * filter and the FSM, which tokenizes each body line and emits finished
+ * spans during its label walk (no second shuffle for span assembly;
+ * `.explain` shows exactly one hashpartitioning). AQE handles residual
+ * skew; line structure is turn-local (one kernel scan per turn, no
+ * window), and giant single conversations are bounded by the F5 size
+ * guards or taken by the chunk-parallel twins.
  */
 object Pipeline {
 
@@ -34,20 +34,22 @@ object Pipeline {
    *
    * Single-pass, single-exchange: the kept lines are hash-partitioned by
    * conv_id ONCE up front; every downstream window (keys ⊇ {conv_id}), the
-   * zone filter, the token explode (partition-preserving) and the span FSM
-   * are all satisfied by that one exchange — `.explain` shows exactly one
-   * hashpartitioning(conv_id). The FSM runs as the custom Catalyst operator
-   * ([[graft.plans.BodySpans]]): its DECLARED ClusteredDistribution +
-   * sort-order requirements let EnsureRequirements reuse the exchange; it
-   * consumes InternalRow directly and hands each classified line straight
-   * to the span rule (no label rows). It is differential-tested
-   * byte-identical to [[extractDeclarative]] (`bodyLabels`, the same
-   * operator's label sink, then [[Assemble.bodySpans]]). [[runResumable]]
-   * labels with `bodyLabels`, commits, then walks the committed labels with
-   * the operator's label-span mode.
+   * body-line filter and the span FSM are all satisfied by that one
+   * exchange — `.explain` shows exactly one hashpartitioning(conv_id). The
+   * FSM runs as the custom Catalyst operator in its line-input mode
+   * ([[graft.plans.BodySpans.fromLines]]): its DECLARED ClusteredDistribution
+   * + (conv_id, turn_idx, line_in_turn) order let EnsureRequirements reuse
+   * the exchange and sort the body lines once; it tokenizes each line
+   * during the walk (no token rows, no token sort) and hands each
+   * classified line straight to the span rule (no label rows). It is
+   * differential-tested byte-identical to [[extractDeclarative]]
+   * (`bodyLabels`, the same operator's label sink over token rows, then
+   * [[Assemble.bodySpans]]). [[runResumable]] labels with `bodyLabels`,
+   * commits, then walks the committed labels with the operator's
+   * label-span mode.
    */
   def extract(turns: DataFrame): DataFrame =
-    graft.plans.BodySpans.spans(bodyTokenFeats(turns))
+    graft.plans.BodySpans.fromLines(bodyLines(turns))
 
   /** The columns of a body line: what every stage-1 hands the tokenizer. */
   private val bodyLineCols = Seq("conv_id", "turn_idx", "role", "tool", "block_idx",
@@ -80,8 +82,7 @@ object Pipeline {
    */
   def extractDocuments(docs: DataFrame,
       stage1: Option[ZoneModel.Model] = shipped): DataFrame =
-    graft.plans.BodySpans.spans(
-      fsmInput(Structure.tokensFromLines(documentBodyLines(docs, stage1))))
+    graft.plans.BodySpans.fromLines(documentBodyLines(docs, stage1))
 
   /** Document-mode stage-1 output: the body lines `stage1` keeps (see
    * [[extractDocuments]]). Public so invariant oracles can pin the stage-2
@@ -157,7 +158,7 @@ object Pipeline {
    *   - the tokenizer's separator lags stitch across (conv_id, turn-chunk)
    *     boundaries ([[Structure.tokensFromLinesChunked]]);
    *   - the FSM's feature input is pure per-token scalars, as in
-   *     [[extract]];
+   *     [[labeledBodyTokens]];
    *   - the FSM itself runs as the prefix-composed parallel automaton
    *     ([[Labeler.bodyLabelsChunked]]);
    *   - span assembly's running segment count becomes a two-level scan
@@ -197,18 +198,20 @@ object Pipeline {
   def extractDeclarative(turns: DataFrame): DataFrame =
     Assemble.bodySpans(labeledBodyTokens(turns))
 
-  /** structure → zone → the FSM's input columns, over one exchange. The zone
-   * rules read one segmenter column and the FSM one per-token feature, so
-   * neither the [[Features.segmenter]] nor the [[Features.body]] windows are
-   * built: analysing them only for the optimizer to prune was most of a
-   * pass's driver cost. */
-  private def bodyTokenFeats(turns: DataFrame): DataFrame = {
+  /** structure → the `<body>` lines, over one exchange. The zone rule reads
+   * one segmenter column, so the [[Features.segmenter]] windows are not
+   * built (analysing them only for the optimizer to prune was most of a
+   * pass's driver cost), nor the [[Labeler.zones]] windows that body
+   * membership does not read. */
+  private def bodyLines(turns: DataFrame): DataFrame = {
     val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
-    val zoned = Labeler.zones(Features.repetitive(lines))
     // F4: zone selection is a plain filter because labels are columns
-    val bodyLines = zoned.where(col("zone") === "<body>").select(bodyLineCols: _*)
-    fsmInput(Structure.tokensFromLines(bodyLines))
+    Labeler.bodyLines(Features.repetitive(lines)).select(bodyLineCols: _*)
   }
+
+  /** The body lines as the token FSM's input columns, over one exchange. */
+  private def bodyTokenFeats(turns: DataFrame): DataFrame =
+    fsmInput(Structure.tokensFromLines(bodyLines(turns)))
 
   /** structure → zone → body features → FSM labels, over one exchange. */
   def labeledBodyTokens(turns: DataFrame,

@@ -238,17 +238,27 @@ object LineKernels {
   def trailingSpace(line: UTF8String): UTF8String = {
     if (line == null) return null
     val u = clean(line)
+    val end = trailingEnd(u)
+    copyOut(u, trailingStart(u, end), end)
+  }
+
+  /** Where [[trailingSpace]]'s run in `u` (valid UTF-8) ends: where Java's
+   * `$` first matches. Shared with the span walk's line feeder. */
+  private[graft] def trailingEnd(u: UTF8String): Int = {
     val n = u.numBytes
     def at(i: Int): Int = byteAt(u, i) & 0xFF
-    val end =
-      if (n >= 2 && at(n - 2) == '\r' && at(n - 1) == '\n') n - 2
-      else if (n >= 1 && (at(n - 1) == '\n' || at(n - 1) == '\r')) n - 1
-      else if (n >= 2 && at(n - 2) == 0xC2 && at(n - 1) == 0x85) n - 2
-      else if (n >= 3 && at(n - 3) == 0xE2 && at(n - 2) == 0x80 &&
-        (at(n - 1) == 0xA8 || at(n - 1) == 0xA9)) n - 3
-      else n
+    if (n >= 2 && at(n - 2) == '\r' && at(n - 1) == '\n') n - 2
+    else if (n >= 1 && (at(n - 1) == '\n' || at(n - 1) == '\r')) n - 1
+    else if (n >= 2 && at(n - 2) == 0xC2 && at(n - 1) == 0x85) n - 2
+    else if (n >= 3 && at(n - 3) == 0xE2 && at(n - 2) == 0x80 &&
+      (at(n - 1) == 0xA8 || at(n - 1) == 0xA9)) n - 3
+    else n
+  }
+
+  /** Where the run of `[\x20\t\f]` that ends at `end` starts. */
+  private[graft] def trailingStart(u: UTF8String, end: Int): Int = {
     var from = end
     while (from > 0 && isSpace(byteAt(u, from - 1))) from -= 1
-    copyOut(u, from, end)
+    from
   }
 }

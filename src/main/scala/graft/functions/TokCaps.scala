@@ -67,31 +67,42 @@ object TokCaps {
   def of(tok: Column): Column =
     bridge.column(TokCaps(bridge.expression(tok)))
 
-  // interned labels — the struct reuses these, zero allocation per token
-  private val ALLDIGIT = UTF8String.fromString("ALLDIGIT")
-  private val CONTAINSDIGITS = UTF8String.fromString("CONTAINSDIGITS")
-  private val NODIGIT = UTF8String.fromString("NODIGIT")
-  private val ALLCAP = UTF8String.fromString("ALLCAP")
-  private val INITCAP = UTF8String.fromString("INITCAP")
-  private val NOCAPS = UTF8String.fromString("NOCAPS")
+  // a class code is digit * 3 + cap, each an index into its interned
+  // labels — the struct reuses these, zero allocation per token
+  private final val AllDigit = 0
+  private final val ContainsDigits = 1
+  private final val NoDigit = 2
+  private final val AllCap = 0
+  private final val InitCap = 1
+  private final val NoCaps = 2
+  private val digits = Array("ALLDIGIT", "CONTAINSDIGITS", "NODIGIT").map(UTF8String.fromString)
+  private val capStrings = Array("ALLCAP", "INITCAP", "NOCAPS")
+  private val caps = capStrings.map(UTF8String.fromString)
 
-  private def row(d: UTF8String, c: UTF8String): InternalRow =
-    new GenericInternalRow(Array[Any](d, c))
+  /** `cap_class` of a class code, as a `String`. */
+  private[graft] def capName(code: Int): String = capStrings(code % 3)
+
+  private def row(code: Int): InternalRow =
+    new GenericInternalRow(Array[Any](digits(code / 3), caps(code % 3)))
 
   private def isLineTerm(cp: Int): Boolean =
     cp == '\n' || cp == '\r' || cp == 0x85 || cp == 0x2028 || cp == 0x2029
 
-  def compute(tok: UTF8String): InternalRow = {
-    if (tok == null) return row(NODIGIT, NOCAPS)
-    if (!tok.isValid) return computeViaString(tok.toString)
-    val b = tok.getBytes
-    val n = b.length
+  def compute(tok: UTF8String): InternalRow =
+    row(if (tok == null) NoDigit * 3 + NoCaps
+      else if (!tok.isValid) codeViaString(tok.toString)
+      else { val b = tok.getBytes; code(b, 0, b.length) })
+
+  /** The class code of the token in bytes [`from`, `until`) of `b`, which
+   * must be valid UTF-8: the one core of [[compute]] and of the span walk's
+   * line feeder (`graft.plans.LineWalk`). */
+  private[graft] def code(b: Array[Byte], from: Int, until: Int): Int = {
     var anyNd = false
-    var allNd = n > 0
+    var allNd = until > from
     var anyLl = false
     var firstType = -1
-    var i = 0
-    while (i < n) {
+    var i = from
+    while (i < until) {
       val b0 = b(i)
       var cpLen = 1
       var cp: Int = b0 & 0xFF
@@ -105,36 +116,37 @@ object TokCaps {
             ((b(i + 2) & 0x3F) << 6) | (b(i + 3) & 0x3F))
         }
       }
-      if (isLineTerm(cp)) return computeViaString(tok.toString)
+      if (isLineTerm(cp))
+        return codeViaString(new String(b, from, until - from, java.nio.charset.StandardCharsets.UTF_8))
       val t = Character.getType(cp)
       if (t == Character.DECIMAL_DIGIT_NUMBER) anyNd = true else allNd = false
       if (t == Character.LOWERCASE_LETTER) anyLl = true
       if (firstType < 0) firstType = t
       i += cpLen
     }
-    val digit = if (allNd) ALLDIGIT else if (anyNd) CONTAINSDIGITS else NODIGIT
+    val digit = if (allNd) AllDigit else if (anyNd) ContainsDigits else NoDigit
     val cap =
-      if (allNd) NOCAPS
-      else if (!anyLl) ALLCAP
-      else if (firstType == Character.UPPERCASE_LETTER) INITCAP
-      else NOCAPS
-    row(digit, cap)
+      if (allNd) NoCaps
+      else if (!anyLl) AllCap
+      else if (firstType == Character.UPPERCASE_LETTER) InitCap
+      else NoCaps
+    digit * 3 + cap
   }
 
   /** The expression-semantics fallback (invalid UTF-8 or an embedded
    * line terminator): the original regex legs, verbatim. */
-  private[graft] def computeViaString(s: String): InternalRow = {
+  private def codeViaString(s: String): Int = {
     val digit =
-      if (AllDigitDollar.matcher(s).find()) ALLDIGIT
-      else if (AnyDigit.matcher(s).find()) CONTAINSDIGITS
-      else NODIGIT
+      if (AllDigitDollar.matcher(s).find()) AllDigit
+      else if (AnyDigit.matcher(s).find()) ContainsDigits
+      else NoDigit
     val cap =
-      if (digit eq ALLDIGIT) NOCAPS
-      else if (!AnyLower.matcher(s).find()) ALLCAP
+      if (digit == AllDigit) NoCaps
+      else if (!AnyLower.matcher(s).find()) AllCap
       else if (s.nonEmpty &&
-        FirstUpper.matcher(firstCodepoint(s)).find()) INITCAP
-      else NOCAPS
-    row(digit, cap)
+        FirstUpper.matcher(firstCodepoint(s)).find()) InitCap
+      else NoCaps
+    digit * 3 + cap
   }
 
   private val AllDigitDollar = java.util.regex.Pattern.compile("^\\p{Nd}+$")

@@ -14,17 +14,19 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Labeler, Lineage}
+import graft.functions.{LineKernels, TokCaps, TokenScan}
 
 /**
  * The body walk as a first-class Catalyst operator: one sorted walk over
- * the body tokens classifies each line and writes its output during the
- * walk, as the reference writes TEI during its label walk
- * (`DatacatSegmenterParser.java:1009-1088`). One logical node, strategy and
- * exec run one line walker ([[LineWalk]]) into one of three sinks: spans
- * ([[spans]], the flagship; [[fromLabels]] follows a committed `label`
- * column instead of classifying), BIO label rows ([[labels]]) or chunk
- * transition functions ([[transitions]]). Both span modes hand every token
- * to one span rule (`SpanAcc.token`).
+ * the body lines classifies each line and writes its output during the
+ * walk, as the reference tokenizes each line inside its label walk and
+ * writes TEI during it (`DatacatSegmenterParser.java:1009-1088`). One
+ * logical node, strategy and exec run one line walker ([[LineWalk]]) into
+ * one of three sinks: spans ([[fromLines]], the flagship, tokenizes each
+ * body line in the walk; [[spans]] reads token rows; [[fromLabels]] follows
+ * a committed `label` column instead of classifying), BIO label rows
+ * ([[labels]]) or chunk transition functions ([[transitions]]). Every span
+ * mode hands every token to one span rule (`SpanAcc.token`).
  *
  * A custom `LogicalPlan` + `Strategy` + `SparkPlan` because a
  * `mapPartitions` body cannot:
@@ -53,6 +55,16 @@ object BodySpans {
    * Catalyst via the operator's declared requirements.
    */
   def spans(feats: DataFrame): DataFrame = plan(feats, BodyWalk.FsmSpans)
+
+  /**
+   * Plan the fused FSM span extraction over body lines with columns
+   * (conv_id, turn_idx, line_in_turn, line): row-identical to
+   * `spans(Features.scalars(Structure.tokensFromLines(lines)))` (LineSpansSpec),
+   * but the walk tokenizes each line itself, so the plan has no token
+   * explode, no token-grain sort and no lag window; the line frame's sort
+   * feeds the walk.
+   */
+  def fromLines(lines: DataFrame): DataFrame = plan(lines, BodyWalk.LineSpans)
 
   /**
    * Plan span extraction over a BIO-labeled token frame with columns
@@ -96,31 +108,36 @@ object BodySpans {
   }
 }
 
-/** What the body walk reads: the token columns plus `extra`. The group is
- * (conv_id, `_chunk`) when the walk reads `_chunk`, else conv_id. */
-sealed abstract class BodyWalk(extra: String*) extends Serializable {
-  val inputCols: Seq[String] =
-    Seq("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok") ++ extra
+/** What the body walk reads: the line keys plus `cols`, one row per token,
+ * or one row per line when it reads `line`. The group is (conv_id,
+ * `_chunk`) when the walk reads `_chunk`, else conv_id. */
+sealed abstract class BodyWalk(cols: String*) extends Serializable {
+  val inputCols: Seq[String] = Seq("conv_id", "turn_idx", "line_in_turn") ++ cols
   def chunked: Boolean = inputCols.contains("_chunk")
+  def fromLines: Boolean = inputCols.contains("line")
   /** The walk emits its child's columns, then what it makes. */
   def passThrough: Boolean = this == BodyWalk.Labels || this == BodyWalk.ChunkLabels
 }
 
 object BodyWalk {
   /** The body FSM, emitting spans. */
-  case object FsmSpans extends BodyWalk("sep_before", "line_trailing", "f_capitalisation")
+  case object FsmSpans extends BodyWalk(
+    "tok_idx", "tok", "sep_before", "line_trailing", "f_capitalisation")
+  /** The body FSM over lines it tokenizes, emitting spans. */
+  case object LineSpans extends BodyWalk("line")
   /** The committed `label` column, emitting spans. */
-  case object LabelSpans extends BodyWalk("sep_before", "line_trailing", "label")
+  case object LabelSpans extends BodyWalk("tok_idx", "tok", "sep_before", "line_trailing", "label")
   /** The body FSM, emitting each token row with its BIO `label`. */
-  case object Labels extends BodyWalk("f_capitalisation")
-  case object ChunkLabels extends BodyWalk("f_capitalisation", "_chunk", "_peek", "_entry")
+  case object Labels extends BodyWalk("tok_idx", "tok", "f_capitalisation")
+  case object ChunkLabels extends BodyWalk(
+    "tok_idx", "tok", "f_capitalisation", "_chunk", "_peek", "_entry")
   /** The body FSM from every entry state, emitting each chunk's exit vector. */
-  case object Transitions extends BodyWalk("f_capitalisation", "_chunk", "_peek")
+  case object Transitions extends BodyWalk("tok_idx", "tok", "f_capitalisation", "_chunk", "_peek")
 
   /** The attributes a walk makes. A null input label (not BIO, but Assemble
    * tolerates it) passes through as a one-token span with a null label. */
   private[plans] def produced(mode: BodyWalk): Seq[Attribute] = mode match {
-    case FsmSpans | LabelSpans => Seq(
+    case FsmSpans | LineSpans | LabelSpans => Seq(
       AttributeReference("conv_id", StringType, nullable = true)(),
       AttributeReference("segment_id", LongType, nullable = false)(),
       AttributeReference("label", StringType, nullable = mode == LabelSpans)(),
@@ -230,9 +247,9 @@ private[plans] final class SpanAcc(out: mutable.Queue[InternalRow]) {
 }
 
 /**
- * Physical body walk: streams the sorted body tokens of each group —
- * `conv_id`, or (`conv_id`, `_chunk`) in the chunked modes — and emits
- * what the mode's sink makes. O(current line + current span) state.
+ * Physical body walk: streams the sorted body tokens (or lines) of each
+ * group — `conv_id`, or (`conv_id`, `_chunk`) in the chunked modes — and
+ * emits what the mode's sink makes. O(current line + current span) state.
  */
 case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribute],
     failures: Option[Lineage.PartitionStats]) extends UnaryExecNode {
@@ -251,9 +268,11 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
     ClusteredDistribution(groupCols.map(n => child.output(idx(n))),
       requireAllClusterKeys = mode.chunked) :: Nil
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    (groupCols ++ Seq("turn_idx", "line_in_turn", "tok_idx"))
-      .map(n => SortOrder(child.output(idx(n)), Ascending)))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = {
+    val keys = groupCols ++ Seq("turn_idx", "line_in_turn") ++
+      (if (mode.fromLines) Nil else Seq("tok_idx"))
+    Seq(keys.map(n => SortOrder(child.output(idx(n)), Ascending)))
+  }
 
   // a pass-through walk emits a subset of its input rows, in input order
   override def outputPartitioning: Partitioning =
@@ -265,15 +284,15 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
   override protected def doExecute(): RDD[InternalRow] = {
     def read(name: String) = if (mode.inputCols.contains(name)) idx(name) else -1
     val cols = WalkCols(idx("conv_id"), idx("turn_idx"), idx("line_in_turn"),
-      idx("tok"), read("sep_before"), read("line_trailing"),
-      idx(if (mode == BodyWalk.LabelSpans) "label" else "f_capitalisation"),
+      read("line"), read("tok"), read("sep_before"), read("line_trailing"),
+      read(if (mode == BodyWalk.LabelSpans) "label" else "f_capitalisation"),
       read("_chunk"), read("_peek"), read("_entry"))
     val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
     val m = mode
     val fails = failures
     child.execute().mapPartitions { it =>
       m match {
-        case BodyWalk.FsmSpans | BodyWalk.LabelSpans =>
+        case BodyWalk.FsmSpans | BodyWalk.LineSpans | BodyWalk.LabelSpans =>
           new SpanSink(it, outSchema, cols, fromLabels = m == BodyWalk.LabelSpans)
         case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols, fails)
         case BodyWalk.Transitions => new TransitionSink(it, outSchema, cols)
@@ -286,9 +305,10 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
 }
 
 /** Child ordinals a walk reads, -1 where the mode has no such column;
- * `labelOrCap` is `label` in the label-span walk, `f_capitalisation` in the
- * FSM walks. */
-private[plans] case class WalkCols(conv: Int, turn: Int, line: Int, tok: Int,
+ * `text` is the `line` column of the line-input walk, `labelOrCap` is
+ * `label` in the label-span walk, `f_capitalisation` in the token FSM
+ * walks. */
+private[plans] case class WalkCols(conv: Int, turn: Int, line: Int, text: Int, tok: Int,
     sep: Int, trail: Int, labelOrCap: Int, chunk: Int, peek: Int, entry: Int)
 
 /** One buffered body line: its tokens' text and capitalisation (or label),
@@ -310,12 +330,13 @@ private[plans] final class Line {
 }
 
 /**
- * The line walker over sorted body tokens, the only one: a sink's
+ * The line walker over sorted body tokens or lines, the only one: a sink's
  * [[line]] sees each line, [[project]] turns what it queues on `out` into
- * output rows. The input is sorted by (group, turn_idx, line_in_turn,
+ * output rows. Token input is sorted by (group, turn_idx, line_in_turn,
  * tok_idx); the group is `conv_id`, or (`conv_id`, `_chunk`) in the chunked
  * modes, and a line is a maximal run of equal (group, turn_idx,
- * line_in_turn).
+ * line_in_turn). Line input (`text` read) is sorted by (conv_id, turn_idx,
+ * line_in_turn) and [[feedLine]] tokenizes each row into the same buffer.
  *
  *  - a group starts in state `_entry`, or 0 when it is absent or null;
  *  - each non-peek line goes to [[line]] once its successor in the same
@@ -359,11 +380,9 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
       None
     }
 
-  private def step(r: InternalRow): Unit = {
-    val conv = str(r, c.conv)
-    val chunk = if (c.chunk < 0) 0 else r.getInt(c.chunk)
-    val turn = r.getInt(c.turn)
-    val ln = r.getInt(c.line)
+  /** Moves the walk to the line (conv, chunk, turn, ln) of row `r`: the
+   * line before it is complete, and so is its group if `r` starts another. */
+  private def enter(r: InternalRow, conv: String, chunk: Int, turn: Int, ln: Int): Unit = {
     val newGroup = cur.toks.isEmpty || conv != cur.conv || chunk != cur.chunk
     if (cur.toks.nonEmpty) {
       if (newGroup) endOfGroup()
@@ -374,10 +393,73 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
       cur.peek = c.peek >= 0 && r.getBoolean(c.peek)
       if (newGroup) startGroup(r)
     }
-    cur.toks += str(r, c.tok)
-    cur.caps += str(r, c.labelOrCap)
-    keep(r, cur)
   }
+
+  private def step(r: InternalRow): Unit =
+    if (c.text >= 0) feedLine(r)
+    else {
+      enter(r, str(r, c.conv), if (c.chunk < 0) 0 else r.getInt(c.chunk),
+        r.getInt(c.turn), r.getInt(c.line))
+      cur.toks += str(r, c.tok)
+      cur.caps += str(r, c.labelOrCap)
+      keep(r, cur)
+    }
+
+  // the line feeder's state: the previous body line of the conversation
+  private val scan = new TokenScan
+  private var fed = false
+  private var prevConv: String = null
+  private var prevTurn = 0
+  private var prevLine = 0
+  private var prevTrail = ""
+
+  /**
+   * One body line, tokenized as [[graft.extract.Structure.tokensFromLines]]
+   * tokenizes it, with the same cores: [[TokenScan]] for `graft_tokenize`,
+   * [[TokCaps]] for `f_capitalisation`, [[LineKernels]] for `line_trailing`.
+   * Invalid UTF-8 is cleaned first (U+FFFD), as those kernels clean it. The
+   * first token's separator follows that method's lag rule: the previous
+   * line's trailing whitespace, one `\n` per line gap (0 on the
+   * conversation's first line, 1 across turns, else the `line_in_turn`
+   * difference), then its own. A line without tokens still moves that
+   * state, because the lag runs over lines, not tokens.
+   */
+  private def feedLine(r: InternalRow): Unit = {
+    val conv = str(r, c.conv)
+    val turn = r.getInt(c.turn)
+    val ln = r.getInt(c.line)
+    val newConv = !fed || conv != prevConv
+    if (newConv) prevTrail = ""
+    val gap = if (newConv) 0 else if (turn != prevTurn) 1 else ln - prevLine
+    var trail = ""
+    if (!r.isNullAt(c.text)) {
+      val raw = r.getUTF8String(c.text)
+      val u = if (raw.isValid) raw else UTF8String.fromString(raw.toString)
+      val b = u.getBytes
+      val end = LineKernels.trailingEnd(u)
+      trail = decode(b, LineKernels.trailingStart(u, end), end)
+      scan.scan(b)
+      if (scan.count > 0) enter(r, conv, 0, turn, ln)
+      var k = 0
+      while (k < scan.count) {
+        val from = scan.tokFrom(k)
+        val until = scan.tokUntil(k)
+        cur.toks += decode(b, from, until)
+        cur.caps += TokCaps.capName(TokCaps.code(b, from, until))
+        val sep = decode(b, scan.sepFrom(k), scan.sepUntil(k))
+        cur.seps += (if (k == 0) prevTrail + "\n" * gap + sep else sep)
+        cur.trails += trail
+        k += 1
+      }
+    }
+    fed = true
+    prevConv = conv; prevTurn = turn; prevLine = ln; prevTrail = trail
+  }
+
+  private def decode(b: Array[Byte], from: Int, until: Int): String =
+    if (from == until) ""
+    else if (until - from == 1 && b(from) == ' ') " "
+    else new String(b, from, until - from, java.nio.charset.StandardCharsets.UTF_8)
 
   /** The current line is complete: it is the pending line's lookahead, then
    * the pending line itself unless it is a peek. */

@@ -10,7 +10,8 @@ import graft.extract.Pipeline
  * NBSP-padded text, CJK, emoji, `\r`/`\t` noise, 20k-char lines) instead
  * of only inside `graft.Verify`. Each query's `n_mismatch` must be 0; the
  * corpus must yield spans, or the checks would hold vacuously. The spans
- * must not depend on the order in which the transcript rows arrive.
+ * must not depend on the order in which the transcript rows arrive, nor on
+ * a turn-salted partitioning.
  */
 class AdversarialInvariantSpec extends SparkSpec {
 
@@ -34,20 +35,23 @@ class AdversarialInvariantSpec extends SparkSpec {
     val reversed = spark.createDataFrame(
       spark.sparkContext.parallelize(asRead.collect().toSeq.reverse, 3), asRead.schema)
     val shuffled = asRead.repartition(7)
+    val salted = Pipeline.saltedByTurn(asRead, 5, salt = 3)
     Seq[(String, DataFrame => DataFrame)](
       "extract" -> (t => Pipeline.extract(t)),
       "extractChunked" -> (t => Pipeline.extractChunked(t, chunkTurns = 3))
     ).foreach { case (path, run) =>
       val want = sorted(run(asRead))
       assert(want.nonEmpty, path)
-      Seq("reversed" -> reversed, "repartition(7)" -> shuffled).foreach { case (order, t) =>
+      Seq("reversed" -> reversed, "repartition(7)" -> shuffled,
+        "saltedByTurn(5, salt = 3)" -> salted).foreach { case (order, t) =>
         assert(sorted(run(t)) == want, s"$path over the $order transcripts")
       }
     }
   }
 
   Seq("pipeline_rebuild_diff", "w10_label_spans_diff", "pipeline_declarative_diff",
-    "w10_chunked_diff", "pipeline_chunked_diff", "tei_sharded_diff").foreach { q =>
+    "w10_chunked_diff", "pipeline_chunked_diff", "tei_sharded_diff",
+    "doc_rebuild_diff", "doc_chunked_diff").foreach { q =>
     test(s"$q finds no mismatch on the adversarial corpus") {
       val n = SparkEntry.queries(q)(spark, dir).head().getAs[Long]("n_mismatch")
       assert(n == 0L, s"$q: $n mismatching rows")

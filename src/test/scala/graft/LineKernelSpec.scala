@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.extract.{Structure, Synthetic}
@@ -47,13 +47,10 @@ object LineTwins {
   def trailingSpace(line: Column): Column = regexp_extract(line, "[\\x20\\t\\f]*$", 0)
 }
 
-/**
- * Each line-layer kernel equals the expression it replaced — on fixed
- * traps and on seeded fuzz, under generated code and under interpreted
- * `eval` — and `Structure.lines` equals its window-chain twin in every
- * column and type.
- */
-class LineKernelSpec extends SparkSpec {
+/** The line kernels' test strings: fixed traps, invalid UTF-8 and seeded
+ * fuzz over a pool of letters, digits, delimiters and every separator the
+ * line layer tells apart. */
+object LineFuzz {
 
   private val seps = Seq(" ", "\t", "\f", "\u00a0", "\r", "\r\r", "\r\n", "\n",
     "\n\n", "\u0085", "\u2028", "\u2029", "\u000b", "  ", "\t\t", "\f\f")
@@ -62,7 +59,7 @@ class LineKernelSpec extends SparkSpec {
     "ª") ++ seps).toArray
 
   /** Valid fixed traps, as text. */
-  private val traps: Seq[String] = Seq("", " ", "   ", "\t", "\t\t", "\f", "\u00a0",
+  val traps: Seq[String] = Seq("", " ", "   ", "\t", "\t\t", "\f", "\u00a0",
     "\u00a0\u00a0 x", "abc", "abc \r", "ab \r\r", "ab \t\r\n", "ab \n", "ab \u0085",
     "ab \u2028", "ab \u2029", "ab\u00a0", "x \u00a0 ", "a\r\nb \r\n", " \r", "\r", "\n", "\n\n", "\nlead",
     "trail\n", "a\n\nb", "a\n \nb", "a\n\t\nb", " \t\fword\t rest", "\r\nword",
@@ -72,41 +69,39 @@ class LineKernelSpec extends SparkSpec {
 
   /** Byte strings with invalid UTF-8: a lone continuation byte, 0xFF, an
    * overlong NUL, an encoded surrogate, a cut 3-byte sequence. */
-  private val invalid: Seq[Array[Byte]] = Seq(
+  val invalid: Seq[Array[Byte]] = Seq(
     Array('a', 0x80, 'b'), Array(0xff, ' ', '\r'), Array(0xc0, 0x80, 'x', ' '),
     Array('x', 0xed, 0xa0, 0x80, ' ', 'y'), Array(' ', 'a', 0xe2, 0x80),
     Array('a', '\n', 0x80, ' ', '\n', ' ', '\n', 'b', 0xe2, 0x80, 0xa8))
     .map(_.map(_.toByte))
 
-  private def fuzz(seed: Long, n: Int, maxLen: Int): Seq[String] = {
+  def fuzz(seed: Long, n: Int, maxLen: Int): Seq[String] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(n)(Seq.fill(rnd.nextInt(maxLen))(pool(rnd.nextInt(pool.length))).mkString)
   }
 
-  /** One string column `s` (nulls, invalid UTF-8 and the fuzz included),
-   * behind an exchange so the optimizer does not fold it as a local
+  /** `texts`, then [[invalid]], then a null, as a string column `s` with an
+   * `id`, behind an exchange so the optimizer does not fold it as a local
    * relation. */
-  private def strings(texts: Seq[String]): DataFrame = {
+  def strings(spark: SparkSession, texts: Seq[String]): DataFrame = {
     val bytes = (texts.map(t => t.getBytes("UTF-8")) ++ invalid :+ null)
       .zipWithIndex.map { case (b, i) => Row(i.toLong, b) }
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, b BINARY")
     spark.createDataFrame(spark.sparkContext.parallelize(bytes, 3), schema)
       .repartition(3).select(col("id"), col("b").cast("string").as("s"))
   }
+}
 
-  private def underEachCodegenMode(f: => Unit): Unit =
-    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, ws) =>
-      val (m0, ws0) = (spark.conf.get("spark.sql.codegen.factoryMode"),
-        spark.conf.get("spark.sql.codegen.wholeStage"))
-      try {
-        spark.conf.set("spark.sql.codegen.factoryMode", mode)
-        spark.conf.set("spark.sql.codegen.wholeStage", ws)
-        withClue(s"codegen $mode: ")(f)
-      } finally {
-        spark.conf.set("spark.sql.codegen.factoryMode", m0)
-        spark.conf.set("spark.sql.codegen.wholeStage", ws0)
-      }
-    }
+/**
+ * Each line-layer kernel equals the expression it replaced — on fixed
+ * traps and on seeded fuzz, under generated code and under interpreted
+ * `eval` — and `Structure.lines` equals its window-chain twin in every
+ * column and type.
+ */
+class LineKernelSpec extends SparkSpec {
+  import LineFuzz._
+
+  private def strings(texts: Seq[String]): DataFrame = LineFuzz.strings(spark, texts)
 
   /** Kernel and twin over the same strings, byte for byte. */
   private def assertLegEqual(name: String, kernel: Column => Column,

@@ -145,21 +145,32 @@ class PlanOperatorSpec extends SparkSpec {
   test("the flagship plan keeps its window, sort, generate and exchange counts") {
     // the turn → lines kernel replaced the line layer's three windows and
     // their two sorts; patternCandidates' max(block_idx) window places its
-    // own (conv_id, turn_idx) sort
+    // own (conv_id, turn_idx) sort and the repetitive count its (conv_id,
+    // pat) sort; the line sort feeds the span walk, which tokenizes, so the
+    // lag window, the token explode and the token sort are gone, and the
+    // body-line rule needs no max(turn_idx) window
     val plan = flagshipPlan
     val nodes = plan.collect { case n => n.nodeName }
     val counts = Seq("Window", "Sort", "Generate", "Exchange").map(n => n -> nodes.count(_ == n))
-    assert(counts == Seq("Window" -> 4, "Sort" -> 4, "Generate" -> 2, "Exchange" -> 1),
+    assert(counts == Seq("Window" -> 2, "Sort" -> 3, "Generate" -> 1, "Exchange" -> 1),
       s"operator counts changed:\n$plan")
   }
 
   test("the flagship plan tokenizes each line once") {
-    // a generator over a `toks` attribute made InferFiltersFromGenerate add
-    // size(toks) > 0, which pushdown inlined as a second tokenizer call
+    // inside the span walk: no graft_tokenize expression, and the walk's
+    // child is the sort of the body lines, not of token rows
     val plan = flagshipPlan
     val calls = plan.collect { case n => n.expressions }.flatten
       .map(_.collect { case t: graft.functions.Tokenize => t }.size).sum
-    assert(calls == 1, s"graft_tokenize calls: $calls\n$plan")
+    assert(calls == 0, s"graft_tokenize calls: $calls\n$plan")
+    val walk = plan.collect { case w: graft.plans.BodySpansExec => w }
+    assert(walk.size == 1, plan)
+    walk.head.child match {
+      case sort: org.apache.spark.sql.execution.SortExec =>
+        assert(sort.sortOrder.map(_.child.references.head.name) ==
+          Seq("conv_id", "turn_idx", "line_in_turn"), plan)
+      case other => fail(s"the walk's child is not a sort:\n$other")
+    }
   }
 
   test("bodyLabelsChunked keeps its (conv_id, _chunk) exchanges and broadcast joins") {

@@ -18,6 +18,21 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `f` under generated code, then under interpreted `eval`. */
+  def underEachCodegenMode(f: => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, ws) =>
+      val (m0, ws0) = (spark.conf.get("spark.sql.codegen.factoryMode"),
+        spark.conf.get("spark.sql.codegen.wholeStage"))
+      try {
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        withClue(s"codegen $mode: ")(f)
+      } finally {
+        spark.conf.set("spark.sql.codegen.factoryMode", m0)
+        spark.conf.set("spark.sql.codegen.wholeStage", ws0)
+      }
+    }
 }
 
 /** Suites whose every test reads the reference gold corpus: without it

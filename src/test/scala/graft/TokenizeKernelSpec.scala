@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Tokenize
 import graft.text.Tok
 
@@ -12,9 +12,11 @@ import graft.text.Tok
  * [[Tokenize.tokenizeViaString]] (the original `toString` →
  * [[Tok.tokenize]] → `fromString` round-trip) element-for-element —
  * token bytes AND separator bytes. Exercises every delimiter character,
- * NBSP, astral codepoints, CR/LF/FF/tab runs, and random fuzz.
+ * NBSP, astral codepoints, CR/LF/FF/tab runs, and random fuzz. The
+ * `graft_tokenize` expression equals [[Tok.tokenize]] under generated code
+ * and under interpreted `eval`.
  */
-class TokenizeKernelSpec extends AnyFunSuite {
+class TokenizeKernelSpec extends SparkSpec {
 
   private def arrToPairs(a: org.apache.spark.sql.catalyst.util.ArrayData) =
     (0 until a.numElements()).map { i =>
@@ -76,5 +78,20 @@ class TokenizeKernelSpec extends AnyFunSuite {
     val parts = arrToPairs(Tokenize.tokenize(u))
     val rebuilt = parts.map { case (t, sep) => sep + t }.mkString + Tok.trailing(s)
     assert(rebuilt === s)
+  }
+
+  test("graft_tokenize equals Tok.tokenize under generated and interpreted code") {
+    import LineFuzz.{fuzz, invalid, traps}
+    val texts = traps ++ fuzz(31L, 2000, 30)
+    val strings = LineFuzz.strings(spark, texts)
+    underEachCodegenMode {
+      val rows = strings.select(col("s"), Tokenize.ofAttr("s").as("t")).collect()
+      assert(rows.length == texts.length + invalid.length + 1)
+      rows.foreach { r =>
+        val got = r.getSeq[Row](1).map(t => (t.getString(0), t.getString(1)))
+        val want = Option(r.getString(0)).toSeq.flatMap(Tok.tokenize).map(t => (t.text, t.sepBefore))
+        assert(got == want, s"input=${Option(r.getString(0)).map(_.take(60))}")
+      }
+    }
   }
 }
