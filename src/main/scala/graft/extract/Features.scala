@@ -341,7 +341,9 @@ object Features {
    * [[graft.functions.LineKernels.firstWord]] (equal to the first element of
    * the segmenter's `lineToks` stripped of `[ \n\r]`); `head_tail_block`
    * marks the first-2/last blocks of a turn, `pat_candidate` a block-first
-   * line that is [[patNeedy]]. */
+   * line that is [[patNeedy]]. The flagship does not build these windows:
+   * its span walk applies the same rule per conversation with the same
+   * kernel cores (`graft.plans.TranscriptZoner`, TranscriptSpansSpec). */
   private[extract] def patternCandidates(lines: DataFrame): DataFrame =
     lines
       .withColumn("f_string", graft.functions.LineKernels.firstWordOf(col("line")))

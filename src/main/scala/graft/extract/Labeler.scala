@@ -3,6 +3,7 @@ package graft.extract
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.text.TextCols
 
 /**
@@ -24,7 +25,9 @@ import graft.text.TextCols
  *    The FSM is O(1) state per conversation and never materializes a
  *    conversation in memory (buffering only one line at a time), so a
  *    10^9-turn conversation streams through — the reason we do NOT use
- *    groupByKey here.
+ *    groupByKey here. (The walk's transcript mode zones a conversation
+ *    before it labels it, so it holds the conversation's candidate body
+ *    lines, in a buffer that spills as a window partition's does.)
  */
 object Labeler {
 
@@ -58,6 +61,17 @@ object Labeler {
       .when(col("role") === "system" && isLastTurn, "<back>")
       .when(col("role") === "system", "<other>")
       .otherwise("<body>")
+
+  private val toolRole = UTF8String.fromString("tool")
+  private val systemRole = UTF8String.fromString("system")
+
+  /** What role and tool decide of [[transcriptZone]]'s `<body>` test, for
+   * the span walk's transcript mode ([[graft.plans.BodySpans.fromTranscript]]):
+   * a line can be `<body>` only without a tool and with a role other than
+   * `tool` and `system` (a null role included); such a line is `<body>`
+   * unless it is repetitive. */
+  private[graft] def bodyRole(role: UTF8String, tool: UTF8String): Boolean =
+    tool == null && (role == null || !(role == toolRole || role == systemRole))
 
   /** BIO encoding of `zone` along `wOrd`: a conversation's first line and
    * every zone change are `I-<zone>`. */
@@ -495,8 +509,8 @@ object Labeler {
       .select((inCols :+ "zone" :+ "zone_label").map(col): _*))
   }
 
-  private[extract] val entryStartRe = "^(\\p{Nd}+|[iIjJ!,]\\p{Nd}*|[iIjJ]{1,3})$".r
-  private[extract] val dashSet = Set("-", "_", "–", "−", ".")
+  private[graft] val entryStartRe = "^(\\p{Nd}+|[iIjJ!,]\\p{Nd}*|[iIjJ]{1,3})$".r
+  private[graft] val dashSet = Set("-", "_", "–", "−", ".")
 
   /** Pure line-shape test for "starts a lot entry" — shared between the
    * classifier and the drivers' ONE-LINE LOOKAHEAD (the CRF's window
@@ -508,15 +522,23 @@ object Labeler {
       // null-tolerant: runs in the drivers' lookahead OUTSIDE the per-line
       // error isolation (a malformed NEXT line must not kill the current)
       val head = toks.head
-      entryStartRe.findFirstIn(head).isDefined &&
+      mayStartEntry(head) && entryStartRe.findFirstIn(head).isDefined &&
         ((toks.size > 1 && dashSet(toks(1))) || head.forall(_.isDigit))
     }
+
+  /** [[entryStartRe]]'s first-code-point test, run before the regex: only
+   * a `\p{Nd}` digit or one of `iIjJ!,` can open a match. */
+  private[graft] def mayStartEntry(head: String): Boolean = head.nonEmpty && {
+    val cp = head.codePointAt(0)
+    Character.getType(cp) == Character.DECIMAL_DIGIT_NUMBER || "iIjJ!,".indexOf(cp) >= 0
+  }
 
   /** The body FSM's line-classification state machine, run by the one line
    * walker over sorted body tokens (`graft.plans.LineWalk` inside
    * [[graft.plans.BodySpansExec]]), which hands each classified line to a
    * span, label or transition sink. A line's entry test is [[isEntryLine]],
-   * the same test the walker's lookahead runs on the next line. */
+   * which the walker runs once per line, as its predecessor's lookahead,
+   * and passes to [[classify]] as `isEntry`. */
   private[graft] final class LineClassifier {
     private var openLabel: String = null
     private var lastWasTitle = false
@@ -558,6 +580,7 @@ object Labeler {
     }
 
     /** Returns (base label, starts-new-span) and advances the state.
+     * `isEntry` = [[isEntryLine]] of `toks`;
      * `nextIsEntry` = the FOLLOWING line of the same conversation starts a
      * lot entry ([[isEntryLine]]) — supplied by the drivers' one-line
      * lookahead; false at conversation/input end.
@@ -568,7 +591,7 @@ object Labeler {
      * semantics are pinned by LabelerEvalSpec (99.5 vs gold) and the
      * fused≡declarative differential. */
     def classify(toks: collection.Seq[String], caps: collection.Seq[String],
-        nextIsEntry: Boolean): (String, Boolean) = {
+        isEntry: Boolean, nextIsEntry: Boolean): (String, Boolean) = {
       val n = toks.size
       // one pass: alpha-token stats, digit/roman/paren/dash shape flags
       var nAlpha = 0; var maxAlphaLen = 0; var allCapsAcc = true
@@ -616,7 +639,6 @@ object Labeler {
       }
       val allCaps = nAlpha > 0 && allCapsAcc
       val head = if (n > 0) toks.head else ""
-      val isEntry = isEntryLine(toks)
       // heading shapes (tuned against the 14 gold body docs, LabelerEvalSpec):
       // all-caps headings need a real word (>=4 letters), no year/long-roman-
       // numeral token and an alphabetic first token, so coin-grade codes

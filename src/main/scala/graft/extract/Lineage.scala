@@ -3,6 +3,8 @@ package graft.extract
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.AccumulatorV2
 import scala.collection.concurrent.TrieMap
 
@@ -64,9 +66,9 @@ object Lineage {
   }
 
   /** Pass-through that counts rows and text characters per partition:
-   * the `String.length` (UTF-16 units) of each non-null `textCols` value
-   * feeds the counter reported as `bytes`. It walks the InternalRows of
-   * `df`'s execution behind a plan barrier, so a stage commit pays no
+   * the `String.length` (UTF-16 units, [[utf16Length]]) of each non-null
+   * `textCols` value feeds the counter reported as `bytes`. It walks the
+   * InternalRows of `df`'s execution behind a plan barrier, so a stage commit pays no
    * Row-encoder round trip. Totals are accumulated
    * task-locally and reported once at partition exhaustion, so `acc` MUST
    * be a dedupe accumulator ([[newTotals]]) — retries then re-report the
@@ -92,12 +94,32 @@ object Lineage {
           val r = it.next()
           rows += 1
           idxs.foreach { i =>
-            if (!r.isNullAt(i)) bytes += r.getUTF8String(i).toString.length.toLong }
+            if (!r.isNullAt(i)) bytes += utf16Length(r.getUTF8String(i)) }
           r
         }
       }
     })
   }
+
+  /** `u.toString.length` without decoding: valid UTF-8 has one UTF-16 unit
+   * per code point (`numChars`, one per non-continuation byte) plus one per
+   * 4-byte lead byte (a surrogate pair); invalid UTF-8 is decoded, as
+   * `toString` replaces its bad bytes. */
+  private[graft] def utf16Length(u: UTF8String): Int =
+    if (!u.isValid) u.toString.length
+    else {
+      val base = u.getBaseObject
+      val off = u.getBaseOffset
+      var n = 0
+      var i = 0
+      while (i < u.numBytes) {
+        val b = Platform.getByte(base, off + i)
+        if ((b & 0xC0) != 0x80) n += 1
+        if ((b & 0xF8) == 0xF0) n += 1
+        i += 1
+      }
+      n
+    }
 
   /** Materialize collected per-partition stats as a lineage DataFrame.
    * `failures` carries per-partition parse-failure counts (see

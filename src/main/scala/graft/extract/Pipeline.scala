@@ -32,24 +32,26 @@ object Pipeline {
   /**
    * Full extraction: body spans of the <body> zone per conversation.
    *
-   * Single-pass, single-exchange: the kept lines are hash-partitioned by
-   * conv_id ONCE up front; every downstream window (keys ⊇ {conv_id}), the
-   * body-line filter and the span FSM are all satisfied by that one
-   * exchange — `.explain` shows exactly one hashpartitioning(conv_id). The
-   * FSM runs as the custom Catalyst operator in its line-input mode
-   * ([[graft.plans.BodySpans.fromLines]]): its DECLARED ClusteredDistribution
-   * + (conv_id, turn_idx, line_in_turn) order let EnsureRequirements reuse
-   * the exchange and sort the body lines once; it tokenizes each line
-   * during the walk (no token rows, no token sort) and hands each
-   * classified line straight to the span rule (no label rows). It is
-   * differential-tested byte-identical to [[extractDeclarative]]
-   * (`bodyLabels`, the same operator's label sink over token rows, then
-   * [[Assemble.bodySpans]]). [[runResumable]] labels with `bodyLabels`,
-   * commits, then walks the committed labels with the operator's
-   * label-span mode.
+   * Single-pass, single-exchange: the turns are hash-partitioned by conv_id
+   * ONCE up front, and the kept lines go straight to the span walk, the
+   * custom Catalyst operator in its transcript mode
+   * ([[graft.plans.BodySpans.fromTranscript]]): its DECLARED
+   * ClusteredDistribution + (conv_id, turn_idx, line_in_turn) order let
+   * EnsureRequirements reuse that exchange and sort the kept lines once —
+   * `.explain` shows exactly one hashpartitioning(conv_id), one sort and no
+   * window. Per conversation the walk applies the zone rule of
+   * [[bodyLines]] itself, tokenizes each body line (no token rows, no token
+   * sort) and hands each classified line straight to the span rule (no
+   * label rows). It is differential-tested byte-identical to
+   * `fromLines(bodyLines)` (TranscriptSpansSpec) and to
+   * [[extractDeclarative]] (`bodyLabels`, the same operator's label sink
+   * over token rows, then [[Assemble.bodySpans]]). [[runResumable]] labels
+   * with `bodyLabels`, commits, then walks the committed labels with the
+   * operator's label-span mode.
    */
   def extract(turns: DataFrame): DataFrame =
-    graft.plans.BodySpans.fromLines(bodyLines(turns))
+    graft.plans.BodySpans.fromTranscript(
+      Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id")))
 
   /** The columns of a body line: what every stage-1 hands the tokenizer. */
   private val bodyLineCols = Seq("conv_id", "turn_idx", "role", "tool", "block_idx",
@@ -198,11 +200,13 @@ object Pipeline {
   def extractDeclarative(turns: DataFrame): DataFrame =
     Assemble.bodySpans(labeledBodyTokens(turns))
 
-  /** structure → the `<body>` lines, over one exchange. The zone rule reads
-   * one segmenter column, so the [[Features.segmenter]] windows are not
-   * built (analysing them only for the optimizer to prune was most of a
-   * pass's driver cost), nor the [[Labeler.zones]] windows that body
-   * membership does not read. */
+  /** structure → the `<body>` lines, over one exchange: the Catalyst zone
+   * rule behind [[labeledBodyTokens]] (so [[runResumable]] and
+   * [[extractDeclarative]]), and the rule [[extract]]'s span walk applies
+   * per conversation. It reads one segmenter column, so the
+   * [[Features.segmenter]] windows are not built (analysing them only for
+   * the optimizer to prune was most of a pass's driver cost), nor the
+   * [[Labeler.zones]] windows that body membership does not read. */
   private def bodyLines(turns: DataFrame): DataFrame = {
     val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
     // F4: zone selection is a plain filter because labels are columns

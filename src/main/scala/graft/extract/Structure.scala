@@ -100,8 +100,9 @@ object Structure {
    * reuse the zoned lines instead of re-structuring the turns). Extra
    * columns on `lines` are carried through to the token rows. The flagship
    * and document mode explode no tokens: their span walk
-   * ([[graft.plans.BodySpans.fromLines]]) tokenizes each body line with
-   * the same kernels and this lag rule (LineSpansSpec). */
+   * ([[graft.plans.BodySpans.fromTranscript]],
+   * [[graft.plans.BodySpans.fromLines]]) tokenizes each body line with the
+   * same kernels and this lag rule (LineSpansSpec). */
   def tokensFromLines(keptLines: DataFrame): DataFrame = {
     val wLine = Window.partitionBy("conv_id")
       .orderBy(col("turn_idx"), col("line_in_turn"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -174,19 +174,12 @@ object LineKernels {
   def firstWord(line: UTF8String): UTF8String = {
     if (line == null) return UTF8String.EMPTY_UTF8
     val u = clean(line)
-    val n = u.numBytes
-    var from = 0
-    while (from < n && isSpace(byteAt(u, from))) from += 1
-    var until = from
-    var crlf = 0
-    while (until < n && !isSpace(byteAt(u, until))) {
-      val c = byteAt(u, until)
-      if (c == '\r' || c == '\n') crlf += 1
-      until += 1
-    }
-    if (crlf == 0) copyOut(u, from, until)
+    val run = firstRun(u)
+    val (from, until) = (runFrom(run), runUntil(run))
+    val len = wordBytes(u, from, until)
+    if (len == until - from) copyOut(u, from, until)
     else {
-      val out = new Array[Byte](until - from - crlf)
+      val out = new Array[Byte](len)
       var k = 0
       var i = from
       while (i < until) {
@@ -198,11 +191,41 @@ object LineKernels {
     }
   }
 
+  /** The first run of bytes outside `[\x20\t\f]` in `u` (valid UTF-8), as
+   * `from << 32 | until`: [[firstWord]]'s leg core, shared with the span
+   * walk's zone rule ([[runFrom]], [[runUntil]]). */
+  private[graft] def firstRun(u: UTF8String): Long = {
+    val n = u.numBytes
+    var from = 0
+    while (from < n && isSpace(byteAt(u, from))) from += 1
+    var until = from
+    while (until < n && !isSpace(byteAt(u, until))) until += 1
+    (from.toLong << 32) | until
+  }
+  private[graft] def runFrom(run: Long): Int = (run >>> 32).toInt
+  private[graft] def runUntil(run: Long): Int = run.toInt
+
+  /** The bytes of `[from, until)` in `u` other than `\r` and `\n`: the
+   * length of [[firstWord]] over [[firstRun]]. */
+  private[graft] def wordBytes(u: UTF8String, from: Int, until: Int): Int = {
+    var k = 0
+    var i = from
+    while (i < until) {
+      val c = byteAt(u, i)
+      if (c != '\r' && c != '\n') k += 1
+      i += 1
+    }
+    k
+  }
+
   /** The code points whose `Character.isLetter` holds — Java regex `\p{L}`
    * is the L general category, as is `isLetter`. */
-  def letters(line: UTF8String): UTF8String = {
-    if (line == null) return null
-    val u = clean(line)
+  def letters(line: UTF8String): UTF8String =
+    if (line == null) null else validLetters(clean(line))
+
+  /** [[letters]] of `u`, which is valid UTF-8: the leg core, shared with the
+   * span walk's zone rule. */
+  private[graft] def validLetters(u: UTF8String): UTF8String = {
     val n = u.numBytes
     val out = new Array[Byte](n)
     var k = 0
@@ -230,6 +253,12 @@ object LineKernels {
     }
     if (k == n) u else UTF8String.fromBytes(java.util.Arrays.copyOf(out, k))
   }
+
+  /** `TextCols.pattern` of `u` (valid UTF-8): [[validLetters]], lower-cased
+   * by the call Spark's `Lower` makes, with the session's
+   * `spark.sql.icu.caseMappings.enabled` as `icu`. */
+  private[graft] def pattern(u: UTF8String, icu: Boolean): UTF8String =
+    CollationSupport.Lower.exec(validLetters(u), StringType.collationId, icu)
 
   /** The run of `[\x20\t\f]` that ends where Java's `$` first matches:
    * before one final line terminator (`\r\n`, `\n`, `\r`, U+0085, U+2028 or

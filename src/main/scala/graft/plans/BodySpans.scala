@@ -5,12 +5,13 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{Labeler, Lineage}
@@ -22,11 +23,13 @@ import graft.functions.{LineKernels, TokCaps, TokenScan}
  * walk, as the reference tokenizes each line inside its label walk and
  * writes TEI during it (`DatacatSegmenterParser.java:1009-1088`). One
  * logical node, strategy and exec run one line walker ([[LineWalk]]) into
- * one of three sinks: spans ([[fromLines]], the flagship, tokenizes each
- * body line in the walk; [[spans]] reads token rows; [[fromLabels]] follows
- * a committed `label` column instead of classifying), BIO label rows
- * ([[labels]]) or chunk transition functions ([[transitions]]). Every span
- * mode hands every token to one span rule (`SpanAcc.token`).
+ * one of three sinks: spans ([[fromTranscript]], the flagship, zones each
+ * conversation's kept lines and tokenizes each body line in the walk;
+ * [[fromLines]] tokenizes given body lines; [[spans]] reads token rows;
+ * [[fromLabels]] follows a committed `label` column instead of
+ * classifying), BIO label rows ([[labels]]) or chunk transition functions
+ * ([[transitions]]). Every span mode hands every token to one span rule
+ * (`SpanAcc.token`).
  *
  * A custom `LogicalPlan` + `Strategy` + `SparkPlan` because a
  * `mapPartitions` body cannot:
@@ -65,6 +68,21 @@ object BodySpans {
    * feeds the walk.
    */
   def fromLines(lines: DataFrame): DataFrame = plan(lines, BodyWalk.LineSpans)
+
+  /**
+   * Plan the fused FSM span extraction over a conversation's kept lines
+   * with columns (conv_id, turn_idx, line_in_turn, role, tool, block_idx,
+   * line_idx, line): row-identical to
+   * `fromLines(Labeler.bodyLines(Features.repetitive(keptLines)))`
+   * (TranscriptSpansSpec), but the walk applies that zone rule itself, one
+   * conversation at a time ([[TranscriptZoner]]), as the reference decides
+   * its repetitive headers and footers inside its per-document loop
+   * (`DatacatSegmenterParser.java:268-299,418-430`). So the plan has none of
+   * the rule's windows (`max(block_idx)` per turn, the candidate count per
+   * pattern) nor their sorts; the kept-line sort feeds the walk.
+   */
+  def fromTranscript(keptLines: DataFrame): DataFrame =
+    plan(keptLines, BodyWalk.TranscriptSpans)
 
   /**
    * Plan span extraction over a BIO-labeled token frame with columns
@@ -125,6 +143,9 @@ object BodyWalk {
     "tok_idx", "tok", "sep_before", "line_trailing", "f_capitalisation")
   /** The body FSM over lines it tokenizes, emitting spans. */
   case object LineSpans extends BodyWalk("line")
+  /** The transcript zone rule, then the body FSM over the body lines it
+   * tokenizes, emitting spans. */
+  case object TranscriptSpans extends BodyWalk("role", "tool", "block_idx", "line_idx", "line")
   /** The committed `label` column, emitting spans. */
   case object LabelSpans extends BodyWalk("tok_idx", "tok", "sep_before", "line_trailing", "label")
   /** The body FSM, emitting each token row with its BIO `label`. */
@@ -137,7 +158,7 @@ object BodyWalk {
   /** The attributes a walk makes. A null input label (not BIO, but Assemble
    * tolerates it) passes through as a one-token span with a null label. */
   private[plans] def produced(mode: BodyWalk): Seq[Attribute] = mode match {
-    case FsmSpans | LineSpans | LabelSpans => Seq(
+    case FsmSpans | LineSpans | TranscriptSpans | LabelSpans => Seq(
       AttributeReference("conv_id", StringType, nullable = true)(),
       AttributeReference("segment_id", LongType, nullable = false)(),
       AttributeReference("label", StringType, nullable = mode == LabelSpans)(),
@@ -290,8 +311,15 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
     val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
     val m = mode
     val fails = failures
+    // the zone rule's session settings, read here on the driver
+    val zone = if (m != BodyWalk.TranscriptSpans) None else Some(ZoneCols(
+      idx("role"), idx("tool"), idx("block_idx"), idx("line_idx"),
+      child.output.map(_.dataType).toArray,
+      bridge.icuCaseMappings(conf), bridge.windowBufferSize(conf)))
     child.execute().mapPartitions { it =>
       m match {
+        case BodyWalk.TranscriptSpans => new SpanSink(new TranscriptZoner(it, cols, zone.get),
+          outSchema, cols, fromLabels = false, linesValid = true)
         case BodyWalk.FsmSpans | BodyWalk.LineSpans | BodyWalk.LabelSpans =>
           new SpanSink(it, outSchema, cols, fromLabels = m == BodyWalk.LabelSpans)
         case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols, fails)
@@ -311,6 +339,13 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
 private[plans] case class WalkCols(conv: Int, turn: Int, line: Int, text: Int, tok: Int,
     sep: Int, trail: Int, labelOrCap: Int, chunk: Int, peek: Int, entry: Int)
 
+/** What the transcript mode's zone rule reads besides [[WalkCols]]: the
+ * child ordinals of role, tool, block_idx and line_idx, the child's column
+ * types, `spark.sql.icu.caseMappings.enabled` (for `lower`) and the window
+ * buffer's size. */
+private[plans] case class ZoneCols(role: Int, tool: Int, block: Int, lineIdx: Int,
+    types: Array[DataType], icu: Boolean, buffer: bridge.BufferSize)
+
 /** One buffered body line: its tokens' text and capitalisation (or label),
  * plus what a sink keeps besides (separators for the span rule, row copies
  * for the label sink — the child reuses its row instance). */
@@ -325,9 +360,205 @@ private[plans] final class Line {
   var turn = 0
   var line = 0
   var peek = false
+  /** [[Labeler.isEntryLine]] of the line, set once the line is complete. */
+  var isEntry = false
 
   def clear(): Unit = { toks.clear(); caps.clear(); seps.clear(); trails.clear(); rows.clear() }
 }
+
+/**
+ * The zone rule of the transcript mode ([[BodySpans.fromTranscript]]):
+ * from a partition's kept lines, sorted by (conv_id, turn_idx,
+ * line_in_turn), it passes on the `<body>` lines of
+ * `Labeler.bodyLines(Features.repetitive(lines))`, in the same order. One
+ * conversation at a time, in two phases:
+ *
+ *  1. One walk over the conversation. A line whose first word
+ *     ([[LineKernels.firstRun]]) is empty is dropped. A head or tail line
+ *     (block 0 or 1, or the last block of its turn's remaining lines, known
+ *     at the end of the turn) gets its pattern, `lower` of its letters
+ *     ([[LineKernels.pattern]]), and counts when the pattern is longer than
+ *     8 characters: a block-first line adds 1 to its pattern's count. Only a
+ *     line whose role and tool can make it body ([[Labeler.bodyRole]]) is
+ *     buffered, in a [[bridge.RowBuffer]] that spills past the window
+ *     buffer's thresholds.
+ *  2. The buffer is replayed: a buffered line is body unless it counted with
+ *     a pattern whose count is above 1 (`f_repetitive`).
+ *
+ * A line is checked for valid UTF-8 once, here; an invalid one is buffered
+ * cleaned (U+FFFD), as the line kernels clean it. A null conv_id is one
+ * conversation, a null turn_idx one turn; a null block_idx is never head
+ * or tail and a null line_idx never block-first, as in the SQL rule.
+ */
+private[plans] final class TranscriptZoner(it: Iterator[InternalRow], c: WalkCols,
+    z: ZoneCols) extends Iterator[InternalRow] {
+  private val buf = new bridge.RowBuffer(z.buffer)
+  private val toUnsafe = UnsafeProjection.create(z.types)
+  /** Candidate counts per pattern; a buffered head or tail line's count.
+   * Fresh per conversation: a map cleared in place keeps the capacity a
+   * large conversation gave it. */
+  private var counts = new java.util.HashMap[UTF8String, PatCount]
+  private var counted = new mutable.LongMap[PatCount]
+  // the conversation and turn being read
+  private var conv: UTF8String = null
+  private var turn = 0
+  private var turnNull = false
+  private var held: InternalRow = null // the next conversation's first row
+  // the turn's possible tail: the kept lines of its highest block (>= 2) so
+  // far, their bytes back to back in `tailBytes`, and per line (end,
+  // block-first, buffer index) in `tail`
+  private var turnMax = 1L
+  private var tailBytes = new Array[Byte](256)
+  private var tailLen = 0
+  private var tail = new Array[Int](48)
+  private var nTail = 0
+  // phase 2
+  private var replay: Iterator[UnsafeRow] = Iterator.empty
+  private var replayIdx = 0
+  private var found: InternalRow = null
+
+  override def hasNext: Boolean = {
+    while (found == null) {
+      if (replay.hasNext) {
+        val r = replay.next()
+        val pc = counted.getOrNull(replayIdx)
+        replayIdx += 1
+        if (pc == null || pc.n <= 1) found = r
+      } else if (!readConversation()) return false
+    }
+    true
+  }
+
+  override def next(): InternalRow = {
+    if (!hasNext) throw new NoSuchElementException
+    val r = found
+    found = null
+    r
+  }
+
+  /** Phase 1 over the next conversation; false at the end of the input. */
+  private def readConversation(): Boolean = {
+    val first = if (held != null) held else if (it.hasNext) it.next() else return false
+    held = null
+    buf.clear()
+    if (!counts.isEmpty) counts = new java.util.HashMap
+    if (counted.nonEmpty) counted = new mutable.LongMap
+    replayIdx = 0
+    conv = if (first.isNullAt(c.conv)) null else own(first.getUTF8String(c.conv))
+    startTurn(first)
+    read(first)
+    while (held == null && it.hasNext) {
+      val r = it.next()
+      val rc = if (r.isNullAt(c.conv)) null else r.getUTF8String(c.conv)
+      if (rc != conv && (rc == null || !rc.equals(conv))) held = r.copy()
+      else {
+        if (r.isNullAt(c.turn) != turnNull || (!turnNull && r.getInt(c.turn) != turn)) {
+          endTurn()
+          startTurn(r)
+        }
+        read(r)
+      }
+    }
+    endTurn()
+    replay = buf.iterator
+    true
+  }
+
+  private def startTurn(r: InternalRow): Unit = {
+    turnNull = r.isNullAt(c.turn)
+    turn = if (turnNull) 0 else r.getInt(c.turn)
+    turnMax = 1L
+  }
+
+  /** Phase 1 of one kept line. */
+  private def read(r: InternalRow): Unit = if (!r.isNullAt(c.text)) {
+    val raw = r.getUTF8String(c.text)
+    val valid = raw.isValid
+    val u = if (valid) raw else UTF8String.fromString(raw.toString)
+    val run = LineKernels.firstRun(u)
+    if (LineKernels.wordBytes(u, LineKernels.runFrom(run), LineKernels.runUntil(run)) > 0) {
+      val at = if (!Labeler.bodyRole(rowString(r, z.role), rowString(r, z.tool))) -1
+      else {
+        buf.add(if (valid) unsafe(r) else cleaned(r, u))
+        buf.length - 1
+      }
+      if (!r.isNullAt(z.block)) {
+        val block = r.getLong(z.block)
+        val blockFirst = !r.isNullAt(z.lineIdx) && r.getInt(z.lineIdx) == 0
+        if (block < 2) count(LineKernels.pattern(u, z.icu), blockFirst, at)
+        else if (block >= turnMax) {
+          if (block > turnMax) { turnMax = block; nTail = 0; tailLen = 0 }
+          hold(u, blockFirst, at)
+        }
+      }
+    }
+  }
+
+  /** The turn is read: its held lines are its last block's. */
+  private def endTurn(): Unit = {
+    var k = 0
+    var from = 0
+    while (k < nTail) {
+      val end = tail(3 * k)
+      count(LineKernels.pattern(UTF8String.fromBytes(tailBytes, from, end - from), z.icu),
+        tail(3 * k + 1) == 1, tail(3 * k + 2))
+      from = end
+      k += 1
+    }
+    nTail = 0
+    tailLen = 0
+  }
+
+  private def hold(u: UTF8String, blockFirst: Boolean, at: Int): Unit = {
+    val n = u.numBytes
+    if (tailLen + n > tailBytes.length)
+      tailBytes = java.util.Arrays.copyOf(tailBytes, math.max(2 * tailBytes.length, tailLen + n))
+    u.writeToMemory(tailBytes, Platform.BYTE_ARRAY_OFFSET + tailLen)
+    tailLen += n
+    if (3 * nTail + 3 > tail.length) tail = java.util.Arrays.copyOf(tail, 2 * tail.length)
+    tail(3 * nTail) = tailLen
+    tail(3 * nTail + 1) = if (blockFirst) 1 else 0
+    tail(3 * nTail + 2) = at
+    nTail += 1
+  }
+
+  /** A head or tail line with pattern `pat`: a pattern longer than 8
+   * characters counts it when it is block-first, and a buffered line (`at`
+   * its index) keeps that count. */
+  private def count(pat: UTF8String, blockFirst: Boolean, at: Int): Unit =
+    if (pat.numChars > 8) {
+      var pc = counts.get(pat)
+      if (pc == null) { pc = new PatCount; counts.put(own(pat), pc) }
+      if (blockFirst) pc.n += 1
+      if (at >= 0) counted.update(at, pc)
+    }
+
+  /** A copy of `u`'s bytes: `u` may point into the child's row, or into
+   * `tailBytes`, which `clone` would share when `u` spans all of it. */
+  private def own(u: UTF8String): UTF8String = {
+    val b = new Array[Byte](u.numBytes)
+    u.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    UTF8String.fromBytes(b)
+  }
+
+  private def rowString(r: InternalRow, i: Int): UTF8String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i)
+
+  private def unsafe(r: InternalRow): UnsafeRow = r match {
+    case u: UnsafeRow => u
+    case _ => toUnsafe(r)
+  }
+
+  /** `r` with its line replaced by the cleaned `u`. */
+  private def cleaned(r: InternalRow, u: UTF8String): UnsafeRow = {
+    val values = r.toSeq(z.types.toSeq).toArray
+    values(c.text) = u
+    toUnsafe(new GenericInternalRow(values))
+  }
+}
+
+/** A pattern's count of block-first head or tail lines. */
+private[plans] final class PatCount { var n = 0 }
 
 /**
  * The line walker over sorted body tokens or lines, the only one: a sink's
@@ -339,18 +570,19 @@ private[plans] final class Line {
  * line_in_turn) and [[feedLine]] tokenizes each row into the same buffer.
  *
  *  - a group starts in state `_entry`, or 0 when it is absent or null;
- *  - each non-peek line goes to [[line]] once its successor in the same
- *    group is known, with `nextIsEntry` = [[Labeler.isEntryLine]] of the
- *    successor's tokens, `false` for the group's last line; `_peek` rows
- *    only ever serve as a successor;
+ *  - each line's [[Labeler.isEntryLine]] runs once, when the line is
+ *    complete; each non-peek line goes to [[line]] once its successor in
+ *    the same group is known, with `nextIsEntry` = the successor's test,
+ *    `false` for the group's last line; `_peek` rows only ever serve as a
+ *    successor;
  *  - [[endGroup]] runs after the group's last line.
  *
  * Streams: only the current and the pending line are buffered, and the two
  * buffers swap roles, so a line costs no allocation.
  */
 private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: StructType,
-    protected val c: WalkCols, failures: Option[Lineage.PartitionStats])
-    extends Iterator[InternalRow] {
+    protected val c: WalkCols, failures: Option[Lineage.PartitionStats],
+    linesValid: Boolean = false) extends Iterator[InternalRow] {
   import BodySpans.str
   protected val out = mutable.Queue.empty[InternalRow]
   protected val cls = new Labeler.LineClassifier
@@ -374,7 +606,7 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
    * the line is dropped and counted, as the reference isolates a failure
    * per file (`EngineDatacat.java:114-150`). */
   protected def classified(l: Line, nextIsEntry: Boolean): Option[(String, Boolean)] =
-    try Some(cls.classify(l.toks, l.caps, nextIsEntry))
+    try Some(cls.classify(l.toks, l.caps, l.isEntry, nextIsEntry))
     catch { case scala.util.control.NonFatal(_) =>
       failures.foreach(_.add((org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
       None
@@ -422,7 +654,8 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
    * line's trailing whitespace, one `\n` per line gap (0 on the
    * conversation's first line, 1 across turns, else the `line_in_turn`
    * difference), then its own. A line without tokens still moves that
-   * state, because the lag runs over lines, not tokens.
+   * state, because the lag runs over lines, not tokens. `linesValid`: the
+   * rows come from [[TranscriptZoner]], which cleaned them.
    */
   private def feedLine(r: InternalRow): Unit = {
     val conv = str(r, c.conv)
@@ -434,7 +667,7 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
     var trail = ""
     if (!r.isNullAt(c.text)) {
       val raw = r.getUTF8String(c.text)
-      val u = if (raw.isValid) raw else UTF8String.fromString(raw.toString)
+      val u = if (linesValid || raw.isValid) raw else UTF8String.fromString(raw.toString)
       val b = u.getBytes
       val end = LineKernels.trailingEnd(u)
       trail = decode(b, LineKernels.trailingStart(u, end), end)
@@ -464,7 +697,8 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
   /** The current line is complete: it is the pending line's lookahead, then
    * the pending line itself unless it is a peek. */
   private def completeLine(): Unit = {
-    if (hasPend) line(pend, Labeler.isEntryLine(cur.toks))
+    cur.isEntry = Labeler.isEntryLine(cur.toks)
+    if (hasPend) line(pend, cur.isEntry)
     val t = pend; pend = cur; cur = t
     cur.clear()
     hasPend = !pend.peek
@@ -493,7 +727,8 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
  * classified and its first token opens a span when the line starts one.
  * Fused — no label rows, no per-token allocation beyond the strings. */
 private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols, fromLabels: Boolean) extends LineWalk(it, outSchema, c, None) {
+    c: WalkCols, fromLabels: Boolean, linesValid: Boolean = false)
+    extends LineWalk(it, outSchema, c, None, linesValid) {
   import BodySpans.str
   private val acc = new SpanAcc(out)
   private var prevBase: String = null
@@ -572,7 +807,7 @@ private[plans] final class TransitionSink(it: Iterator[InternalRow], outSchema: 
     exit.distinct.foreach { s =>
       moved(s) = try {
         cls.setState(s)
-        cls.classify(l.toks, l.caps, nextIsEntry)
+        cls.classify(l.toks, l.caps, l.isEntry, nextIsEntry)
         cls.stateId
       } catch { case scala.util.control.NonFatal(_) => s }
     }

@@ -3,17 +3,20 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionColumnNode
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.ExternalAppendOnlyUnsafeRowArray
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge into `private[sql]` surface, the one module that touches
   * Spark internals: wrap a Catalyst Expression as a user-facing Column (the
   * classic-session column node), plan a custom logical node as a DataFrame
   * (graft.plans.BodySpans), cut a lazy plan barrier, clone a session so a
   * conf override can be scoped to ONE query instead of mutated
-  * session-wide, and drain the listener bus. Lives in an
+  * session-wide, drain the listener bus, and buffer rows in Spark's
+  * spillable row array. Lives in an
   * `org.apache.spark.sql` subpackage solely for access; no Spark internals
   * are modified. */
 object bridge {
@@ -67,4 +70,30 @@ object bridge {
   /** Block until every event already posted to the listener bus has been
     * delivered, so a listener's counters are complete when read. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** `spark.sql.icu.caseMappings.enabled`, which decides how `Lower` maps
+    * case; read on the driver. */
+  def icuCaseMappings(conf: SQLConf): Boolean = conf.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  /** The `spark.sql.windowExec.buffer.*` thresholds `WindowExec` sizes its
+    * partition buffer with, read on the driver: rows held in memory, rows
+    * and bytes before the buffer spills. */
+  case class BufferSize(inMemoryRows: Int, spillRows: Int, spillBytes: Long)
+
+  def windowBufferSize(conf: SQLConf): BufferSize = BufferSize(
+    conf.windowExecBufferInMemoryThreshold, conf.windowExecBufferSpillThreshold,
+    conf.windowExecBufferSpillSizeThreshold)
+
+  /** An append-only row buffer that spills to disk past `size`, as
+    * `WindowExec` buffers a window partition; made inside a task. Rows are
+    * copied on `add`; `clear` empties it for reuse. */
+  final class RowBuffer(size: BufferSize) {
+    private val rows = new ExternalAppendOnlyUnsafeRowArray(
+      size.inMemoryRows, size.spillBytes, size.spillRows, size.spillBytes)
+    def add(r: UnsafeRow): Unit = rows.add(r)
+    def length: Int = rows.length
+    /** The rows in order; the iterator may reuse one row instance. */
+    def iterator: Iterator[UnsafeRow] = rows.generateIterator()
+    def clear(): Unit = rows.clear()
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.extract.Pipeline
+import graft.extract.{Assemble, Pipeline}
 
 /**
  * The constant-empty invariant queries of `SparkEntry.queries` over the
@@ -11,7 +11,8 @@ import graft.extract.Pipeline
  * of only inside `graft.Verify`. Each query's `n_mismatch` must be 0; the
  * corpus must yield spans, or the checks would hold vacuously. The spans
  * must not depend on the order in which the transcript rows arrive, nor on
- * a turn-salted partitioning.
+ * a turn-salted partitioning, and the TEI documents must parse back to
+ * them.
  */
 class AdversarialInvariantSpec extends SparkSpec {
 
@@ -25,6 +26,15 @@ class AdversarialInvariantSpec extends SparkSpec {
 
   test("the adversarial corpus yields body spans") {
     assert(!Pipeline.extract(Queries.transcripts(spark, dir)).isEmpty)
+  }
+
+  test("extract, which the order, salting and declarative checks pin, zones in the span walk") {
+    val plan = Pipeline.extract(Queries.transcripts(spark, dir)).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val modes = plan.collect { case w: graft.plans.BodySpansExec => w.mode }
+    assert(modes == Seq(graft.plans.BodyWalk.TranscriptSpans), plan)
   }
 
   private def sorted(spans: DataFrame): Seq[String] =
@@ -48,6 +58,28 @@ class AdversarialInvariantSpec extends SparkSpec {
       }
     }
   }
+
+  test("TEI span elements parse back to the un-escaped span text") {
+    val spans = Pipeline.extract(Queries.transcripts(spark, dir))
+    val want = spans.collect().groupBy(_.getAs[String]("conv_id")).map { case (c, rs) =>
+      c -> rs.sortBy(_.getAs[Long]("segment_id")).map(r => unescape(r.getAs[String]("text"))).toSeq
+    }
+    assert(want.values.flatten.exists(_.exists("<>&\"'".contains(_))), "no escaped text")
+    val tei = Assemble.teiDocuments(spans).collect()
+    assert(tei.length == want.size && tei.nonEmpty)
+    val builder = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+    tei.foreach { r =>
+      val doc = builder.parse(new org.xml.sax.InputSource(new java.io.StringReader(r.getString(1))))
+      val text = doc.getElementsByTagName("text").item(0).getChildNodes
+      val got = (0 until text.getLength).map(text.item)
+        .collect { case e: org.w3c.dom.Element => e.getTextContent }
+      assert(got == want(r.getString(0)), r.getString(0))
+    }
+  }
+
+  /** The five entities the span text is escaped with, undone (`&amp;` last). */
+  private def unescape(s: String): String = s.replace("&lt;", "<").replace("&gt;", ">")
+    .replace("&quot;", "\"").replace("&apos;", "'").replace("&amp;", "&")
 
   Seq("pipeline_rebuild_diff", "w10_label_spans_diff", "pipeline_declarative_diff",
     "w10_chunked_diff", "pipeline_chunked_diff", "tei_sharded_diff",

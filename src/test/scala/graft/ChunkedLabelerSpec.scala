@@ -126,7 +126,8 @@ class ChunkedLabelerSpec extends SparkSpec {
       conv.indices.flatMap { i =>
         val line = conv(i)
         val nextIsEntry = i + 1 < conv.size && Labeler.isEntryLine(conv(i + 1).map(_._5))
-        scala.util.Try(cls.classify(line.map(_._5), line.map(_._6), nextIsEntry))
+        scala.util.Try(cls.classify(line.map(_._5), line.map(_._6),
+          Labeler.isEntryLine(line.map(_._5)), nextIsEntry))
           .toOption.toSeq.flatMap { case (base, isStart) =>
             line.zipWithIndex.map { case (t, k) =>
               (t._1, t._2, t._3, t._4, t._5, if (k == 0 && isStart) "I-" + base else base)

@@ -144,16 +144,17 @@ class PlanOperatorSpec extends SparkSpec {
 
   test("the flagship plan keeps its window, sort, generate and exchange counts") {
     // the turn → lines kernel replaced the line layer's three windows and
-    // their two sorts; patternCandidates' max(block_idx) window places its
-    // own (conv_id, turn_idx) sort and the repetitive count its (conv_id,
-    // pat) sort; the line sort feeds the span walk, which tokenizes, so the
-    // lag window, the token explode and the token sort are gone, and the
-    // body-line rule needs no max(turn_idx) window
+    // their two sorts; the span walk zones each conversation itself, so the
+    // zone rule's max(block_idx) and pattern-count windows and their sorts
+    // are gone, and it tokenizes, so the lag window, the token explode and
+    // the token sort are gone: the kept-line sort is the one sort left
     val plan = flagshipPlan
     val nodes = plan.collect { case n => n.nodeName }
     val counts = Seq("Window", "Sort", "Generate", "Exchange").map(n => n -> nodes.count(_ == n))
-    assert(counts == Seq("Window" -> 2, "Sort" -> 3, "Generate" -> 1, "Exchange" -> 1),
+    assert(counts == Seq("Window" -> 0, "Sort" -> 1, "Generate" -> 1, "Exchange" -> 1),
       s"operator counts changed:\n$plan")
+    assert(plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty,
+      plan)
   }
 
   test("the flagship plan tokenizes each line once") {
