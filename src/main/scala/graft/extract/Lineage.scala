@@ -2,7 +2,6 @@ package graft.extract
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.AccumulatorV2
@@ -12,12 +11,9 @@ import scala.collection.concurrent.TrieMap
  * Per-partition lineage rows + counters (north-rule requirement; replaces
  * the reference's CntManager, `EngineDatacat.java:28,338-344`).
  *
- * Two complementary mechanisms:
- *  - [[observedTurns]]: Dataset.observe() named metrics (rows/characters) — zero-cost,
- *    collected with the job, suitable for always-on counters;
- *  - [[withPartitionLineage]]: a pass over the execution rows that records
- *    (partition_id, rows, characters) into an accumulator, dumped as a DataFrame
- *    by [[lineageRows]] after an action. Use on checkpoint boundaries.
+ * [[withPartitionLineage]] is a pass over the execution rows that records
+ * (partition_id, rows, characters) into an accumulator, dumped as a DataFrame
+ * by [[lineageRows]] after an action. Use on checkpoint boundaries.
  */
 object Lineage {
 
@@ -136,16 +132,4 @@ object Lineage {
       }
       .toDF("stage", "partition_id", "rows", "bytes", "parse_failures")
   }
-
-  /** Always-on observe() counters for a turns input: turns in/out (after the
-   * noise filter) and text bytes — read via QueryExecutionListener or
-   * `df.observe` result collection. */
-  def observedTurns(turns: DataFrame, name: String): DataFrame =
-    turns.observe(name,
-      count(lit(1)).as("turns_in"),
-      sum(when(TextCols_filter(col("text")), 0L).otherwise(1L)).as("turns_kept"),
-      sum(length(coalesce(col("text"), lit("")))).as("bytes_in"))
-
-  private def TextCols_filter(c: org.apache.spark.sql.Column) =
-    graft.text.TextCols.filterLine(c)
 }

@@ -14,10 +14,11 @@ import graft.text.TextCols
  *
  * Document-tree mapping: conversation=document, turn=page,
  * paragraph-within-turn=block (runs of non-blank lines), line=line.
- * Structure is declarative Catalyst around three codegen'd byte-scan
- * kernels: the turn → lines explode ([[graft.functions.TurnLines]], the
- * reference's one block/line loop per document), the line-trailing
- * whitespace leg ([[graft.functions.LineScan]]) and the delimiter tokenizer
+ * Structure is declarative Catalyst around three byte-scan kernels, each a
+ * [[graft.functions.Kernel]] whose generated code is one static call: the
+ * turn → lines explode ([[graft.functions.TurnLines]], the reference's one
+ * block/line loop per document), the line-trailing whitespace leg
+ * ([[graft.functions.LineScan]]) and the delimiter tokenizer
  * ([[graft.functions.Tokenize]], exactly [[graft.text.Tok.tokenize]],
  * fixture-pinned). Each kernel equals the expression it replaced
  * (LineKernelSpec, TokenizeKernelSpec).

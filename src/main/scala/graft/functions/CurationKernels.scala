@@ -4,10 +4,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,34 +16,6 @@ import org.apache.spark.unsafe.types.UTF8String
 private[functions] object KernelMath {
   def ratio4dp(p: Long, q: Long): Double =
     ((p * 20000L + q) / (2L * q)).toDouble / 10000.0
-}
-
-/** Shared scaffolding for the struct-returning curation kernels: a
- * string-input, never-null struct-output expression whose generated code
- * is one static kernel call (the [[GopherRepetition]] pattern). */
-abstract class CurationKernel extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING, got ${child.dataType.catalogString}")
-  override def nullable: Boolean = false
-  /** Fully-qualified static kernel call target (Scala object forwarder).
-   * A subclass overriding [[doGenCode]] itself (extra arguments, e.g.
-   * [[C4PageStats]]) leaves this empty — the base template guards
-   * against silently generating a call to nothing. */
-  protected def kernelCall: String
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    require(kernelCall.nonEmpty,
-      s"$prettyName: kernelCall is empty — override doGenCode or set it")
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |InternalRow ${ev.value} = $kernelCall(
-         |  ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin, isNull = FalseLiteral)
-  }
 }
 
 /**
@@ -62,13 +31,11 @@ abstract class CurationKernel extends UnaryExpression {
  * every ratio is the exact-integer [[graft.ops.Cols.ratio4dp]]. Null
  * input behaves as the call-site `coalesce(text, '')`.
  */
-case class GopherQuality(child: Expression) extends CurationKernel {
+case class GopherQuality(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = GopherQuality.outType
   override def prettyName: String = "graft_gopher_quality"
-  override protected def kernelCall: String =
-    "graft.functions.GopherQuality$.MODULE$.compute"
-  override def eval(input: InternalRow): Any =
-    GopherQuality.compute(child.eval(input).asInstanceOf[UTF8String])
+  override protected def target: String = "graft.functions.GopherQuality$.MODULE$.compute"
+  override protected def compute(text: UTF8String): Any = GopherQuality.compute(text)
   override protected def withNewChildInternal(newChild: Expression): GopherQuality =
     copy(child = newChild)
 }
@@ -193,13 +160,11 @@ object GopherQuality {
  * `split("\s+")` filter produces, and the substring test lowercases via
  * `UTF8String.toLowerCase`. Null input behaves as `coalesce(text, '')`.
  */
-case class C4LineFilter(child: Expression) extends CurationKernel {
+case class C4LineFilter(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = C4LineFilter.outType
   override def prettyName: String = "graft_c4_line_filter"
-  override protected def kernelCall: String =
-    "graft.functions.C4LineFilter$.MODULE$.compute"
-  override def eval(input: InternalRow): Any =
-    C4LineFilter.compute(child.eval(input).asInstanceOf[UTF8String])
+  override protected def target: String = "graft.functions.C4LineFilter$.MODULE$.compute"
+  override protected def compute(text: UTF8String): Any = C4LineFilter.compute(text)
   override protected def withNewChildInternal(newChild: Expression): C4LineFilter =
     copy(child = newChild)
 }
@@ -267,28 +232,14 @@ object C4LineFilter {
  * instances with different lists are distinct expressions.
  */
 case class C4PageStats(child: Expression, blocklist: Seq[String])
-    extends CurationKernel {
+    extends Kernel[UTF8String] {
   override def dataType: DataType = C4PageStats.outType
   override def prettyName: String = "graft_c4_page_stats"
-  override protected def kernelCall: String = "" // doGenCode overridden below
   @transient private lazy val blockU: Array[UTF8String] =
     blocklist.map(UTF8String.fromString).toArray
-  override def eval(input: InternalRow): Any =
-    C4PageStats.compute(child.eval(input).asInstanceOf[UTF8String], blockU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    // ship the blocklist into generated code as a reference object
-    val listRef = ctx.addReferenceObj("graftBlocklist", blockU,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |InternalRow ${ev.value} = graft.functions.C4PageStats$$.MODULE$$.compute(
-         |  ${childGen.isNull} ? null : ${childGen.value}, $listRef);
-       """.stripMargin, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.C4PageStats$.MODULE$.compute"
+  override protected def args: Seq[Any] = Seq(blockU)
+  override protected def compute(text: UTF8String): Any = C4PageStats.compute(text, blockU)
   override protected def withNewChildInternal(newChild: Expression): C4PageStats =
     copy(child = newChild)
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
@@ -26,30 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
  * as a non-negative int, modulo b (`DigestUtils.md5` over the gram's
  * UTF-8 bytes; bigrams joined with a single 0x20).
  */
-case class DsirBuckets(child: Expression, b: Int) extends UnaryExpression {
+case class DsirBuckets(child: Expression, b: Int) extends Kernel[UTF8String] {
   require(b > 0, "b must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_buckets expects STRING, got ${child.dataType.catalogString}")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_dsir_buckets"
-
-  override def eval(input: InternalRow): Any =
-    DsirBuckets.compute(child.eval(input).asInstanceOf[UTF8String], b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.DsirBuckets$$.MODULE$$.compute(
-         |    ${childGen.isNull} ? null : ${childGen.value}, $b);
-       """.stripMargin, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.DsirBuckets$.MODULE$.compute"
+  override protected def args: Seq[Any] = Seq(b)
+  override protected def compute(text: UTF8String): Any = DsirBuckets.compute(text, b)
   override protected def withNewChildInternal(newChild: Expression): DsirBuckets =
     copy(child = newChild)
 }

@@ -4,11 +4,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,30 +37,11 @@ import org.apache.spark.unsafe.types.UTF8String
  *    /10⁴ in double.
  * Null input behaves as the call-site `coalesce(text, '')`: all-zero row.
  */
-case class GopherRepetition(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_gopher_rep expects STRING, got ${child.dataType.catalogString}")
+case class GopherRepetition(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = GopherRepetition.outType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_gopher_rep"
-
-  override def eval(input: InternalRow): Any =
-    GopherRepetition.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val resultCode =
-      code"""
-         |${childGen.code}
-         |InternalRow ${ev.value} =
-         |  graft.functions.GopherRepetition$$.MODULE$$.compute(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin
-    ev.copy(code = resultCode, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.GopherRepetition$.MODULE$.compute"
+  override protected def compute(text: UTF8String): Any = GopherRepetition.compute(text)
   override protected def withNewChildInternal(newChild: Expression): GopherRepetition =
     copy(child = newChild)
 }

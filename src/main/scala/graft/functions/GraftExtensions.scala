@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 
 /**
  * SparkSessionExtensions hook exposing the engine's native expressions to
@@ -18,10 +18,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_tokenize"),
-      new ExpressionInfo(classOf[Tokenize].getName, "graft_tokenize"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Tokenize(children.head)))
+    // Spark's own builtin builder: any arity but 1 fails analysis with
+    // WRONG_NUM_ARGS
+    val (info, builder) = FunctionRegistryBase.build[Tokenize]("graft_tokenize", None)
+    ext.injectFunction((new FunctionIdentifier("graft_tokenize"), info, builder))
   }
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
@@ -25,32 +21,15 @@ import org.apache.spark.unsafe.types.UTF8String
  * `DigestUtils.md5Hex` over the lowered window's UTF-8 bytes — exactly
  * Spark's `Md5`. Null array in → null out.
  */
-case class GramMd5(child: Expression, n: Int) extends UnaryExpression {
+case class GramMd5(child: Expression, n: Int) extends Kernel[ArrayData] {
   require(n > 0, "n must be positive")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_gram_md5 expects ARRAY<STRING>, got ${t.catalogString}")
-  }
+  override protected def inputType: DataType = ArrayType(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_gram_md5"
-
-  override def eval(input: InternalRow): Any =
-    GramMd5.compute(child.eval(input).asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.GramMd5$$.MODULE$$.compute(
-         |    ${childGen.isNull} ? null : ${childGen.value}, $n);
-         |boolean ${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
+  override protected def target: String = "graft.functions.GramMd5$.MODULE$.compute"
+  override protected def args: Seq[Any] = Seq(n)
+  override protected def compute(units: ArrayData): Any = GramMd5.compute(units, n)
   override protected def withNewChildInternal(newChild: Expression): GramMd5 =
     copy(child = newChild)
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
@@ -32,29 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
  *  - null text yields no line; invalid UTF-8 is first cleaned as
  *    `toString` does (U+FFFD), as `split` does on the expression path.
  */
-case class TurnLines(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_turn_lines expects STRING, got ${child.dataType.catalogString}")
+case class TurnLines(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = LineKernels.linesType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_turn_lines"
-
-  override def eval(input: InternalRow): Any =
-    LineKernels.turnLines(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.LineKernels$$.MODULE$$.turnLines(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.LineKernels$.MODULE$.turnLines"
+  override protected def compute(text: UTF8String): Any = LineKernels.turnLines(text)
   override protected def withNewChildInternal(newChild: Expression): TurnLines =
     copy(child = newChild)
 }
@@ -68,40 +46,24 @@ case class TurnLines(child: Expression) extends UnaryExpression {
  *  - `letters`: the line's letters, `regexp_replace(line, "[^\p{L}]", "")`;
  *  - `trailingSpace`: `regexp_extract(line, "[\x20\t\f]*$", 0)`.
  */
-case class LineScan(child: Expression, leg: String) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING, got ${child.dataType.catalogString}")
+case class LineScan(child: Expression, leg: String) extends Kernel[UTF8String] {
   override def dataType: DataType = StringType
   override def nullable: Boolean = leg != "firstWord" && child.nullable
   override def prettyName: String = s"graft_$leg"
   override def flatArguments: Iterator[Any] = Iterator(child)
-
-  override def eval(input: InternalRow): Any = {
-    val u = child.eval(input).asInstanceOf[UTF8String]
-    leg match {
-      case "firstWord" => LineKernels.firstWord(u)
-      case "letters" => LineKernels.letters(u)
-      case "trailingSpace" => LineKernels.trailingSpace(u)
-    }
+  override protected def target: String = s"graft.functions.LineKernels$$.MODULE$$.$leg"
+  override protected def compute(line: UTF8String): Any = leg match {
+    case "firstWord" => LineKernels.firstWord(line)
+    case "letters" => LineKernels.letters(line)
+    case "trailingSpace" => LineKernels.trailingSpace(line)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |UTF8String ${ev.value} = graft.functions.LineKernels$$.MODULE$$.$leg(
-         |  ${childGen.isNull} ? null : ${childGen.value});
-         |boolean ${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): LineScan =
     copy(child = newChild)
 }
 
+/** The cores of [[TurnLines]] and [[LineScan]]: static methods that the
+ * kernels' generated code calls through [[Kernel]], and that the span
+ * walk's zone rule and line feeder call directly. */
 object LineKernels {
 
   /** array<struct<line_in_turn, line, block_idx, line_idx>>, with the types

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
@@ -28,31 +24,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * (the empty string for a zero-word document). Null in → null out, exactly
  * the HOF form's null propagation.
  */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
+case class Shingles(child: Expression, n: Int) extends Kernel[UTF8String] {
   require(n > 0, "n must be positive")
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles expects STRING, got ${child.dataType.catalogString}")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_shingles"
-
-  override def eval(input: InternalRow): Any =
-    Shingles.compute(child.eval(input).asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.Shingles$$.MODULE$$.compute(
-         |    ${childGen.isNull} ? null : ${childGen.value}, $n);
-         |boolean ${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
+  override protected def target: String = "graft.functions.Shingles$.MODULE$.compute"
+  override protected def args: Seq[Any] = Seq(n)
+  override protected def compute(text: UTF8String): Any = Shingles.compute(text, n)
   override protected def withNewChildInternal(newChild: Expression): Shingles =
     copy(child = newChild)
 }

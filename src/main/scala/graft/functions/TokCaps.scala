@@ -2,10 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,28 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * original expression semantics via the String path. Null token yields
  * (NODIGIT, NOCAPS), exactly the when-chain's null-falsy fall-through.
  */
-case class TokCaps(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_tok_caps expects STRING, got ${child.dataType.catalogString}")
+case class TokCaps(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = TokCaps.outType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_tok_caps"
-
-  override def eval(input: InternalRow): Any =
-    TokCaps.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |InternalRow ${ev.value} = graft.functions.TokCaps$$.MODULE$$.compute(
-         |  ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.TokCaps$.MODULE$.compute"
+  override protected def compute(tok: UTF8String): Any = TokCaps.compute(tok)
   override protected def withNewChildInternal(newChild: Expression): TokCaps =
     copy(child = newChild)
 }

@@ -3,49 +3,26 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.text.Tok
 
 /**
- * Native Catalyst expression for the delimiter tokenizer — the engine's one
- * genuinely non-builtin scalar. A codegen'd `Expression` (not a Scala UDF):
- * `doGenCode` emits a direct static call producing Catalyst `ArrayData` of
- * `InternalRow(tok, sep)`, so rows stay inside WholeStageCodegen with no
- * UDF encoder round-trip (Scala tuples ↔ InternalRow) per token.
+ * Native Catalyst expression for the delimiter tokenizer: a [[Kernel]] (not
+ * a Scala UDF) whose generated code is one static call to
+ * [[Tokenize.tokenize]], producing Catalyst `ArrayData` of
+ * `InternalRow(tok, sep)` with no encoder round-trip per token.
  *
  * Semantics are exactly [[graft.text.Tok.tokenize]] (fixture-pinned,
  * property-tested); null input yields an empty array (the UDF contract).
  */
-case class Tokenize(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_tokenize expects STRING, got ${child.dataType.catalogString}")
+case class Tokenize(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = Tokenize.outType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_tokenize"
-
-  override def eval(input: InternalRow): Any =
-    Tokenize.tokenize(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val resultCode =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.Tokenize$$.MODULE$$.tokenize(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin
-    ev.copy(code = resultCode, isNull = FalseLiteral)
-  }
-
+  override protected def target: String = "graft.functions.Tokenize$.MODULE$.tokenize"
+  override protected def compute(text: UTF8String): Any = Tokenize.tokenize(text)
   override protected def withNewChildInternal(newChild: Expression): Tokenize =
     copy(child = newChild)
 }

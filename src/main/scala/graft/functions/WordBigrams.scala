@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.bridge
 import org.apache.spark.sql.types._
@@ -22,30 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * ShingleKernelSpec): same word tokenization, pairs (w_i, w_{i+1}) in
  * order, empty array under two words, null in → null out.
  */
-case class WordBigrams(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_word_bigrams expects STRING, got ${child.dataType.catalogString}")
+case class WordBigrams(child: Expression) extends Kernel[UTF8String] {
   override def dataType: DataType = WordBigrams.outType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_word_bigrams"
-
-  override def eval(input: InternalRow): Any =
-    WordBigrams.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  graft.functions.WordBigrams$$.MODULE$$.compute(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-         |boolean ${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
+  override protected def target: String = "graft.functions.WordBigrams$.MODULE$.compute"
+  override protected def compute(text: UTF8String): Any = WordBigrams.compute(text)
   override protected def withNewChildInternal(newChild: Expression): WordBigrams =
     copy(child = newChild)
 }

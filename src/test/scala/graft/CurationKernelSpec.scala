@@ -47,26 +47,32 @@ class CurationKernelSpec extends SparkSpec {
   }
 
   test("GopherQuality kernel equals the HOF form") {
-    val cols = Seq("n_words", "mean_word_len", "symbol_word_ratio",
-      "bullet_line_frac", "ellipsis_line_frac", "alpha_word_frac",
-      "n_stop_hits")
-    for (docs <- Seq(fuzzDocs, corpusDocs))
-      assertSame(Gopher.stats(docs), Gopher.statsHof(docs), cols)
+    underEachCodegenMode {
+      val cols = Seq("n_words", "mean_word_len", "symbol_word_ratio",
+        "bullet_line_frac", "ellipsis_line_frac", "alpha_word_frac",
+        "n_stop_hits")
+      for (docs <- Seq(fuzzDocs, corpusDocs))
+        assertSame(Gopher.stats(docs), Gopher.statsHof(docs), cols)
+    }
   }
 
   test("C4LineFilter kernel equals the HOF form") {
-    val cols = Seq("text_clean", "n_lines_kept", "n_lines_dropped")
-    for (docs <- Seq(fuzzDocs, corpusDocs))
-      assertSame(C4.lineFiltered(docs), C4.lineFilteredHof(docs), cols)
+    underEachCodegenMode {
+      val cols = Seq("text_clean", "n_lines_kept", "n_lines_dropped")
+      for (docs <- Seq(fuzzDocs, corpusDocs))
+        assertSame(C4.lineFiltered(docs), C4.lineFilteredHof(docs), cols)
+    }
   }
 
   test("C4PageStats kernel equals the HOF form") {
-    val cols = Seq("n_sentences", "has_lorem_ipsum", "has_brace", "n_bad_words")
-    for (docs <- Seq(fuzzDocs, corpusDocs)) {
-      assertSame(C4.stats(docs), C4.statsHof(docs), cols)
-      // non-default blocklist exercises the reference-object codegen leg
-      assertSame(C4.stats(docs, blocklist = Seq("cat", "mat")),
-        C4.statsHof(docs, blocklist = Seq("cat", "mat")), cols)
+    underEachCodegenMode {
+      val cols = Seq("n_sentences", "has_lorem_ipsum", "has_brace", "n_bad_words")
+      for (docs <- Seq(fuzzDocs, corpusDocs)) {
+        assertSame(C4.stats(docs), C4.statsHof(docs), cols)
+        // non-default blocklist exercises the reference-object codegen leg
+        assertSame(C4.stats(docs, blocklist = Seq("cat", "mat")),
+          C4.statsHof(docs, blocklist = Seq("cat", "mat")), cols)
+      }
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
+
 /** graft_tokenize exposed to SQL via SparkSessionExtensions. */
 class ExtensionsSpec extends SparkSpec {
 
@@ -23,5 +25,12 @@ class ExtensionsSpec extends SparkSpec {
     val e = intercept[Exception](spark.sql("SELECT graft_tokenize(42)").collect())
     assert(e.getMessage.toLowerCase.contains("string") ||
       e.getMessage.contains("DATATYPE_MISMATCH"))
+  }
+
+  test("any arity but one is rejected at analysis with WRONG_NUM_ARGS") {
+    for (q <- Seq("SELECT graft_tokenize('a b', 'zzz')", "SELECT graft_tokenize()")) {
+      val e = intercept[AnalysisException](spark.sql(q))
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$q: ${e.getMessage}")
+    }
   }
 }

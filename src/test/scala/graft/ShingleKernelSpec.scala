@@ -38,44 +38,52 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("Shingles kernel equals the HOF form on fuzz and corpus") {
-    for (docs <- Seq(fuzzDocs, corpusDocs); n <- Seq(1, 2, 5, 10)) {
-      assertColsEqual(docs.select(
-        Dedup.shingles(col("text"), n).as("a"),
-        Dedup.shinglesHof(col("text"), n).as("b")))
+    underEachCodegenMode {
+      for (docs <- Seq(fuzzDocs, corpusDocs); n <- Seq(1, 2, 5, 10)) {
+        assertColsEqual(docs.select(
+          Dedup.shingles(col("text"), n).as("a"),
+          Dedup.shinglesHof(col("text"), n).as("b")))
+      }
     }
   }
 
   test("GramMd5 kernel equals the HOF form on words and sentences") {
-    for (docs <- Seq(fuzzDocs, corpusDocs); n <- Seq(1, 3, 8)) {
-      val words = filter(split(coalesce(col("text"), lit("")), "\\s+"),
-        w => w =!= "")
-      for (units <- Seq(words, C4.sentences(col("text")))) {
-        val ws = col("ws")
-        assertColsEqual(docs
-          .select(units.as("ws"))
-          .where(size(ws) >= n)
-          .select(
-            graft.functions.GramMd5.of(ws, n).as("a"),
-            transform(sequence(lit(0), size(ws) - n),
-              i => md5(lower(concat_ws(" ", slice(ws, i + 1, lit(n)))))).as("b")))
+    underEachCodegenMode {
+      for (docs <- Seq(fuzzDocs, corpusDocs); n <- Seq(1, 3, 8)) {
+        val words = filter(split(coalesce(col("text"), lit("")), "\\s+"),
+          w => w =!= "")
+        for (units <- Seq(words, C4.sentences(col("text")))) {
+          val ws = col("ws")
+          assertColsEqual(docs
+            .select(units.as("ws"))
+            .where(size(ws) >= n)
+            .select(
+              graft.functions.GramMd5.of(ws, n).as("a"),
+              transform(sequence(lit(0), size(ws) - n),
+                i => md5(lower(concat_ws(" ", slice(ws, i + 1, lit(n)))))).as("b")))
+        }
       }
     }
   }
 
   test("WordBigrams kernel equals the HOF form") {
-    for (docs <- Seq(fuzzDocs, corpusDocs)) {
-      assertColsEqual(docs.select(
-        graft.functions.WordBigrams.of(col("text")).as("a"),
-        graft.ops.LangModel.bigramsOf(
-          graft.ops.TextStats.words(col("text"))).as("b")))
+    underEachCodegenMode {
+      for (docs <- Seq(fuzzDocs, corpusDocs)) {
+        assertColsEqual(docs.select(
+          graft.functions.WordBigrams.of(col("text")).as("a"),
+          graft.ops.LangModel.bigramsOf(
+            graft.ops.TextStats.words(col("text"))).as("b")))
+      }
     }
   }
 
   test("DsirBuckets kernel equals the HOF form") {
-    for (docs <- Seq(fuzzDocs, corpusDocs); b <- Seq(7, 256)) {
-      assertColsEqual(docs.select(
-        Dsir.buckets(col("text"), b).as("a"),
-        Dsir.bucketsHof(col("text"), b).as("b")))
+    underEachCodegenMode {
+      for (docs <- Seq(fuzzDocs, corpusDocs); b <- Seq(7, 256)) {
+        assertColsEqual(docs.select(
+          Dsir.buckets(col("text"), b).as("a"),
+          Dsir.bucketsHof(col("text"), b).as("b")))
+      }
     }
   }
 }

@@ -46,44 +46,51 @@ class TokCapsKernelSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("kernel equals expression forms on the category zoo") {
-    assertSame(Seq(
-      "", "abc", "Abc", "ABC", "aBC", ",", ".", "(", "123", "12a", "a12",
-      "１２３",          // fullwidth digits: Nd → ALLDIGIT
-      "¹²³",             // superscripts: No, NOT Nd → NODIGIT + ALLCAP
-      "ª",               // Other_Lowercase (Lo category) → no Ll → ALLCAP
-      "ǅup",            // titlecase first char (Lt): not Lu → NOCAPS
-      "Σωκράτης", "ΣΩΚΡΑΤΗΣ", "σς",
-      "𝔘nicode",        // astral first char (Lu, math bold) → INITCAP
-      "𐐨lower",         // astral Ll (Deseret small) → not ALLCAP
-      "中文", "Éclair", "éclair", "Ñ", "ñ",
-      "A1", "1A", "٣٤٥",  // Arabic-Indic digits: Nd
-      "half½",           // ½ is No → NODIGIT leg
-      null,              // null token → when-chain fall-through
-      // embedded line terminators take the String fallback so the `$`
-      // before-final-terminator regex semantics survive exactly
-      "12\n", "12\r", "12\u0085", "12\u2028", "12\u2029", "a\nB", "\n"
-    ))
+    underEachCodegenMode {
+      assertSame(Seq(
+        "", "abc", "Abc", "ABC", "aBC", ",", ".", "(", "123", "12a", "a12",
+        "１２３",          // fullwidth digits: Nd → ALLDIGIT
+        "¹²³",             // superscripts: No, NOT Nd → NODIGIT + ALLCAP
+        "ª",               // Other_Lowercase (Lo category) → no Ll → ALLCAP
+        "ǅup",            // titlecase first char (Lt): not Lu → NOCAPS
+        "Σωκράτης", "ΣΩΚΡΑΤΗΣ", "σς",
+        "𝔘nicode",        // astral first char (Lu, math bold) → INITCAP
+        "𐐨lower",         // astral Ll (Deseret small) → not ALLCAP
+        "中文", "Éclair", "éclair", "Ñ", "ñ",
+        "A1", "1A", "٣٤٥",  // Arabic-Indic digits: Nd
+        "half½",           // ½ is No → NODIGIT leg
+        null,              // null token → when-chain fall-through
+        // embedded line terminators take the String fallback so the `$`
+        // before-final-terminator regex semantics survive exactly
+        "12\n", "12\r", "12\u0085", "12\u2028", "12\u2029", "a\nB", "\n"
+      ))
+    }
   }
 
   test("kernel equals expression forms on random fuzz") {
-    val pool: Array[String] = Array("a", "B", "ç", "Ω", "1", "９", "٣", "¹",
-      ".", ",", "(", "ª", "ǅ", "中", "𝔘", "𐐨", "½", "ß", "İ")
-    val rnd = new scala.util.Random(9120626L)
-    val toks = (0 until 1500).map { _ =>
-      (0 until rnd.nextInt(8)).map(_ => pool(rnd.nextInt(pool.length))).mkString
+    underEachCodegenMode {
+      val pool: Array[String] = Array("a", "B", "ç", "Ω", "1", "９", "٣", "¹",
+        ".", ",", "(", "ª", "ǅ", "中", "𝔘", "𐐨", "½", "ß", "İ")
+      val rnd = new scala.util.Random(9120626L)
+      val toks = (0 until 1500).map { _ =>
+        (0 until rnd.nextInt(8)).map(_ => pool(rnd.nextInt(pool.length))).mkString
+      }
+      assertSame(toks)
     }
-    assertSame(toks)
   }
 
   test("kernel matches on the sf0.001 tokenized corpus") {
     val toks = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(explode(split(coalesce(col("text"), lit("")), "\\s+")).as("tok"))
       .limit(20000)
-      .withColumn("_tc", graft.functions.TokCaps.of(col("tok")))
-      .withColumn("ed", TextCols.digitClass(col("tok")))
-      .withColumn("ec", TextCols.capitalisation(col("tok"), col("ed")))
-      .where(col("_tc.digit_class") =!= col("ed") ||
-        col("_tc.cap_class") =!= col("ec"))
-    assert(toks.isEmpty, toks.limit(5).collect().mkString("\n"))
+    underEachCodegenMode {
+      val bad = toks
+        .withColumn("_tc", graft.functions.TokCaps.of(col("tok")))
+        .withColumn("ed", TextCols.digitClass(col("tok")))
+        .withColumn("ec", TextCols.capitalisation(col("tok"), col("ed")))
+        .where(col("_tc.digit_class") =!= col("ed") ||
+          col("_tc.cap_class") =!= col("ec"))
+      assert(bad.isEmpty, bad.limit(5).collect().mkString("\n"))
+    }
   }
 }
