@@ -46,8 +46,9 @@ object Pipeline {
    * `fromLines(bodyLines)` (TranscriptSpansSpec) and to
    * [[extractDeclarative]] (`bodyLabels`, the same operator's label sink
    * over token rows, then [[Assemble.bodySpans]]). [[runResumable]] labels
-   * with `bodyLabels`, commits, then walks the committed labels with the
-   * operator's label-span mode.
+   * with the operator's transcript label mode
+   * ([[graft.plans.BodySpans.transcriptLabels]]), commits, then walks the
+   * committed labels with its label-span mode.
    */
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.fromTranscript(
@@ -201,12 +202,13 @@ object Pipeline {
     Assemble.bodySpans(labeledBodyTokens(turns))
 
   /** structure → the `<body>` lines, over one exchange: the Catalyst zone
-   * rule behind [[labeledBodyTokens]] (so [[runResumable]] and
-   * [[extractDeclarative]]), and the rule [[extract]]'s span walk applies
-   * per conversation. It reads one segmenter column, so the
-   * [[Features.segmenter]] windows are not built (analysing them only for
-   * the optimizer to prune was most of a pass's driver cost), nor the
-   * [[Labeler.zones]] windows that body membership does not read. */
+   * rule behind [[labeledBodyTokens]] (so [[extractDeclarative]] and the
+   * driver's label queries), and the rule the span walk of [[extract]] and
+   * the label walk of [[runResumable]] apply per conversation. It reads one
+   * segmenter column, so the [[Features.segmenter]] windows are not built
+   * (analysing them only for the optimizer to prune was most of a pass's
+   * driver cost), nor the [[Labeler.zones]] windows that body membership
+   * does not read. */
   private def bodyLines(turns: DataFrame): DataFrame = {
     val lines = Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id"))
     // F4: zone selection is a plain filter because labels are columns
@@ -217,10 +219,11 @@ object Pipeline {
   private def bodyTokenFeats(turns: DataFrame): DataFrame =
     fsmInput(Structure.tokensFromLines(bodyLines(turns)))
 
-  /** structure → zone → body features → FSM labels, over one exchange. */
-  def labeledBodyTokens(turns: DataFrame,
-      failures: Option[Lineage.PartitionStats] = None): DataFrame =
-    Labeler.bodyLabels(bodyTokenFeats(turns), repartitionByConv = false, failures)
+  /** structure → zone → body features → FSM labels, over one exchange, on
+   * the Catalyst rules: the independent twin of the label walk
+   * [[runResumable]] commits. */
+  def labeledBodyTokens(turns: DataFrame): DataFrame =
+    Labeler.bodyLabels(bodyTokenFeats(turns), repartitionByConv = false)
 
   /** Extraction result as one TEI document per conversation. */
   def extractTei(turns: DataFrame): DataFrame =
@@ -241,7 +244,11 @@ object Pipeline {
    * manifest through [[TableIO]]; a re-run skips committed stages, so a
    * killed job resumes from its last checkpoint with identical output.
    * Per-partition lineage rows (rows/bytes/parse failures) are committed
-   * alongside each stage. The spans stage follows the committed `label`
+   * alongside each stage. The labels stage is one sorted walk over the kept
+   * lines after one conv_id exchange
+   * ([[graft.plans.BodySpans.transcriptLabels]]: the zone rule, the
+   * tokenizer and the FSM per conversation, no window), row-identical to
+   * [[labeledBodyTokens]]. The spans stage follows the committed `label`
    * column, never re-classifies: [[graft.plans.BodySpans.fromLabels]]
    * walks it in one sorted pass (one conv_id exchange over the parquet
    * read), output-identical to [[Assemble.bodySpans]].
@@ -265,7 +272,8 @@ object Pipeline {
         val fails = Lineage.newStats(spark, "labeled_failures")
         val labeledDf = chunkTurns match {
           case Some(c) => labeledBodyTokensChunked(turns, c, Some(fails))
-          case None => labeledBodyTokens(turns, Some(fails))
+          case None => graft.plans.BodySpans.transcriptLabels(
+            Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id")), Some(fails))
         }
         val out = Lineage.withPartitionLineage(
           labeledDf, acc, Seq("tok", "sep_before"))

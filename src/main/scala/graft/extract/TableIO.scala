@@ -10,7 +10,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  * manifest pointer — behind a seam so a real Iceberg catalog is a config
  * swap (no Iceberg jar ships in this sandbox; see SURVEY.md §7.3).
  *
- * Commit protocol: write parquet to `snapshot=<id>/`, write the snapshot's
+ * Commit protocol: write parquet to `snapshot=<id>/` (zstd-compressed, the
+ * Parquet codec Iceberg writes by default; reads take any codec, so older
+ * Snappy directories in a chain stay readable), write the snapshot's
  * metadata record to `_snapshots/<id>.json` (invisible until referenced),
  * then atomically move `_manifest.json.tmp` → `_manifest.json` pointing at
  * it. A killed run leaves either no manifest (stage recomputed) or a fully
@@ -184,7 +186,7 @@ final class LocalSnapshotIO(root: String) extends TableIO {
     require(!Files.exists(metaFile(stage, snapshotId)) && !Files.exists(snapDir),
       s"snapshot id $snapshotId already used for stage $stage " +
         "(ids are immutable; pick a fresh id)")
-    df.write.mode(SaveMode.Overwrite).parquet(snapDir.toString)
+    df.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(snapDir.toString)
     val meta = s"""{"id": "$snapshotId", "parent": "${parent.getOrElse("")}", """ +
       s""""op": "$op", "ts": ${System.currentTimeMillis()}}"""
     Files.write(metaFile(stage, snapshotId), meta.getBytes("UTF-8"))

@@ -23,13 +23,14 @@ import graft.functions.{LineKernels, TokCaps, TokenScan}
  * walk, as the reference tokenizes each line inside its label walk and
  * writes TEI during it (`DatacatSegmenterParser.java:1009-1088`). One
  * logical node, strategy and exec run one line walker ([[LineWalk]]) into
- * one of three sinks: spans ([[fromTranscript]], the flagship, zones each
+ * one of four sinks: spans ([[fromTranscript]], the flagship, zones each
  * conversation's kept lines and tokenizes each body line in the walk;
  * [[fromLines]] tokenizes given body lines; [[spans]] reads token rows;
  * [[fromLabels]] follows a committed `label` column instead of
- * classifying), BIO label rows ([[labels]]) or chunk transition functions
- * ([[transitions]]). Every span mode hands every token to one span rule
- * (`SpanAcc.token`).
+ * classifying), BIO label rows over token rows ([[labels]]), labeled token
+ * rows made by the walk ([[transcriptLabels]], zoned and tokenized as
+ * [[fromTranscript]] does) or chunk transition functions ([[transitions]]).
+ * Every span mode hands every token to one span rule (`SpanAcc.token`).
  *
  * A custom `LogicalPlan` + `Strategy` + `SparkPlan` because a
  * `mapPartitions` body cannot:
@@ -93,6 +94,21 @@ object BodySpans {
    */
   def fromLabels(labeled: DataFrame): DataFrame = plan(labeled, BodyWalk.LabelSpans)
 
+  /**
+   * The labeled body tokens of a conversation's kept lines, as
+   * [[fromTranscript]] zones and tokenizes them: the nine columns (conv_id,
+   * turn_idx, line_in_turn, tok_idx, tok, sep_before, line_trailing,
+   * f_capitalisation, label), with the types and nullability of
+   * `Labeler.bodyLabels` over `Structure.tokensFromLines` of the Catalyst
+   * zone rule's body lines, and the same rows (TranscriptLabelsSpec). One
+   * row per token of a classified line; a line whose classification throws
+   * is dropped and counted in `failures`, as `bodyLabels` drops it. The plan
+   * has no zone window, no lag window, no token explode and no token sort.
+   */
+  def transcriptLabels(keptLines: DataFrame,
+      failures: Option[Lineage.PartitionStats]): DataFrame =
+    plan(keptLines, BodyWalk.TranscriptLabels, failures)
+
   /** The FSM's BIO labels: every column of `tokens` plus a non-null
    * `label`, one row per classified token. `chunked`: the group is
    * (conv_id, `_chunk`), `_peek` rows are lookahead only, `_entry` is a
@@ -117,8 +133,9 @@ object BodySpans {
     if (!spark.experimental.extraStrategies.contains(BodySpansStrategy))
       spark.experimental.extraStrategies = BodySpansStrategy +: spark.experimental.extraStrategies
     val child = if (mode.passThrough) df else df.select(mode.inputCols.map(df.col): _*)
+    val logical = bridge.logical(child)
     bridge.ofRows(spark,
-      BodySpansPlan(bridge.logical(child), mode, BodyWalk.produced(mode), failures))
+      BodySpansPlan(logical, mode, BodyWalk.produced(mode, logical.output), failures))
   }
 
   private[plans] def str(r: InternalRow, i: Int): String = {
@@ -146,6 +163,9 @@ object BodyWalk {
   /** The transcript zone rule, then the body FSM over the body lines it
    * tokenizes, emitting spans. */
   case object TranscriptSpans extends BodyWalk("role", "tool", "block_idx", "line_idx", "line")
+  /** The transcript zone rule, then the body FSM over the body lines it
+   * tokenizes, emitting each token with its BIO `label`. */
+  case object TranscriptLabels extends BodyWalk("role", "tool", "block_idx", "line_idx", "line")
   /** The committed `label` column, emitting spans. */
   case object LabelSpans extends BodyWalk("tok_idx", "tok", "sep_before", "line_trailing", "label")
   /** The body FSM, emitting each token row with its BIO `label`. */
@@ -155,9 +175,11 @@ object BodyWalk {
   /** The body FSM from every entry state, emitting each chunk's exit vector. */
   case object Transitions extends BodyWalk("tok_idx", "tok", "f_capitalisation", "_chunk", "_peek")
 
-  /** The attributes a walk makes. A null input label (not BIO, but Assemble
-   * tolerates it) passes through as a one-token span with a null label. */
-  private[plans] def produced(mode: BodyWalk): Seq[Attribute] = mode match {
+  /** The attributes a walk over `input` makes. A null input label (not
+   * BIO, but Assemble tolerates it) passes through as a one-token span with
+   * a null label. The line keys of labeled token rows are as nullable as in
+   * `input`. */
+  private[plans] def produced(mode: BodyWalk, input: Seq[Attribute]): Seq[Attribute] = mode match {
     case FsmSpans | LineSpans | TranscriptSpans | LabelSpans => Seq(
       AttributeReference("conv_id", StringType, nullable = true)(),
       AttributeReference("segment_id", LongType, nullable = false)(),
@@ -165,6 +187,17 @@ object BodyWalk {
       AttributeReference("turn_idx", IntegerType, nullable = true)(),
       AttributeReference("text", StringType, nullable = false)())
     case Labels | ChunkLabels => Seq(AttributeReference("label", StringType, nullable = false)())
+    case TranscriptLabels =>
+      def key(name: String, t: DataType) =
+        AttributeReference(name, t, input.find(_.name == name).forall(_.nullable))()
+      Seq(key("conv_id", StringType), key("turn_idx", IntegerType),
+        key("line_in_turn", IntegerType),
+        AttributeReference("tok_idx", IntegerType, nullable = false)(),
+        AttributeReference("tok", StringType, nullable = false)(),
+        AttributeReference("sep_before", StringType, nullable = true)(),
+        AttributeReference("line_trailing", StringType, nullable = true)(),
+        AttributeReference("f_capitalisation", StringType, nullable = false)(),
+        AttributeReference("label", StringType, nullable = false)())
     case Transitions => Seq(
       AttributeReference("conv_id", StringType, nullable = true)(),
       AttributeReference("_chunk", IntegerType, nullable = false)(),
@@ -312,14 +345,18 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
     val m = mode
     val fails = failures
     // the zone rule's session settings, read here on the driver
-    val zone = if (m != BodyWalk.TranscriptSpans) None else Some(ZoneCols(
-      idx("role"), idx("tool"), idx("block_idx"), idx("line_idx"),
-      child.output.map(_.dataType).toArray,
-      bridge.icuCaseMappings(conf), bridge.windowBufferSize(conf)))
+    val zone =
+      if (m != BodyWalk.TranscriptSpans && m != BodyWalk.TranscriptLabels) None
+      else Some(ZoneCols(
+        idx("role"), idx("tool"), idx("block_idx"), idx("line_idx"),
+        child.output.map(_.dataType).toArray,
+        bridge.icuCaseMappings(conf), bridge.windowBufferSize(conf)))
     child.execute().mapPartitions { it =>
       m match {
         case BodyWalk.TranscriptSpans => new SpanSink(new TranscriptZoner(it, cols, zone.get),
           outSchema, cols, fromLabels = false, linesValid = true)
+        case BodyWalk.TranscriptLabels =>
+          new TokenLabelSink(new TranscriptZoner(it, cols, zone.get), outSchema, cols, fails)
         case BodyWalk.FsmSpans | BodyWalk.LineSpans | BodyWalk.LabelSpans =>
           new SpanSink(it, outSchema, cols, fromLabels = m == BodyWalk.LabelSpans)
         case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols, fails)
@@ -358,6 +395,8 @@ private[plans] final class Line {
   var conv: String = null
   var chunk = 0
   var turn = 0
+  /** The line's turn_idx is null (`turn` reads 0). */
+  var turnNull = false
   var line = 0
   var peek = false
   /** [[Labeler.isEntryLine]] of the line, set once the line is complete. */
@@ -367,7 +406,8 @@ private[plans] final class Line {
 }
 
 /**
- * The zone rule of the transcript mode ([[BodySpans.fromTranscript]]):
+ * The zone rule of the transcript modes ([[BodySpans.fromTranscript]],
+ * [[BodySpans.transcriptLabels]]):
  * from a partition's kept lines, sorted by (conv_id, turn_idx,
  * line_in_turn), it passes on the `<body>` lines of
  * `Labeler.bodyLines(Features.repetitive(lines))`, in the same order. One
@@ -616,12 +656,13 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
    * line before it is complete, and so is its group if `r` starts another. */
   private def enter(r: InternalRow, conv: String, chunk: Int, turn: Int, ln: Int): Unit = {
     val newGroup = cur.toks.isEmpty || conv != cur.conv || chunk != cur.chunk
+    val turnNull = r.isNullAt(c.turn)
     if (cur.toks.nonEmpty) {
       if (newGroup) endOfGroup()
-      else if (turn != cur.turn || ln != cur.line) completeLine()
+      else if (turn != cur.turn || turnNull != cur.turnNull || ln != cur.line) completeLine()
     }
     if (cur.toks.isEmpty) {
-      cur.conv = conv; cur.chunk = chunk; cur.turn = turn; cur.line = ln
+      cur.conv = conv; cur.chunk = chunk; cur.turn = turn; cur.turnNull = turnNull; cur.line = ln
       cur.peek = c.peek >= 0 && r.getBoolean(c.peek)
       if (newGroup) startGroup(r)
     }
@@ -642,6 +683,7 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
   private var fed = false
   private var prevConv: String = null
   private var prevTurn = 0
+  private var prevTurnNull = false
   private var prevLine = 0
   private var prevTrail = ""
 
@@ -652,10 +694,11 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
    * Invalid UTF-8 is cleaned first (U+FFFD), as those kernels clean it. The
    * first token's separator follows that method's lag rule: the previous
    * line's trailing whitespace, one `\n` per line gap (0 on the
-   * conversation's first line, 1 across turns, else the `line_in_turn`
-   * difference), then its own. A line without tokens still moves that
-   * state, because the lag runs over lines, not tokens. `linesValid`: the
-   * rows come from [[TranscriptZoner]], which cleaned them.
+   * conversation's first line and after a line whose turn_idx is null, 1
+   * across turns, else the `line_in_turn` difference), then its own. A line
+   * without tokens still moves that state, because the lag runs over lines,
+   * not tokens. `linesValid`: the rows come from [[TranscriptZoner]], which
+   * cleaned them.
    */
   private def feedLine(r: InternalRow): Unit = {
     val conv = str(r, c.conv)
@@ -663,7 +706,7 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
     val ln = r.getInt(c.line)
     val newConv = !fed || conv != prevConv
     if (newConv) prevTrail = ""
-    val gap = if (newConv) 0 else if (turn != prevTurn) 1 else ln - prevLine
+    val gap = if (newConv || prevTurnNull) 0 else if (turn != prevTurn) 1 else ln - prevLine
     var trail = ""
     if (!r.isNullAt(c.text)) {
       val raw = r.getUTF8String(c.text)
@@ -686,7 +729,8 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
       }
     }
     fed = true
-    prevConv = conv; prevTurn = turn; prevLine = ln; prevTrail = trail
+    prevConv = conv; prevTurn = turn; prevTurnNull = r.isNullAt(c.turn); prevLine = ln
+    prevTrail = trail
   }
 
   private def decode(b: Array[Byte], from: Int, until: Int): String =
@@ -788,6 +832,29 @@ private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: Struc
     labelRow.update(0, labels.dequeue())
     super.project(joined(r, labelRow))
   }
+}
+
+/** Emits a row of the nine [[BodySpans.transcriptLabels]] columns per token
+ * of a classified line, from the tokens, separators and capitalisations the
+ * line feeder made; the label is [[LabelSink]]'s. */
+private[plans] final class TokenLabelSink(it: Iterator[InternalRow], outSchema: StructType,
+    c: WalkCols, failures: Option[Lineage.PartitionStats])
+    extends LineWalk(it, outSchema, c, failures, linesValid = true) {
+
+  protected def line(l: Line, nextIsEntry: Boolean): Unit =
+    classified(l, nextIsEntry).foreach { case (base, isStart) =>
+      val conv = UTF8String.fromString(l.conv)
+      val turn: Any = if (l.turnNull) null else l.turn
+      val b = UTF8String.fromString(base)
+      var i = 0
+      while (i < l.toks.length) {
+        out += new GenericInternalRow(Array[Any](conv, turn, l.line, i,
+          UTF8String.fromString(l.toks(i)), UTF8String.fromString(l.seps(i)),
+          UTF8String.fromString(l.trails(i)), UTF8String.fromString(l.caps(i)),
+          if (i == 0 && isStart) UTF8String.fromString("I-" + base) else b))
+        i += 1
+      }
+    }
 }
 
 /** Pass 1 of the chunk-parallel labeler: the group's transition function,

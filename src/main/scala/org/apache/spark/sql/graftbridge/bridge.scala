@@ -2,7 +2,6 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionColumnNode
@@ -39,15 +38,13 @@ object bridge {
     * `df` on its (lazily planned) execution RDD via `LogicalRDD`, so
     * downstream logical plans see a LEAF instead of the whole upstream tree.
     * No data is materialized (unlike localCheckpoint): repeated actions over
-    * the same barrier reuse its shuffle stages. `pass` sees each partition's
-    * rows and must hand them on unchanged. Cost: no optimizer pushdown
+    * the same barrier reuse its shuffle stages. Cost: no optimizer pushdown
     * across the barrier (pre-prune columns first) and plan-time stats
     * degrade to the defaultSizeInBytes sentinel (see `graft.ops.Par.spread`). */
-  def planBarrier(df: DataFrame, pass: Iterator[InternalRow] => Iterator[InternalRow] =
-      identity): DataFrame = {
+  def planBarrier(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[CDataset[Row]]
     ofRows(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD.fromDataset(
-      ds.queryExecution.toRdd.mapPartitions(pass), ds, isStreaming = false))
+      ds.queryExecution.toRdd, ds, isStreaming = false))
   }
 
   /** Clone `spark` (same SparkContext and shared state; conf, temp views

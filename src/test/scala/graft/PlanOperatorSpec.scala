@@ -279,6 +279,45 @@ class PlanOperatorSpec extends SparkSpec {
     assert(!plan.contains("f_capitalisation"), s"f_capitalisation not pruned:\n$plan")
   }
 
+  test("the resumable labels stage plans one conv_id exchange, no window and no token explode") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    object aqe extends AdaptiveSparkPlanHelper
+    // the executed plans of the stage commits, as a listener sees them
+    val seen = scala.collection.mutable.Buffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.synchronized(seen += qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("resumable-plan").toString
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.runResumable(Synthetic.transcripts(spark, 50),
+        new graft.extract.LocalSnapshotIO(root))
+      org.apache.spark.sql.graftbridge.bridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val labels = seen.synchronized(seen.toList).filter(p => aqe.collect(p) {
+      case w: graft.plans.BodySpansExec if w.mode == graft.plans.BodyWalk.TranscriptLabels => w
+    }.nonEmpty)
+    assert(labels.size == 1, s"${labels.size} commit plans with the label walk")
+    val plan = labels.head
+    // the lineage count runs in the commit's own plan
+    assert(aqe.collect(plan) { case l: graft.extract.PartitionLineageExec => l }.size == 1, plan)
+    assert(aqe.collect(plan) { case w: WindowExec => w }.isEmpty, plan)
+    val tokenExplode = aqe.collect(plan) {
+      case g: GenerateExec if g.generator.exists(_.isInstanceOf[graft.functions.Tokenize]) => g
+    }
+    assert(tokenExplode.isEmpty, plan)
+    val convExchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning if h.references.exists(_.name == "conv_id") => h }
+    assert(convExchanges.size == 1, plan)
+  }
+
   test("label mode over labeledBodyTokens adds one conv_id exchange, no window or aggregate") {
     val plan = BodySpans.fromLabels(
       Pipeline.labeledBodyTokens(Synthetic.transcripts(spark, 50)))

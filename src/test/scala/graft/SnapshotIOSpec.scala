@@ -86,6 +86,41 @@ class SnapshotIOSpec extends SparkSpec {
     assert(idsOf(io.read(spark, "t")) == Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
+  /** The codecs of the column chunks of every parquet file of `snap`, read
+   * from the files' footers. */
+  private def codecs(dir: String, snap: String): Set[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val files = Files.list(Paths.get(dir, "t", s"snapshot=$snap")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }.toSet
+  }
+
+  private def rowsOf(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+
+  test("commits write zstd; a Snappy chain reads row-identical and compacts to zstd") {
+    val (io, dir) = freshIo()
+    io.commit(df(1, 2), "t", "s1")
+    assert(codecs(dir, "s1") == Set("ZSTD"))
+    // a chain root written as Snappy parquet, as commits were before zstd
+    df(1, 2).write.mode("overwrite").option("compression", "snappy")
+      .parquet(Paths.get(dir, "t", "snapshot=s1").toString)
+    assert(codecs(dir, "s1") == Set("SNAPPY"))
+    io.commitAppend(df(3), "t", "s2")
+    assert(codecs(dir, "s2") == Set("ZSTD"))
+    assert(rowsOf(io.read(spark, "t")) == rowsOf(df(1, 2, 3)))
+    io.compact(spark, "t", "c1", targetPartitions = 1)
+    assert(codecs(dir, "c1") == Set("ZSTD"))
+    assert(rowsOf(io.read(spark, "t")) == rowsOf(df(1, 2, 3)))
+  }
+
   test("incremental consumers never re-receive compacted rewrites") {
     val (io, _) = freshIo()
     io.commit(df(1, 2), "t", "s1")

@@ -1,37 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.extract.{Features, Labeler, Structure, Synthetic}
 import graft.plans.BodySpans
 
-/**
- * The span operator's transcript mode applies the zone rule inside its
- * walk. It must equal the line-input mode over the Catalyst zone rule, row
- * for row and byte for byte: `BodySpans.fromTranscript(kept)` against
- * `BodySpans.fromLines(Labeler.bodyLines(Features.repetitive(kept)))`,
- * whose `max(block_idx)` and pattern-count windows decide the same lines.
- */
-class TranscriptSpansSpec extends SparkSpec {
-
-  private def rows(df: DataFrame): Seq[Seq[Any]] =
-    df.withColumn("text", col("text").cast("binary")).collect().toSeq
-      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq case v => v })
-      .sortBy(r => (String.valueOf(r(0)), r(1).asInstanceOf[Long]))
-
-  private def assertSame(kept: DataFrame): Unit = {
-    val got = BodySpans.fromTranscript(kept)
-    val want = BodySpans.fromLines(Labeler.bodyLines(Features.repetitive(kept)))
-    assert(got.schema == want.schema)
-    val w = rows(want)
-    assert(w.nonEmpty)
-    assert(rows(got) == w)
-  }
+/** Turns frames for the transcript-mode differentials: the seeded
+ * repetition fuzz, the zone rule's hand traps and the line kernels' traps
+ * and fuzz under every role. */
+object TranscriptCorpus {
 
   /** `conv_id, turn_idx, role, text, tool` rows as a turns frame, in three
    * partitions, in reverse order. */
-  private def turns(ts: Seq[(String, Integer, String, String, String)]): DataFrame = {
+  def turns(spark: SparkSession, ts: Seq[(String, Integer, String, String, String)]): DataFrame = {
     val schema = StructType.fromDDL(
       "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING")
     spark.createDataFrame(spark.sparkContext.parallelize(
@@ -42,7 +24,7 @@ class TranscriptSpansSpec extends SparkSpec {
    * headers, short lines and `\r`-led lines, blank-line block breaks, every
    * role, tools, and turns repeated under the same turn_idx (same text, any
    * role, so sort ties between them cannot change the spans). */
-  private def repetitionFuzz(seed: Long, nConvs: Int): DataFrame = {
+  def repetitionFuzz(spark: SparkSession, seed: Long, nConvs: Int): DataFrame = {
     val rnd = new scala.util.Random(seed)
     val pool = Seq("CONFIDENTIAL NOTICE", "Page header of the catalogue", "Σίσυφος ΣΟΦΟΣ ΣΑΣ",
       "İİİİİİİİ", "ßßßßßßßß x", "ßßßßßßßßß", "abcdefgh", "abcdefghi", "ABCDEFGHI 12",
@@ -61,11 +43,11 @@ class TranscriptSpansSpec extends SparkSpec {
         else Seq(turn)
       }
     }
-    Structure.keptLines(turns(ts))
+    turns(spark, ts)
   }
 
   /** The hand traps of the zone rule. */
-  private def handTraps: DataFrame = {
+  def handTraps(spark: SparkSession): DataFrame = {
     val header = "CONFIDENTIAL NOTICE TO READERS"
     val ts = Seq[(String, Integer, String, String, String)](
       // a header repeated only inside tool and system turns counts there and
@@ -120,8 +102,54 @@ class TranscriptSpansSpec extends SparkSpec {
       (null, 1, null, "NULL CONVERSATION HEADER\nnull role text", null),
       ("z", 0, null, "Null role line\n\nNULLROLE TAILLINE", null),
       ("z", 1, null, "NULLROLE TAILLINE", null),
-      ("z", null, "user", "null turn_idx line", null))
-    Structure.keptLines(turns(ts))
+      ("z", null, "user", "null turn_idx line", null),
+      // a null turn_idx sorts first and reads as turn 0: its lines stay
+      // apart from turn 0's, and the line after one of them has no gap
+      ("y", null, "user", "first null turn line\nsecond null turn line", null),
+      ("y", 0, "user", "turn zero line", null),
+      ("y", 2, "user", "after the null turn", null))
+    turns(spark, ts)
+  }
+
+  /** The line kernels' traps and fuzz turns, in seven conversations,
+   * under every role. */
+  def lineFuzz(spark: SparkSession): DataFrame = {
+    val roles = Seq("user", "assistant", "tool", "system", null)
+    val texts = LineFuzz.traps ++ LineFuzz.fuzz(21L, 1500, 40)
+    turns(spark, texts.zipWithIndex.map { case (t, i) =>
+      (s"c${i % 7}", Integer.valueOf(i / 7), roles(i % roles.length), t,
+        if (i % 11 == 0) "search" else null)
+    })
+  }
+}
+
+/**
+ * The span operator's transcript mode applies the zone rule inside its
+ * walk. It must equal the line-input mode over the Catalyst zone rule, row
+ * for row and byte for byte: `BodySpans.fromTranscript(kept)` against
+ * `BodySpans.fromLines(Labeler.bodyLines(Features.repetitive(kept)))`,
+ * whose `max(block_idx)` and pattern-count windows decide the same lines.
+ */
+class TranscriptSpansSpec extends SparkSpec {
+  import TranscriptCorpus.lineFuzz
+
+  private def repetitionFuzz(seed: Long, nConvs: Int): DataFrame =
+    Structure.keptLines(TranscriptCorpus.repetitionFuzz(spark, seed, nConvs))
+
+  private def handTraps: DataFrame = Structure.keptLines(TranscriptCorpus.handTraps(spark))
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.withColumn("text", col("text").cast("binary")).collect().toSeq
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq case v => v })
+      .sortBy(r => (String.valueOf(r(0)), r(1).asInstanceOf[Long]))
+
+  private def assertSame(kept: DataFrame): Unit = {
+    val got = BodySpans.fromTranscript(kept)
+    val want = BodySpans.fromLines(Labeler.bodyLines(Features.repetitive(kept)))
+    assert(got.schema == want.schema)
+    val w = rows(want)
+    assert(w.nonEmpty)
+    assert(rows(got) == w)
   }
 
   test("Synthetic transcripts") {
@@ -134,12 +162,7 @@ class TranscriptSpansSpec extends SparkSpec {
   }
 
   test("the line kernels' traps and fuzz turns, under every role") {
-    val roles = Seq("user", "assistant", "tool", "system", null)
-    val texts = LineFuzz.traps ++ LineFuzz.fuzz(21L, 1500, 40)
-    assertSame(Structure.keptLines(turns(texts.zipWithIndex.map { case (t, i) =>
-      (s"c${i % 7}", Integer.valueOf(i / 7), roles(i % roles.length), t,
-        if (i % 11 == 0) "search" else null)
-    })))
+    assertSame(Structure.keptLines(lineFuzz(spark)))
   }
 
   test("seeded repetition fuzz") {
