@@ -218,23 +218,9 @@ object LineKernels {
 
   /** `TextCols.pattern` of `u` (valid UTF-8): [[validLetters]], lower-cased
    * by the call Spark's `Lower` makes, with the session's
-   * `spark.sql.icu.caseMappings.enabled` as `icu`. Letters that are all
-   * ASCII are lower-cased here, `A`–`Z` to `a`–`z`, which is what `Lower`
-   * makes of them under either setting (LineKernelSpec), without its
-   * decode, case mapping and re-encode. */
-  private[graft] def pattern(u: UTF8String, icu: Boolean): UTF8String = {
-    val letters = validLetters(u)
-    val n = letters.numBytes
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      val b = byteAt(letters, i)
-      if (b < 0) return CollationSupport.Lower.exec(letters, StringType.collationId, icu)
-      out(i) = if (b >= 'A' && b <= 'Z') (b + ('a' - 'A')).toByte else b
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
+   * `spark.sql.icu.caseMappings.enabled` as `icu`. */
+  private[graft] def pattern(u: UTF8String, icu: Boolean): UTF8String =
+    CollationSupport.Lower.exec(validLetters(u), StringType.collationId, icu)
 
   /** The run of `[\x20\t\f]` that ends where Java's `$` first matches:
    * before one final line terminator (`\r\n`, `\n`, `\r`, U+0085, U+2028 or

@@ -243,16 +243,19 @@ private[plans] final class SpanAcc(out: mutable.Queue[InternalRow]) {
   private var seg = 0L
   private var label: String = null
   private var turn = 0
+  private var turnSet = false
   private var open = false
   private val text = new java.lang.StringBuilder
   private var hasPend = false
   private var pendTok: String = null
   private var pendTrail: String = ""
 
-  /** One token of the walk. `isStart`: the token opens a span labeled
-   * `base`; a conversation's first token always does, after the previous
-   * conversation ends. */
-  def token(c: String, base: String, isStart: Boolean, t: Int,
+  /** One token of the walk, of turn `t` (null when `tNull`). `isStart`: the
+   * token opens a span labeled `base`; a conversation's first token always
+   * does, after the previous conversation ends. A span's turn_idx is its
+   * first non-null turn, null when it has none: Assemble's `min`, as null
+   * turns sort first. */
+  def token(c: String, base: String, isStart: Boolean, t: Int, tNull: Boolean,
       tok: String, sepBefore: String, trail: String): Unit = {
     val newConv = !started || c != conv
     if (newConv) {
@@ -261,7 +264,8 @@ private[plans] final class SpanAcc(out: mutable.Queue[InternalRow]) {
     }
     val start = isStart || newConv
     resolvePend(if (sepBefore != null) sepBefore else pendTrail, spanLast = start)
-    if (start) openSpan(c, base, t)
+    if (start) openSpan(c, base)
+    if (!turnSet && !tNull) { turn = t; turnSet = true }
     pendTok = tok; pendTrail = if (trail == null) "" else trail; hasPend = true
   }
 
@@ -276,16 +280,16 @@ private[plans] final class SpanAcc(out: mutable.Queue[InternalRow]) {
   private def closeSpan(): Unit = if (open) {
     out += new GenericInternalRow(Array[Any](
       UTF8String.fromString(conv), seg,
-      UTF8String.fromString(label), turn,
+      UTF8String.fromString(label), if (turnSet) turn else null,
       UTF8String.fromString(text.toString)))
     open = false
     text.setLength(0)
   }
 
-  private def openSpan(c: String, base: String, t: Int): Unit = {
+  private def openSpan(c: String, base: String): Unit = {
     closeSpan()
     seg += 1
-    conv = c; label = base; turn = t
+    conv = c; label = base; turnSet = false
     open = true
   }
 
@@ -652,6 +656,19 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
       None
     }
 
+  /** Each token `i` of the `n` a classified line `l` has, with its BIO
+   * label: `I-` on the first token of a line that starts a span. Nothing
+   * when classifying drops the line. */
+  protected def bio(l: Line, nextIsEntry: Boolean, n: Int)(emit: (Int, UTF8String) => Unit): Unit =
+    classified(l, nextIsEntry).foreach { case (base, isStart) =>
+      val b = UTF8String.fromString(base)
+      var i = 0
+      while (i < n) {
+        emit(i, if (i == 0 && isStart) UTF8String.fromString("I-" + base) else b)
+        i += 1
+      }
+    }
+
   /** Moves the walk to the line (conv, chunk, turn, ln) of row `r`: the
    * line before it is complete, and so is its group if `r` starts another. */
   private def enter(r: InternalRow, conv: String, chunk: Int, turn: Int, ln: Int): Unit = {
@@ -791,14 +808,15 @@ private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: Struct
         val base = if (isI) label.substring(2) else label
         // a null base never compares equal (SQL `=!=` under `coalesce(.., true)`)
         acc.token(l.conv, base, isI || base == null || base != prevBase,
-          l.turn, l.toks(i), l.seps(i), l.trails(i))
+          l.turn, l.turnNull, l.toks(i), l.seps(i), l.trails(i))
         prevBase = base
         i += 1
       }
     } else classified(l, nextIsEntry).foreach { case (base, isStart) =>
       var i = 0
       while (i < l.toks.length) {
-        acc.token(l.conv, base, isStart && i == 0, l.turn, l.toks(i), l.seps(i), l.trails(i))
+        acc.token(l.conv, base, isStart && i == 0, l.turn, l.turnNull, l.toks(i), l.seps(i),
+          l.trails(i))
         i += 1
       }
     }
@@ -806,8 +824,8 @@ private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: Struct
   override protected def endGroup(last: Line): Unit = acc.endConv()
 }
 
-/** Emits each token row of a classified line with its BIO label: `I-` on
- * the first token of a line that starts a span. */
+/** Emits each token row of a classified line with its [[LineWalk.bio]]
+ * label. */
 private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols, failures: Option[Lineage.PartitionStats])
     extends LineWalk(it, outSchema, c, failures) {
@@ -818,15 +836,7 @@ private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: Struc
   override protected def keep(r: InternalRow, l: Line): Unit = l.rows += r.copy()
 
   protected def line(l: Line, nextIsEntry: Boolean): Unit =
-    classified(l, nextIsEntry).foreach { case (base, isStart) =>
-      val b = UTF8String.fromString(base)
-      var i = 0
-      while (i < l.rows.length) {
-        out += l.rows(i)
-        labels += (if (i == 0 && isStart) UTF8String.fromString("I-" + base) else b)
-        i += 1
-      }
-    }
+    bio(l, nextIsEntry, l.rows.length) { (i, label) => out += l.rows(i); labels += label }
 
   override protected def project(r: InternalRow): InternalRow = {
     labelRow.update(0, labels.dequeue())
@@ -836,25 +846,20 @@ private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: Struc
 
 /** Emits a row of the nine [[BodySpans.transcriptLabels]] columns per token
  * of a classified line, from the tokens, separators and capitalisations the
- * line feeder made; the label is [[LabelSink]]'s. */
+ * line feeder made, and its [[LineWalk.bio]] label. */
 private[plans] final class TokenLabelSink(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols, failures: Option[Lineage.PartitionStats])
     extends LineWalk(it, outSchema, c, failures, linesValid = true) {
 
-  protected def line(l: Line, nextIsEntry: Boolean): Unit =
-    classified(l, nextIsEntry).foreach { case (base, isStart) =>
-      val conv = UTF8String.fromString(l.conv)
-      val turn: Any = if (l.turnNull) null else l.turn
-      val b = UTF8String.fromString(base)
-      var i = 0
-      while (i < l.toks.length) {
-        out += new GenericInternalRow(Array[Any](conv, turn, l.line, i,
-          UTF8String.fromString(l.toks(i)), UTF8String.fromString(l.seps(i)),
-          UTF8String.fromString(l.trails(i)), UTF8String.fromString(l.caps(i)),
-          if (i == 0 && isStart) UTF8String.fromString("I-" + base) else b))
-        i += 1
-      }
+  protected def line(l: Line, nextIsEntry: Boolean): Unit = {
+    val conv = UTF8String.fromString(l.conv)
+    val turn: Any = if (l.turnNull) null else l.turn
+    bio(l, nextIsEntry, l.toks.length) { (i, label) =>
+      out += new GenericInternalRow(Array[Any](conv, turn, l.line, i,
+        UTF8String.fromString(l.toks(i)), UTF8String.fromString(l.seps(i)),
+        UTF8String.fromString(l.trails(i)), UTF8String.fromString(l.caps(i)), label))
     }
+  }
 }
 
 /** Pass 1 of the chunk-parallel labeler: the group's transition function,

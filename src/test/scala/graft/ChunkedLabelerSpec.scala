@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.extract.{Features, Labeler, Structure, Synthetic}
+import graft.extract.{Assemble, Features, Labeler, Pipeline, Structure, Synthetic}
 
 /**
  * The chunk-parallel body labeler (parallel-FSM prefix composition,
@@ -108,14 +108,14 @@ class ChunkedLabelerSpec extends SparkSpec {
    * lines, classify each line of a conversation with a fresh classifier and
    * the entry test of the conversation's next line, BIO-encode (`I-` on the
    * first token of a line that starts a span). A line whose classification
-   * throws is dropped. */
-  private def referenceLabels(f: DataFrame): Seq[(String, Int, Int, Int, String, String)] = {
+   * throws is dropped. A null turn_idx is a turn of its own, sorted first. */
+  private def referenceLabels(f: DataFrame): Seq[(String, Option[Int], Int, Int, String, String)] = {
     val toks = f.select("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok",
         "f_capitalisation").collect().toSeq
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4),
+      .map(r => (r.getString(0), turnOf(r), r.getInt(2), r.getInt(3), r.getString(4),
         r.getString(5)))
       .sortBy(t => (Option(t._1), t._2, t._3, t._4))
-    val lines = toks.foldLeft(Vector.empty[Vector[(String, Int, Int, Int, String, String)]]) {
+    val lines = toks.foldLeft(Vector.empty[Vector[(String, Option[Int], Int, Int, String, String)]]) {
       case (acc, t) if acc.nonEmpty && acc.last.head._1 == t._1 &&
           acc.last.head._2 == t._2 && acc.last.head._3 == t._3 =>
         acc.init :+ (acc.last :+ t)
@@ -137,10 +137,12 @@ class ChunkedLabelerSpec extends SparkSpec {
     }.sortBy(t => (Option(t._1), t._2, t._3, t._4))
   }
 
-  private def labelRows(df: DataFrame): Seq[(String, Int, Int, Int, String, String)] =
+  private def turnOf(r: Row): Option[Int] = if (r.isNullAt(1)) None else Some(r.getInt(1))
+
+  private def labelRows(df: DataFrame): Seq[(String, Option[Int], Int, Int, String, String)] =
     df.select("conv_id", "turn_idx", "line_in_turn", "tok_idx", "tok", "label")
       .collect().toSeq
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4),
+      .map(r => (r.getString(0), turnOf(r), r.getInt(2), r.getInt(3), r.getString(4),
         r.getString(5)))
       .sortBy(t => (Option(t._1), t._2, t._3, t._4))
 
@@ -159,6 +161,30 @@ class ChunkedLabelerSpec extends SparkSpec {
           s"bodyLabelsChunked($c) on $name")
       }
     }
+  }
+
+  test("null turn_idx lines: labels equal the reference walk, spans equal Assemble's") {
+    // a null turn_idx sorts first and is a turn of its own: its two lines
+    // stay apart from turn 0's line 0, and the line after them has no gap
+    val turns = TranscriptCorpus.turns(spark, Seq(
+      ("y", null, "user", "Première ligne sans tour\n12 - Médaille en bronze .", null),
+      ("y", 0, "user", "3 - Vase grec en terre cuite .", null),
+      ("y", 2, "user", "suite de la description du lot .", null)))
+    val f = featsOf(turns)
+    val expected = referenceLabels(f)
+    assert(expected.map(_._2).distinct == Seq(None, Some(0), Some(2)))
+    assert(labelRows(Labeler.bodyLabels(f)) == expected)
+    // Catalyst's spans over the reference labels and the Catalyst separators
+    val label = expected.map(t => (t._1, t._2, t._3, t._4) -> t._6).toMap
+    val labeled = spark.createDataFrame(spark.sparkContext.parallelize(f.collect().toSeq.map(r =>
+      Row.fromSeq(r.toSeq :+ label((r.getString(0), turnOf(r), r.getInt(2), r.getInt(3))))), 1),
+      f.schema.add("label", "string"))
+    def spanRows(df: DataFrame) = df.select("conv_id", "segment_id", "label", "turn_idx", "text")
+      .collect().toSeq.sortBy(_.getLong(1))
+    val want = spanRows(Assemble.bodySpans(labeled))
+    assert(want.nonEmpty)
+    assert(spanRows(Pipeline.extract(turns)) == want, "Pipeline.extract")
+    assert(spanRows(Pipeline.extractDeclarative(turns)) == want, "Pipeline.extractDeclarative")
   }
 
   test("property: random corpora agree at random chunk sizes") {

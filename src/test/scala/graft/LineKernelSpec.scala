@@ -152,25 +152,6 @@ class LineKernelSpec extends SparkSpec {
     assert(differs.isEmpty, differs.take(5).map(Integer.toHexString))
   }
 
-  test("the zone pattern's ASCII path equals Spark's Lower under both case-mapping settings") {
-    import org.apache.spark.sql.catalyst.util.CollationSupport
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    val ascii = (0 until 0x80).map(cp => new String(Character.toChars(cp)))
-    // each code point alone, repeated, and all of them in one line, then
-    // the fuzz strings, whose letters are mostly not ASCII
-    val texts = ascii ++ ascii.map(_ * 9) ++ Seq(ascii.mkString, ascii.mkString.reverse) ++
-      traps ++ fuzz(31L, 2400, 24)
-    Seq(true, false).foreach { icu =>
-      texts.foreach { t =>
-        val u = UTF8String.fromString(t)
-        val want = CollationSupport.Lower.exec(LineKernels.validLetters(u),
-          StringType.collationId, icu)
-        assert(LineKernels.pattern(u, icu) == want, s"icu=$icu: ${t.take(60)}")
-      }
-    }
-  }
-
   private def turns(texts: Seq[String]): DataFrame = {
     val sparkS = spark
     import sparkS.implicits._
