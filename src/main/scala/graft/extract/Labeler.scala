@@ -777,14 +777,15 @@ object Labeler {
    * keeps the input's partitioning and ordering. `repartitionByConv` places
    * the conv_id shuffle by hand; otherwise the operator's declared
    * distribution does. S3-style per-line error isolation: a line whose
-   * classification throws is dropped and counted in `failures` per
-   * partition (the reference isolates per FILE, EngineDatacat.java:114-150).
+   * classification throws is dropped (the reference isolates per FILE,
+   * EngineDatacat.java:114-150); [[graft.plans.BodySpans.labels]] and
+   * [[bodyLabelsChunked]] also count those lines into a
+   * [[Lineage.PartitionStats]].
    */
-  def bodyLabels(tokens: DataFrame, repartitionByConv: Boolean = true,
-      failures: Option[Lineage.PartitionStats] = None): DataFrame =
+  def bodyLabels(tokens: DataFrame, repartitionByConv: Boolean = true): DataFrame =
     graft.plans.BodySpans.labels(
       if (repartitionByConv) tokens.repartition(col("conv_id")) else tokens,
-      chunked = false, failures)
+      chunked = false, None)
 
   /** Scala mirror of [[graft.text.TextCols.htmlEncode]] (same replacement
    * order) for the [[graft.plans.BodySpans]] span emitter. */

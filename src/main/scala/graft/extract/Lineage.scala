@@ -17,53 +17,43 @@ import scala.collection.concurrent.TrieMap
  * Per-partition lineage rows + counters (north-rule requirement; replaces
  * the reference's CntManager, `EngineDatacat.java:28,338-344`).
  *
- * [[withPartitionLineage]] is a pass-through plan node over the execution
- * rows that records (partition_id, rows, characters) into an accumulator,
- * dumped as a DataFrame by [[lineageRows]] after an action. Use on
- * checkpoint boundaries.
+ * One accumulator per stage, [[PartitionStats]], holds each partition's
+ * (rows, characters, parse failures). [[withPartitionLineage]] is a
+ * pass-through plan node over the execution rows that reports the first
+ * two; a label walk given the same accumulator reports the third from the
+ * same task. [[lineageRows]] dumps it as a DataFrame after an action. Use
+ * on checkpoint boundaries.
  */
 object Lineage {
 
   /**
-   * Per-partition (rows, bytes) accumulator with two merge modes:
-   *
-   *  - `dedupe = true` (row/byte totals): each task attempt reports its
-   *    partition's FINAL totals once; duplicate successful attempts (stage
-   *    resubmission, speculative execution) report identical values —
-   *    max-merge makes the result exactly-once for deterministic input.
-   *  - `dedupe = false` (failure events): plain summation. Spark applies
-   *    user-accumulator updates only from successful tasks, but a stage
-   *    retry can replay a whole successful task, so these counts are
-   *    AT-LEAST-ONCE — fine for a best-effort failure signal, never use
-   *    this mode for row/byte accounting.
+   * Per-partition (rows, bytes, parse_failures), exactly-once: each
+   * reporter sends its task's FINAL totals ([[reportOnce]]) and every
+   * component merges by max, so a re-run of the task (a stage retry, a
+   * speculative attempt, the range sample of an `orderBy`) re-reports the
+   * same totals instead of adding to them. Contract: per stage, at most one
+   * operator reports each component, and a re-run sees deterministic input
+   * under the same plan, so the same partition id holds the same rows.
    */
-  final class PartitionStats(dedupe: Boolean = false)
-      extends AccumulatorV2[(Int, Long, Long), Map[Int, (Long, Long)]] {
-    private val m = TrieMap.empty[Int, (Long, Long)]
+  final class PartitionStats
+      extends AccumulatorV2[(Int, Long, Long, Long), Map[Int, (Long, Long, Long)]] {
+    private val m = TrieMap.empty[Int, (Long, Long, Long)]
     def isZero: Boolean = m.isEmpty
-    def copy(): PartitionStats = { val c = new PartitionStats(dedupe); m.foreach(kv => c.m += kv); c }
+    def copy(): PartitionStats = { val c = new PartitionStats; m.foreach(kv => c.m += kv); c }
     def reset(): Unit = m.clear()
-    def add(v: (Int, Long, Long)): Unit = {
-      val (p, r, b) = v
-      val (r0, b0) = m.getOrElse(p, (0L, 0L))
-      if (dedupe) m.update(p, (math.max(r0, r), math.max(b0, b)))
-      else m.update(p, (r0 + r, b0 + b))
+    def add(v: (Int, Long, Long, Long)): Unit = {
+      val (p, r, b, f) = v
+      val (r0, b0, f0) = m.getOrElse(p, (0L, 0L, 0L))
+      m.update(p, (math.max(r0, r), math.max(b0, b), math.max(f0, f)))
     }
-    def merge(other: AccumulatorV2[(Int, Long, Long), Map[Int, (Long, Long)]]): Unit =
-      other.value.foreach { case (p, (r, b)) => add((p, r, b)) }
-    def value: Map[Int, (Long, Long)] = m.toMap
+    def merge(other: AccumulatorV2[(Int, Long, Long, Long), Map[Int, (Long, Long, Long)]]): Unit =
+      other.value.foreach { case (p, (r, b, f)) => add((p, r, b, f)) }
+    def value: Map[Int, (Long, Long, Long)] = m.toMap
   }
 
-  /** Register a fresh summing (at-least-once) accumulator — failure events. */
+  /** Register a fresh accumulator for stage `name`. */
   def newStats(spark: SparkSession, name: String): PartitionStats = {
     val acc = new PartitionStats
-    spark.sparkContext.register(acc, s"lineage_$name")
-    acc
-  }
-
-  /** Register a fresh deduping (exactly-once totals) accumulator. */
-  def newTotals(spark: SparkSession, name: String): PartitionStats = {
-    val acc = new PartitionStats(dedupe = true)
     spark.sparkContext.register(acc, s"lineage_$name")
     acc
   }
@@ -73,10 +63,7 @@ object Lineage {
    * `textCols` value feeds the counter reported as `bytes`. A plan node
    * ([[PartitionLineagePlan]]) over `df`'s plan, so the count runs inside
    * the action that consumes the frame (a stage commit), on its
-   * InternalRows, and that action's plan shows `df`'s. Totals are
-   * accumulated task-locally and reported once at partition exhaustion, so
-   * `acc` MUST be a dedupe accumulator ([[newTotals]]) — retries then
-   * re-report the same totals instead of inflating them. */
+   * InternalRows, and that action's plan shows `df`'s. */
   def withPartitionLineage(df: DataFrame, acc: PartitionStats, textCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(PartitionLineageStrategy))
@@ -87,32 +74,33 @@ object Lineage {
     bridge.ofRows(spark, PartitionLineagePlan(child, acc, counted))
   }
 
+  /** `it` unchanged; `totals()` (rows, bytes, parse_failures), the task's
+   * counts so far, goes to `acc` for the task's partition at exhaustion
+   * and again at task completion: a limit/take consumer never exhausts the
+   * iterator, and max-merge keeps the larger report (counts only grow). */
+  private[graft] def reportOnce[T](it: Iterator[T], acc: PartitionStats)(
+      totals: () => (Long, Long, Long)): Iterator[T] = {
+    val ctx = org.apache.spark.TaskContext.get()
+    val pid = ctx.partitionId()
+    def report(): Unit = { val (r, b, f) = totals(); acc.add((pid, r, b, f)) }
+    ctx.addTaskCompletionListener[Unit](_ => report())
+    new Iterator[T] {
+      def hasNext: Boolean = { val h = it.hasNext; if (!h) report(); h }
+      def next(): T = it.next()
+    }
+  }
+
   /** `it`, counting its rows and the characters of the columns at `idxs`
    * into `acc` for the task's partition. */
   private[extract] def counting(it: Iterator[InternalRow], acc: PartitionStats,
       idxs: Seq[Int]): Iterator[InternalRow] = {
-    val ctx = org.apache.spark.TaskContext.get()
-    val pid = ctx.partitionId()
     var rows = 0L
     var bytes = 0L
-    // early-exit safety: a limit/take consumer never exhausts the
-    // iterator, so also report at task completion — max-merge keeps the
-    // larger of this and the exhaustion-time report (counts only grow)
-    ctx.addTaskCompletionListener[Unit](_ => acc.add((pid, rows, bytes)))
-    new Iterator[InternalRow] {
-      def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) acc.add((pid, rows, bytes)) // idempotent under max-merge
-        h
-      }
-      def next(): InternalRow = {
-        val r = it.next()
-        rows += 1
-        idxs.foreach { i =>
-          if (!r.isNullAt(i)) bytes += utf16Length(r.getUTF8String(i)) }
-        r
-      }
-    }
+    reportOnce(it.map { r =>
+      rows += 1
+      idxs.foreach { i => if (!r.isNullAt(i)) bytes += utf16Length(r.getUTF8String(i)) }
+      r
+    }, acc)(() => (rows, bytes, 0L))
   }
 
   /** `u.toString.length` without decoding: valid UTF-8 has one UTF-16 unit
@@ -135,20 +123,12 @@ object Lineage {
       n
     }
 
-  /** Materialize collected per-partition stats as a lineage DataFrame.
-   * `failures` carries per-partition parse-failure counts (see
-   * [[graft.extract.Labeler]]'s per-line error isolation); partitions that
-   * only appear in `failures` still get a lineage row. */
-  def lineageRows(spark: SparkSession, stage: String, acc: PartitionStats,
-      failures: Map[Int, Long] = Map.empty): DataFrame = {
+  /** Materialize collected per-partition stats as a lineage DataFrame. */
+  def lineageRows(spark: SparkSession, stage: String, acc: PartitionStats): DataFrame = {
     import spark.implicits._
-    val parts = (acc.value.keySet ++ failures.keySet).toSeq.sorted
     // one partition: a stage's handful of rows is one file when committed
-    parts
-      .map { p =>
-        val (r, b) = acc.value.getOrElse(p, (0L, 0L))
-        (stage, p, r, b, failures.getOrElse(p, 0L))
-      }
+    acc.value.toSeq.sortBy(_._1)
+      .map { case (p, (r, b, f)) => (stage, p, r, b, f) }
       .toDF("stage", "partition_id", "rows", "bytes", "parse_failures")
       .coalesce(1)
   }

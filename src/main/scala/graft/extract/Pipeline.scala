@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
  *   body labels on the <body> zone → segment ids → span assembly → TEI.
  *
  * Scale shape (the plan to protect at 100 TB): ONE exchange — a single
- * hash(conv_id) shuffle feeds every per-conversation window, the zone
- * filter and the FSM, which tokenizes each body line and emits finished
- * spans during its label walk (no second shuffle for span assembly;
+ * hash(conv_id) shuffle and one sort feed the span walk, which applies the
+ * zone rule, tokenizes each body line and emits finished spans per
+ * conversation (no window, no second shuffle for span assembly;
  * `.explain` shows exactly one hashpartitioning). AQE handles residual
  * skew; line structure is turn-local (one kernel scan per turn, no
  * window), and giant single conversations are bounded by the F5 size
@@ -49,6 +49,10 @@ object Pipeline {
    * with the operator's transcript label mode
    * ([[graft.plans.BodySpans.transcriptLabels]]), commits, then walks the
    * committed labels with its label-span mode.
+   *
+   * Precondition: `(conv_id, turn_idx)` is unique. The walk reads rows with
+   * equal (conv_id, turn_idx, line_in_turn) as one line, so the lines of
+   * duplicate turns merge in arrival order and the output depends on it.
    */
   def extract(turns: DataFrame): DataFrame =
     graft.plans.BodySpans.fromTranscript(
@@ -244,10 +248,10 @@ object Pipeline {
    * manifest through [[TableIO]]; a re-run skips committed stages, so a
    * killed job resumes from its last checkpoint with identical output.
    * Per-partition lineage rows (rows/bytes/parse failures) are committed
-   * alongside each stage. The labels stage is one sorted walk over the kept
-   * lines after one conv_id exchange
-   * ([[graft.plans.BodySpans.transcriptLabels]]: the zone rule, the
-   * tokenizer and the FSM per conversation, no window), row-identical to
+   * alongside each stage from its one [[Lineage.PartitionStats]]. The
+   * labels stage is one sorted walk over the kept lines after one conv_id
+   * exchange ([[graft.plans.BodySpans.transcriptLabels]]: the zone rule,
+   * the tokenizer and the FSM per conversation, no window), row-identical to
    * [[labeledBodyTokens]]. The spans stage follows the committed `label`
    * column, never re-classifies: [[graft.plans.BodySpans.fromLabels]]
    * walks it in one sorted pass (one conv_id exchange over the parquet
@@ -264,37 +268,29 @@ object Pipeline {
   def runResumable(turns: DataFrame, io: TableIO, runId: String = "r1",
       chunkTurns: Option[Int] = None): DataFrame = {
     val spark = turns.sparkSession
-
-    val labeled = io.committedSnapshot("labeled") match {
-      case Some(_) => io.read(spark, "labeled")
-      case None =>
-        val acc = Lineage.newTotals(spark, "labeled")
-        val fails = Lineage.newStats(spark, "labeled_failures")
-        val labeledDf = chunkTurns match {
-          case Some(c) => labeledBodyTokensChunked(turns, c, Some(fails))
-          case None => graft.plans.BodySpans.transcriptLabels(
-            Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id")), Some(fails))
-        }
-        val out = Lineage.withPartitionLineage(
-          labeledDf, acc, Seq("tok", "sep_before"))
-        io.commit(out, "labeled", runId)
-        io.commit(Lineage.lineageRows(spark, "labeled", acc,
-          fails.value.map { case (p, (r, _)) => p -> r }), "lineage_labeled", runId)
-        io.read(spark, "labeled")
+    // an uncommitted stage commits `build(acc)`, then acc's lineage rows
+    def stage(name: String, textCols: Seq[String])(
+        build: Lineage.PartitionStats => DataFrame): DataFrame = {
+      if (io.committedSnapshot(name).isEmpty) {
+        val acc = Lineage.newStats(spark, name)
+        io.commit(Lineage.withPartitionLineage(build(acc), acc, textCols), name, runId)
+        io.commit(Lineage.lineageRows(spark, name, acc), s"lineage_$name", runId)
+      }
+      io.read(spark, name)
     }
-
-    io.committedSnapshot("spans") match {
-      case Some(_) => io.read(spark, "spans")
-      case None =>
-        val acc = Lineage.newTotals(spark, "spans")
-        val spansDf = chunkTurns match {
-          case Some(c) => Assemble.bodySpansChunked(labeled, c)
-          case None => graft.plans.BodySpans.fromLabels(labeled)
-        }
-        val spans = Lineage.withPartitionLineage(spansDf, acc, Seq("text"))
-        io.commit(spans, "spans", runId)
-        io.commit(Lineage.lineageRows(spark, "spans", acc), "lineage_spans", runId)
-        io.read(spark, "spans")
+    // the lineage node counts rows and characters, the label walk failures
+    val labeled = stage("labeled", Seq("tok", "sep_before")) { acc =>
+      chunkTurns match {
+        case Some(c) => labeledBodyTokensChunked(turns, c, Some(acc))
+        case None => graft.plans.BodySpans.transcriptLabels(
+          Structure.keptLines(graft.ops.Par.clusterBy(turns, "conv_id")), Some(acc))
+      }
+    }
+    stage("spans", Seq("text")) { _ =>
+      chunkTurns match {
+        case Some(c) => Assemble.bodySpansChunked(labeled, c)
+        case None => graft.plans.BodySpans.fromLabels(labeled)
+      }
     }
   }
 

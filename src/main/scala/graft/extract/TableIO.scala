@@ -60,6 +60,12 @@ final case class SnapshotMeta(id: String, parent: Option[String], op: String,
 
 final class LocalSnapshotIO(root: String) extends TableIO {
 
+  /** Snapshot ids and stage names are written into JSON records and
+   * directory names unescaped, so only `[A-Za-z0-9._-]+`, not `.` or `..`. */
+  private def checkName(kind: String, s: String): Unit =
+    require(s.matches("[A-Za-z0-9._-]+") && s != "." && s != "..",
+      s"invalid $kind '$s': use [A-Za-z0-9._-]+, not . or ..")
+
   private def stageDir(stage: String) = Paths.get(root, stage)
   private def manifest(stage: String) = stageDir(stage).resolve("_manifest.json")
   private def metaDir(stage: String) = stageDir(stage).resolve("_snapshots")
@@ -161,6 +167,8 @@ final class LocalSnapshotIO(root: String) extends TableIO {
   }
 
   def rollback(stage: String, snapshotId: String): Unit = {
+    checkName("stage", stage)
+    checkName("snapshot id", snapshotId)
     require(Files.exists(metaFile(stage, snapshotId)) ||
       Files.exists(stageDir(stage).resolve(s"snapshot=$snapshotId")),
       s"unknown snapshot $snapshotId for stage $stage")
@@ -175,6 +183,8 @@ final class LocalSnapshotIO(root: String) extends TableIO {
 
   private def doCommit(df: DataFrame, stage: String, snapshotId: String,
       op: String): Unit = {
+    checkName("stage", stage)
+    checkName("snapshot id", snapshotId)
     val dir = stageDir(stage)
     Files.createDirectories(metaDir(stage))
     val parent = committedSnapshot(stage)

@@ -102,7 +102,8 @@ object BodySpans {
    * `Labeler.bodyLabels` over `Structure.tokensFromLines` of the Catalyst
    * zone rule's body lines, and the same rows (TranscriptLabelsSpec). One
    * row per token of a classified line; a line whose classification throws
-   * is dropped and counted in `failures`, as `bodyLabels` drops it. The plan
+   * is dropped, as `bodyLabels` drops it, and the task's count of them goes
+   * to `failures` as its `parse_failures` ([[Lineage.reportOnce]]). The plan
    * has no zone window, no lag window, no token explode and no token sort.
    */
   def transcriptLabels(keptLines: DataFrame,
@@ -356,16 +357,18 @@ case class BodySpansExec(child: SparkPlan, mode: BodyWalk, produced: Seq[Attribu
         child.output.map(_.dataType).toArray,
         bridge.icuCaseMappings(conf), bridge.windowBufferSize(conf)))
     child.execute().mapPartitions { it =>
-      m match {
+      val walk = m match {
         case BodyWalk.TranscriptSpans => new SpanSink(new TranscriptZoner(it, cols, zone.get),
           outSchema, cols, fromLabels = false, linesValid = true)
         case BodyWalk.TranscriptLabels =>
-          new TokenLabelSink(new TranscriptZoner(it, cols, zone.get), outSchema, cols, fails)
+          new TokenLabelSink(new TranscriptZoner(it, cols, zone.get), outSchema, cols)
         case BodyWalk.FsmSpans | BodyWalk.LineSpans | BodyWalk.LabelSpans =>
           new SpanSink(it, outSchema, cols, fromLabels = m == BodyWalk.LabelSpans)
-        case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols, fails)
+        case BodyWalk.Labels | BodyWalk.ChunkLabels => new LabelSink(it, outSchema, cols)
         case BodyWalk.Transitions => new TransitionSink(it, outSchema, cols)
       }
+      fails.fold[Iterator[InternalRow]](walk)(
+        Lineage.reportOnce(walk, _)(() => (0L, 0L, walk.failed)))
     }
   }
 
@@ -625,8 +628,7 @@ private[plans] final class PatCount { var n = 0 }
  * buffers swap roles, so a line costs no allocation.
  */
 private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: StructType,
-    protected val c: WalkCols, failures: Option[Lineage.PartitionStats],
-    linesValid: Boolean = false) extends Iterator[InternalRow] {
+    protected val c: WalkCols, linesValid: Boolean = false) extends Iterator[InternalRow] {
   import BodySpans.str
   protected val out = mutable.Queue.empty[InternalRow]
   protected val cls = new Labeler.LineClassifier
@@ -646,15 +648,15 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
   protected def startGroup(first: InternalRow): Unit =
     cls.setState(if (c.entry < 0 || first.isNullAt(c.entry)) 0 else first.getInt(c.entry))
 
+  /** Lines of the task dropped by [[classified]] so far. */
+  private[plans] var failed = 0L
+
   /** (base label, starts a span) of `l`, or None when classifying throws:
-   * the line is dropped and counted, as the reference isolates a failure
-   * per file (`EngineDatacat.java:114-150`). */
+   * the line is dropped and counted in [[failed]], as the reference
+   * isolates a failure per file (`EngineDatacat.java:114-150`). */
   protected def classified(l: Line, nextIsEntry: Boolean): Option[(String, Boolean)] =
     try Some(cls.classify(l.toks, l.caps, l.isEntry, nextIsEntry))
-    catch { case scala.util.control.NonFatal(_) =>
-      failures.foreach(_.add((org.apache.spark.TaskContext.getPartitionId(), 1L, 0L)))
-      None
-    }
+    catch { case scala.util.control.NonFatal(_) => failed += 1; None }
 
   /** Each token `i` of the `n` a classified line `l` has, with its BIO
    * label: `I-` on the first token of a line that starts a span. Nothing
@@ -789,7 +791,7 @@ private[plans] abstract class LineWalk(it: Iterator[InternalRow], outSchema: Str
  * Fused — no label rows, no per-token allocation beyond the strings. */
 private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: StructType,
     c: WalkCols, fromLabels: Boolean, linesValid: Boolean = false)
-    extends LineWalk(it, outSchema, c, None, linesValid) {
+    extends LineWalk(it, outSchema, c, linesValid) {
   import BodySpans.str
   private val acc = new SpanAcc(out)
   private var prevBase: String = null
@@ -827,8 +829,7 @@ private[plans] final class SpanSink(it: Iterator[InternalRow], outSchema: Struct
 /** Emits each token row of a classified line with its [[LineWalk.bio]]
  * label. */
 private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols, failures: Option[Lineage.PartitionStats])
-    extends LineWalk(it, outSchema, c, failures) {
+    c: WalkCols) extends LineWalk(it, outSchema, c) {
   private val labels = mutable.Queue.empty[UTF8String] // one per queued row
   private val labelRow = new GenericInternalRow(1)
   private val joined = new JoinedRow
@@ -848,8 +849,7 @@ private[plans] final class LabelSink(it: Iterator[InternalRow], outSchema: Struc
  * of a classified line, from the tokens, separators and capitalisations the
  * line feeder made, and its [[LineWalk.bio]] label. */
 private[plans] final class TokenLabelSink(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols, failures: Option[Lineage.PartitionStats])
-    extends LineWalk(it, outSchema, c, failures, linesValid = true) {
+    c: WalkCols) extends LineWalk(it, outSchema, c, linesValid = true) {
 
   protected def line(l: Line, nextIsEntry: Boolean): Unit = {
     val conv = UTF8String.fromString(l.conv)
@@ -868,7 +868,7 @@ private[plans] final class TokenLabelSink(it: Iterator[InternalRow], outSchema: 
  * state-independent line; a line whose classification throws is the
  * identity, as the label sink drops it. */
 private[plans] final class TransitionSink(it: Iterator[InternalRow], outSchema: StructType,
-    c: WalkCols) extends LineWalk(it, outSchema, c, None) {
+    c: WalkCols) extends LineWalk(it, outSchema, c) {
   private val exit = new Array[Int](Labeler.NStates) // exit state per entry state, so far
   private val moved = new Array[Int](Labeler.NStates)
 

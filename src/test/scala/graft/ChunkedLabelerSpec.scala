@@ -232,19 +232,17 @@ class ChunkedLabelerSpec extends SparkSpec {
     val f = featsOf(turnsDf(rows)).withColumn("tok",
       when(col("turn_idx") === 2 || (col("turn_idx") === 5 && col("tok_idx") === 1),
         lit(null).cast("string")).otherwise(col("tok")))
-    // one action per accumulator: the failure count is at-least-once, and
-    // an orderBy would run the labeler a second time for its range sample
     def run(label: Option[graft.extract.Lineage.PartitionStats] => DataFrame) = {
-      val fails = graft.extract.Lineage.newStats(spark, "chunked_isolation")
-      val out = label(Some(fails)).collect().toSeq.sortBy(r =>
-        (r.getAs[Int]("turn_idx"), r.getAs[Int]("line_in_turn"), r.getAs[Int]("tok_idx")))
-      (out, fails.value.values.map(_._1).sum)
+      val acc = graft.extract.Lineage.newStats(spark, "chunked_isolation")
+      val out = label(Some(acc)).orderBy("turn_idx", "line_in_turn", "tok_idx").collect().toSeq
+      (out, acc.value.values.map(_._3).sum)
     }
-    val (seqRows, seqFails) = run(fs => Labeler.bodyLabels(f, failures = fs))
+    val (seqRows, seqFails) =
+      run(graft.plans.BodySpans.labels(f, chunked = false, _))
     assert(seqFails == 2L)
     assert(seqRows.map(_.getAs[Int]("turn_idx")).distinct == Seq(0, 1, 3, 4, 6, 7))
     Seq(1, 2, 3).foreach { c =>
-      val (chkRows, chkFails) = run(fs => Labeler.bodyLabelsChunked(f, c, fs))
+      val (chkRows, chkFails) = run(Labeler.bodyLabelsChunked(f, c, _))
       assert(chkRows == seqRows, s"chunked != sequential at chunkTurns=$c")
       assert(chkFails == seqFails, s"failure count at chunkTurns=$c")
     }

@@ -81,24 +81,22 @@ class RobustnessSpec extends SparkSpec {
       ("c8", 0, 2, 0, "fine", "", "", "NOCAPS"))
       .toDF("conv_id", "turn_idx", "line_in_turn", "tok_idx",
         "tok", "sep_before", "line_trailing", "f_capitalisation")
-    val fails = graft.extract.Lineage.newStats(spark, "test_failures")
-    val labeled = graft.extract.Labeler.bodyLabels(toks, failures = Some(fails))
+    val acc = graft.extract.Lineage.newStats(spark, "test_failures")
+    val labeled = graft.plans.BodySpans.labels(toks, chunked = false, Some(acc))
     assert(labeled.select("tok").collect().map(_.getString(0)).toSet == Set("good", "fine"))
-    assert(fails.value.values.map(_._1).sum == 1L, "one failed line counted")
-    // lineage rows surface the failure per partition
-    val acc = graft.extract.Lineage.newStats(spark, "test_rows")
-    val lin = graft.extract.Lineage.lineageRows(spark, "labeled", acc,
-      fails.value.map { case (p, (r, _)) => p -> r })
-    assert(lin.agg(sum("parse_failures")).head().getLong(0) == 1L)
     // the label walk over the surviving lines agrees with the declarative
-    // assembly (the resumable spans stage reads exactly this frame); each
-    // action re-runs the labeler, so this comes after the failure counts
+    // assembly (the resumable spans stage reads exactly this frame)
     val walked = graft.plans.BodySpans.fromLabels(labeled)
       .orderBy("segment_id").collect().toSeq
     assert(walked.nonEmpty)
     assert(walked == Assemble.bodySpans(labeled)
       .select("conv_id", "segment_id", "label", "turn_idx", "text")
       .orderBy("segment_id").collect().toSeq)
+    // each action above re-ran the labeler; the failed line counts once,
+    // and the lineage rows surface it per partition
+    assert(acc.value.values.map(_._3).sum == 1L, "one failed line counted")
+    val lin = graft.extract.Lineage.lineageRows(spark, "labeled", acc)
+    assert(lin.agg(sum("parse_failures")).head().getLong(0) == 1L)
   }
 
   test("a single giant line streams through (no per-conv materialization blowup)") {

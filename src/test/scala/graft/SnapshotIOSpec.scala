@@ -159,6 +159,30 @@ class SnapshotIOSpec extends SparkSpec {
     assert(idsOf(io.read(spark, "t")) == Set(1L, 2L, 3L))
   }
 
+  test("ids and stage names that would break the manifest or leave the root are rejected") {
+    // `a"b` would be written into the manifest unescaped and read back as
+    // `a`; `/` and `..` would put the snapshot or stage outside its directory
+    val (io, dir) = freshIo()
+    io.commit(df(1), "t", "a")
+    Seq("a\"b", "../x", "x/y", "..", ".", "").foreach { id =>
+      intercept[IllegalArgumentException](io.commit(df(2), "t", id))
+      intercept[IllegalArgumentException](io.commitAppend(df(2), "t", id))
+      intercept[IllegalArgumentException](io.compact(spark, "t", id, 1))
+      intercept[IllegalArgumentException](io.rollback("t", id))
+    }
+    Seq("../t", "t/u", "..", "").foreach { stage =>
+      intercept[IllegalArgumentException](io.commit(df(2), stage, "b"))
+      intercept[IllegalArgumentException](io.rollback(stage, "a"))
+    }
+    assert(io.committedSnapshot("t").contains("a"))
+    assert(idsOf(io.read(spark, "t")) == Set(1L))
+    assert(Files.list(Paths.get(dir)).toArray.map(_.toString).toSeq ==
+      Seq(Paths.get(dir, "t").toString))
+    // the names the pipeline and its checks use all pass
+    io.commitAppend(df(3), "lineage_labeled", "run-2.b_c")
+    assert(io.committedSnapshot("lineage_labeled").contains("run-2.b_c"))
+  }
+
   test("extractIncremental consumes appends exactly once; result equals batch") {
     val sparkS = spark
     import sparkS.implicits._
